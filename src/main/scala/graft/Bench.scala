@@ -168,19 +168,23 @@ object Bench {
   }
 
   /** Best (minimum) clean same-shape total in the append-only run
-    * history: same sf dir, same registry size, zero failures. This is
+    * history: same sf dir, same registry size, same thread count
+    * (`spin_t`), zero failures. A line without `spin_t` never matches:
+    * its thread count is unknown, and a floor from a wider host would
+    * fire the retry on every run of a narrower one. This is
     * the tree's own quiet floor — the reference the post-run retry
     * gate compares against (round-15 verdict #1: the gate "never
     * consults the in-tree BENCH_HISTORY floor"). Regex field pulls, not
     * a JSON parser: the file is machine-written one-object-per-line by
     * renderLine above, and a malformed line must skip, not crash. */
   private[graft] def historyBest(path: java.nio.file.Path, sfDir: String,
-      nQueries: Int, qset: String, fullRegistry: Boolean): Double = {
+      nQueries: Int, qset: String, fullRegistry: Boolean, threads: Int): Double = {
     val value = """"value":([0-9.]+)""".r
     val nq = """"n_queries":(\d+)""".r
     val nf = """"n_failed":(\d+)""".r
     val sf = """"sf":"((?:[^"\\]|\\.)*)"""".r
     val qs = """"qset":"([0-9a-f]+)"""".r
+    val st = """"spin_t":(\d+)""".r
     try {
       import scala.jdk.CollectionConverters._
       val best = java.nio.file.Files.readAllLines(path).asScala.iterator
@@ -199,7 +203,9 @@ object Bench {
             q <- nq.findFirstMatchIn(l).map(_.group(1).toInt)
             f <- nf.findFirstMatchIn(l).map(_.group(1).toInt)
             s <- sf.findFirstMatchIn(l).map(_.group(1))
-            if q == nQueries && f == 0 && s == sfDir && v > 0 && qsetOk
+            t <- st.findFirstMatchIn(l).map(_.group(1).toInt)
+            if q == nQueries && f == 0 && s == sfDir && v > 0 && qsetOk &&
+              t == threads
           } yield v
         }.foldLeft(Double.MaxValue)(math.min)
       if (best == Double.MaxValue) -1.0 else best
@@ -489,7 +495,7 @@ object Bench {
     }.sum
     val histBest = historyBest(
       detailPath.resolveSibling("BENCH_HISTORY.jsonl"), sfDir, names.size,
-      qsetHash(names), names.toSet == SparkEntry.queries.keySet)
+      qsetHash(names), names.toSet == SparkEntry.queries.keySet, spinThreads)
     val retryRatio =
       sys.env.getOrElse("SPARK_GRAFT_RETRY_RATIO", "1.25").toDouble
     val maxRetries = sys.env.getOrElse("SPARK_GRAFT_RUN_RETRIES", "1").toInt

@@ -18,14 +18,32 @@ import org.apache.spark.sql.functions._
 object Categorize {
 
   /** O-1 + O-2: whole-file text scan with source path attached
-    * (categorizer.py:131). One row per *.html file; `value` is the whole
-    * file. At 100 TB the wholetext text source is one-task-per-file —
-    * fine for page-sized files; for huge blobs switch to
-    * `format("binaryFile")` + repartition (SURVEY.md §7 risk (e)).
+    * (categorizer.py:131). One row per top-level `*.html` file of `dir`;
+    * `value` is the whole file, `file_path` the `input_file_name()` URI.
+    *
+    * Listing rule: `dir` is the one root path and `pathGlobFilter`
+    * selects the pages, so the file index lists the directory once on
+    * the driver. A `*.html` glob under `dir` would expand to one root
+    * path per file, and above `parallelPartitionDiscovery.threshold`
+    * (32 paths) the index lists those in a distributed job with one
+    * task per file.
+    *
+    * Flat-directory contract: only files directly inside `dir` are
+    * read. Plain subdirectories are ignored, as the glob ignored them.
+    * A partition-style subdirectory (`k=v`) would turn `dir` into a
+    * partitioned table and silently drop the top-level pages, so it is
+    * rejected: Spark raises CONFLICTING_DIRECTORY_STRUCTURES when plain
+    * subdirectories sit beside it, and the schema check below throws
+    * otherwise.
     */
-  def readPages(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("wholetext", "true").text(s"$dir/*.html")
-      .withColumn("file_path", input_file_name())
+  def readPages(spark: SparkSession, dir: String): DataFrame = {
+    val pages = spark.read.option("wholetext", "true")
+      .option("pathGlobFilter", "*.html").text(dir)
+    require(pages.columns.sameElements(Array("value")),
+      s"crawl directory $dir must be flat: partition-style subdirectories " +
+        s"add columns ${pages.columns.filter(_ != "value").mkString(", ")}")
+    pages.withColumn("file_path", input_file_name())
+  }
 
   /** The 100 TB ingest twin of [[readPages]] (SURVEY.md §7 risk (e)):
     * `binaryFile` + UTF-8 decode instead of the wholetext text source.
@@ -105,12 +123,24 @@ object Categorize {
     *
     * `existing` carries prior-run dimensions (empty frames for a fresh
     * load, like the reference's create-on-demand, categorizer.py:71-73).
+    *
+    * Each html file is parsed once: the narrow parsed frame (no html
+    * column) is materialized first and feeds both id mints and the
+    * bridge, which would otherwise each re-scan and re-parse the crawl.
+    * The minted dimensions are materialized too, so the bridge joins
+    * stored ids instead of re-running DenseIds' offset and window plans.
+    * The returned bridge is lazy but reads only these stored frames, so
+    * every frame of the model is pinned to the `existing` snapshot taken
+    * here, however late the caller reads it.
     */
   def normalize(processed: DataFrame, existing: Option[Model] = None): Model = {
-    val newPagesRaw = processed
+    val parsed = processed
+      .select("file_name", "categories", "word_count", "last_edited_date")
+      .localCheckpoint()
+    val newPagesRaw = parsed
       .select(col("file_name"), col("word_count"), col("last_edited_date"))
       .dropDuplicates("file_name")
-    val newCatsRaw = processed
+    val newCatsRaw = parsed
       .select(explode(col("categories")).as("name"))
       .distinct()
 
@@ -142,10 +172,10 @@ object Categorize {
       .assign(freshCats, "name", offset = catOffset)
       .select("id", "name")
 
-    val pages = pageBase.fold(pagesNew)(_.unionByName(pagesNew))
-    val categories = catBase.fold(catsNew)(_.unionByName(catsNew))
+    val pages = pageBase.fold(pagesNew)(_.unionByName(pagesNew)).localCheckpoint()
+    val categories = catBase.fold(catsNew)(_.unionByName(catsNew)).localCheckpoint()
 
-    val pairs = processed
+    val pairs = parsed
       .select(col("file_name"), explode(col("categories")).as("name"))
       .distinct()
     val bridge = pairs
@@ -261,18 +291,13 @@ object Categorize {
   def syncToJdbc(spark: SparkSession, processed: DataFrame, url: String,
       props: java.util.Properties): Model = {
     val existing = loadFromJdbc(spark, url, props)
-    val m0 = normalize(processed, existing)
-    // Pin the model AND the delta to the PRE-WRITE database snapshot.
-    // Every `existing` frame reads the live tables lazily, and
-    // saveToJdbc appends to those same tables in FK order — left lazy,
-    // the bridge's dimension reads during the (later) page_categories
-    // write would see the pages/categories rows appended moments
-    // earlier, union them in twice, and append duplicated bridge rows.
-    // Dimension-sized frames, so two materialization rounds are cheap;
-    // the returned model is likewise stable however late the caller
-    // reads it.
-    val m = Model(m0.pages.localCheckpoint(),
-      m0.categories.localCheckpoint(), m0.pageCategories.localCheckpoint())
+    // normalize's model reads only blocks it stored before any write
+    // here, so it is pinned to the PRE-WRITE database snapshot. Each
+    // delta below anti-joins the live table that saveToJdbc then appends
+    // it to; left lazy, it would be evaluated during that append and
+    // could see rows the same write (or an earlier one) just inserted.
+    // So every delta is materialized before the first write.
+    val m = normalize(processed, existing)
     val delta = existing match {
       case None => m
       case Some(ex) => Model(

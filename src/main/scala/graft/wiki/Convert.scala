@@ -2,6 +2,7 @@ package graft.wiki
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The reference's Converter pipeline (converter.py:27-66): strip HTML to
   * plain text and persist as parquet — the one pipeline the reference
@@ -24,10 +25,15 @@ object Convert {
     df.write.mode("overwrite").parquet(path)
 
   /** Full pipeline: scan → extract → write → return the re-read frame
-    * (what a downstream consumer sees).
+    * (what a downstream consumer sees). The re-read carries the written
+    * frame's schema, as nullable as the parquet writer stores it, so no
+    * job reads the footers back to infer it.
     */
   def run(spark: SparkSession, htmlDir: String, outPath: String): DataFrame = {
-    saveToParquet(processHtmlFiles(spark, htmlDir), outPath)
-    spark.read.parquet(outPath)
+    val texts = processHtmlFiles(spark, htmlDir)
+    saveToParquet(texts, outPath)
+    spark.read
+      .schema(StructType(texts.schema.map(_.copy(nullable = true))))
+      .parquet(outPath)
   }
 }

@@ -112,23 +112,23 @@ class BenchLineSpec extends AnyFunSuite {
     val p = dir.resolve("BENCH_HISTORY.jsonl")
     val lines = Seq(
       // clean matches: 92.7 and 89.7 → best 89.7
-      """{"ts":1,"metric":"total","value":92.7,"unit":"sec","n_queries":129,"queries":{},"errors":{},"n_failed":0,"sf":"/root/testdata/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2100,"spin_ms":[210],"passes":2}""",
-      """{"ts":2,"metric":"total","value":89.7,"unit":"sec","n_queries":129,"queries":{},"errors":{},"n_failed":0,"sf":"/root/testdata/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2100,"spin_ms":[210],"passes":2}""",
+      """{"ts":1,"metric":"total","value":92.7,"unit":"sec","n_queries":129,"queries":{},"errors":{},"n_failed":0,"sf":"/data/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2100,"spin_ms":[210],"spin_t":32,"passes":2}""",
+      """{"ts":2,"metric":"total","value":89.7,"unit":"sec","n_queries":129,"queries":{},"errors":{},"n_failed":0,"sf":"/data/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2100,"spin_ms":[210],"spin_t":32,"passes":2}""",
       // wrong sf (the sf1 decade run), wrong registry size, a failed
       // run with a suspiciously low total, and plain garbage — all skip
-      """{"ts":3,"metric":"total","value":23.0,"unit":"sec","n_queries":129,"queries":{},"errors":{},"n_failed":0,"sf":"/tmp/sf1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"passes":2}""",
-      """{"ts":4,"metric":"total","value":0.63,"unit":"sec","n_queries":1,"queries":{},"errors":{},"n_failed":0,"sf":"/root/testdata/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"passes":2}""",
-      """{"ts":5,"metric":"total","value":11.0,"unit":"sec","n_queries":129,"queries":{},"errors":{"q01":"boom"},"n_failed":1,"sf":"/root/testdata/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"passes":2}""",
+      """{"ts":3,"metric":"total","value":23.0,"unit":"sec","n_queries":129,"queries":{},"errors":{},"n_failed":0,"sf":"/tmp/sf1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"spin_t":32,"passes":2}""",
+      """{"ts":4,"metric":"total","value":0.63,"unit":"sec","n_queries":1,"queries":{},"errors":{},"n_failed":0,"sf":"/data/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"spin_t":32,"passes":2}""",
+      """{"ts":5,"metric":"total","value":11.0,"unit":"sec","n_queries":129,"queries":{},"errors":{"q01":"boom"},"n_failed":1,"sf":"/data/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"spin_t":32,"passes":2}""",
       """not json at all""")
     java.nio.file.Files.write(p, lines.mkString("\n").getBytes("UTF-8"))
     val h = Bench.qsetHash(Seq("q01_x"))
-    assert(Bench.historyBest(p, "/root/testdata/sf0.1", 129, h,
-      fullRegistry = true) === 89.7)
-    assert(Bench.historyBest(p, "/root/testdata/sf0.1", 7, h,
-      fullRegistry = true) === -1.0,
+    assert(Bench.historyBest(p, "/data/sf0.1", 129, h,
+      fullRegistry = true, threads = 32) === 89.7)
+    assert(Bench.historyBest(p, "/data/sf0.1", 7, h,
+      fullRegistry = true, threads = 32) === -1.0,
       "no same-shape record → -1 (retry gate disabled)")
     assert(Bench.historyBest(dir.resolve("missing.jsonl"),
-      "/root/testdata/sf0.1", 129, h, fullRegistry = true) === -1.0,
+      "/data/sf0.1", 129, h, fullRegistry = true, threads = 32) === -1.0,
       "missing file → -1, no throw")
   }
 
@@ -143,27 +143,47 @@ class BenchLineSpec extends AnyFunSuite {
     val hQ107 = Bench.qsetHash(Seq("q107_graph_pagerank"))
     val lines = Seq(
       // legacy solo line (no qset) — must NOT floor any solo run
-      s"""{"ts":1,"metric":"total","value":1.21,"unit":"sec","n_queries":1,"queries":{},"errors":{},"n_failed":0,"sf":"/tmp/sf1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"passes":2}""",
+      s"""{"ts":1,"metric":"total","value":1.21,"unit":"sec","n_queries":1,"queries":{},"errors":{},"n_failed":0,"sf":"/tmp/sf1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"spin_t":32,"passes":2}""",
       // qset-bearing solo lines for two different queries
-      s"""{"ts":2,"metric":"total","value":2.13,"unit":"sec","n_queries":1,"qset":"$hQ128","queries":{},"errors":{},"n_failed":0,"sf":"/tmp/sf1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"passes":2}""",
-      s"""{"ts":3,"metric":"total","value":0.95,"unit":"sec","n_queries":1,"qset":"$hQ107","queries":{},"errors":{},"n_failed":0,"sf":"/tmp/sf1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"passes":2}""",
+      s"""{"ts":2,"metric":"total","value":2.13,"unit":"sec","n_queries":1,"qset":"$hQ128","queries":{},"errors":{},"n_failed":0,"sf":"/tmp/sf1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"spin_t":32,"passes":2}""",
+      s"""{"ts":3,"metric":"total","value":0.95,"unit":"sec","n_queries":1,"qset":"$hQ107","queries":{},"errors":{},"n_failed":0,"sf":"/tmp/sf1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"spin_t":32,"passes":2}""",
       // legacy FULL-registry line — still honored for full runs
-      s"""{"ts":4,"metric":"total","value":59.93,"unit":"sec","n_queries":130,"queries":{},"errors":{},"n_failed":0,"sf":"/root/testdata/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"passes":2}""")
+      s"""{"ts":4,"metric":"total","value":59.93,"unit":"sec","n_queries":130,"queries":{},"errors":{},"n_failed":0,"sf":"/data/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[],"spin_t":32,"passes":2}""")
     java.nio.file.Files.write(p, lines.mkString("\n").getBytes("UTF-8"))
     // a q128-solo run sees ONLY its own qset line (2.13), never the
     // legacy 1.21 or q107's 0.95
     assert(Bench.historyBest(p, "/tmp/sf1", 1, hQ128,
-      fullRegistry = false) === 2.13)
+      fullRegistry = false, threads = 32) === 2.13)
     assert(Bench.historyBest(p, "/tmp/sf1", 1, hQ107,
-      fullRegistry = false) === 0.95)
+      fullRegistry = false, threads = 32) === 0.95)
     // a full-registry run still inherits the legacy qset-less floor
     val hFull = Bench.qsetHash((1 to 130).map(i => s"q${i}_x"))
-    assert(Bench.historyBest(p, "/root/testdata/sf0.1", 130, hFull,
-      fullRegistry = true) === 59.93)
+    assert(Bench.historyBest(p, "/data/sf0.1", 130, hFull,
+      fullRegistry = true, threads = 32) === 59.93)
     // ...but a 130-query SUBSET-shaped run that is not the registry
     // does not (fullRegistry=false rejects qset-less lines)
-    assert(Bench.historyBest(p, "/root/testdata/sf0.1", 130, hFull,
-      fullRegistry = false) === -1.0)
+    assert(Bench.historyBest(p, "/data/sf0.1", 130, hFull,
+      fullRegistry = false, threads = 32) === -1.0)
+  }
+
+  test("historyBest keys on the thread count: a narrower run never floors on a wider host's line") {
+    val dir = java.nio.file.Files.createTempDirectory("benchhistt")
+    val p = dir.resolve("BENCH_HISTORY.jsonl")
+    val h = Bench.qsetHash((1 to 146).map(i => s"q${i}_x"))
+    def line(v: Double, spinT: String) =
+      s"""{"ts":1,"metric":"total","value":$v,"unit":"sec","n_queries":146,"qset":"$h","queries":{},"errors":{},"n_failed":0,"sf":"/data/sf0.1","load":[0.1,0.1,0.1],"load_end":0.1,"gated":0,"gc_ms":2,"spin_ms":[210],$spinT"passes":2}"""
+    java.nio.file.Files.write(p, Seq(
+      line(61.42, "\"spin_t\":32,\"spin_floor\":180,"),
+      line(53.39, "\"spin_t\":8,\"spin_floor\":180,"),
+      line(111.3, "\"spin_t\":4,\"spin_floor\":180,"),
+      // no thread count: unknowable host, never a floor
+      line(40.0, "")).mkString("\n").getBytes("UTF-8"))
+    def best(threads: Int) = Bench.historyBest(p, "/data/sf0.1", 146, h,
+      fullRegistry = true, threads = threads)
+    assert(best(4) === 111.3, "a 4-thread run must not compare with the local[32] floor")
+    assert(best(8) === 53.39)
+    assert(best(32) === 61.42)
+    assert(best(16) === -1.0, "no same-thread record → -1 (retry gate disabled)")
   }
 
   test("qsetHash is order-insensitive and name-sensitive") {

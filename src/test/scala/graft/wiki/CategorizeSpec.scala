@@ -3,6 +3,11 @@ package graft.wiki
 import graft.SparkSpec
 import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import scala.jdk.CollectionConverters._
 
 /** End-to-end categorizer pipeline test (categorizer.py:124-191 →
   * Categorize): wholetext scan + input_file_name over fixture HTML
@@ -72,6 +77,101 @@ class CategorizeSpec extends SparkSpec {
     // and the glob filter really scopes the scan: a non-html file is ignored
     Files.write(dir.resolve("notes.txt"), "not html".getBytes(StandardCharsets.UTF_8))
     assert(Categorize.readPagesBinary(spark, dir.toString).count() === fixtures.size)
+  }
+
+  /** Run `body` with a listener attached; returns its result and the
+    * events the listener collected, after the bus has drained. */
+  private def listening[A, E](pick: PartialFunction[AnyRef, E])(body: => A): (A, Seq[E]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[E]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        pick.lift(e).foreach(seen.add)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        pick.lift(e).foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    GraftListenerBridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      GraftListenerBridge.drainListenerBus(sc)
+      (a, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** A crawl above Spark's 32-path parallel-listing threshold, plus a
+    * non-html file and a plain subdirectory holding a page. */
+  private def writeLargeCrawl(): Path = {
+    val dir = writeFixtures()
+    (1 to 40).foreach { i =>
+      Files.write(dir.resolve(s"page$i.html"),
+        page(Seq(s"C${i % 7}"), Some("1 May 2024"), s"body $i").getBytes(StandardCharsets.UTF_8))
+    }
+    Files.write(dir.resolve("notes.txt"), "not html".getBytes(StandardCharsets.UTF_8))
+    val sub = Files.createDirectory(dir.resolve("sub"))
+    Files.write(sub.resolve("nested.html"), page(Seq("Nested"), None, "nested")
+      .getBytes(StandardCharsets.UTF_8))
+    dir
+  }
+
+  test("readPages listing contract: top-level *.html only, driver-side listing, flat directory") {
+    val dir = writeLargeCrawl()
+    def snapshot(df: DataFrame) = df.select("value", "file_path").collect()
+      .map(r => (r.getString(0), r.getString(1))).sortBy(_._2).toSeq
+    val jobStarts: PartialFunction[AnyRef, Int] = { case e: SparkListenerJobStart => e.jobId }
+
+    val (pages, listingJobs) = listening(jobStarts)(Categorize.readPages(spark, dir.toString))
+    assert(listingJobs.isEmpty, s"building the frame launched jobs $listingJobs")
+    // control: the per-file glob form lists in a distributed job
+    val (globbed, globJobs) = listening(jobStarts)(
+      spark.read.option("wholetext", "true").text(s"$dir/*.html")
+        .withColumn("file_path", org.apache.spark.sql.functions.input_file_name()))
+    assert(globJobs.nonEmpty, "the glob control should launch a listing job")
+
+    val rows = snapshot(pages)
+    assert(rows.size === fixtures.size + 40)
+    assert(rows === snapshot(globbed))
+    assert(rows.exists(_._2.endsWith("/spark%20core.html")))
+    assert(!rows.exists(r => r._2.contains("/sub/") || r._2.endsWith("notes.txt")))
+
+    // a partition-style subdirectory fails loudly, beside plain
+    // subdirectories (Spark's CONFLICTING_DIRECTORY_STRUCTURES) or alone
+    val part = Files.createDirectory(dir.resolve("a=1"))
+    Files.write(part.resolve("p.html"), page(Nil, None, "part").getBytes(StandardCharsets.UTF_8))
+    val conflicting = intercept[Throwable](Categorize.readPages(spark, dir.toString))
+    assert(conflicting.getMessage.contains("CONFLICTING_DIRECTORY_STRUCTURES") ||
+      conflicting.getMessage.toLowerCase.contains("conflicting directory"), conflicting.getMessage)
+    Files.delete(dir.resolve("sub/nested.html"))
+    Files.delete(dir.resolve("sub"))
+    val partitioned = intercept[IllegalArgumentException](Categorize.readPages(spark, dir.toString))
+    assert(partitioned.getMessage.contains("must be flat"), partitioned.getMessage)
+  }
+
+  test("run parses each html file once and stores no html column") {
+    val dir = writeLargeCrawl()
+    val out = Files.createTempDirectory("graft-cat-model-")
+    // stages that scan files: the html scan is the only file scan here
+    val scanRecords: PartialFunction[AnyRef, Long] = {
+      case e: SparkListenerStageCompleted
+          if e.stageInfo.rddInfos.exists(_.name == "FileScanRDD") =>
+        e.stageInfo.taskMetrics.inputMetrics.recordsRead
+    }
+    val (m, records) = listening(scanRecords) {
+      val m = Categorize.run(spark, dir.toString)
+      m.pages.write.parquet(out.resolve("pages").toString)
+      m.categories.write.parquet(out.resolve("categories").toString)
+      m.pageCategories.write.parquet(out.resolve("page_categories").toString)
+      m
+    }
+    val nPages = fixtures.size + 40
+    assert(records.sum === nPages, s"html scan stages read $records records")
+    assert(spark.read.parquet(out.resolve("pages").toString).count() === nPages)
+
+    val stored = Seq(m.pages, m.categories, m.pageCategories).flatMap(
+      _.queryExecution.analyzed.collect { case r: LogicalRDD => r.output.map(_.name) })
+    assert(stored.contains(Seq("file_name", "categories", "word_count", "last_edited_date")),
+      s"parsed frame not stored: $stored")
+    assert(!stored.flatten.exists(c => c == "value" || c == "html"), s"stored html: $stored")
   }
 
   test("normalize: deterministic surrogate keys, natural-key dedup, M2M bridge (categorizer.py:150-188)") {

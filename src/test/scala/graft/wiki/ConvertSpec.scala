@@ -20,7 +20,13 @@ class ConvertSpec extends SparkSpec {
     Files.write(in.resolve("tiny.html"),
       "<html><body><p>just this</p></body></html>".getBytes(StandardCharsets.UTF_8))
 
-    val back = Convert.run(spark, in.toString, out.toString)
+    val returned = Convert.run(spark, in.toString, out.toString)
+    // the returned frame is what a plain re-read of the output gives
+    val reread = spark.read.parquet(out.toString)
+    assert(returned.schema === reread.schema)
+    assert(returned.orderBy("file_name").collect().toSeq ===
+      reread.orderBy("file_name").collect().toSeq)
+    val back = returned
       .orderBy("file_name").collect().toSeq.map(r => (r.getString(0), r.getString(1)))
     assert(back === Seq(
       ("spark_20page", "Apache Spark engine. more & text"),

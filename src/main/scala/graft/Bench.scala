@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.collection.immutable.ListMap
 
 /** Per-round benchmark harness. Prints ONE JSON line the driver records as
@@ -307,51 +306,14 @@ object Bench {
       spins += spinProbeMs(spinThreads)
     }
 
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is ns-precision parquet; see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Force the SORT-BASED shuffle writer. With shuffle.partitions =
-      // 32 (< the 200 bypass threshold) every no-map-side-combine
-      // exchange takes the BypassMergeSortShuffleWriter: one file per
-      // (map task × reduce partition) = 1024 creates+unlinks per
-      // exchange, ~10^6 per full suite — jstack under load showed all
-      // 32 executor threads serialized in FileOutputStream.open0. A
-      // real cluster runs far more than 200 shuffle partitions and so
-      // always takes the sort-based writer (ONE data + ONE index file
-      // per map task); this makes local[32] exercise the same writer
-      // path the at-scale deployment would, and measured 10% faster
-      // on the full suite (round-15 A/B/A/B: 106.6/104.9 s bypass vs
-      // 93.8/95.7 s sort, quiet host, identical tree).
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // Kryo for the JVM-object serializer — the Spark tuning guide's
-      // standing production recommendation ("in any network-intensive
-      // application"). SQL shuffle rows are Tungsten UnsafeRow either
-      // way; this covers broadcast payloads, checkpoint/cache block
-      // spill, and task closures. Round-15 full-suite A/B: base
-      // 93.8/95.7 s vs Kryo 89.7/92.7 s (129 q, quiet host) —
-      // non-overlapping samples, ~4%.
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // The generated-class cache defaults to 100 entries — sized for
-      // a memory-tight driver, not a 130-query suite: each query holds
-      // several codegen units (WholeStageCodegen spans, expression
-      // kernels, Kryo-ish projections), so one pass cycles the cache
-      // several times over and EVERY pass recompiles EVERY query's
-      // generated code inside its timed window (janino, driver-side,
-      // 10-100 ms per unit — the solo-vs-full gap: a solo run fits in
-      // 100 entries and compiles once at warmup). A long-running
-      // production driver sizes this for its workload; metaspace cost
-      // at 10k classes is a few hundred MB ceiling, unreachable here.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
+    val builder = GraftSession.builder(cpus.toInt)
     // SPARK_GRAFT_CONF="k=v;k=v" — extra session confs for conf-level
     // A/B experiments (the BENCH_NOTES A/B protocol) without a code
     // edit per arm; semicolon-separated because conf VALUES may
     // contain commas. Ignored when unset, so the driver's canonical
     // run is untouched by the hook's existence.
-    var requestedCodegenCache = "10000"
+    var requestedCodegenCache =
+      GraftSession.confs.toMap.apply("spark.sql.codegen.cache.maxEntries")
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').iterator
       .map(_.trim).filter(_.nonEmpty).foreach { kv =>
         // a stray ';k' or bare token used to die as an opaque

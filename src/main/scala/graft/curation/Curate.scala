@@ -233,8 +233,8 @@ object Curate {
       "need 0 < chunkStride <= chunkWindow (stride > window would skip tokens)")
     require(chunkWindow <= tokenBudget,
       "a single chunk must fit a shard: chunkWindow <= tokenBudget")
-    // per-stage wall laps, printed only when the caller asks (CurateAudit
-    // does) — a library API stays quiet by default
+    // per-stage wall laps, printed only when the caller asks (Profile's
+    // `curate` target does) — a library API stays quiet by default
     var __t = System.nanoTime()
     def lap(l: String): Unit = {
       if (verbose) println(f"[curate-stage] $l ${(System.nanoTime() - __t) / 1e9}%.1f s")

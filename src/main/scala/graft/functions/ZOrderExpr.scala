@@ -40,8 +40,8 @@ object ZOrderKernel {
   * range-partitioned files get BALANCED per-file bounding boxes and
   * file-level min/max stats can prune selective predicates on EITHER
   * dimension (a single-column sort prunes only its own column).
-  * [[graft.ops.ZOrderLayout]] is the write path; ZOrderSpec measures
-  * the pruning property.
+  * A write range-partitioned and sorted on `z` is that layout; q74 and
+  * ZOrderSpec pin the kernel.
   *
   * Codegen: a handful of shift/mask ops inline in the generated Java —
   * stays inside whole-stage codegen like all graft natives. Caller

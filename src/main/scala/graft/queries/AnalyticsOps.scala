@@ -872,7 +872,7 @@ object AnalyticsOps {
       // edges0 again inside deg) and Catalyst does not share identical
       // subplans across union branches — unmaterialized, the
       // orders⋈lineitem join + distinct ran 4× inside the edges build
-      // (Prof round-16: 35 s of the query's 50 s task time sat in
+      // (a stage profile: 35 s of the query's 50 s task time sat in
       // those duplicate scans). One materialization, four cache reads.
       val raw = T.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
         .join(T.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),

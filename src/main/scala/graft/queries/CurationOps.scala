@@ -1045,7 +1045,7 @@ object CurationOps {
         // stages' scan sides are independent of the state chain, so in
         // the one final job they all launch at once and would RACE to
         // compute the explode+distinct before the cache populates
-        // (ShuffleAudit showed ~7× re-read). Materializing once up
+        // (its input bytes showed ~7× re-read). Materializing once up
         // front makes every batch read the same stored partitions.
         .withColumn("gh", xxhash64(col("g")))
         .drop("g")

@@ -253,10 +253,10 @@ object TrainingOps {
     * Scale shape: both sides reduce to (16-byte md5, key) BEFORE the
     * join — the corpus side is `select distinct md5(text)`, so the only
     * shuffle moves hashes, never text. The join is a hash-partitioned
-    * equi-join on the hash (both sides large ⇒ no broadcast); with a
-    * bucketed corpus-hash table (ops.Bucketing) the corpus side's
-    * exchange disappears entirely and daily deltas join exchange-free
-    * on their own (small) shuffle.
+    * equi-join on the hash (both sides large ⇒ no broadcast); with the
+    * corpus-hash table bucketed on the hash (`bucketBy`) the corpus
+    * side's exchange disappears entirely and daily deltas join
+    * exchange-free on their own (small) shuffle.
     */
   val q68IncrementalDedup = Q(
     "q68_incremental_dedup",
@@ -648,10 +648,11 @@ object TrainingOps {
     *
     * Spark rendering: one full-outer hash join on doc_id + one CASE
     * projection — the exact logical shape Delta/Iceberg MERGE lowers
-    * to, minus their file-level pruning (a layout concern; Bucketing/
-    * Compaction cover it). Keyed, linear, no driver involvement; the
-    * tombstone filter happens in the same projection, so the plan is
-    * scan → join → project with nothing corpus-sized recomputed.
+    * to, minus their file-level pruning (a layout concern: bucketing
+    * and file compaction at write time). Keyed, linear, no driver
+    * involvement; the tombstone filter happens in the same projection,
+    * so the plan is scan → join → project with nothing corpus-sized
+    * recomputed.
     */
   val q110SnapshotMerge = Q(
     "q110_snapshot_merge",
@@ -708,7 +709,7 @@ object TrainingOps {
         FULL OUTER JOIN ins i ON i.doc_id = COALESCE(b.doc_id, u.doc_id, d.doc_id))
       SELECT doc_id, source, n_chars, action FROM m
       WHERE action <> 'deleted' ORDER BY doc_id""".stripMargin),
-    "snapshot MERGE: one full-outer doc_id hash join + CASE projection applying updates/tombstones/inserts with MERGE-clause precedence — the Delta/Iceberg upsert shape, keyed and linear; layout-level file pruning is Bucketing/Compaction's job")
+    "snapshot MERGE: one full-outer doc_id hash join + CASE projection applying updates/tombstones/inserts with MERGE-clause precedence — the Delta/Iceberg upsert shape, keyed and linear; layout-level file pruning is a write-time layout concern (bucketing, compaction)")
 
   val q72DupClusters = Q(
     "q72_dup_clusters",
@@ -878,17 +879,17 @@ object TrainingOps {
   // ---------------------------------------------------------------------
 
   /** Z-order clustering keys over (user, value-bucket) — the
-    * computation behind [[graft.ops.ZOrderLayout]]'s multi-dimensional
-    * file layout (Delta/Iceberg `OPTIMIZE ZORDER BY` re-expressed as a
-    * write pattern; see that object's scaladoc for WHY at 100 TB).
+    * computation behind a Z-ordered multi-dimensional file layout
+    * (Delta/Iceberg `OPTIMIZE ZORDER BY`: a write range-partitioned and
+    * sorted on z gets balanced per-file bounding boxes, so min/max stats
+    * prune selective predicates on either dimension).
     * This query pins the BIT MATH: the native
     * [[graft.functions.ZOrder2Expr]] computes the Morton code with
     * magic-mask parallel spreads in whole-stage codegen, while the
     * DuckDB oracle interleaves all 32 bits the naive way — an unrolled
     * Σᵢ ((x≫i)&1)≪2i + ((y≫i)&1)≪(2i+1) — so the two engines agree
     * integer-for-integer through completely different formulations.
-    * ZOrderSpec adds the layout-level pruning property (balanced
-    * per-file bounding boxes vs an x-sorted control).
+    * ZOrderSpec adds the kernel's prefix property and codegen path.
     */
   val q74Zorder = Q(
     "q74_zorder",
@@ -916,7 +917,7 @@ object TrainingOps {
       SELECT event_id, xd, yd, CAST($terms AS BIGINT) AS z
       FROM d ORDER BY event_id""".stripMargin
     },
-    "Z-order (Morton) clustering key: native magic-mask interleave expression (codegen) vs a naive 32-term unrolled bit oracle; the compute half of ZOrderLayout's multi-dim file-skipping layout")
+    "Z-order (Morton) clustering key: native magic-mask interleave expression (codegen) vs a naive 32-term unrolled bit oracle; the compute half of a Z-ordered multi-dim file-skipping layout")
 
   // ---------------------------------------------------------------------
   // q77 — eval-set decontamination (n-gram overlap)
@@ -1454,7 +1455,7 @@ object TrainingOps {
     // Longest run per doc via max_by (round 21, guide §2.2): both this
     // and the previous row_number window ride the isl window's
     // existing doc_id partitioning (no new exchange either way — the
-    // ShuffleAudit bytes are identical), but the window form sorted
+    // shuffle bytes are identical), but the window form sorted
     // every run row by (run_len, run_start), numbered ALL of them, and
     // filtered to rn=1, where the partial max_by collapses each doc to
     // one row in a single pass (paired A/B: q116 0.89 → 0.77 s, q127

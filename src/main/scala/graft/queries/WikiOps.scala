@@ -198,7 +198,7 @@ object WikiOps {
         // per-partition sort = total order), but AQE coalesces
         // orderBy's exchange on BYTES — the pre-parse frame is small,
         // so the whole native parse above it collapsed into ~5 tasks
-        // (Prof: one 5.4 s stage) while 32 cores idled. The explicit
+        // (profiled: one 5.4 s stage) while 32 cores idled. The explicit
         // count is AQE-proof (the repartition(n, col) rule in the
         // verify notes), spreading the parse across the cluster; at
         // scale the exchange would be above-threshold anyway and the

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs — one JVM-wide session (tests
-  * run in sbt's forked JVM; getOrCreate dedupes across suites) with the
-  * same config surface as Verify/Bench.
+  * run in sbt's forked JVM; getOrCreate dedupes across suites) built by
+  * `GraftSession`, so specs run Bench's serializer and shuffle path.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -40,17 +40,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed-table writes (BucketingSpec) land in a scratch dir, not
-      // a spark-warehouse/ inside the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
+    val s = GraftSession.builder(4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

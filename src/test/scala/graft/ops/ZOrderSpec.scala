@@ -4,10 +4,9 @@ import graft.SparkSpec
 import graft.functions.ZOrderKernel
 import org.apache.spark.sql.functions._
 
-/** Z-order: kernel correctness (vs the naive per-bit interleave) and
-  * the layout property that justifies it — balanced per-file bounding
-  * boxes let min/max stats prune selective predicates on EITHER
-  * dimension, where a single-column sort prunes only its own column.
+/** Z-order kernel: equality with the naive per-bit interleave, the
+  * dominance-order prefix property, and the codegen path on a
+  * parquet-backed plan.
   */
 class ZOrderSpec extends SparkSpec {
 
@@ -47,87 +46,5 @@ class ZOrderSpec extends SparkSpec {
     out.foreach { r =>
       assert(r.getLong(2) === ZOrderKernel.interleave16(r.getInt(0), r.getInt(1)))
     }
-  }
-
-  test("z-ordered files prune single-dimension box queries an x-sort cannot") {
-    // Uniform 256x256 grid: with uniform z mass the range partitioner's
-    // quantile cuts align with curve quadrants and the bounding-box
-    // property shows cleanly. (On skewed dimension digests the cuts land
-    // mid-quadrant and seam files get wider boxes — same asymptotics,
-    // noisier constants; the scaladoc covers digest design.)
-    val dims = spark.range(65536L)
-      .select((col("id") / 256).cast("int").as("xd"),
-        (col("id") % 256).cast("int").as("yd"))
-    val tmp = java.nio.file.Files.createTempDirectory("zorder").toString
-    val n = 16
-    ZOrderLayout.writeZOrdered(dims, col("xd"), col("yd"), n, s"$tmp/z")
-    dims.repartitionByRange(n, col("xd")).sortWithinPartitions(col("xd"))
-      .write.mode("overwrite").parquet(s"$tmp/x")
-
-    // per-file bounding boxes — what parquet footer min/max stats expose
-    def boxes(path: String) = spark.read.parquet(path)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("xd")).as("x0"), max(col("xd")).as("x1"),
-        min(col("yd")).as("y0"), max(col("yd")).as("y1"))
-      .collect()
-    val zBoxes = boxes(s"$tmp/z")
-    val xBoxes = boxes(s"$tmp/x")
-    assert(zBoxes.length >= n - 1 && xBoxes.length >= n - 1)
-
-    def hits(bs: Seq[org.apache.spark.sql.Row], dim: String, lo: Int, hi: Int) =
-      bs.count { r =>
-        val (a, b) = if (dim == "x") (r.getInt(1), r.getInt(2))
-                     else (r.getInt(3), r.getInt(4))
-        a <= hi && b >= lo
-      }
-
-    // selective y-band: the x-sorted layout can prune (almost) nothing —
-    // every file spans the full y range; the z-layout skips most files.
-    // Envelope is n/2 + 1, not n/2: repartitionByRange SAMPLES its cuts,
-    // and one cut landing mid-quadrant widens one seam file's box enough
-    // to hit the band — a property of the sampled write path (suite-order
-    // conf drift moved a cut across exactly this boundary in round 9),
-    // not of the curve. The aligned write path below asserts exactly.
-    val seam = zBoxes.length / 2 + 1
-    val yZ = hits(zBoxes.toSeq, "y", 0, 63)
-    val yX = hits(xBoxes.toSeq, "y", 0, 63)
-    assert(yX >= xBoxes.length - 1, s"x-sorted layout unexpectedly pruned y-band: $yX")
-    assert(yZ <= seam,
-      s"z-layout failed to prune y-band: $yZ of ${zBoxes.length} files hit")
-    // and the z-layout still prunes an x-band too (balance — the point)
-    val xZ = hits(zBoxes.toSeq, "x", 0, 63)
-    assert(xZ <= seam,
-      s"z-layout failed to prune x-band: $xZ of ${zBoxes.length} files hit")
-  }
-
-  test("aligned z-order write: exact quadrant boxes, deterministic pruning") {
-    // Explicit curve-aligned cuts (no sampling job): 16 buckets over an
-    // 8-bit-per-dim domain = the 16 level-2 quadrants, so every file is
-    // an exactly 64x64 box and a 64-wide band on EITHER dimension hits
-    // exactly 4 of 16 files — equality, not an envelope.
-    val dims = spark.range(65536L)
-      .select((col("id") / 256).cast("int").as("xd"),
-        (col("id") % 256).cast("int").as("yd"))
-    val tmp = java.nio.file.Files.createTempDirectory("zorderAligned").toString
-    ZOrderLayout.writeZOrderedAligned(dims, col("xd"), col("yd"), 8, 16, s"$tmp/za")
-
-    val boxes = spark.read.parquet(s"$tmp/za")
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("xd")).as("x0"), max(col("xd")).as("x1"),
-        min(col("yd")).as("y0"), max(col("yd")).as("y1"))
-      .collect()
-    assert(boxes.length === 16)
-    boxes.foreach { r =>
-      assert(r.getInt(2) - r.getInt(1) === 63, s"x-extent not 64: $r")
-      assert(r.getInt(4) - r.getInt(3) === 63, s"y-extent not 64: $r")
-    }
-    def hits(dim: String, lo: Int, hi: Int) = boxes.count { r =>
-      val (a, b) = if (dim == "x") (r.getInt(1), r.getInt(2))
-                   else (r.getInt(3), r.getInt(4))
-      a <= hi && b >= lo
-    }
-    assert(hits("y", 0, 63) === 4)
-    assert(hits("x", 0, 63) === 4)
-    assert(hits("x", 64, 127) === 4)
   }
 }

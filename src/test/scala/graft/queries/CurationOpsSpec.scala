@@ -334,8 +334,14 @@ class CurationOpsSpec extends SparkSpec {
     import s.implicits._
     val state = (1L to 5000L).map(h => (h * 2654435761L, h % 7))
       .toDF("gh", "first_batch")
-    graft.ops.Bucketing.writeBucketed(state, "b_gram_state", "gh", 8)
-    val bucketed = graft.ops.Bucketing.readBucketed(s, "b_gram_state")
+    // repartition on the bucket key first so each writer task owns one
+    // bucket; an explicit path keeps the table's files in a temp dir
+    val stateDir = java.nio.file.Files.createTempDirectory("graft_gram_state")
+    state.repartition(8, col("gh")).write.mode("overwrite")
+      .option("path", stateDir.resolve("t").toString)
+      .bucketBy(8, "gh").sortBy("gh").format("parquet")
+      .saveAsTable("b_gram_state")
+    val bucketed = s.table("b_gram_state")
     val probe = (1L to 500L).map(h => h * 2654435761L).toDF("gh")
     val joined = probe.hint("merge").join(bucketed, Seq("gh"), "left")
     val plan = joined.queryExecution.executedPlan.toString

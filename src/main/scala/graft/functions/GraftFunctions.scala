@@ -1,38 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registration surface for graft's native Catalyst expressions.
-  *
-  * Two entry points, same registry row:
-  *  - `spark.sql.extensions=graft.functions.GraftExtensions` — the
-  *    standard extensions hook, makes `dot_f(a, b)` resolvable in SQL
-  *    text for any session built with the config;
-  *  - [[GraftFunctions.ensureRegistered]] — imperative registration on
-  *    an existing session (idempotent), used by the query builders so
-  *    the driver harness needs no session-config coupling.
+/** Registration surface for graft's native Catalyst expressions:
+  * [[GraftFunctions.ensureRegistered]] registers them on a live session
+  * (idempotent), so `dot_f(a, b)` and the rest resolve in SQL text; the
+  * query builders call it, so no session needs extra config. The
+  * column-API handles below build the same expressions without SQL-text
+  * resolution.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.dotF)
-    ext.injectFunction(GraftFunctions.simhashF)
-    ext.injectFunction(GraftFunctions.md5LongsF)
-    ext.injectFunction(GraftFunctions.rollingHashF)
-    ext.injectFunction(GraftFunctions.minhash64F)
-    ext.injectFunction(GraftFunctions.parsePageF)
-    ext.injectFunction(GraftFunctions.zorder2F)
-    ext.injectFunction(GraftFunctions.ngramsF)
-    // whole-plan rewrite: naive non-equi range joins → binned hash
-    // joins; inert unless spark.graft.binnedRangeJoin.width is set
-    ext.injectOptimizerRule(_ => graft.plans.BinnedRangeJoinRule)
-  }
-}
-
 object GraftFunctions {
 
-  private[functions] val dotF
+  private val dotF
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("dot_f"),
     new ExpressionInfo(classOf[DotProductF].getName, null, "dot_f"),
@@ -41,7 +22,7 @@ object GraftFunctions {
       DotProductF(children.head, children(1))
     })
 
-  private[functions] val simhashF
+  private val simhashF
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("simhash_bits"),
     new ExpressionInfo(classOf[SimhashBits].getName, null, "simhash_bits"),
@@ -51,7 +32,7 @@ object GraftFunctions {
       SimhashBits(children.head, children(1))
     })
 
-  private[functions] val md5LongsF
+  private val md5LongsF
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("md5_longs"),
     new ExpressionInfo(classOf[Md5PrefixLongsExpr].getName, null, "md5_longs"),
@@ -61,7 +42,7 @@ object GraftFunctions {
       Md5PrefixLongsExpr(children.head, children(1))
     })
 
-  private[functions] val rollingHashF
+  private val rollingHashF
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("rolling_hash"),
     new ExpressionInfo(classOf[RollingHashExpr].getName, null, "rolling_hash"),
@@ -71,7 +52,7 @@ object GraftFunctions {
       RollingHashExpr(children.head)
     })
 
-  private[functions] val minhash64F
+  private val minhash64F
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("minhash64"),
     new ExpressionInfo(classOf[MinHash64Expr].getName, null, "minhash64"),
@@ -81,7 +62,7 @@ object GraftFunctions {
       MinHash64Expr(children.head, children(1))
     })
 
-  private[functions] val parsePageF
+  private val parsePageF
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("parse_page"),
     new ExpressionInfo(classOf[ParsePageExpr].getName, null, "parse_page"),
@@ -91,7 +72,7 @@ object GraftFunctions {
       ParsePageExpr(children.head)
     })
 
-  private[functions] val ngramsF
+  private val ngramsF
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("ngrams"),
     new ExpressionInfo(classOf[NGramsExpr].getName, null, "ngrams"),
@@ -101,7 +82,7 @@ object GraftFunctions {
       NGramsExpr(children.head, children(1))
     })
 
-  private[functions] val zorder2F
+  private val zorder2F
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("zorder2"),
     new ExpressionInfo(classOf[ZOrder2Expr].getName, null, "zorder2"),

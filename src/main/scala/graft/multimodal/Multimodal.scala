@@ -1,153 +1,29 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
-/** Multimodal columns for a training-data pipeline: image/audio/video
-  * payloads as opaque BINARY columns with typed metadata, per the north
-  * star's extension list. The design rule at 100 TB:
+/** Band featurizers over media payloads: the decode step of the media
+  * dedup queries (PipelineOps q128–q132) and, through them, Curate's
+  * multimodal-dedup stage (4b).
   *
-  *  - payloads stay OPAQUE binary end-to-end: Spark shuffles/spills raw
-  *    bytes without interpreting them, and Tungsten stores them off-heap;
-  *  - metadata lives in typed columns decoded ONCE at ingest by NATIVE
-  *    expressions (substring/hex/conv over BinaryType — codegen'd, no
-  *    UDF), so filters like `width >= 512` prune BEFORE any expensive
-  *    decode and push into the parquet scan on re-read;
-  *  - the genuinely library-dependent step (pixel/sample decode) is a
-  *    per-partition BATCHED operator ([[extractFeatures]]) behind a
-  *    [[MediaDecoder]] seam — the Scala analog of a Pandas-UDF
-  *    `mapInPandas` stage: one decoder instance per partition
-  *    (connection/codec reuse), iterator-in/iterator-out so Spark
-  *    pipelines batches without materializing a partition in memory.
-  *
-  * Ingest path for real corpora: `spark.read.format("binaryFile")`
-  * (path/length/modTime/content), with `spark.sql.files.
-  * maxPartitionBytes` sizing partitions — the binary-safe version of the
-  * wholetext scan (SURVEY.md §7 risk (e)).
-  *
-  * Two concrete decoders ship: [[ImageFileDecoder]] hand-parses REAL
-  * image bytes (binary PPM "P6", uncompressed 24/32-bit BMP, RIFF
-  * WAV PCM, and three COMPRESSED formats — PNG with full chunk walk,
-  * CRC verification, zlib inflate via the JDK's Inflater and all five
-  * adaptive filter reconstructions; GIF87a/89a with a hand-rolled
-  * GIF-LZW decoder; and baseline JFIF/JPEG with canonical Huffman,
-  * dequant + double IDCT, 4:2:0/4:2:2/4:4:4 sampling and YCbCr→RGB —
-  * still zero external deps), and [[FakeDecoder]] parses the toy
-  * "GRFT" container for deterministic fixtures. Video is covered by
-  * Motion-JPEG in AVI (RIFF walk + per-frame baseline-JPEG decode);
-  * other video codecs would plug in at the same [[MediaDecoder]] seam.
-  *
-  * Scope boundary (SURVEY.md §8): MPEG audio (MP2/MP3) decode is
-  * deliberately NOT implemented — the ISO 11172-3 normative tables
-  * (512-coefficient synthesis window, Layer III Huffman tables) cannot
-  * be faithfully reconstructed offline, and an approximate decoder
-  * would return plausible-but-wrong samples, violating the family's
-  * no-silent-wrong-data contract (cf. Flac's STREAMINFO-MD5
-  * self-check). FLAC + G.711 + IMA ADPCM is the supported
-  * compressed-audio set; MP3 would plug in at this same seam.
+  *  - payloads stay OPAQUE `BINARY` end to end: Spark shuffles and
+  *    spills the raw bytes without interpreting them;
+  *  - each featurizer is a per-partition `mapPartitions` stage,
+  *    iterator-in/iterator-out, running one strict container parse per
+  *    row: binary PPM images ([[extractPpmBands]]), mono 8-bit G.711
+  *    μ-law RIFF WAV audio ([[extractWavBands]]) and uncompressed-DIB
+  *    RIFF AVI video ([[extractAviDibBands]]);
+  *  - features are exact integers (band sums, Σ sample² energies), so
+  *    they are identical under any partitioning and reproducible by any
+  *    engine that can see the bytes — the DuckDB oracle recomputes them;
+  *  - parses are strict: a malformed, truncated or out-of-scope payload
+  *    is rejected with an `IllegalArgumentException` naming its
+  *    media_id, never featurized from a guess.
   */
 object Multimodal {
 
   /** One media row: opaque payload + routing metadata. */
   final case class Media(media_id: Long, kind: String, payload: Array[Byte])
-
-  /** Decoded (fake) features — the output schema a real vision/audio
-    * featurizer would produce.
-    */
-  final case class MediaFeatures(
-      media_id: Long, kind: String, width: Int, height: Int, channels: Int,
-      n_bytes: Long, mean_byte: Double)
-
-  // ------------------------------------------------------------------
-  // The toy "GRFT" container: 9-byte header + body
-  //   bytes 0-1  magic 'G','R'
-  //   byte  2    kind: 1=image 2=audio 3=video
-  //   bytes 3-4  width  (big-endian u16)
-  //   bytes 5-6  height (big-endian u16)
-  //   byte  7    channels
-  //   byte  8    reserved
-  // ------------------------------------------------------------------
-
-  val HeaderLen = 9
-
-  /** Deterministic fixture payload (tests/demos): header + a body whose
-    * byte i is (seed + i) % 251 — decodable by arithmetic, no codec.
-    */
-  def encodeFake(kind: Int, width: Int, height: Int, channels: Int,
-      bodyLen: Int, seed: Int): Array[Byte] = {
-    val out = new Array[Byte](HeaderLen + bodyLen)
-    out(0) = 'G'; out(1) = 'R'; out(2) = kind.toByte
-    out(3) = ((width >> 8) & 0xff).toByte; out(4) = (width & 0xff).toByte
-    out(5) = ((height >> 8) & 0xff).toByte; out(6) = (height & 0xff).toByte
-    out(7) = channels.toByte; out(8) = 0
-    var i = 0
-    while (i < bodyLen) { out(HeaderLen + i) = ((seed + i) % 251).toByte; i += 1 }
-    out
-  }
-
-  /** Big-endian unsigned int from `len` bytes at 1-based `pos` of a
-    * binary column — pure built-ins (substring works on BinaryType, hex
-    * → conv), whole-stage-codegen'd. This is the "decode metadata
-    * natively" path: no UDF between the scan and a width/height filter.
-    */
-  def beUInt(payload: Column, pos: Int, len: Int): Column =
-    conv(hex(substring(payload, pos, len)), 16, 10).cast("int")
-
-  /** Header validity + typed metadata projection, all native. */
-  def isGrft(payload: Column): Column =
-    length(payload) >= HeaderLen && hex(substring(payload, 1, 2)) === "4752"
-
-  def metaColumns(payload: Column): Column = struct(
-    beUInt(payload, 3, 1).as("kind_code"),
-    beUInt(payload, 4, 2).as("width"),
-    beUInt(payload, 6, 2).as("height"),
-    beUInt(payload, 8, 1).as("channels"),
-    (length(payload) - HeaderLen).cast("long").as("body_bytes"))
-
-  /** N evenly-strided fixed-size "frames" from the body — video
-    * frame-sampling as a native expression: array of binary slices, no
-    * UDF, no data copy beyond the selected frames. Slices run off the
-    * end are dropped (substring pads nothing; a short slice is filtered
-    * by its length).
-    */
-  def frameSample(payload: Column, n: Int, frameLen: Int): Column = {
-    val body = length(payload) - HeaderLen
-    val stride = greatest((body / n).cast("int"), lit(1))
-    filter(
-      transform(sequence(lit(0), lit(n - 1)),
-        i => payload.substr(lit(HeaderLen + 1) + i * stride, lit(frameLen))),
-      f => length(f) === frameLen)
-  }
-
-  /** mapInPandas-analog batched featurizer: one [[MediaDecoder]] per
-    * partition, iterator-in/iterator-out. The fake decoder is
-    * deterministic; a real deployment implements [[MediaDecoder]] with
-    * an actual codec (javax.imageio / ffmpeg bindings) — that seam is
-    * the ONLY place pixels are touched.
-    */
-  def extractFeatures(media: Dataset[Media]): Dataset[MediaFeatures] =
-    extractFeatures(media, () => new FakeDecoder)
-
-  /** As above with a caller-chosen decoder factory (invoked once per
-    * partition on the EXECUTOR — the factory, not the decoder, is what
-    * serializes with the closure).
-    */
-  def extractFeatures(media: Dataset[Media],
-      mkDecoder: () => MediaDecoder): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      val decoder = mkDecoder() // per-partition init
-      rows.map(m => decoder.decode(m))
-    }
-  }
-
-  /** The decode seam. A production implementation wraps a codec library
-    * and may hold per-partition native resources; implementations MUST
-    * be cheap to construct (one per partition) and thread-confined.
-    */
-  trait MediaDecoder extends Serializable {
-    def decode(m: Media): MediaFeatures
-  }
 
   /** Vector featurization row: per-row-band INTEGER pixel sums from a
     * real container parse — the fixed-dimension embedding the ANN/dedup
@@ -158,8 +34,7 @@ object Multimodal {
   final case class MediaBands(
       media_id: Long, width: Int, height: Int, bands: Array[Long])
 
-  /** Strict binary-PPM (P6) header parse, shared by the scalar decoder
-    * ([[ImageFileDecoder]]'s PPM path) and the band featurizer:
+  /** Strict binary-PPM (P6) header parse for [[ppmBandSums]]:
     * whitespace-separated decimal fields with '#'-to-end-of-line
     * comments legal anywhere between fields; ≤9-digit fields so Int
     * cannot overflow-wrap (a wrapped-negative width would make the
@@ -228,10 +103,10 @@ object Multimodal {
     (width, height, sums)
   }
 
-  /** mapPartitions band featurizer over PPM payloads — the vector twin
-    * of [[extractFeatures]] (same iterator-in/iterator-out seam; a
-    * production deployment swaps the parse for a codec that yields
-    * pixels and keeps the band arithmetic).
+  /** [[ppmBandSums]] as the mapPartitions batch seam: one parse per
+    * row, iterator-in/iterator-out (a production deployment swaps the
+    * parse for a codec that yields pixels and keeps the band
+    * arithmetic).
     */
   def extractPpmBands(media: Dataset[Media], nBands: Int): Dataset[MediaBands] = {
     import media.sparkSession.implicits._
@@ -252,9 +127,9 @@ object Multimodal {
   final case class AudioBands(media_id: Long, bands: Array[Long])
 
   /** Per-band PCM ENERGY over a mono 8-bit G.711 μ-law WAV: the strict
-    * RIFF/fmt/data walk (the [[AudioFileDecoder]] WAV contract — fmt
-    * tag 7, 1 channel, 8 bits, chunk bounds checked), each data byte
-    * expanded through the REAL [[G711.ulawToPcm]] kernel, the samples
+    * RIFF/fmt/data walk (fmt tag 7, 1 channel, 8 bits, every chunk
+    * bounds-checked against the payload), each data byte expanded
+    * through the [[G711.ulawToPcm]] kernel, the samples
     * grouped into `nBands` equal bands, each band accumulating Σ pcm².
     * Every energy is an exact integer: |pcm| ≤ 32124, pcm² ≤ 1.033e9,
     * ×(samples/band) far below 2⁵³ for any corpus-rendered clip — the
@@ -319,15 +194,15 @@ object Multimodal {
       n_frames: Int, bands: Array[Long])
 
   /** Per-band pixel ENERGY over an uncompressed-DIB AVI (RIFF form
-    * 'AVI ', BI_RGB 24-bit '##db' streams — the codec
-    * [[decodeAviMjpeg]]'s MJPEG path used to reject with a scope
-    * message): the strict RIFF walk (depth-bounded LIST recursion,
-    * chunk bounds checked — the WAV-walk contract on the video
-    * container), stream geometry taken from the 'strf'
-    * BITMAPINFOHEADER and ENFORCED against every frame (frame length
-    * must equal stride·height with stride = 4-byte-aligned 3·width,
-    * the DIB row-padding rule), frame count cross-checked against the
-    * 'avih' header's dwTotalFrames. Rows decode BOTTOM-UP (positive
+    * 'AVI ', BI_RGB 24-bit '##db' streams): the strict RIFF walk
+    * (depth-bounded LIST recursion, chunk bounds checked — the WAV-walk
+    * contract on the video container), stream geometry taken from the
+    * single 'strf' BITMAPINFOHEADER and ENFORCED against every frame
+    * (frame length must equal stride·height with stride = 4-byte-
+    * aligned 3·width, the DIB row-padding rule; computed in Long, and a
+    * frame larger than the payload is rejected, so a crafted geometry
+    * cannot wrap to a small frame length), frame count cross-checked
+    * against the 'avih' header's dwTotalFrames. Rows decode BOTTOM-UP (positive
     * biHeight — DIB's storage order; top-down negative-height files
     * are out of scope and rejected loudly), so band b of the DECODED
     * image reads stored row height−1−r — an order-SENSITIVE feature
@@ -348,6 +223,7 @@ object Multimodal {
     def leU32(off: Int): Long =
       (p(off) & 0xffL) | ((p(off + 1) & 0xffL) << 8) |
         ((p(off + 2) & 0xffL) << 16) | ((p(off + 3) & 0xffL) << 24)
+    var haveStrf = false
     var biW = -1; var biH = -1; var biBits = -1; var biComp = -1L
     var totalFrames = -1L
     val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
@@ -372,7 +248,8 @@ object Multimodal {
           totalFrames = leU32(i + 8 + 16)
         } else if (id == "strf") {
           if (len < 40) fail(s"strf chunk too short for BITMAPINFOHEADER ($len bytes)")
-          if (biW >= 0) fail("more than one video strf stream header")
+          if (haveStrf) fail("more than one video strf stream header")
+          haveStrf = true
           biW = leU32(i + 8 + 4).toInt; biH = leU32(i + 8 + 8).toInt
           biBits = leU16(i + 8 + 14); biComp = leU32(i + 8 + 16)
         } else if (inMovi && isFrameId(id) && len > 0) {
@@ -382,17 +259,23 @@ object Multimodal {
       }
     }
     walk(0, p.length, inMovi = false, depth = 0)
-    if (biW < 0) fail("AVI without a strf BITMAPINFOHEADER")
+    if (!haveStrf) fail("AVI without a strf BITMAPINFOHEADER")
     if (biComp != 0L || biBits != 24)
       fail(s"expected uncompressed BI_RGB 24-bit DIB video (compression=" +
-        s"$biComp bits=$biBits) — compressed streams go through the MJPEG path")
+        s"$biComp bits=$biBits) — compressed streams are out of scope")
     if (biW <= 0 || biH <= 0)
       fail(s"non-positive DIB geometry ${biW}x$biH (top-down negative-height " +
         "DIBs are out of scope)")
     if (frames.isEmpty) fail("AVI without DIB frame chunks in a movi list")
     if (totalFrames >= 0 && totalFrames != frames.size)
       fail(s"avih declares $totalFrames frames but the movi list holds ${frames.size}")
-    val stride = ((biW * 3 + 3) / 4) * 4
+    // geometry in Long: in Int, a crafted width/height wraps
+    // stride·height to a small frame length that a tiny chunk matches
+    val strideL = (biW * 3L + 3) / 4 * 4
+    if (strideL * biH > p.length)
+      fail(s"DIB geometry ${biW}x$biH needs ${strideL * biH}-byte frames, " +
+        s"which exceeds the ${p.length}-byte payload")
+    val stride = strideL.toInt
     val frameLen = stride * biH
     if (nBands <= 0 || biH % nBands != 0)
       fail(s"$biH rows not divisible into $nBands bands")
@@ -428,1030 +311,11 @@ object Multimodal {
     }
   }
 
-  /** Deterministic stand-in for the codec-backed decoder (no image/audio
-    * libraries exist in this environment): parses the GRFT header
-    * arithmetically and "featurizes" the body as its exact mean byte
-    * value. Replace with a real codec at the [[MediaDecoder]] seam.
-    */
-  final class FakeDecoder extends MediaDecoder {
-    def decode(m: Media): MediaFeatures = {
-      val p = m.payload
-      require(p.length >= HeaderLen && p(0) == 'G' && p(1) == 'R',
-        s"not a GRFT payload: media_id=${m.media_id}")
-      val width = ((p(3) & 0xff) << 8) | (p(4) & 0xff)
-      val height = ((p(5) & 0xff) << 8) | (p(6) & 0xff)
-      val body = p.length - HeaderLen
-      var sum = 0L
-      var i = HeaderLen
-      while (i < p.length) { sum += (p(i) & 0xff); i += 1 }
-      MediaFeatures(m.media_id, m.kind, width, height, p(7) & 0xff,
-        p.length.toLong, if (body == 0) 0.0 else sum.toDouble / body)
-    }
-  }
-
-  /** REAL media bytes, no codec library: binary PPM ("P6", RFC-free
-    * but fully specified by the Netpbm doc — ASCII header of
-    * width/height/maxval with #-comments, then raw RGB triplets),
-    * uncompressed BMP (BITMAPFILEHEADER "BM" + BITMAPINFOHEADER;
-    * little-endian geometry at fixed offsets; 24/32-bit pixels;
-    * rows padded to 4 bytes, bottom-up unless height < 0), and RIFF
-    * WAV ("RIFF"/"WAVE" magic, chunked "fmt "/"data" layout; PCM
-    * 16-bit plus three COMPRESSED audio encodings — G.711 mu-law,
-    * G.711 A-law, and IMA ADPCM, each expanded by hand, see
-    * [[decodeWav]] — the audio modality decoded from real container
-    * bytes, not a stub). All are byte-exact hand-parses — mean_byte covers
-    * PAYLOAD bytes only (headers, BMP row padding and non-data RIFF
-    * chunks excluded), so the feature is a property of the media, not
-    * of the container framing. WAV maps onto the shared feature
-    * schema as width = sample rate, height = sample frames,
-    * channels = PCM channels (documented here because the schema is
-    * image-named; a production pipeline would carry a typed per-kind
-    * struct instead).
-    */
-  final class ImageFileDecoder extends MediaDecoder {
-    def decode(m: Media): MediaFeatures = {
-      val p = m.payload
-      if (p.length >= 12 && p(0) == 'R' && p(1) == 'I' && p(2) == 'F' && p(3) == 'F' &&
-        p(8) == 'A' && p(9) == 'V' && p(10) == 'I' && p(11) == ' ')
-        decodeAviMjpeg(m)
-      else if (p.length >= 4 && p(0) == 'R' && p(1) == 'I' && p(2) == 'F' && p(3) == 'F')
-        decodeWav(m)
-      else if (p.length >= 8 && (p(0) & 0xff) == 0x89 && p(1) == 'P' &&
-        p(2) == 'N' && p(3) == 'G' && (p(4) & 0xff) == 0x0d &&
-        (p(5) & 0xff) == 0x0a && (p(6) & 0xff) == 0x1a && (p(7) & 0xff) == 0x0a)
-        decodePng(m)
-      else if (p.length >= 6 && p(0) == 'G' && p(1) == 'I' && p(2) == 'F' &&
-        p(3) == '8' && (p(4) == '7' || p(4) == '9') && p(5) == 'a')
-        decodeGif(m)
-      else if (p.length >= 2 && (p(0) & 0xff) == 0xff && (p(1) & 0xff) == 0xd8)
-        decodeJpeg(m)
-      else if (p.length >= 2 && p(0) == 'P' && p(1) == '6') decodePpm(m)
-      else if (p.length >= 2 && p(0) == 'B' && p(1) == 'M') decodeBmp(m)
-      else if (p.length >= 4 && p(0) == 'f' && p(1) == 'L' && p(2) == 'a' && p(3) == 'C')
-        decodeFlac(m)
-      else throw new IllegalArgumentException(
-        s"unsupported media container (want P6 PPM, BM BMP, PNG, GIF, JPEG, fLaC, RIFF WAV or RIFF AVI/MJPEG): media_id=${m.media_id}")
-    }
-
-    /** FLAC — the lossless compressed-audio path (full decoder in
-      * [[Flac]]: Rice-coded residuals, fixed + LPC predictors, stereo
-      * decorrelation, CRC-8/16 checks, STREAMINFO-MD5 losslessness
-      * self-check). Feature mapping and decoded-byte mean follow the
-      * WAV contract: width = sample rate, height = frames per channel,
-      * mean_byte over the decoded little-endian sample bytes.
-      */
-    private def decodeFlac(m: Media): MediaFeatures = {
-      val d = try Flac.decode(m.payload) catch {
-        case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"${e.getMessage}: media_id=${m.media_id}")
-      }
-      val bytesPer = d.bitsPerSample / 8
-      var sum = 0L
-      var i = 0
-      while (i < d.samples.length) {
-        var b = 0
-        while (b < bytesPer) { sum += (d.samples(i) >> (8 * b)) & 0xff; b += 1 }
-        i += 1
-      }
-      val n = d.samples.length.toLong * bytesPer
-      MediaFeatures(m.media_id, m.kind, d.sampleRate,
-        d.samples.length / d.channels, d.channels, m.payload.length.toLong,
-        if (n == 0) 0.0 else sum.toDouble / n)
-    }
-
-    /** Motion-JPEG in AVI (RIFF form 'AVI ') — the video modality,
-      * riding the baseline-JPEG decoder: every '##dc'/'##db' chunk
-      * inside the 'movi' LIST (including 'rec ' sub-lists) is an
-      * independent JPEG frame (MJPEG frames each carry their own
-      * tables; frames without them are rejected by the JPEG path).
-      * Non-frame chunks (hdrl headers, idx1, padding) are walked and
-      * bounds-checked but not decoded — RIFF semantics. Features map
-      * onto the shared schema as: geometry/channels of the FIRST frame
-      * (all frames must agree — MJPEG streams are constant-geometry),
-      * n_bytes = container length, mean_byte = pixel-weighted mean
-      * over ALL decoded frames, making the feature a property of the
-      * decoded video, not the container framing (same contract as the
-      * image and WAV paths).
-      */
-    private def decodeAviMjpeg(m: Media): MediaFeatures = {
-      val p = m.payload
-      def fail(msg: String): Nothing =
-        throw new IllegalArgumentException(s"$msg: media_id=${m.media_id}")
-      def leU16(off: Int): Int = (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
-      def leU32(off: Int): Long =
-        (p(off) & 0xffL) | ((p(off + 1) & 0xffL) << 8) |
-          ((p(off + 2) & 0xffL) << 16) | ((p(off + 3) & 0xffL) << 24)
-      val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-      // strf BITMAPINFOHEADER, captured during the walk: the DIB frame
-      // path (round 16) takes its geometry from here — raw '##db'
-      // frames carry no per-frame header, unlike MJPEG's self-
-      // describing JPEGs
-      var biW = -1; var biH = -1; var biBits = -1; var biComp = -1L
-      def isFrameId(id: String): Boolean =
-        id.length == 4 && id(0).isDigit && id(1).isDigit &&
-          (id.endsWith("dc") || id.endsWith("db"))
-      // chunk walk; RIFF/LIST recurse with their 4-byte form type
-      // skipped. Depth-bounded: real AVIs nest RIFF>LIST(hdrl/movi)>
-      // LIST(rec ) ≤ 4 deep, but a crafted file can nest LISTs tens of
-      // thousands deep and blow the stack (StackOverflowError is an
-      // Error, not the reject-loudly contract) — found by the round-10
-      // RIFF structure fuzzer.
-      def walk(start: Int, end: Int, inMovi: Boolean, depth: Int): Unit = {
-        if (depth > 16)
-          fail(s"AVI list nesting deeper than 16 at $start — not a real AVI")
-        var i = start
-        while (i + 8 <= end) {
-          val id = new String(p, i, 4, "US-ASCII")
-          val len = leU32(i + 4)
-          if (len < 0 || i + 8 + len > end)
-            fail(s"AVI chunk '$id' overruns its enclosing list ($len bytes at $i)")
-          if (id == "RIFF" || id == "LIST") {
-            if (len < 4) fail(s"AVI list at $i too short for a form type")
-            val form = new String(p, i + 8, 4, "US-ASCII")
-            walk(i + 12, i + 8 + len.toInt,
-              inMovi || form == "movi" || form == "rec ", depth + 1)
-          } else if (id == "strf" && len >= 40 && biW < 0) {
-            biW = leU32(i + 8 + 4).toInt; biH = leU32(i + 8 + 8).toInt
-            biBits = leU16(i + 8 + 14); biComp = leU32(i + 8 + 16)
-          } else if (inMovi && isFrameId(id) && len > 0) {
-            frames += ((i + 8, len.toInt))
-          }
-          i += 8 + len.toInt + (len.toInt & 1) // word-aligned, like WAV
-        }
-      }
-      walk(0, p.length, inMovi = false, depth = 0)
-      if (frames.isEmpty) fail("AVI without MJPEG frame chunks in a movi list")
-      var w = -1; var h = -1; var ch = -1
-      var pxSum = 0.0; var pxCnt = 0L
-      frames.foreach { case (off, len) =>
-        // '##db' conventionally carries uncompressed DIB frames in AVI;
-        // some MJPEG encoders use it for JPEG frames too, so sniff the
-        // payload: a JPEG SOI goes to the JPEG path, anything else is a
-        // raw DIB frame (round 16 — previously a scope rejection)
-        // decoded against the strf BITMAPINFOHEADER: BI_RGB 24-bit,
-        // bottom-up, 4-byte-aligned rows, frame length enforced.
-        val isJpeg =
-          len >= 2 && (p(off) & 0xff) == 0xff && (p(off + 1) & 0xff) == 0xd8
-        val (fw, fh, fch, fMean) =
-          if (isJpeg) {
-            val f = decodeJpeg(Media(m.media_id, m.kind,
-              java.util.Arrays.copyOfRange(p, off, off + len)))
-            (f.width, f.height, f.channels, f.mean_byte)
-          } else {
-            if (biW < 0) fail("raw DIB frame in an AVI without a strf " +
-              "BITMAPINFOHEADER")
-            if (biComp != 0L || biBits != 24)
-              fail(s"AVI stream chunk is neither a JPEG frame nor BI_RGB " +
-                s"24-bit DIB (compression=$biComp bits=$biBits)")
-            if (biW <= 0 || biH <= 0)
-              fail(s"non-positive DIB geometry ${biW}x$biH (top-down " +
-                "negative-height DIBs are out of scope)")
-            val stride = ((biW * 3 + 3) / 4) * 4
-            if (len != stride * biH)
-              fail(s"DIB frame is $len bytes, want stride($stride)x$biH = " +
-                s"${stride * biH}")
-            var sum = 0L
-            var r = 0
-            while (r < biH) {
-              var c = 0
-              while (c < biW * 3) { sum += (p(off + r * stride + c) & 0xff); c += 1 }
-              r += 1
-            }
-            (biW, biH, 3, sum.toDouble / (biW.toLong * biH * 3))
-          }
-        if (w < 0) { w = fw; h = fh; ch = fch }
-        else if (fw != w || fh != h || fch != ch)
-          fail(s"AVI frames disagree on geometry (${fw}x${fh}x$fch vs ${w}x${h}x$ch)")
-        val n = fw.toLong * fh * fch
-        pxSum += fMean * n; pxCnt += n
-      }
-      MediaFeatures(m.media_id, m.kind, w, h, ch, p.length.toLong,
-        if (pxCnt == 0) 0.0 else pxSum / pxCnt)
-    }
-
-    /** Baseline sequential JFIF/JPEG (SOF0), decoded by hand: marker
-      * walk, 8-bit quantization tables in zigzag order, canonical
-      * Huffman tables from DHT, the entropy-coded scan with FF00 byte
-      * unstuffing and DRI restart markers, per-MCU DC-diff + AC
-      * run-length block decode, dequantize, separable double-precision
-      * IDCT, and JFIF YCbCr→RGB with clamping. Sampling factors 1 and
-      * 2 are supported (4:4:4, 4:2:2, 4:2:0 — box upsampling), 1- and
-      * 3-component frames; progressive (SOF2), arithmetic coding and
-      * 12-bit precision are rejected loudly. Feature semantics match
-      * the other image paths: mean_byte over the decoded RGB (or
-      * gray) samples of the full frame — JPEG is lossy, so the value
-      * is a property of the DECODED image; the spec bounds it against
-      * an independent decoder (ImageIO) rather than the source
-      * pixels.
-      */
-    private def decodeJpeg(m: Media): MediaFeatures = {
-      val p = m.payload
-      def fail(msg: String): Nothing =
-        throw new IllegalArgumentException(s"$msg: media_id=${m.media_id}")
-      def u8(off: Int): Int = { if (off >= p.length) fail("JPEG truncated"); p(off) & 0xff }
-      def u16(off: Int): Int = (u8(off) << 8) | u8(off + 1)
-
-      // --- tables gathered from the marker walk ---
-      val qt = Array.ofDim[Int](4, 64) // natural order
-      // Huffman: per (class 0=DC/1=AC, id) -> (maxcode/valptr/mincode per length, symbols)
-      final case class Huff(minCode: Array[Int], maxCode: Array[Int],
-          valPtr: Array[Int], symbols: Array[Int])
-      val huff = Array.ofDim[Huff](2, 4)
-      val zigzag = Array(
-        0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-        12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-        35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-        58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-
-      var w = 0; var h = 0; var nComp = 0
-      var compId = new Array[Int](0); var compH = new Array[Int](0)
-      var compV = new Array[Int](0); var compQ = new Array[Int](0)
-      var restartInterval = 0
-      var i = 2
-      var scanStart = -1
-      var compDc = new Array[Int](0); var compAc = new Array[Int](0)
-      while (scanStart < 0) {
-        if (u8(i) != 0xff) fail(s"JPEG marker sync lost at $i")
-        // ISO 10918 B.1.1.2: any number of 0xFF fill bytes may precede the
-        // marker code byte; without skipping them a legal file reads as a
-        // 0xFF "marker" with a garbage length.
-        while (u8(i + 1) == 0xff) i += 1
-        val marker = u8(i + 1)
-        i += 2
-        marker match {
-          case 0xd8 => // stray SOI
-          case 0xc0 => // SOF0 baseline
-            val len = u16(i)
-            if (u8(i + 2) != 8) fail("only 8-bit JPEG supported")
-            h = u16(i + 3); w = u16(i + 5); nComp = u8(i + 7)
-            if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26)) fail("implausible JPEG geometry")
-            if (nComp != 1 && nComp != 3) fail(s"unsupported JPEG component count $nComp")
-            compId = new Array[Int](nComp); compH = new Array[Int](nComp)
-            compV = new Array[Int](nComp); compQ = new Array[Int](nComp)
-            for (c <- 0 until nComp) {
-              compId(c) = u8(i + 8 + 3 * c)
-              val hv = u8(i + 9 + 3 * c)
-              compH(c) = hv >> 4; compV(c) = hv & 0xf
-              if (compH(c) < 1 || compH(c) > 2 || compV(c) < 1 || compV(c) > 2)
-                fail(s"unsupported JPEG sampling ${compH(c)}x${compV(c)}")
-              compQ(c) = u8(i + 10 + 3 * c)
-              if (compQ(c) > 3) fail(s"SOF quant table id out of range (${compQ(c)})")
-            }
-            i += len
-          case 0xc2 => fail("progressive JPEG (SOF2) unsupported")
-          case 0xc4 => // DHT — possibly several tables in one segment
-            val len = u16(i); val end = i + len; var j = i + 2
-            while (j < end) {
-              val tc = u8(j) >> 4; val th = u8(j) & 0xf
-              if (tc > 1 || th > 3) fail("bad DHT header")
-              val counts = (1 to 16).map(k => u8(j + k)).toArray
-              val total = counts.sum
-              val symbols = (0 until total).map(k => u8(j + 17 + k)).toArray
-              // canonical code assignment
-              val minCode = new Array[Int](17); val maxCode = new Array[Int](17)
-              val valPtr = new Array[Int](17)
-              var code = 0; var ptr = 0
-              for (l <- 1 to 16) {
-                valPtr(l) = ptr; minCode(l) = code
-                code += counts(l - 1); ptr += counts(l - 1)
-                maxCode(l) = code - 1; code <<= 1
-              }
-              // mark empty lengths so decode skips them
-              for (l <- 1 to 16) if (counts(l - 1) == 0) maxCode(l) = -1
-              huff(tc)(th) = Huff(minCode, maxCode, valPtr, symbols)
-              j += 17 + total
-            }
-            i = end
-          case 0xdb => // DQT
-            val len = u16(i); val end = i + len; var j = i + 2
-            while (j < end) {
-              val pq = u8(j) >> 4; val tq = u8(j) & 0xf
-              if (pq != 0) fail("16-bit quant tables unsupported")
-              if (tq > 3) fail("bad DQT id")
-              for (k <- 0 until 64) qt(tq)(zigzag(k)) = u8(j + 1 + k)
-              j += 65
-            }
-            i = end
-          case 0xdd => restartInterval = u16(i + 2); i += u16(i)
-          case 0xda => // SOS
-            val n = u8(i + 2)
-            if (n != nComp) fail("SOS component count mismatch")
-            compDc = new Array[Int](nComp); compAc = new Array[Int](nComp)
-            for (c <- 0 until n) {
-              val id = u8(i + 3 + 2 * c)
-              val idx = compId.indexOf(id)
-              if (idx < 0) fail("SOS references unknown component")
-              compDc(idx) = u8(i + 4 + 2 * c) >> 4
-              compAc(idx) = u8(i + 4 + 2 * c) & 0xf
-              // table ids are 2 bits in baseline JPEG; a crafted scan
-              // header indexing past the 4-slot table array (or a scan
-              // referencing a table no DHT defined) must reject, not AIOOBE/NPE
-              if (compDc(idx) > 3 || compAc(idx) > 3)
-                fail(s"SOS Huffman table id out of range (${compDc(idx)}/${compAc(idx)})")
-              if (huff(0)(compDc(idx)) == null || huff(1)(compAc(idx)) == null)
-                fail("SOS references an undefined Huffman table")
-            }
-            scanStart = i + u16(i)
-          case 0xd9 => fail("JPEG ended before scan data")
-          case mk if mk >= 0xe0 && mk <= 0xef => i += u16(i) // APPn
-          case 0xfe => i += u16(i)                           // COM
-          case 0xc8 | 0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
-            fail(f"unsupported JPEG coding (SOF marker 0x$marker%02x)")
-          case _ => i += u16(i) // any other length-prefixed segment
-        }
-      }
-      if (w == 0) fail("JPEG scan before SOF0")
-
-      // --- entropy-coded bit reader (FF00 unstuffing, restart markers) ---
-      var pos = scanStart
-      var bitBuf = 0; var bitCnt = 0
-      def nextByte(): Int = {
-        if (pos >= p.length) fail("JPEG scan truncated")
-        val b = u8(pos); pos += 1
-        if (b == 0xff) {
-          val b2 = u8(pos)
-          if (b2 == 0x00) { pos += 1; 0xff }
-          else if (b2 >= 0xd0 && b2 <= 0xd7) fail("restart marker inside block") // handled at MCU level
-          else { pos -= 1; fail("unexpected marker in scan") }
-        } else b
-      }
-      def readBit(): Int = {
-        if (bitCnt == 0) { bitBuf = nextByte(); bitCnt = 8 }
-        bitCnt -= 1
-        (bitBuf >> bitCnt) & 1
-      }
-      def decodeHuff(t: Huff): Int = {
-        var code = 0
-        var l = 0
-        while (l < 16) {
-          code = (code << 1) | readBit()
-          l += 1
-          if (t.maxCode(l) >= 0 && code <= t.maxCode(l) && code >= t.minCode(l))
-            return t.symbols(t.valPtr(l) + (code - t.minCode(l)))
-        }
-        fail("invalid JPEG Huffman code")
-      }
-      def receiveExtend(s: Int): Int = {
-        if (s == 0) return 0
-        var v = 0
-        for (_ <- 0 until s) v = (v << 1) | readBit()
-        if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
-      }
-      def syncRestart(): Unit = {
-        // drop partial bits, expect FFDx
-        bitCnt = 0
-        while (u8(pos) != 0xff || u8(pos + 1) == 0x00) pos += 1
-        val mk = u8(pos + 1)
-        if (mk >= 0xd0 && mk <= 0xd7) pos += 2
-        else fail("expected JPEG restart marker")
-      }
-
-      // --- IDCT (separable, double precision) ---
-      val c = Array.tabulate(8)(k => if (k == 0) 1.0 / math.sqrt(2) else 1.0)
-      val cosT = Array.tabulate(8, 8)((x, u) => math.cos((2 * x + 1) * u * math.Pi / 16))
-      def idct(block: Array[Double], out: Array[Double]): Unit = {
-        val tmp = new Array[Double](64)
-        var y = 0
-        while (y < 8) { // rows over u
-          var x = 0
-          while (x < 8) {
-            var s = 0.0; var u = 0
-            while (u < 8) { s += c(u) * block(y * 8 + u) * cosT(x)(u); u += 1 }
-            tmp(y * 8 + x) = s / 2; x += 1
-          }
-          y += 1
-        }
-        var x2 = 0
-        while (x2 < 8) { // cols over v
-          var y2 = 0
-          while (y2 < 8) {
-            var s = 0.0; var v = 0
-            while (v < 8) { s += c(v) * tmp(v * 8 + x2) * cosT(y2)(v); v += 1 }
-            out(y2 * 8 + x2) = s / 2; y2 += 1
-          }
-          x2 += 1
-        }
-      }
-
-      // --- MCU loop ---
-      // ISO 10918 A.2.2/A.2.3: a single-component scan is non-interleaved —
-      // its MCU is one 8x8 block and the frame's sampling factors do not
-      // apply to the scan layout. Forcing H=V=1 makes the interleaved loop
-      // below degenerate to exactly that (ceil(w/8) x ceil(h/8) blocks), so
-      // a legal grayscale file declaring e.g. H=V=2 still decodes correctly.
-      if (nComp == 1) { compH(0) = 1; compV(0) = 1 }
-      val hMax = compH.max; val vMax = compV.max
-      val mcusX = (w + 8 * hMax - 1) / (8 * hMax)
-      val mcusY = (h + 8 * vMax - 1) / (8 * vMax)
-      // per-component plane at its own resolution
-      val planeW = Array.tabulate(nComp)(cc => mcusX * compH(cc) * 8)
-      val planeH = Array.tabulate(nComp)(cc => mcusY * compV(cc) * 8)
-      val planes = Array.tabulate(nComp)(cc => new Array[Byte](planeW(cc) * planeH(cc)))
-      val dcPred = new Array[Int](nComp)
-      val zz = new Array[Double](64)
-      val px = new Array[Double](64)
-      var mcu = 0
-      var my = 0
-      while (my < mcusY) {
-        var mx = 0
-        while (mx < mcusX) {
-          if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-            syncRestart(); java.util.Arrays.fill(dcPred, 0)
-          }
-          var cc = 0
-          while (cc < nComp) {
-            val q = qt(compQ(cc))
-            var by = 0
-            while (by < compV(cc)) {
-              var bx = 0
-              while (bx < compH(cc)) {
-                java.util.Arrays.fill(zz, 0.0)
-                val s = decodeHuff(huff(0)(compDc(cc)))
-                dcPred(cc) += receiveExtend(s)
-                zz(0) = dcPred(cc).toDouble * q(0)
-                var k = 1
-                var eob = false
-                while (k < 64 && !eob) {
-                  val rs = decodeHuff(huff(1)(compAc(cc)))
-                  val r = rs >> 4; val sz = rs & 0xf
-                  if (sz == 0) { if (r == 15) k += 16 else eob = true }
-                  else {
-                    k += r
-                    if (k > 63) fail("JPEG AC run overflows block")
-                    zz(zigzag(k)) = receiveExtend(sz).toDouble * q(zigzag(k))
-                    k += 1
-                  }
-                }
-                idct(zz, px)
-                // write block into the component plane
-                val ox = (mx * compH(cc) + bx) * 8
-                val oy = (my * compV(cc) + by) * 8
-                var yy = 0
-                while (yy < 8) {
-                  var xx = 0
-                  while (xx < 8) {
-                    val v0 = math.rint(px(yy * 8 + xx) + 128.0)
-                    val v = if (v0 < 0) 0 else if (v0 > 255) 255 else v0.toInt
-                    planes(cc)((oy + yy) * planeW(cc) + ox + xx) = v.toByte
-                    xx += 1
-                  }
-                  yy += 1
-                }
-                bx += 1
-              }
-              by += 1
-            }
-            cc += 1
-          }
-          mcu += 1
-          mx += 1
-        }
-        my += 1
-      }
-
-      // --- color conversion + mean over the visible frame ---
-      var sum = 0L
-      val channels = if (nComp == 1) 1 else 3
-      var yy = 0
-      while (yy < h) {
-        var xx = 0
-        while (xx < w) {
-          if (nComp == 1) {
-            sum += planes(0)(yy * planeW(0) + xx) & 0xff
-          } else {
-            def sample(cc: Int): Int = {
-              val sx = xx * compH(cc) / hMax; val sy = yy * compV(cc) / vMax
-              planes(cc)(sy * planeW(cc) + sx) & 0xff
-            }
-            val yv = sample(0).toDouble
-            val cb = sample(1) - 128.0
-            val cr = sample(2) - 128.0
-            def clamp(d: Double): Int = {
-              val r = math.rint(d); if (r < 0) 0 else if (r > 255) 255 else r.toInt
-            }
-            sum += clamp(yv + 1.402 * cr)
-            sum += clamp(yv - 0.344136 * cb - 0.714136 * cr)
-            sum += clamp(yv + 1.772 * cb)
-          }
-          xx += 1
-        }
-        yy += 1
-      }
-      MediaFeatures(m.media_id, m.kind, w, h, channels, p.length.toLong,
-        sum.toDouble / (channels.toLong * w * h))
-    }
-
-    /** GIF87a/89a first frame, LZW-decompressed by hand (the GIF LZW
-      * variant: little-endian bit packing, variable code width from
-      * minCodeSize+1 up to 12 bits, in-stream clear/EOI codes,
-      * dictionary rebuilt on clear). Palette indices map through the
-      * active (local-over-global) color table to RGB, so mean_byte is
-      * a property of the rendered pixels like the PNG path — and
-      * because the mean is order-invariant, interlaced frames need no
-      * row reordering. Extensions are skipped by sub-block walking;
-      * animation frames beyond the first are ignored (first-frame
-      * features, the standard corpus treatment). Transparency is
-      * ignored — the transparent index still maps to its palette RGB.
-      */
-    private def decodeGif(m: Media): MediaFeatures = {
-      val p = m.payload
-      def leU16(off: Int): Int = (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
-      require(p.length >= 13, s"GIF shorter than its header: media_id=${m.media_id}")
-      val flags = p(10) & 0xff
-      var i = 13
-      var gctSize = 0
-      var gct = -1
-      if ((flags & 0x80) != 0) {
-        gctSize = 2 << (flags & 7)
-        gct = i
-        i += 3 * gctSize
-      }
-      // walk blocks to the first image descriptor
-      while (i < p.length && (p(i) & 0xff) == 0x21) {
-        i += 2 // extension introducer + label
-        while ({
-          require(i < p.length, s"GIF extension truncated: media_id=${m.media_id}")
-          val n = p(i) & 0xff; i += 1 + n; n != 0
-        }) ()
-      }
-      require(i < p.length && (p(i) & 0xff) == 0x2c,
-        s"GIF without an image descriptor: media_id=${m.media_id}")
-      require(i + 10 <= p.length,
-        s"GIF image descriptor truncated: media_id=${m.media_id}")
-      val width = leU16(i + 5); val height = leU16(i + 7)
-      val iflags = p(i + 9) & 0xff
-      require(width > 0 && height > 0 && width.toLong * height <= (1L << 26),
-        s"implausible GIF geometry: media_id=${m.media_id}")
-      i += 10
-      var (ct, ctSize) = (gct, gctSize)
-      if ((iflags & 0x80) != 0) {
-        ctSize = 2 << (iflags & 7)
-        ct = i
-        i += 3 * ctSize
-      }
-      require(ct >= 0 && ct + 3 * ctSize <= p.length,
-        s"GIF color table missing or truncated: media_id=${m.media_id}")
-      require(i < p.length,
-        s"GIF ends before the LZW min code size: media_id=${m.media_id}")
-      val minCode = p(i) & 0xff
-      require(minCode >= 1 && minCode <= 11,
-        s"bad GIF LZW min code size $minCode: media_id=${m.media_id}")
-      i += 1
-      // concatenate the image's data sub-blocks
-      val data = new java.io.ByteArrayOutputStream()
-      while ({
-        require(i < p.length, s"GIF data sub-blocks truncated: media_id=${m.media_id}")
-        val n = p(i) & 0xff
-        require(i + 1 + n <= p.length, s"GIF sub-block overruns payload: media_id=${m.media_id}")
-        data.write(p, i + 1, n); i += 1 + n; n != 0
-      }) ()
-      val bytes = data.toByteArray
-      // GIF-LZW decode straight into an RGB byte-sum (pixels need not
-      // be materialized: mean is order-invariant)
-      val clear = 1 << minCode
-      val eoi = clear + 1
-      // dictionary as a prefix-linked trie: entry -> (prefixCode, tailIndex)
-      val maxEntries = 4096
-      val prefix = new Array[Int](maxEntries)
-      val tail = new Array[Int](maxEntries)
-      var dictSize = eoi + 1
-      var codeWidth = minCode + 1
-      var bitPos = 0
-      var sum = 0L
-      var nPix = 0L
-      def readCode(): Int = {
-        if ((bitPos + codeWidth - 1) / 8 >= bytes.length) return eoi // truncated -> stop
-        var v = 0; var b = 0
-        while (b < codeWidth) {
-          val byte = bytes((bitPos + b) / 8) & 0xff
-          if ((byte & (1 << ((bitPos + b) % 8))) != 0) v |= 1 << b
-          b += 1
-        }
-        bitPos += codeWidth
-        v
-      }
-      def emit(code: Int): Int = { // adds the sequence for `code`, returns first index
-        var c = code
-        var stack = List.empty[Int]
-        while (c >= clear) { stack = tail(c) :: stack; c = prefix(c) }
-        stack = c :: stack
-        stack.foreach { idx =>
-          require(idx < ctSize, s"GIF index $idx outside palette: media_id=${m.media_id}")
-          val o = ct + 3 * idx
-          sum += (p(o) & 0xff) + (p(o + 1) & 0xff) + (p(o + 2) & 0xff)
-          nPix += 1
-        }
-        c
-      }
-      var prev = -1
-      var done = false
-      while (!done) {
-        val code = readCode()
-        if (code == eoi) done = true
-        else if (code == clear) { dictSize = eoi + 1; codeWidth = minCode + 1; prev = -1 }
-        else {
-          require(code <= dictSize, s"corrupt GIF LZW code $code: media_id=${m.media_id}")
-          if (prev < 0) { require(code < clear, s"GIF stream starts mid-dictionary: media_id=${m.media_id}"); emit(code); prev = code }
-          else {
-            val first =
-              if (code < dictSize) emit(code)
-              else { // KwKwK case: sequence = prev's sequence + its first index
-                var c = prev; while (c >= clear) c = prefix(c)
-                prefix(dictSize) = prev; tail(dictSize) = c
-                emit(code)
-              }
-            if (code < dictSize && dictSize < maxEntries) {
-              prefix(dictSize) = prev; tail(dictSize) = first
-            }
-            if (dictSize < maxEntries) {
-              dictSize += 1
-              if (dictSize == (1 << codeWidth) && codeWidth < 12) codeWidth += 1
-            }
-            prev = code
-          }
-        }
-        if (nPix >= width.toLong * height) done = true
-      }
-      require(nPix == width.toLong * height,
-        s"GIF decoded $nPix of ${width.toLong * height} pixels: media_id=${m.media_id}")
-      MediaFeatures(m.media_id, m.kind, width, height, 3,
-        p.length.toLong, sum.toDouble / (3.0 * nPix))
-    }
-
-    /** COMPRESSED PNG, decoded to raw pixels with nothing beyond the
-      * JDK: chunk walk with CRC-32 verification (CRC covers type+data,
-      * per the spec), IHDR geometry, concatenated-IDAT zlib inflate
-      * (`java.util.zip.Inflater` — IDAT chunk boundaries are NOT
-      * deflate-block boundaries, so the streams must be joined before
-      * inflating), then per-row reconstruction of all five adaptive
-      * filters (None/Sub/Up/Average/Paeth). Supports the 8-bit-depth
-      * non-interlaced grayscale/RGB/gray+alpha/RGBA color types;
-      * palette and 16-bit images are rejected loudly, never
-      * misdecoded. mean_byte covers the RECONSTRUCTED pixel bytes —
-      * the property of the image, invariant under the encoder's
-      * filter/compression choices (the same pixels re-encoded by any
-      * writer yield the same feature), which is what makes it usable
-      * as a dedup/quality signal across heterogenous crawls.
-      */
-    private def decodePng(m: Media): MediaFeatures = {
-      val p = m.payload
-      def beU32(off: Int): Long =
-        ((p(off) & 0xff).toLong << 24) | ((p(off + 1) & 0xff).toLong << 16) |
-          ((p(off + 2) & 0xff).toLong << 8) | (p(off + 3) & 0xff).toLong
-      var i = 8
-      var width = 0; var height = 0; var bitDepth = -1; var colorType = -1
-      var sawIhdr = false; var sawEnd = false
-      val idat = new java.io.ByteArrayOutputStream()
-      while (!sawEnd) {
-        require(i + 12 <= p.length, s"PNG chunk table truncated: media_id=${m.media_id}")
-        val len = beU32(i)
-        require(i + 12L + len <= p.length,
-          s"PNG chunk overruns payload: media_id=${m.media_id}")
-        val dataLen = len.toInt
-        val crc = new java.util.zip.CRC32()
-        crc.update(p, i + 4, 4 + dataLen)
-        require(crc.getValue == beU32(i + 8 + dataLen),
-          s"PNG chunk CRC mismatch at offset $i: media_id=${m.media_id}")
-        val typ = new String(p, i + 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
-        typ match {
-          case "IHDR" =>
-            require(dataLen == 13, s"bad IHDR length: media_id=${m.media_id}")
-            require(beU32(i + 8) <= (1L << 20) && beU32(i + 12) <= (1L << 20),
-              s"implausible PNG geometry: media_id=${m.media_id}")
-            width = beU32(i + 8).toInt; height = beU32(i + 12).toInt
-            bitDepth = p(i + 16) & 0xff; colorType = p(i + 17) & 0xff
-            require((p(i + 18) & 0xff) == 0 && (p(i + 19) & 0xff) == 0,
-              s"unknown PNG compression/filter method: media_id=${m.media_id}")
-            require((p(i + 20) & 0xff) == 0,
-              s"interlaced PNG unsupported: media_id=${m.media_id}")
-            sawIhdr = true
-          case "IDAT" => idat.write(p, i + 8, dataLen)
-          case "IEND" => sawEnd = true
-          case _ => () // ancillary chunks (tEXt, pHYs, …) skipped, CRC still checked
-        }
-        i += 12 + dataLen
-      }
-      require(sawIhdr, s"PNG without IHDR: media_id=${m.media_id}")
-      require(width > 0 && height > 0, s"empty PNG geometry: media_id=${m.media_id}")
-      require(bitDepth == 8,
-        s"only 8-bit-depth PNG supported (got $bitDepth): media_id=${m.media_id}")
-      val channels = colorType match {
-        case 0 => 1; case 2 => 3; case 4 => 2; case 6 => 4
-        case t => throw new IllegalArgumentException(
-          s"unsupported PNG color type $t (palette?): media_id=${m.media_id}")
-      }
-      val stride = width * channels
-      val rawLen = (stride + 1).toLong * height
-      require(rawLen <= Int.MaxValue - 8,
-        s"PNG raster too large to reconstruct: media_id=${m.media_id}")
-      val raw = new Array[Byte](rawLen.toInt)
-      val inf = new java.util.zip.Inflater()
-      try {
-        inf.setInput(idat.toByteArray)
-        var off = 0
-        while (off < raw.length && !inf.finished()) {
-          val n = inf.inflate(raw, off, raw.length - off)
-          // A zero-byte round that isn't the end of the stream means either
-          // the input ran out (truncated IDAT), the stream demands state we
-          // refuse to supply (FDICT preset dictionary), or the inflater is
-          // otherwise stuck; without failing here a crafted zlib header
-          // spins this loop forever inside an executor task.
-          require(!inf.needsDictionary(),
-            s"PNG zlib stream requires a preset dictionary (FDICT): media_id=${m.media_id}")
-          require(n > 0 || inf.finished(),
-            s"PNG IDAT truncated or stalled at $off of ${raw.length}: media_id=${m.media_id}")
-          off += n
-        }
-        require(off == raw.length,
-          s"PNG IDAT inflated to $off of ${raw.length} bytes: media_id=${m.media_id}")
-      } catch {
-        case e: java.util.zip.DataFormatException =>
-          throw new IllegalArgumentException(
-            s"corrupt PNG deflate stream: media_id=${m.media_id}", e)
-      } finally inf.end()
-      val pix = new Array[Byte](stride * height)
-      var y = 0
-      while (y < height) {
-        val filter = raw((stride + 1) * y) & 0xff
-        val rin = (stride + 1) * y + 1
-        val pout = stride * y
-        var x = 0
-        while (x < stride) {
-          val rv = raw(rin + x) & 0xff
-          val a = if (x >= channels) pix(pout + x - channels) & 0xff else 0
-          val b = if (y > 0) pix(pout - stride + x) & 0xff else 0
-          val c = if (x >= channels && y > 0) pix(pout - stride + x - channels) & 0xff else 0
-          val rec = filter match {
-            case 0 => rv
-            case 1 => rv + a
-            case 2 => rv + b
-            case 3 => rv + ((a + b) >> 1)
-            case 4 =>
-              val pa = math.abs(b - c); val pb = math.abs(a - c)
-              val pc = math.abs(a + b - 2 * c)
-              rv + (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c)
-            case f => throw new IllegalArgumentException(
-              s"unknown PNG row filter $f: media_id=${m.media_id}")
-          }
-          pix(pout + x) = rec.toByte // mod-256 reconstruction, per spec
-          x += 1
-        }
-        y += 1
-      }
-      var sum = 0L; var j = 0
-      while (j < pix.length) { sum += pix(j) & 0xff; j += 1 }
-      MediaFeatures(m.media_id, m.kind, width, height, channels,
-        p.length.toLong, sum.toDouble / pix.length)
-    }
-
-    private def decodePpm(m: Media): MediaFeatures = {
-      val p = m.payload
-      // header discipline lives in the shared [[Multimodal.ppmHeader]]
-      // (also the band featurizer's parse; MultimodalSpec cross-checks
-      // the two consumers byte-for-byte on random rasters)
-      val (width, height, i) = ppmHeader(p, m.media_id)
-      val expected = width.toLong * height * 3
-      var sum = 0L
-      var j = i
-      val end = i + expected.toInt
-      while (j < end) { sum += (p(j) & 0xff); j += 1 }
-      MediaFeatures(m.media_id, m.kind, width, height, 3,
-        p.length.toLong, if (expected == 0) 0.0 else sum.toDouble / expected)
-    }
-
-    private def decodeBmp(m: Media): MediaFeatures = {
-      val p = m.payload
-      require(p.length >= 54, s"BMP shorter than its headers: media_id=${m.media_id}")
-      def leU16(off: Int): Int = (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
-      def leI32(off: Int): Int =
-        (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8) |
-          ((p(off + 2) & 0xff) << 16) | ((p(off + 3) & 0xff) << 24)
-      val dataOffset = leI32(10)
-      val width = leI32(18)
-      val rawHeight = leI32(22) // negative = top-down row order
-      val height = math.abs(rawHeight)
-      val bitCount = leU16(28)
-      require(bitCount == 24 || bitCount == 32,
-        s"only uncompressed 24/32-bit BMP supported (bitCount=$bitCount): media_id=${m.media_id}")
-      require(leI32(30) == 0, s"compressed BMP not supported: media_id=${m.media_id}")
-      val channels = bitCount / 8
-      // geometry sanity BEFORE the arithmetic: a crafted width near
-      // Int.MaxValue overflows rowBytes/stride negative, which would
-      // make the truncation require below pass vacuously and return
-      // silently bogus features instead of rejecting the file (leI32
-      // can also return a negative width outright).
-      require(width > 0 && height >= 0 && dataOffset >= 54 &&
-        width.toLong * channels <= Int.MaxValue - 3,
-        s"implausible BMP geometry (w=$width h=$height off=$dataOffset): " +
-          s"media_id=${m.media_id}")
-      val rowBytes = width * channels
-      val stride = (rowBytes + 3) & ~3 // rows pad to 4-byte boundaries
-      require(dataOffset.toLong + stride.toLong * height <= p.length,
-        s"BMP raster truncated: media_id=${m.media_id}")
-      var sum = 0L
-      var row = 0
-      while (row < height) {
-        var j = dataOffset + row * stride
-        val end = j + rowBytes // padding bytes excluded from the feature
-        while (j < end) { sum += (p(j) & 0xff); j += 1 }
-        row += 1
-      }
-      val n = rowBytes.toLong * height
-      MediaFeatures(m.media_id, m.kind, width, height, channels,
-        p.length.toLong, if (n == 0) 0.0 else sum.toDouble / n)
-    }
-
-    /** RIFF WAV: walk the chunk list (each chunk is 4-byte id + LE u32
-      * length + payload, word-aligned), read "fmt " for geometry and
-      * "data" for the sample bytes. FOUR sample encodings, three of
-      * them genuinely compressed, all decoded by hand from the
-      * published algorithms (ITU-T G.711 for the log-companded pair,
-      * the IMA/DVI "Recommended Practices for Enhancing Digital Audio
-      * Compatibility" spec for ADPCM) — no codec library:
-      *
-      *   - tag 1   PCM 16-bit      (uncompressed)
-      *   - tag 6   G.711 A-law    (8-bit log-companded, 2:1)
-      *   - tag 7   G.711 mu-law   (8-bit log-companded, 2:1)
-      *   - tag 17  IMA ADPCM      (4-bit predictive, 4:1, block-coded)
-      *
-      * Compressed data is EXPANDED to 16-bit PCM and mean_byte is the
-      * mean over the DECODED little-endian sample bytes, so the feature
-      * is a property of the audio, not its wire encoding — the same
-      * contract as PNG/GIF/JPEG vs PPM/BMP on the image side (raw PCM
-      * averages its data bytes directly; they already ARE the decoded
-      * LE sample bytes). Feature mapping: width = sample rate,
-      * height = sample frames per channel, channels = channels.
-      */
-    private def decodeWav(m: Media): MediaFeatures = {
-      val p = m.payload
-      require(p.length >= 12 &&
-        p(8) == 'W' && p(9) == 'A' && p(10) == 'V' && p(11) == 'E',
-        s"RIFF without WAVE form: media_id=${m.media_id}")
-      def leU16(off: Int): Int = (p(off) & 0xff) | ((p(off + 1) & 0xff) << 8)
-      def leU32(off: Int): Long =
-        (p(off) & 0xffL) | ((p(off + 1) & 0xffL) << 8) |
-          ((p(off + 2) & 0xffL) << 16) | ((p(off + 3) & 0xffL) << 24)
-      var i = 12
-      var fmtTag = -1; var sampleRate = -1L; var channels = -1; var bits = -1
-      var blockAlign = -1; var samplesPerBlock = -1
-      var dataOff = -1; var dataLen = -1L
-      while (i + 8 <= p.length && (dataOff < 0 || sampleRate < 0)) {
-        val id = new String(p, i, 4, "US-ASCII")
-        val len = leU32(i + 4)
-        require(len >= 0 && i + 8 + len <= p.length,
-          s"WAV chunk '$id' overruns the payload: media_id=${m.media_id}")
-        if (id == "fmt ") {
-          require(len >= 16, s"fmt chunk too short: media_id=${m.media_id}")
-          fmtTag = leU16(i + 8)
-          channels = leU16(i + 10)
-          sampleRate = leU32(i + 12)
-          blockAlign = leU16(i + 20)
-          bits = leU16(i + 22)
-          // the ADPCM extension block: cbSize u16, then samples/block
-          if (fmtTag == 0x11) {
-            require(len >= 20 && leU16(i + 24) >= 2,
-              s"IMA ADPCM fmt without a samples-per-block extension: " +
-                s"media_id=${m.media_id}")
-            samplesPerBlock = leU16(i + 26)
-          }
-          require(channels > 0 && sampleRate > 0 && sampleRate <= Int.MaxValue,
-            s"WAV with degenerate geometry (ch=$channels rate=$sampleRate): " +
-              s"media_id=${m.media_id}")
-        } else if (id == "data") { dataOff = i + 8; dataLen = len }
-        i += 8 + len.toInt + (len.toInt & 1) // chunks are word-aligned
-      }
-      require(sampleRate > 0, s"WAV without fmt chunk: media_id=${m.media_id}")
-      require(dataOff >= 0, s"WAV without data chunk: media_id=${m.media_id}")
-      fmtTag match {
-        case 1 =>
-          require(bits == 16,
-            s"only 16-bit PCM supported (bits=$bits): media_id=${m.media_id}")
-          val bytesPerFrame = channels * 2
-          require(dataLen % bytesPerFrame == 0,
-            s"data chunk not frame-aligned: media_id=${m.media_id}")
-          val frames = dataLen / bytesPerFrame
-          var sum = 0L
-          var j = dataOff
-          val end = dataOff + dataLen.toInt
-          while (j < end) { sum += (p(j) & 0xff); j += 1 }
-          MediaFeatures(m.media_id, m.kind, sampleRate.toInt, frames.toInt,
-            channels, p.length.toLong,
-            if (dataLen == 0) 0.0 else sum.toDouble / dataLen)
-        case 6 | 7 =>
-          require(bits == 8,
-            s"G.711 WAV must be 8-bit (bits=$bits): media_id=${m.media_id}")
-          require(dataLen % channels == 0,
-            s"data chunk not frame-aligned: media_id=${m.media_id}")
-          var sum = 0L
-          var j = dataOff
-          val end = dataOff + dataLen.toInt
-          while (j < end) {
-            val s16 = (if (fmtTag == 7) G711.ulawToPcm(p(j))
-                       else G711.alawToPcm(p(j))) & 0xffff
-            sum += (s16 & 0xff) + (s16 >> 8)
-            j += 1
-          }
-          MediaFeatures(m.media_id, m.kind, sampleRate.toInt,
-            (dataLen / channels).toInt, channels, p.length.toLong,
-            if (dataLen == 0) 0.0 else sum.toDouble / (dataLen * 2))
-        case 0x11 =>
-          require(bits == 4,
-            s"IMA ADPCM must be 4-bit (bits=$bits): media_id=${m.media_id}")
-          decodeImaAdpcm(m, p, dataOff, dataLen.toInt, channels,
-            sampleRate.toInt, blockAlign, samplesPerBlock)
-        case t => throw new IllegalArgumentException(
-          s"unsupported WAV format tag $t (want 1 PCM, 6 A-law, 7 mu-law, " +
-            s"17 IMA ADPCM): media_id=${m.media_id}")
-      }
-    }
-
-    /** IMA ADPCM block decode. Each block of `blockAlign` bytes carries,
-      * per channel, a 4-byte header (LE s16 predictor — which IS the
-      * block's first output sample — then step index, then a reserved
-      * byte), followed by nibble data in 4-byte-per-channel interleave
-      * groups (8 samples per group, low nibble first). The
-      * samples-per-block declared in the fmt extension must equal the
-      * count the geometry implies — a mismatched file is rejected, not
-      * guessed at (the fuzzer's contract: reject loudly).
-      */
-    private def decodeImaAdpcm(m: Media, p: Array[Byte], dataOff: Int,
-        dataLen: Int, channels: Int, sampleRate: Int, blockAlign: Int,
-        samplesPerBlock: Int): MediaFeatures = {
-      def fail(msg: String): Nothing =
-        throw new IllegalArgumentException(s"$msg: media_id=${m.media_id}")
-      val headBytes = 4 * channels
-      if (blockAlign <= headBytes) fail(s"ADPCM blockAlign $blockAlign too small for $channels channel header(s)")
-      val body = blockAlign - headBytes
-      if (body % (4 * channels) != 0)
-        fail(s"ADPCM block body $body not a multiple of the $channels-channel interleave group")
-      val implied = 1 + body * 2 / channels
-      if (samplesPerBlock != implied)
-        fail(s"ADPCM samples-per-block $samplesPerBlock contradicts blockAlign geometry (implies $implied)")
-      if (dataLen % blockAlign != 0)
-        fail(s"ADPCM data ($dataLen bytes) not a whole number of $blockAlign-byte blocks")
-      val nBlocks = dataLen / blockAlign
-      val frames = nBlocks.toLong * samplesPerBlock
-      if (frames > Int.MaxValue) fail(s"ADPCM frame count $frames overflows")
-      val pred = new Array[Int](channels)
-      val idx = new Array[Int](channels)
-      var sum = 0L
-      def emit(c: Int): Unit = { val v = pred(c) & 0xffff; sum += (v & 0xff) + (v >> 8) }
-      def step(c: Int, delta: Int): Unit = {
-        val st = ImaAdpcm.StepTable(idx(c))
-        var diff = st >> 3
-        if ((delta & 4) != 0) diff += st
-        if ((delta & 2) != 0) diff += st >> 1
-        if ((delta & 1) != 0) diff += st >> 2
-        val s = if ((delta & 8) != 0) pred(c) - diff else pred(c) + diff
-        pred(c) = if (s > 32767) 32767 else if (s < -32768) -32768 else s
-        val ni = idx(c) + ImaAdpcm.IndexTable(delta & 7)
-        idx(c) = if (ni < 0) 0 else if (ni > 88) 88 else ni
-        emit(c)
-      }
-      var b = 0
-      while (b < nBlocks) {
-        val o = dataOff + b * blockAlign
-        var c = 0
-        while (c < channels) {
-          val ho = o + 4 * c
-          val raw = (p(ho) & 0xff) | ((p(ho + 1) & 0xff) << 8)
-          pred(c) = (raw << 16) >> 16 // sign-extend LE s16
-          val si = p(ho + 2) & 0xff
-          if (si > 88) fail(s"ADPCM step index $si out of range in block $b")
-          idx(c) = si
-          emit(c)
-          c += 1
-        }
-        var pos = o + headBytes
-        val end = o + blockAlign
-        while (pos < end) {
-          c = 0
-          while (c < channels) {
-            var k = 0
-            while (k < 4) {
-              val by = p(pos + 4 * c + k) & 0xff
-              step(c, by & 0x0f)
-              step(c, by >> 4)
-              k += 1
-            }
-            c += 1
-          }
-          pos += 4 * channels
-        }
-        b += 1
-      }
-      val decodedBytes = frames * channels * 2
-      MediaFeatures(m.media_id, m.kind, sampleRate, frames.toInt, channels,
-        p.length.toLong,
-        if (decodedBytes == 0) 0.0 else sum.toDouble / decodedBytes)
-    }
-  }
-
   /** ITU-T G.711 expansion, transcribed from the recommendation's
     * segmented-companding definition (the classic CCITT reference
     * arithmetic): 8-bit log-companded byte -> 16-bit linear PCM.
-    * Public so the audio spec can bound the WAV path against
-    * javax.sound.sampled's independent ULAW/ALAW converters.
+    * Public so the audio spec can bound it against
+    * javax.sound.sampled's independent ULAW converter.
     */
   object G711 {
     /** mu-law byte -> linear (range ±32124). */
@@ -1460,98 +324,5 @@ object Multimodal {
       val t = (((u & 0x0f) << 3) + 0x84) << ((u & 0x70) >> 4)
       if ((u & 0x80) != 0) 0x84 - t else t - 0x84
     }
-
-    /** A-law byte -> linear (range ±32256). */
-    def alawToPcm(b: Byte): Int = {
-      val a = (b ^ 0x55) & 0xff
-      val seg = (a & 0x70) >> 4
-      var t = (a & 0x0f) << 4
-      t = if (seg == 0) t + 8 else ((t + 0x108) << (seg - 1))
-      if ((a & 0x80) != 0) t else -t
-    }
-  }
-
-  /** IMA/DVI ADPCM quantizer tables (the 89-entry step-size table and
-    * the 8-entry index-adaptation table from the IMA Recommended
-    * Practices document). Public for the spec's round-trip encoder.
-    */
-  object ImaAdpcm {
-    val IndexTable: Array[Int] = Array(-1, -1, -1, -1, 2, 4, 6, 8)
-    val StepTable: Array[Int] = Array(
-      7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-      41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-      190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-      724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-      2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-      6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-      16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767)
-  }
-
-  /** The resize seam — same contract as [[MediaDecoder]]: constructed
-    * once per partition, thread-confined, payload-in/payload-out with
-    * the header rewritten to the target geometry.
-    */
-  trait MediaResizer extends Serializable {
-    def resize(m: Media, targetW: Int, targetH: Int): Media
-  }
-
-  /** Deterministic stand-in for a codec-backed resizer: keeps the GRFT
-    * header shape, rewrites width/height, and "resamples" the body to
-    * targetW*targetH*channels bytes by nearest-neighbor striding over
-    * the original body — pure index arithmetic, so tests can predict
-    * every output byte. A real implementation swaps in an image
-    * library at this seam; nothing above it changes.
-    */
-  final class FakeResizer extends MediaResizer {
-    def resize(m: Media, targetW: Int, targetH: Int): Media = {
-      val p = m.payload
-      require(p.length >= HeaderLen && p(0) == 'G' && p(1) == 'R',
-        s"not a GRFT payload: media_id=${m.media_id}")
-      val channels = p(7) & 0xff
-      val srcBody = p.length - HeaderLen
-      val dstBody = targetW * targetH * math.max(channels, 1)
-      val out = new Array[Byte](HeaderLen + dstBody)
-      System.arraycopy(p, 0, out, 0, HeaderLen)
-      out(3) = ((targetW >> 8) & 0xff).toByte; out(4) = (targetW & 0xff).toByte
-      out(5) = ((targetH >> 8) & 0xff).toByte; out(6) = (targetH & 0xff).toByte
-      var i = 0
-      while (i < dstBody) {
-        // nearest-neighbor: integer-scaled source index, clamped
-        val src = if (dstBody <= 1) 0 else (i.toLong * srcBody / dstBody).toInt
-        out(HeaderLen + i) = if (srcBody == 0) 0 else p(HeaderLen + math.min(src, srcBody - 1))
-        i += 1
-      }
-      Media(m.media_id, m.kind, out)
-    }
-  }
-
-  /** Batched resize stage (mapInPandas-analog, like [[extractFeatures]]):
-    * one resizer per partition, iterator-in/iterator-out, payloads stay
-    * opaque binary to Spark on both sides — so the stage pipelines and
-    * spills without interpreting a byte.
-    */
-  def resizeAll(media: Dataset[Media], targetW: Int, targetH: Int): Dataset[Media] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      val resizer: MediaResizer = new FakeResizer // per-partition init
-      rows.map(m => resizer.resize(m, targetW, targetH))
-    }
-  }
-
-  /** binaryFile ingest for a real on-disk media corpus: one row per
-    * file with (path, modificationTime, length, content), partitions
-    * sized by spark.sql.files.maxPartitionBytes — the scale-safe
-    * replacement for wholetext on large blobs.
-    */
-  def readBinaryDir(spark: SparkSession, dir: String, glob: String): Dataset[Media] = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-      .select(
-        xxhash64(col("path")).as("media_id"),
-        regexp_extract(col("path"), "\\.([a-z0-9]+)$", 1).as("kind"),
-        col("content").as("payload"))
-      .as[Media]
   }
 }

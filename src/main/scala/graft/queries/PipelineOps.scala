@@ -535,9 +535,8 @@ object PipelineOps {
     * binary expressions: length = octet count, substring slices, hex).
     * Payload synthesized by casting text→binary (the corpus is verified
     * pure ASCII at every SF, so the DuckDB oracle reproduces identical
-    * bytes via encode()); a real corpus reads format("binaryFile") —
-    * see [[graft.multimodal.Multimodal]] and MultimodalSpec for the
-    * decoder seam, frame sampling, and batched featurization.
+    * bytes via encode()); q128–q132 decode such payloads with the
+    * [[graft.multimodal.Multimodal]] band featurizers.
     */
   val q48BinaryPayload = Q(
     "q48_binary_payload",
@@ -564,7 +563,7 @@ object PipelineOps {
 
   /** The multimodal → dedup composition the parents promise separately:
     * real container bytes (q48's opaque-payload discipline) are DECODED
-    * at the [[graft.multimodal.Multimodal.MediaDecoder]] seam into a
+    * by [[graft.multimodal.Multimodal.extractPpmBands]] into a
     * fixed-dimension perceptual fingerprint, and the fingerprints flow
     * into q44's blocked-cosine near-dup — image dedup the way a
     * training-data pipeline runs it (CLIP-style embedding dedup with
@@ -845,23 +844,23 @@ object PipelineOps {
       SELECT blk, id_a, id_b, cosine FROM pr
       WHERE cosine >= 0.95
       ORDER BY id_a, id_b""".stripMargin),
-    "perceptual image dedup (multimodal -> ANN composition): real P6 PPM payloads decoded at the MediaDecoder seam into 16 integer row-band sums, centered in exact ints (16*band - tot), then blocked cosine with a HARD sorted-neighborhood cap (block = quantized mean intensity, rows ranked by c0/|c| inside, only same/adjacent 1024-rank sub-blocks pair -> candidates <= 1.5*N*1024, linear in N) — every value through the division exact, bit-identical cross-engine")
+    "perceptual image dedup (multimodal -> ANN composition): real P6 PPM payloads decoded per partition by extractPpmBands into 16 integer row-band sums, centered in exact ints (16*band - tot), then blocked cosine with a HARD sorted-neighborhood cap (block = quantized mean intensity, rows ranked by c0/|c| inside, only same/adjacent 1024-rank sub-blocks pair -> candidates <= 1.5*N*1024, linear in N) — every value through the division exact, bit-identical cross-engine")
 
   // ---------------------------------------------------------------------
   // q129 — audio-fingerprint dedup over DECODED G.711 (multimodal audio)
   // ---------------------------------------------------------------------
 
-  /** The audio modality's registry query (round-15 directive: the
-    * WAV/G.711/ADPCM/FLAC decoders were spec-exercised only): exact
-    * audio dedup by acoustic fingerprint. Each document renders a REAL
-    * mono 8-bit G.711 μ-law WAV — a 44-byte RIFF/fmt/data header (all
-    * header bytes ≤ 0x7F, so the binary cast is byte-exact) followed by
-    * the doc's first 768 ASCII bytes as μ-law codes — and the payload
-    * goes through the strict container walk + the REAL
-    * [[graft.multimodal.Multimodal.G711.ulawToPcm]] expansion at the
-    * decoder seam. The fingerprint is 16 per-band PCM ENERGIES
-    * (Σ pcm² over 48 samples, every value an exact integer ≤ 5e10 —
-    * the q128 fixed-point discipline), and dedup is q29's hash-groupBy
+  /** The audio modality's registry query: exact audio dedup by
+    * acoustic fingerprint. Each document renders a REAL mono 8-bit
+    * G.711 μ-law WAV — a 44-byte RIFF/fmt/data header (all header
+    * bytes ≤ 0x7F, so the binary cast is byte-exact) followed by the
+    * doc's first 768 ASCII bytes as μ-law codes — and
+    * [[graft.multimodal.Multimodal.extractWavBands]] runs the payload
+    * through the strict container walk + the REAL
+    * [[graft.multimodal.Multimodal.G711.ulawToPcm]] expansion. The
+    * fingerprint is 16 per-band PCM ENERGIES (Σ pcm² over 48 samples,
+    * every value an exact integer ≤ 5e10 — the q128 fixed-point
+    * discipline), and dedup is q29's hash-groupBy
     * on the joined fingerprint string: ONE shuffle of 16 longs per
     * clip, map-side combined, linear at any corpus size — no pair
     * join, no new scale caveats. The oracle reproduces the DECODED

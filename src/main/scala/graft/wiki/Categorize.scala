@@ -45,40 +45,6 @@ object Categorize {
     pages.withColumn("file_path", input_file_name())
   }
 
-  /** The 100 TB ingest twin of [[readPages]] (SURVEY.md §7 risk (e)):
-    * `binaryFile` + UTF-8 decode instead of the wholetext text source.
-    * Same (value, file_path) frame — CategorizeSpec pins row-for-row
-    * parity on the HTML fixtures — but the scan carries the blob as
-    * `binary` with per-file metadata, streams through the
-    * PartitionedFile machinery instead of one whole-file string read,
-    * and composes with `pathGlobFilter`/`modifiedAfter` pushdown for
-    * incremental crawls. For page-sized HTML the two are equivalent;
-    * for mixed blob sizes binaryFile is the one that survives, because
-    * the downstream repartition spreads decode work across the cluster
-    * while wholetext must hold each file as one task-local String.
-    *
-    * `file_path` is normalized to the SAME URI form
-    * `input_file_name()` emits — binaryFile's `path` is the Hadoop
-    * Path string, which (a) renders a local path as `file:/…` where
-    * input_file_name gives `file:///…` and (b) leaves spaces raw where
-    * the URI form percent-encodes them. Both fixed here so every
-    * downstream consumer (`sanitize_filename` first, whose `%` → `_`
-    * mapping would otherwise diverge) sees identical bytes from either
-    * scan. Space is the only URI-escaped character a crawler-written
-    * filename can carry (the crawl sink sanitizes names before
-    * writing); a corpus with arbitrary reserved characters would swap
-    * this for a full RFC-3986 encode.
-    */
-  def readPagesBinary(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.html")
-      .load(dir)
-      .select(
-        decode(col("content"), "UTF-8").as("value"),
-        regexp_replace(
-          regexp_replace(col("path"), "^file:/(?!/)", "file:///"),
-          " ", "%20").as("file_path"))
-
   /** The categorizer frame (categorizer.py:124-141): sanitize filename
     * (O-5), extract categories (O-6), whitespace word count over the RAW
     * html (O-8, categorizer.py:137), last-edited date (O-7).

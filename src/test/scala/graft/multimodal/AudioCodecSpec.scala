@@ -3,48 +3,47 @@ package graft.multimodal
 import graft.SparkSpec
 import graft.multimodal.Multimodal._
 
-/** Contracts for the COMPRESSED audio paths of [[ImageFileDecoder]]
-  * (G.711 mu-law/A-law and IMA ADPCM in RIFF WAV):
+/** The μ-law audio path behind q129/q132's fingerprints:
   *
-  *  - the G.711 expansion is bounded against the JDK's OWN ULAW/ALAW
-  *    FormatConversionProviders (javax.sound.sampled) — an independent
-  *    decoder, the same adjudication pattern the PNG/GIF/JPEG paths use
-  *    with ImageIO — exactly, for all 256 code bytes;
-  *  - the ADPCM decoder is checked against an in-test IMA ENCODER's
-  *    reconstruction trajectory: an ADPCM encoder must track decoder
-  *    state to quantize residuals, so its reconstructed signal IS the
-  *    decoder's required output, byte-exact, without the test sharing
-  *    the decoder's code path (only the published quantizer tables);
-  *  - malformed geometry (samples-per-block contradictions, partial
-  *    blocks, out-of-range step indexes) is rejected loudly, per the
-  *    fuzz contract.
+  *  - the G.711 μ-law expansion is bounded against the JDK's OWN ULAW
+  *    FormatConversionProvider (javax.sound.sampled) — an independent
+  *    decoder — exactly, for all 256 code bytes;
+  *  - wavUlawBandEnergies' RIFF walk (extra chunks, odd-length pads, a
+  *    fmt extension) yields band energies equal to Σ pcm² over the
+  *    JDK-decoded samples;
+  *  - every other WAV codec or geometry is rejected loudly, never
+  *    featurized as if it were mono 8-bit μ-law;
+  *  - extractWavBands runs beside the image and video seams over one
+  *    mixed-media Dataset.
   */
 class AudioCodecSpec extends SparkSpec {
 
   private def le16(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
   private def le32(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
     ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
+  private def chunk(id: String, data: Array[Byte]): Array[Byte] =
+    id.getBytes("US-ASCII") ++ le32(data.length) ++ data ++
+      (if (data.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
 
-  /** Minimal canonical WAV: fmt (with optional extension) + data. */
+  /** Minimal canonical WAV: `extra` chunks, fmt (with optional
+    * extension), data.
+    */
   private def wavOf(fmtTag: Int, channels: Int, rate: Int, bits: Int,
-      blockAlign: Int, ext: Array[Byte], data: Array[Byte]): Array[Byte] = {
+      blockAlign: Int, ext: Array[Byte], data: Array[Byte],
+      extra: Array[Byte] = Array.emptyByteArray): Array[Byte] = {
     val fmtBody = le16(fmtTag) ++ le16(channels) ++ le32(rate) ++
       le32(rate * blockAlign) ++ le16(blockAlign) ++ le16(bits) ++ ext
-    val fmt = "fmt ".getBytes("US-ASCII") ++ le32(fmtBody.length) ++ fmtBody ++
-      (if (fmtBody.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
-    val dataC = "data".getBytes("US-ASCII") ++ le32(data.length) ++ data ++
-      (if (data.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
-    val body = "WAVE".getBytes("US-ASCII") ++ fmt ++ dataC
+    val body = "WAVE".getBytes("US-ASCII") ++ extra ++ chunk("fmt ", fmtBody) ++
+      chunk("data", data)
     "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
   }
 
-  /** Decode G.711 bytes through the JDK's converter (independent of
+  /** Decode μ-law bytes through the JDK's converter (independent of
     * graft's arithmetic): returns one linear sample per code byte.
     */
-  private def jdkG711(codes: Array[Byte], ulaw: Boolean): Array[Int] = {
+  private def jdkUlaw(codes: Array[Byte]): Array[Int] = {
     import javax.sound.sampled._
-    val enc = if (ulaw) AudioFormat.Encoding.ULAW else AudioFormat.Encoding.ALAW
-    val src = new AudioFormat(enc, 8000f, 8, 1, 1, 8000f, false)
+    val src = new AudioFormat(AudioFormat.Encoding.ULAW, 8000f, 8, 1, 1, 8000f, false)
     val dst = new AudioFormat(AudioFormat.Encoding.PCM_SIGNED,
       8000f, 16, 1, 2, 8000f, false) // little-endian s16
     val in = new AudioInputStream(
@@ -57,187 +56,94 @@ class AudioCodecSpec extends SparkSpec {
     }
   }
 
-  test("G.711 mu-law and A-law expansion matches the JDK converter for all 256 code bytes") {
+  test("G.711 mu-law expansion matches the JDK converter for all 256 code bytes") {
     val codes = Array.tabulate(256)(i => i.toByte)
-    val jdkU = jdkG711(codes, ulaw = true)
-    val jdkA = jdkG711(codes, ulaw = false)
+    val jdkU = jdkUlaw(codes)
     for (i <- 0 until 256) {
       assert(G711.ulawToPcm(codes(i)) == jdkU(i),
         s"mu-law code 0x${i.toHexString}: graft ${G711.ulawToPcm(codes(i))} vs JDK ${jdkU(i)}")
-      assert(G711.alawToPcm(codes(i)) == jdkA(i),
-        s"A-law code 0x${i.toHexString}: graft ${G711.alawToPcm(codes(i))} vs JDK ${jdkA(i)}")
     }
   }
 
   test("mu-law WAV decodes through the RIFF walk: G.711 geometry and decoded-byte mean") {
-    // stereo, 6 frames: 12 code bytes. Geometry must count FRAMES
-    // (codes/channels) and the mean must cover the EXPANDED 16-bit
-    // sample bytes — the wire bytes are half as many and log-scaled.
-    val codes = Array.tabulate(12)(i => (i * 19 + 3).toByte)
-    val wav = wavOf(7, channels = 2, rate = 8000, bits = 8, blockAlign = 2,
-      ext = Array.emptyByteArray, data = codes)
-    val f = new ImageFileDecoder().decode(Media(70L, "audio", wav))
-    assert(f.width == 8000 && f.height == 6 && f.channels == 2)
-    val expected = codes.map { c =>
-      val v = G711.ulawToPcm(c) & 0xffff
-      (v & 0xff) + (v >> 8)
-    }.sum.toDouble / (codes.length * 2)
-    assert(f.mean_byte == expected, "mean over decoded little-endian PCM bytes")
-    // A-law rides the same path under tag 6
-    val fa = new ImageFileDecoder().decode(
-      Media(71L, "audio", wavOf(6, 1, 16000, 8, 1, Array.emptyByteArray, codes)))
-    assert(fa.width == 16000 && fa.height == 12 && fa.channels == 1)
-  }
-
-  // ---- in-test IMA ADPCM encoder (state-tracking, per the IMA spec) ----
-
-  private final class ImaEncoder {
-    var pred = 0
-    var idx = 0
-
-    /** Quantize one sample to a nibble, updating reconstruction state
-      * the way every IMA decoder must — returns (nibble, reconstructed).
-      */
-    def encode(sample: Int): (Int, Int) = {
-      val st = ImaAdpcm.StepTable(idx)
-      var diff = sample - pred
-      var delta = 0
-      if (diff < 0) { delta = 8; diff = -diff }
-      if (diff >= st) { delta |= 4; diff -= st }
-      if (diff >= (st >> 1)) { delta |= 2; diff -= st >> 1 }
-      if (diff >= (st >> 2)) delta |= 1
-      // reconstruct exactly as a decoder will
-      var rdiff = st >> 3
-      if ((delta & 4) != 0) rdiff += st
-      if ((delta & 2) != 0) rdiff += st >> 1
-      if ((delta & 1) != 0) rdiff += st >> 2
-      val s = if ((delta & 8) != 0) pred - rdiff else pred + rdiff
-      pred = math.max(-32768, math.min(32767, s))
-      idx = math.max(0, math.min(88, idx + ImaAdpcm.IndexTable(delta & 7)))
-      (delta, pred)
-    }
-  }
-
-  /** Encode per-channel sample arrays into IMA ADPCM blocks; returns
-    * (data bytes, reconstruction trajectory per channel in emit order).
-    */
-  private def imaEncode(chans: Array[Array[Int]], blockAlign: Int): (Array[Byte], Array[Int]) = {
-    val nCh = chans.length
-    val spb = (blockAlign - 4 * nCh) * 2 / nCh + 1
-    val total = chans(0).length
-    require(total % spb == 0, "test fixture must fill whole blocks")
-    val nBlocks = total / spb
-    val encs = Array.fill(nCh)(new ImaEncoder)
-    val out = new java.io.ByteArrayOutputStream()
-    val recon = scala.collection.mutable.ArrayBuffer.empty[Int]
-    for (b <- 0 until nBlocks) {
-      val base = b * spb
-      for (c <- 0 until nCh) {
-        val e = encs(c)
-        e.pred = chans(c)(base) // block header stores sample 0 verbatim
-        out.write(e.pred & 0xff); out.write((e.pred >> 8) & 0xff)
-        out.write(e.idx); out.write(0)
-        recon += e.pred
-      }
-      // nibble data: 4-byte groups per channel, 8 samples each, low first
-      val groups = (blockAlign - 4 * nCh) / (4 * nCh)
-      for (g <- 0 until groups; c <- 0 until nCh; k <- 0 until 4) {
-        val s0 = base + 1 + g * 8 + k * 2
-        val (lo, r0) = encs(c).encode(chans(c)(s0))
-        val (hi, r1) = encs(c).encode(chans(c)(s0 + 1))
-        out.write(lo | (hi << 4))
-        recon += r0; recon += r1
-      }
-    }
-    (out.toByteArray, recon.toArray)
-  }
-
-  private def adpcmExt(spb: Int): Array[Byte] = le16(2) ++ le16(spb)
-
-  test("IMA ADPCM decode reproduces the encoder's reconstruction trajectory exactly (mono)") {
-    val blockAlign = 256
-    val spb = (blockAlign - 4) * 2 + 1 // 505
-    val total = 2 * spb
-    val sig = Array.tabulate(total)(i => ((i * 331) % 4001) - 2000 + (i % 7) * 123)
-    val (data, recon) = imaEncode(Array(sig), blockAlign)
-    // the encoder is a faithful codec, not a toy: reconstruction error
-    // bounded well under the signal amplitude
-    val err = sig.indices.map(i => math.abs(sig(i) - recon(i))).sum.toDouble / total
-    assert(err < 300, s"fixture encoder too lossy to be meaningful (avg err $err)")
-    val wav = wavOf(0x11, 1, 22050, bits = 4, blockAlign, adpcmExt(spb), data)
-    val f = new ImageFileDecoder().decode(Media(72L, "audio", wav))
-    assert(f.width == 22050 && f.height == total && f.channels == 1)
-    val expected = recon.map { s =>
-      val v = s & 0xffff; (v & 0xff) + (v >> 8)
-    }.sum.toDouble / (total * 2)
-    assert(f.mean_byte == expected,
-      "decoder must land on the encoder's reconstruction, byte-exact")
-  }
-
-  test("IMA ADPCM stereo: interleaved 4-byte groups, per-channel state, frames per channel") {
-    val blockAlign = 64
-    val nCh = 2
-    val spb = (blockAlign - 4 * nCh) * 2 / nCh + 1 // 57
-    val total = 3 * spb
-    val l = Array.tabulate(total)(i => ((i * 173) % 3001) - 1500)
-    val r = Array.tabulate(total)(i => 1000 - ((i * 97) % 2001))
-    val (data, recon) = imaEncode(Array(l, r), blockAlign)
-    val wav = wavOf(0x11, nCh, 8000, bits = 4, blockAlign, adpcmExt(spb), data)
-    val f = new ImageFileDecoder().decode(Media(73L, "audio", wav))
-    assert(f.height == total, "height counts frames PER CHANNEL")
-    assert(f.channels == 2)
-    val expected = recon.map { s =>
-      val v = s & 0xffff; (v & 0xff) + (v >> 8)
-    }.sum.toDouble / (total * nCh * 2)
-    assert(f.mean_byte == expected)
+    // 24 code bytes in 4 bands of 6 samples, behind an odd-length LIST
+    // chunk (pad byte) and an 18-byte fmt (cbSize extension): the walk
+    // must step over both to find fmt and data
+    val codes = Array.tabulate(24)(i => (i * 19 + 3).toByte)
+    val wav = wavOf(7, channels = 1, rate = 8000, bits = 8, blockAlign = 1,
+      ext = le16(0), data = codes,
+      extra = chunk("LIST", "INFOxyz".getBytes("US-ASCII")))
+    val got = wavUlawBandEnergies(wav, 70L, 4)
+    val pcm = jdkUlaw(codes).map(_.toLong)
+    assert(got.toSeq === pcm.grouped(6).map(_.map(x => x * x).sum).toSeq)
+    // the mean decoded square over all samples is the band total / n
+    assert(got.sum.toDouble / codes.length === pcm.map(x => x * x).sum.toDouble / pcm.length)
+    // one band is the whole clip; a band per sample is each pcm²
+    assert(wavUlawBandEnergies(wav, 70L, 1).toSeq === Seq(got.sum))
+    assert(wavUlawBandEnergies(wav, 70L, 24).toSeq === pcm.map(x => x * x).toSeq)
   }
 
   test("malformed compressed WAVs are rejected loudly, never guessed at") {
-    val d = new ImageFileDecoder
-    def reject(bytes: Array[Byte], msg: String): Unit = {
+    def reject(bytes: Array[Byte], msg: String, nBands: Int = 4): Unit = {
       val e = intercept[IllegalArgumentException] {
-        d.decode(Media(74L, "audio", bytes))
+        wavUlawBandEnergies(bytes, 74L, nBands)
       }
-      assert(e.getMessage.contains(msg),
-        s"wrong rejection message: ${e.getMessage}")
+      assert(e.getMessage.contains(msg), s"wrong rejection message: ${e.getMessage}")
     }
-    val blockAlign = 12 // mono: spb = 17
-    val okData = new Array[Byte](12) // header(4) + 8 nibble bytes, all zero
-    val ok = wavOf(0x11, 1, 8000, 4, blockAlign, adpcmExt(17), okData)
-    d.decode(Media(75L, "audio", ok)) // sanity: the base fixture decodes
-    // declared samples-per-block contradicts blockAlign geometry
-    reject(wavOf(0x11, 1, 8000, 4, blockAlign, adpcmExt(16), okData),
-      "contradicts blockAlign geometry")
-    // partial trailing block
-    reject(wavOf(0x11, 1, 8000, 4, blockAlign, adpcmExt(17), okData ++ Array[Byte](1, 2)),
-      "not a whole number of")
-    // step index out of range in the block header
-    val badIdx = okData.clone(); badIdx(2) = 89.toByte
-    reject(wavOf(0x11, 1, 8000, 4, blockAlign, adpcmExt(17), badIdx),
-      "step index")
-    // fmt without the samples-per-block extension
-    reject(wavOf(0x11, 1, 8000, 4, blockAlign, Array.emptyByteArray, okData),
-      "samples-per-block extension")
-    // G.711 must be 8-bit on the wire
-    reject(wavOf(7, 1, 8000, 16, 2, Array.emptyByteArray, new Array[Byte](4)),
-      "must be 8-bit")
-    // unknown compressed tag still names the supported set
-    reject(wavOf(3, 1, 8000, 32, 4, Array.emptyByteArray, new Array[Byte](4)),
-      "unsupported WAV format tag")
+    val data = Array.tabulate[Byte](16)(i => (i * 7).toByte)
+    val ok = wavOf(7, 1, 8000, 8, 1, Array.emptyByteArray, data)
+    assert(wavUlawBandEnergies(ok, 75L, 4).length == 4) // the base fixture decodes
+    // other codecs are out of scope, not decoded as mu-law: A-law (6),
+    // IMA ADPCM (0x11), 8-bit PCM (1)
+    for (tag <- Seq(6, 0x11, 1))
+      reject(wavOf(tag, 1, 8000, 8, 1, Array.emptyByteArray, data), s"tag=$tag ")
+    // mu-law with stereo or a 16-bit sample width
+    reject(wavOf(7, 2, 8000, 8, 2, Array.emptyByteArray, data), "ch=2 ")
+    reject(wavOf(7, 1, 8000, 16, 2, Array.emptyByteArray, data), "bits=16")
+    // fmt too short to hold its fields
+    reject("RIFF".getBytes("US-ASCII") ++ le32(4 + 8 + 8) ++ "WAVE".getBytes("US-ASCII") ++
+      chunk("fmt ", le16(7) ++ le16(1) ++ le32(8000)), "fmt chunk too short")
+    // fmt without data
+    reject(ok.take(12 + 8 + 16), "without data chunk")
+    // a data length past the end of the payload
+    reject(ok.dropRight(3), "overruns the payload")
+    // ragged bands: 16 samples do not split into 3
+    reject(ok, "not divisible into 3 bands", nBands = 3)
+    // not RIFF/WAVE at all
+    reject(ok.updated(8, 'X'.toByte), "not a RIFF/WAVE")
   }
 
   test("compressed audio rides the batched Spark featurizer seam with images and video") {
     import spark.implicits._
     val codes = Array.tabulate(8)(i => (i * 31).toByte)
     val ulaw = wavOf(7, 1, 8000, 8, 1, Array.emptyByteArray, codes)
-    val ppm = "P6 2 2 255\n".getBytes("US-ASCII") ++
-      Array.tabulate[Byte](12)(i => (i * 3).toByte)
-    val media = Seq(
-      Media(80L, "audio", ulaw),
-      Media(81L, "image", ppm)).toDS()
-    val feats = Multimodal.extractFeatures(media, () => new ImageFileDecoder)
-      .collect().map(f => f.media_id -> f).toMap
-    assert(feats(80L).height == 8 && feats(80L).channels == 1)
-    assert(feats(81L).width == 2 && feats(81L).height == 2)
+    val raster = Array.tabulate[Byte](12)(i => (i * 3).toByte)
+    val ppm = "P6 2 2 255\n".getBytes("US-ASCII") ++ raster
+    // 2x2 24-bit DIB: stride 8 (6 pixel bytes + 2 padding), one frame
+    val frame = Array.tabulate[Byte](16)(i => (i * 11).toByte)
+    val avi = {
+      def list(form: String, inner: Array[Byte]) =
+        chunk("LIST", form.getBytes("US-ASCII") ++ inner)
+      val strf = chunk("strf", le32(40) ++ le32(2) ++ le32(2) ++ le16(1) ++
+        le16(24) ++ le32(0) ++ le32(16) ++ Array.fill[Byte](16)(0))
+      val body = "AVI ".getBytes("US-ASCII") ++ list("hdrl", list("strl", strf)) ++
+        list("movi", chunk("00db", frame))
+      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
+    }
+    val media = Seq(Media(80L, "audio", ulaw), Media(81L, "image", ppm),
+      Media(82L, "video", avi)).toDS().repartition(2)
+    def kind(k: String) = media.filter(_.kind == k)
+    val audio = extractWavBands(kind("audio"), 2).collect()
+    val image = extractPpmBands(kind("image"), 2).collect()
+    val video = extractAviDibBands(kind("video"), 2).collect()
+    val pcm = jdkUlaw(codes).map(_.toLong)
+    assert(audio.map(a => (a.media_id, a.bands.toSeq)).toSeq ===
+      Seq((80L, pcm.grouped(4).map(_.map(x => x * x).sum).toSeq)))
+    assert(image.map(b => (b.media_id, b.width, b.height, b.bands.toSeq)).toSeq ===
+      Seq((81L, 2, 2, raster.grouped(6).map(_.map(_ & 0xff).sum.toLong).toSeq)))
+    // bottom-up rows: decoded row 0 is stored row 1; padding excluded
+    val rowEnergy = (r: Int) => frame.slice(r * 8, r * 8 + 6).map(b => (b & 0xffL) * (b & 0xff)).sum
+    assert(video.map(v => (v.media_id, v.width, v.height, v.n_frames, v.bands.toSeq)).toSeq ===
+      Seq((82L, 2, 2, 1, Seq(rowEnergy(1), rowEnergy(0)))))
   }
 }

@@ -1,23 +1,24 @@
 package graft.multimodal
 
 import graft.SparkSpec
-import graft.multimodal.Multimodal._
 import scala.concurrent.duration._
 
-/** Fuzz contract for [[ImageFileDecoder]] on untrusted crawl bytes:
-  * every input either decodes or is REJECTED LOUDLY within a time
-  * bound — never a hang (the round-9 FDICT inflate-spin class), never
-  * an uncontrolled error type, never an OOM-sized allocation from a
-  * crafted header (geometry guards).
+/** Fuzz contract for the band featurizers' parsers on untrusted bytes
+  * ([[Multimodal.ppmBandSums]], [[Multimodal.wavUlawBandEnergies]],
+  * [[Multimodal.aviDibBandEnergies]]): every input either parses or is
+  * REJECTED LOUDLY with an IllegalArgumentException within a time
+  * bound — never a hang, never another error type, never an OOM-sized
+  * allocation from a crafted header (geometry guards).
   *
-  * Two generators: (1) pure random bytes, optionally prefixed with
-  * each container's magic so the per-format parsers (not just the
-  * sniffer) see hostile input; (2) random single-byte mutations of
-  * VALID files from every supported format — the corruption shape a
-  * real crawl actually produces (truncation, bit rot, proxy
-  * mangling). Each decode runs on a future with a hard timeout so a
-  * parser loop that stops advancing fails the suite instead of
-  * wedging it.
+  * Two generators per parser: (1) random bytes behind the container's
+  * magic, so the parser (not just the magic check) sees hostile input;
+  * (2) random single-byte mutations of a VALID file — the corruption
+  * shape a real crawl actually produces (truncation, bit rot, proxy
+  * mangling). The AVI walk also gets targeted structure attacks:
+  * overrunning lengths, short lists, deep nesting, duplicated lists and
+  * stream headers, and geometry the frames cannot hold. Each parse runs
+  * on its own thread with a hard timeout so a loop that stops advancing
+  * fails the suite instead of wedging it.
   */
 class DecoderFuzzSpec extends SparkSpec {
 
@@ -26,30 +27,31 @@ class DecoderFuzzSpec extends SparkSpec {
   // deterministic PRNG — failures must reproduce
   private val rnd = new scala.util.Random(0x9E3779B97F4A7C15L)
 
-  private def decodeBounded(id: Long, bytes: Array[Byte]): Unit = {
-    // Each decode gets its OWN single-thread executor, shutdownNow()'d
-    // on timeout: the decode loops are CPU-bound, so a genuinely
+  /** Runs `parse` under the contract: it returns, or throws
+    * IllegalArgumentException (a require's included), within `timeout`.
+    * Anything else escaping — NPE, ArrayIndexOutOfBounds,
+    * NegativeArraySize, StackOverflow, OutOfMemory from a crafted
+    * geometry — is a parser bug and fails the test.
+    */
+  private def bounded(what: String, id: Long)(parse: => Any): Unit = {
+    // Each parse gets its OWN single-thread executor, shutdownNow()'d
+    // on timeout: the parse loops are CPU-bound, so a genuinely
     // non-terminating parser on a shared pool would keep spinning after
     // the timeout and starve later cases into cascading timeouts,
-    // obscuring the real offender (round-9 advice). The interrupt can't
-    // stop a tight loop, but the daemon thread is abandoned in
-    // isolation — one hang costs one thread, not the pool.
+    // obscuring the real offender. The interrupt can't stop a tight
+    // loop, but the daemon thread is abandoned in isolation — one hang
+    // costs one thread, not the pool.
     import java.util.concurrent._
     val exec = Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, s"fuzz-$id"); t.setDaemon(true); t
+      val t = new Thread(r, s"fuzz-$what-$id"); t.setDaemon(true); t
     })
     val fut = exec.submit(new Callable[Unit] {
-      def call(): Unit = { new ImageFileDecoder().decode(Media(id, "fuzz", bytes)); () }
+      def call(): Unit = { parse; () }
     })
     try fut.get(timeout.toSeconds, TimeUnit.SECONDS)
     catch {
       case _: TimeoutException =>
-        fail(s"decoder hung > $timeout on fuzz case $id (${bytes.length} bytes)")
-      // the decode contract: reject via IllegalArgumentException (or
-      // a require's IllegalArgumentException subclass); anything else
-      // escaping — NPE, ArrayIndexOutOfBounds, NegativeArraySize,
-      // StackOverflow, OutOfMemory from a crafted geometry — is a
-      // parser bug
+        fail(s"$what hung > $timeout on fuzz case $id")
       case e: ExecutionException =>
         e.getCause match {
           case _: IllegalArgumentException => ()
@@ -58,404 +60,181 @@ class DecoderFuzzSpec extends SparkSpec {
     } finally exec.shutdownNow()
   }
 
-  private def expectReject(id: Long, bytes: Array[Byte], msgPart: String): Unit = {
-    val e = intercept[IllegalArgumentException] {
-      new ImageFileDecoder().decode(Media(id, "fuzz", bytes))
-    }
-    assert(e.getMessage.contains(msgPart),
-      s"case $id rejected with the wrong message: ${e.getMessage}")
-  }
-
   private def randomBytes(n: Int): Array[Byte] = {
     val a = new Array[Byte](n)
     rnd.nextBytes(a)
     a
   }
 
-  // RIFF construction kit, shared by the mutation and structure tests
+  /** Single-byte mutations of `valid`: every other one lands in the
+    * first `headerLen` bytes, where the container structure lives.
+    */
+  private def mutations(valid: Array[Byte], headerLen: Int, n: Int): Seq[Array[Byte]] =
+    (0 until n).map { i =>
+      val m = valid.clone()
+      m(rnd.nextInt(if (i % 2 == 0) headerLen else m.length)) = rnd.nextInt(256).toByte
+      m
+    }
+
+  // RIFF construction kit for the WAV and AVI fixtures
+  private def ascii(s: String) = s.getBytes("US-ASCII")
+  private def le16(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
   private def le32(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
     ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
   private def chunk(cid: String, data: Array[Byte]): Array[Byte] =
-    cid.getBytes("US-ASCII") ++ le32(data.length) ++ data ++
+    ascii(cid) ++ le32(data.length) ++ data ++
       (if (data.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
-  private def aviOf(frameChunks: Array[Byte]*): Array[Byte] = {
-    val movi = chunk("LIST",
-      "movi".getBytes("US-ASCII") ++ frameChunks.flatten.toArray)
-    val body = "AVI ".getBytes("US-ASCII") ++ movi
-    "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-  }
-  private def jpegOf(w: Int, h: Int): Array[Byte] = {
-    val b = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until h; x <- 0 until w)
-      b.setRGB(x, y, ((x * 37) << 16) | ((y * 53) << 8) | ((x + y) * 11 & 0xff))
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(b, "jpeg", bos))
-    bos.toByteArray
-  }
-
-  test("random bytes behind each container magic reject loudly, within the time bound") {
-    val magics = Seq(
-      Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a),
-      "GIF89a".getBytes("US-ASCII"),
-      Array[Byte](0xff.toByte, 0xd8.toByte),
-      "P6 ".getBytes("US-ASCII"),
-      "BM".getBytes("US-ASCII"),
-      "RIFF1234WAVE".getBytes("US-ASCII"),
-      "RIFF1234AVI ".getBytes("US-ASCII"),
-      "fLaC".getBytes("US-ASCII"),
-      Array.emptyByteArray) // sniffer itself
-    var id = 1000L
-    for (m <- magics; size <- Seq(0, 3, 64, 4096); _ <- 1 to 25) {
-      decodeBounded(id, m ++ randomBytes(size)); id += 1
-    }
-  }
-
-  test("single-byte mutations of valid files in every format reject or decode, never hang") {
-    import java.awt.image.BufferedImage
-    def img(w: Int, h: Int): BufferedImage = {
-      val b = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
-      for (y <- 0 until h; x <- 0 until w)
-        b.setRGB(x, y, ((x * 37) << 16) | ((y * 53) << 8) | ((x + y) * 11 & 0xff))
-      b
-    }
-    def encoded(fmt: String): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(img(24, 16), fmt, bos))
-      bos.toByteArray
-    }
-    val jpegBytes = encoded("jpeg")
-    val avi = aviOf(chunk("00dc", jpegBytes))
-    val ppm = "P6 4 3 255\n".getBytes("US-ASCII") ++ randomBytes(36)
-    // compressed-audio WAVs (round-11 codecs): mu-law and a one-block
-    // mono IMA ADPCM file (any nibble pattern is valid ADPCM data, so
-    // a random body exercises the decode loop, not just the header)
-    def le16(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def wavOf(tag: Int, ba: Int, bits: Int, ext: Array[Byte], data: Array[Byte]) = {
-      val fmtBody = le16(tag) ++ le16(1) ++ le32(8000) ++ le32(8000 * ba) ++
-        le16(ba) ++ le16(bits) ++ ext
-      val body = "WAVE".getBytes("US-ASCII") ++ chunk("fmt ", fmtBody) ++
-        chunk("data", data)
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    val ulawWav = wavOf(7, 1, 8, Array.emptyByteArray, randomBytes(32))
-    val adpcmBody = { val b = randomBytes(12); b(2) = 40; b(3) = 0; b }
-    val adpcmWav = wavOf(0x11, 12, 4, le16(2) ++ le16(17), adpcmBody)
-    // a valid FLAC stream (verbatim subframe so any PCM is encodable
-    // without a predictor): STREAMINFO + one 16-sample mono frame
-    val flacFixture: Array[Byte] = {
-      val bits = new java.io.ByteArrayOutputStream()
-      var cur = 0; var n = 0
-      def wb(v: Long, w: Int): Unit = {
-        var i = w - 1
-        while (i >= 0) {
-          cur = (cur << 1) | ((v >> i) & 1L).toInt; n += 1
-          if (n == 8) { bits.write(cur); cur = 0; n = 0 }
-          i -= 1
-        }
-      }
-      val pcm = Array.tabulate(16)(i => (i * 731 - 4000) & 0xffff)
-      wb(0x664c6143L, 32) // fLaC
-      wb(1, 1); wb(0, 7); wb(34, 24)
-      wb(16, 16); wb(16, 16); wb(0, 24); wb(0, 24)
-      wb(8000, 20); wb(0, 3); wb(15, 5); wb(16, 36)
-      for (_ <- 0 until 16) wb(0, 8) // md5 zero -> self-check skipped
-      val head = bits.size
-      wb(0x3ffe, 14); wb(0, 1); wb(0, 1); wb(7, 4); wb(0, 4); wb(0, 4); wb(4, 3); wb(0, 1)
-      wb(0, 8); wb(15, 16) // frame 0, blocksize-1
-      wb(Flac.crc8(bits.toByteArray, head, bits.size), 8)
-      wb(0, 1); wb(1, 6); wb(0, 1) // VERBATIM subframe
-      pcm.foreach(v => wb(v, 16))
-      // verbatim 16x16 bits stays byte-aligned; frame CRC
-      wb(Flac.crc16(bits.toByteArray, head, bits.size), 16)
-      bits.toByteArray
-    }
-    assert(new ImageFileDecoder().decode(Media(4999L, "audio", flacFixture)).height == 16,
-      "fuzz FLAC fixture must itself be valid")
-    val valids = Seq(encoded("png"), encoded("gif"), jpegBytes, avi, ppm,
-      ulawWav, adpcmWav, flacFixture)
-    var id = 5000L
-    for (v <- valids; _ <- 1 to 200) {
-      val m = v.clone()
-      val pos = rnd.nextInt(m.length)
-      m(pos) = (m(pos) ^ (1 << rnd.nextInt(8))).toByte
-      decodeBounded(id, m); id += 1
-      // truncations at random points, same contract
-      decodeBounded(id, v.take(rnd.nextInt(v.length))); id += 1
-    }
-  }
+  private def riff(form: String, body: Array[Byte]): Array[Byte] =
+    ascii("RIFF") ++ le32(4 + body.length) ++ ascii(form) ++ body
 
   test("ppmBandSums survives random-byte and mutation fuzz under the decode contract") {
-    // the band featurizer shares the decoder contract: reject with
-    // IllegalArgumentException, never escape with an index/NPE/OOM or
-    // hang — exercised the same three ways as the container decoders.
-    def bandsBounded(id: Long, bytes: Array[Byte]): Unit = {
-      import java.util.concurrent._
-      val exec = Executors.newSingleThreadExecutor(r => {
-        val t = new Thread(r, s"fuzz-bands-$id"); t.setDaemon(true); t
-      })
-      val fut = exec.submit(new Callable[Unit] {
-        def call(): Unit = { Multimodal.ppmBandSums(bytes, id, 16); () }
-      })
-      try fut.get(timeout.toSeconds, TimeUnit.SECONDS)
-      catch {
-        case _: TimeoutException =>
-          fail(s"ppmBandSums hung > $timeout on fuzz case $id")
-        case e: ExecutionException =>
-          e.getCause match {
-            case _: IllegalArgumentException => ()
-            case other => throw other
-          }
-      } finally exec.shutdownNow()
-    }
+    def bands(id: Long, bytes: Array[Byte]): Unit =
+      bounded("ppmBandSums", id)(Multimodal.ppmBandSums(bytes, id, 16))
     // random bytes behind the magic
     for (i <- 0 until 200)
-      bandsBounded(9000 + i, "P6".getBytes("US-ASCII") ++ randomBytes(rnd.nextInt(600)))
+      bands(9000 + i, ascii("P6") ++ randomBytes(rnd.nextInt(600)))
     // single-byte mutations of a valid 16x16 render
-    val header = "P6\n16 16\n255\n".getBytes("US-ASCII")
+    val header = ascii("P6\n16 16\n255\n")
     val valid = header ++ Array.tabulate(768)(i => (i % 251).toByte)
     val (_, _, base) = Multimodal.ppmBandSums(valid, 1L, 16)
     assert(base.length == 16 && base.sum == (0 until 768).map(_ % 251).sum)
-    for (i <- 0 until 300) {
-      val m = valid.clone()
-      m(rnd.nextInt(m.length)) = rnd.nextInt(256).toByte
-      bandsBounded(9500 + i, m)
-    }
+    for ((m, i) <- mutations(valid, header.length, n = 300).zipWithIndex)
+      bands(9500 + i, m)
     // crafted geometry: 9-digit width cannot wrap; huge heights reject
     // on truncation before any allocation
-    bandsBounded(9900, "P6\n999999999 999999999\n255\n ".getBytes("US-ASCII"))
+    bands(9900, ascii("P6\n999999999 999999999\n255\n "))
     intercept[IllegalArgumentException] {
-      Multimodal.ppmBandSums("P6\n16 17\n255\n".getBytes("US-ASCII") ++
+      Multimodal.ppmBandSums(ascii("P6\n16 17\n255\n") ++
         Array.fill(17 * 48)(1.toByte), 2L, 16) // 17 rows don't band by 16
     }
   }
 
-  test("FLAC structure attacks: frame-header fields, Rice partitions, STREAMINFO contradictions") {
-    // Bit-precise builder with named field marks, so each attack
-    // patches exactly one field and REPAIRS the CRCs that guard it —
-    // without the repair every structural attack would just exercise
-    // the CRC path (already pinned below); with it the decoder's
-    // SEMANTIC validation is what's under fire (the round-9 RIFF
-    // lesson: length-field attacks found nothing until the checksums
-    // stopped shadowing them).
-    final class BitBuf {
-      val bits = scala.collection.mutable.ArrayBuffer.empty[Int]
-      def wb(v: Long, w: Int): Unit = {
-        var i = w - 1
-        while (i >= 0) { bits += ((v >> i) & 1L).toInt; i -= 1 }
-      }
-      def patch(off: Int, v: Long, w: Int): Unit = {
-        var i = 0
-        while (i < w) { bits(off + i) = ((v >> (w - 1 - i)) & 1L).toInt; i += 1 }
-      }
-      def bytes: Array[Byte] = {
-        require(bits.size % 8 == 0, "unaligned")
-        bits.grouped(8).map(_.foldLeft(0)((a, b) => (a << 1) | b).toByte).toArray
-      }
+
+  // valid fixtures for the RIFF parsers
+  private def list(form: String, inner: Array[Byte]): Array[Byte] =
+    chunk("LIST", ascii(form) ++ inner)
+  private def validWav: Array[Byte] = { // mono 8-bit mu-law, 44-byte header
+    val fmt = chunk("fmt ", le16(7) ++ le16(1) ++ le32(8000) ++ le32(8000) ++
+      le16(1) ++ le16(8))
+    riff("WAVE", fmt ++ chunk("data", randomBytes(256)))
+  }
+  // 24-bit DIB video, 5x4 by default: stride 16, one padding byte per row
+  private def strfOf(w: Int, h: Int): Array[Byte] =
+    chunk("strf", le32(40) ++ le32(w) ++ le32(h) ++ le16(1) ++ le16(24) ++
+      le32(0) ++ le32(16 * 4) ++ Array.fill[Byte](16)(0))
+  private def avihOf(frames: Int): Array[Byte] =
+    chunk("avih", le32(40000) ++ le32(0) ++ le32(0) ++ le32(0) ++
+      le32(frames) ++ Array.fill[Byte](36)(0))
+  private def dibHdrl(frames: Int, strf: Array[Byte] = strfOf(5, 4)): Array[Byte] =
+    list("hdrl", avihOf(frames) ++
+      list("strl", chunk("strh", Array.fill[Byte](56)(0)) ++ strf))
+  private def frameChunk(): Array[Byte] = chunk("00db", randomBytes(16 * 4))
+
+  private val ppmHeader = ascii("P6\n16 16\n255\n")
+  /** The kept parsers: name, a fresh container magic, the parse. */
+  private val targets: Seq[(String, () => Array[Byte], (Array[Byte], Long) => Any)] = Seq(
+    ("ppmBandSums", () => ascii("P6"),
+      (b, id) => Multimodal.ppmBandSums(b, id, 16)),
+    ("wavUlawBandEnergies", () => ascii("RIFF") ++ randomBytes(4) ++ ascii("WAVE"),
+      (b, id) => Multimodal.wavUlawBandEnergies(b, id, 16)),
+    ("aviDibBandEnergies", () => ascii("RIFF") ++ randomBytes(4) ++ ascii("AVI "),
+      (b, id) => Multimodal.aviDibBandEnergies(b, id, 4)))
+
+  test("random bytes behind each container magic reject loudly, within the time bound") {
+    var id = 1000L
+    for ((name, magic, parse) <- targets; size <- Seq(0, 3, 64, 4096); _ <- 1 to 25) {
+      val bytes = magic() ++ randomBytes(size)
+      bounded(name, id)(parse(bytes, id)); id += 1
     }
-    // mono, 16 samples, FIXED order-0 subframe with a real Rice
-    // residual (partition order 0, param 6) — unlike the mutation
-    // fixture's VERBATIM subframe, this stream HAS the partition
-    // machinery the attacks below target
-    val pcm = Array.tabulate(16)(i => i * 3 - 20)
-    def build(): (BitBuf, Map[String, Int], Int, Int, Int) = {
-      val b = new BitBuf
-      val marks = scala.collection.mutable.Map.empty[String, Int]
-      def mk(name: String): Unit = marks(name) = b.bits.size
-      b.wb(0x664c6143L, 32) // fLaC
-      b.wb(1, 1); b.wb(0, 7); b.wb(34, 24)
-      mk("si"); b.wb(16, 16); b.wb(16, 16) // min/max blocksize
-      b.wb(0, 24); b.wb(0, 24)
-      b.wb(8000, 20); b.wb(0, 3); b.wb(15, 5); b.wb(16, 36)
-      for (_ <- 0 until 16) b.wb(0, 8) // md5 zero -> self-check skipped
-      val frameStart = b.bits.size / 8
-      b.wb(0x3ffe, 14); b.wb(0, 1); b.wb(0, 1)
-      mk("bsCode"); b.wb(7, 4) // 16-bit explicit blocksize
-      mk("srCode"); b.wb(0, 4) // from STREAMINFO
-      mk("chanAsgn"); b.wb(0, 4)
-      mk("ssCode"); b.wb(4, 3) // 16-bit samples
-      b.wb(0, 1)
-      mk("frameNo"); b.wb(0, 8)
-      mk("bsM1"); b.wb(15, 16)
-      mk("crc8"); b.wb(0, 8) // repaired below
-      b.wb(0, 1); mk("subfType"); b.wb(8, 6); b.wb(0, 1) // FIXED order 0
-      b.wb(0, 2) // 4-bit Rice parameters
-      mk("partOrder"); b.wb(0, 4)
-      mk("riceParam"); b.wb(6, 4)
-      pcm.foreach { v =>
-        val u = ((v.toLong << 1) ^ (v.toLong >> 63)) & 0xffffffffL
-        val q = (u >>> 6).toInt
-        for (_ <- 0 until q) b.wb(0, 1)
-        b.wb(1, 1)
-        b.wb(u & 63, 6)
-      }
-      while (b.bits.size % 8 != 0) b.wb(0, 1)
-      val crc16At = b.bits.size
-      mk("crc16"); b.wb(0, 16)
-      (b, marks.toMap, frameStart, marks("crc8"), crc16At)
+    // no magic at all: every parser rejects before reading past it
+    for ((name, _, parse) <- targets) {
+      bounded(name, id)(parse(Array.emptyByteArray, id)); id += 1
     }
-    def sealed_(b: BitBuf, frameStart: Int, crc8At: Int, crc16At: Int): Array[Byte] = {
-      b.patch(crc8At, Flac.crc8(b.bytes, frameStart, crc8At / 8), 8)
-      b.patch(crc16At, Flac.crc16(b.bytes, frameStart, crc16At / 8), 16)
-      b.bytes
-    }
-    locally { // the unpatched baseline must itself be valid
-      val (b, _, fs, c8, c16) = build()
-      val f = new ImageFileDecoder().decode(Media(6000L, "audio", sealed_(b, fs, c8, c16)))
-      assert(f.height == 16, "FLAC attack baseline must decode (16 samples)")
-    }
-    def attack(id: Long, field: String, v: Long, w: Int,
-        expectMsg: Option[String] = None): Unit = {
-      val (b, marks, fs, c8, c16) = build()
-      b.patch(marks(field), v, w)
-      val bytes = sealed_(b, fs, c8, c16)
-      expectMsg match {
-        case Some(m) => expectReject(id, bytes, m)
-        case None => decodeBounded(id, bytes)
-      }
-    }
-    var id = 6001L
-    // frame-header field sweeps, CRCs repaired: every code point of
-    // every field either decodes or rejects semantically, never hangs
-    for (v <- 0 to 15) { attack(id, "bsCode", v, 4); id += 1 }
-    for (v <- 0 to 15) { attack(id, "srCode", v, 4); id += 1 }
-    for (v <- 0 to 15) { attack(id, "chanAsgn", v, 4); id += 1 }
-    for (v <- 0 to 7) { attack(id, "ssCode", v, 3); id += 1 }
-    // pinned semantic rejections (the message proves WHICH guard fired)
-    attack(id, "bsCode", 0, 4, Some("reserved FLAC blocksize code 0")); id += 1
-    attack(id, "srCode", 15, 4, Some("sample-rate code 15")); id += 1
-    attack(id, "chanAsgn", 1, 4, Some("channel count contradicts STREAMINFO")); id += 1
-    attack(id, "chanAsgn", 11, 4, Some("reserved FLAC channel assignment")); id += 1
-    attack(id, "ssCode", 1, 3, Some("contradicts STREAMINFO")); id += 1
-    attack(id, "ssCode", 3, 3, Some("reserved FLAC sample-size code")); id += 1
-    // Rice partition order: 16-sample block divides into 2^k partitions
-    // only for k <= 4, and every k > 0 misaligns the written residual —
-    // all must reject semantically or parse-fail loudly, never hang
-    for (v <- 1 to 15) { attack(id, "partOrder", v, 4); id += 1 }
-    attack(id, "partOrder", 5, 4, Some("not divisible into 32 partitions")); id += 1
-    // rice parameter sweep (escape code 15 included)
-    for (v <- 0 to 15) { attack(id, "riceParam", v, 4); id += 1 }
-    // subframe type sweep: reserved codes must name themselves
-    for (v <- 0 to 63) { attack(id, "subfType", v, 6); id += 1 }
-    attack(id, "subfType", 2, 6, Some("reserved FLAC subframe type")); id += 1
-    // blocksize-minus-1 sweep incl. the allocation-cap and truncation
-    // shapes (frame claims more samples than the stream carries)
-    for (v <- Seq(0, 1, 14, 16, 31, 255, 4095, 65535)) {
-      attack(id, "bsM1", v, 16); id += 1
-    }
-    // malformed UTF-8 frame numbers: invalid lead, lead expecting a
-    // continuation that is actually the blocksize field
-    attack(id, "frameNo", 0xff, 8, Some("UTF-8 number lead byte")); id += 1
-    for (v <- Seq(0x80, 0xc2, 0xe0, 0xf0, 0xfe)) {
-      attack(id, "frameNo", v, 8); id += 1
-    }
-    // CRC pins: a corrupted checksum must die on the checksum (the
-    // semantic field checks above fire BEFORE the CRC-8 read, so the
-    // clean way to hit the CRC path is corrupting the CRC byte itself)
-    locally {
-      val (b, marks, fs, c8, c16) = build()
-      val good = sealed_(b, fs, c8, c16)
-      b.patch(marks("crc8"), (good(c8 / 8) ^ 0x5a) & 0xff, 8)
-      expectReject(id, b.bytes, "CRC-8 mismatch"); id += 1
-    }
-    locally { // flip one Rice remainder bit: structure intact, CRC-16 catches
-      val (b, marks, fs, c8, _) = build()
-      b.patch(c8, Flac.crc8(b.bytes, fs, c8 / 8), 8)
-      val resBit = marks("riceParam") + 4 + 8 // inside the first remainder
-      b.bits(resBit) = 1 - b.bits(resBit)
-      expectReject(id, b.bytes, "CRC-16 mismatch"); id += 1
-    }
-    // STREAMINFO contradiction sweep: 4-byte splats across the
-    // STREAMINFO region (no CRC protects it) leave the frame header
-    // contradicting the stream — every case rejects-or-decodes in bound
-    locally {
-      val (b0, marks, fs, c8, c16) = build()
-      val base = sealed_(b0, fs, c8, c16)
-      val siByte = marks("si") / 8
-      for (_ <- 1 to 200) {
-        val m = base.clone()
-        val pos = siByte + rnd.nextInt(34 - 4)
-        val splat = randomBytes(4)
-        System.arraycopy(splat, 0, m, pos, 4)
-        decodeBounded(id, m); id += 1
+  }
+
+  test("single-byte mutations of valid files in every format reject or decode, never hang") {
+    val hdrl = dibHdrl(2)
+    val valids = Seq(
+      (ppmHeader ++ randomBytes(768), ppmHeader.length),
+      (validWav, 44),
+      // header region: RIFF header, hdrl, the movi LIST header, first
+      // frame's header
+      (riff("AVI ", hdrl ++ list("movi", frameChunk() ++ frameChunk())),
+        12 + hdrl.length + 20))
+    var id = 2000L
+    for (((name, _, parse), (valid, headerLen)) <- targets.zip(valids)) {
+      parse(valid, 1L) // the base fixture decodes
+      for (m <- mutations(valid, headerLen, n = 300)) {
+        bounded(name, id)(parse(m, id)); id += 1
       }
     }
   }
 
   test("AVI RIFF structure attacks: boundary, nesting, duplication, geometry") {
-    val jpegA = jpegOf(24, 16)
-    val jpegB = jpegOf(16, 8)
-    val dec = new ImageFileDecoder()
+    def parse(bytes: Array[Byte]) = Multimodal.aviDibBandEnergies(bytes, 7L, 4)
+    def expectReject(bytes: Array[Byte], msg: String): Unit = {
+      val e = intercept[IllegalArgumentException](parse(bytes))
+      assert(e.getMessage.contains(msg), s"wrong rejection message: ${e.getMessage}")
+    }
+    val movi = list("movi", frameChunk() ++ frameChunk())
 
-    // baseline: two same-geometry frames decode, mean over both frames
-    val two = dec.decode(Media(1L, "video",
-      aviOf(chunk("00dc", jpegA), chunk("01dc", jpegA))))
-    assert(two.width === 24 && two.height === 16)
+    // baseline: two 5x4 frames decode
+    val two = parse(riff("AVI ", dibHdrl(2) ++ movi))
+    assert((two.width, two.height, two.n_frames) === ((5, 4, 2)))
 
     // a duplicated movi LIST is structurally legal RIFF — frames from
-    // both lists count (4 frames, same geometry)
-    val movi = chunk("LIST",
-      "movi".getBytes("US-ASCII") ++ chunk("00dc", jpegA) ++ chunk("01dc", jpegA))
-    val dupBody = "AVI ".getBytes("US-ASCII") ++ movi ++ movi
-    val dupMovi = "RIFF".getBytes("US-ASCII") ++ le32(dupBody.length) ++ dupBody
-    assert(dec.decode(Media(2L, "video", dupMovi)).width === 24)
+    // both lists count, so every band energy doubles; avih must then
+    // declare all four
+    val dup = parse(riff("AVI ", dibHdrl(4) ++ movi ++ movi))
+    assert(dup.n_frames === 4 && dup.bands.toSeq === two.bands.map(_ * 2).toSeq)
+    expectReject(riff("AVI ", dibHdrl(2) ++ movi ++ movi), "declares 2 frames")
 
-    // geometry-mismatched frames must reject with the geometry message
-    expectReject(3L, aviOf(chunk("00dc", jpegA), chunk("01dc", jpegB)),
-      "disagree on geometry")
+    // a duplicated video stream header is ambiguous
+    expectReject(riff("AVI ", list("hdrl", avihOf(2) ++
+      list("strl", strfOf(5, 4)) ++ list("strl", strfOf(5, 4))) ++ movi),
+      "more than one")
 
-    // '##db' carrying a non-JPEG payload is a raw DIB frame since the
-    // q130 decoder (round 16) — without a strf BITMAPINFOHEADER its
-    // geometry is unknowable, and the rejection must SAY that (not a
-    // JPEG marker-sync error, and no longer the pre-q130 scope message)
-    expectReject(4L, aviOf(chunk("00db", randomBytes(64))),
-      "raw DIB frame in an AVI without a strf")
+    // geometry: 6 px wide needs 20-byte rows, the frames carry 16
+    expectReject(riff("AVI ", dibHdrl(2, strfOf(6, 4)) ++ movi), "want stride")
+    // geometry whose stride·height wraps to 12 in Int arithmetic
+    expectReject(riff("AVI ", dibHdrl(1, strfOf(1 << 30, 805306371)) ++
+      list("movi", chunk("00db", new Array[Byte](12)))), "exceeds the")
 
     // an oversized chunk length overruns its enclosing list
-    expectReject(5L, aviOf(
-      chunk("00dc", jpegA).patch(4, le32(Int.MaxValue), 4)), "overruns")
+    val hdrl = dibHdrl(2)
+    val valid = riff("AVI ", hdrl ++ movi)
+    val frameLenAt = 12 + hdrl.length + 12 + 4 // first 00db's length field
+    expectReject(valid.patch(frameLenAt, le32(Int.MaxValue), 4), "overruns")
+    expectReject(valid.patch(frameLenAt, le32(-1), 4), "overruns")
 
     // a LIST too short to carry its form type
-    val shortList = {
-      val body = "AVI ".getBytes("US-ASCII") ++
-        "LIST".getBytes("US-ASCII") ++ le32(2) ++ Array[Byte](1, 2)
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    expectReject(6L, shortList, "too short for a form type")
+    expectReject(riff("AVI ", ascii("LIST") ++ le32(2) ++ Array[Byte](1, 2)),
+      "too short for a form type")
 
     // only zero-length / non-frame chunks inside movi: no frames
-    expectReject(7L, aviOf(chunk("00dc", Array.emptyByteArray),
-      chunk("idx1", randomBytes(16))), "without MJPEG frame chunks")
+    expectReject(riff("AVI ", dibHdrl(0) ++ list("movi",
+      chunk("00db", Array.emptyByteArray) ++ chunk("idx1", randomBytes(16)))),
+      "without DIB frame chunks")
 
     // pathological nesting must hit the depth guard, not blow the stack
-    // (the recursive walk had no bound — a crafted file nested ~10k+
-    // deep would StackOverflowError, an Error outside the reject-loudly
-    // contract; the guard at 16 makes 1000 levels equivalent evidence)
-    val deep = {
-      var inner = chunk("00dc", Array[Byte](1, 2, 3, 4))
-      (1 to 1000).foreach { _ =>
-        inner = chunk("LIST", "rec ".getBytes("US-ASCII") ++ inner)
-      }
-      val body = "AVI ".getBytes("US-ASCII") ++ inner
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    expectReject(8L, deep, "nesting deeper than 16")
+    // (a StackOverflowError is outside the reject-loudly contract)
+    var inner = frameChunk()
+    (1 to 1000).foreach(_ => inner = list("rec ", inner))
+    expectReject(riff("AVI ", dibHdrl(1) ++ inner), "nesting deeper than 16")
 
-    // length-field fuzz sweep: every interesting value in every length
-    // slot of a valid file rejects-or-decodes within the bound
-    val valid = aviOf(chunk("00dc", jpegA))
-    val lenOffsets = Seq(4, 16, 28) // RIFF len, movi LIST len, 00dc len
-    val evil = Seq(0, 1, 2, 3, 4, 7, 8, jpegA.length - 1, jpegA.length + 1,
-      0x7fffffff, -1) // -1 = 0xffffffff unsigned
-    var id = 9000L
+    // length-field sweep: every interesting value in every length slot
+    // of a valid file rejects or decodes within the bound
+    val lenOffsets = Seq(4, 16, 12 + hdrl.length + 4, frameLenAt) // RIFF, hdrl, movi, 00db
+    val evil = Seq(0, 1, 2, 3, 4, 7, 8, 63, 65, 0x7fffffff, -1) // -1 = 0xffffffff
+    var id = 12000L
     for (off <- lenOffsets; v <- evil) {
-      decodeBounded(id, valid.clone().patch(off, le32(v), 4)); id += 1
+      val bytes = valid.patch(off, le32(v), 4)
+      bounded("aviDibBandEnergies", id)(parse(bytes)); id += 1
     }
-    // random 4-byte splats anywhere in the header region, same contract
+    // random 4-byte splats anywhere, same contract
     for (_ <- 1 to 300) {
-      val m = valid.clone()
-      val pos = rnd.nextInt(m.length - 4)
-      decodeBounded(id, m.patch(pos, randomBytes(4), 4)); id += 1
+      val bytes = valid.patch(rnd.nextInt(valid.length - 4), randomBytes(4), 4)
+      bounded("aviDibBandEnergies", id)(parse(bytes)); id += 1
     }
   }
 }

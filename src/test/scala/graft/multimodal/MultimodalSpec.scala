@@ -4,105 +4,15 @@ import graft.SparkSpec
 import graft.multimodal.Multimodal._
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths}
-
-/** Binary-column plumbing: native header decode, frame sampling,
-  * batched mapPartitions featurization, and the binaryFile ingest path.
-  * Fixture queries use the deterministic GRFT fake; ImageFileDecoder
-  * is additionally exercised on REAL image bytes (binary PPM, 24-bit
-  * BMP) hand-built in-test — the decode seam parses actual formats,
-  * not just the toy container.
+/** The band featurizers behind q128–q132: ppmBandSums' strict P6 parse
+  * and exact band sums, aviDibBandEnergies' strict RIFF walk (strf
+  * geometry, bottom-up rows, padding excluded), both mapPartitions
+  * seams, and q128/q129 end to end against driver-side recomputes,
+  * including their woven non-ASCII asserts; plus q48's native
+  * byte-slice/hex metadata projections over the opaque payload. Every
+  * media fixture is built in-test.
   */
 class MultimodalSpec extends SparkSpec {
-
-  private def mediaDs = {
-    val s = spark
-    import s.implicits._
-    Seq(
-      Media(1L, "image", encodeFake(1, 640, 480, 3, bodyLen = 100, seed = 7)),
-      Media(2L, "audio", encodeFake(2, 0, 0, 2, bodyLen = 64, seed = 11)),
-      Media(3L, "video", encodeFake(3, 1920, 1080, 3, bodyLen = 500, seed = 3)))
-      .toDS()
-  }
-
-  test("native header decode (substring/hex/conv on BinaryType) matches the encoder") {
-    val decoded = mediaDs.toDF()
-      .filter(isGrft(col("payload")))
-      .select(col("media_id"), metaColumns(col("payload")).as("m"))
-      .select("media_id", "m.kind_code", "m.width", "m.height", "m.channels", "m.body_bytes")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getLong(5)))
-      .toSet
-    assert(decoded === Set(
-      (1L, 1, 640, 480, 3, 100L),
-      (2L, 2, 0, 0, 2, 64L),
-      (3L, 3, 1920, 1080, 3, 500L)))
-  }
-
-  test("metadata filter prunes without touching payload bodies (native, no UDF)") {
-    val wide = mediaDs.toDF()
-      .filter(isGrft(col("payload")) && metaColumns(col("payload"))("width") >= 1000)
-    assert(wide.select("media_id").collect().map(_.getLong(0)).toSeq === Seq(3L))
-    // plan stays UDF-free: no BatchEvalPython/ScalaUDF nodes
-    val plan = wide.queryExecution.executedPlan.toString
-    assert(!plan.contains("UDF"))
-  }
-
-  test("frameSample returns n full-length strided slices of the body") {
-    val s = spark
-    import s.implicits._
-    val frames = mediaDs.filter(_.media_id == 3L).toDF()
-      .select(frameSample(col("payload"), n = 4, frameLen = 16).as("frames"))
-      .select(size(col("frames")).as("n"),
-        expr("transform(frames, f -> length(f))").as("lens"))
-      .collect().head
-    assert(frames.getInt(0) === 4)
-    assert(frames.getSeq[Int](1) === Seq(16, 16, 16, 16))
-  }
-
-  test("extractFeatures runs the batched per-partition decoder (fake codec)") {
-    val s = spark
-    import s.implicits._
-    val feats = extractFeatures(mediaDs.repartition(2))
-      .collect().map(f => f.media_id -> f).toMap
-    assert(feats(1L).width === 640 && feats(1L).height === 480)
-    assert(feats(1L).n_bytes === 109L)
-    // body bytes of media 1: (7+i) % 251 for i in 0..99 -> mean = 7 + 99/2
-    assert(math.abs(feats(1L).mean_byte - (7 + 99 / 2.0)) < 1e-9)
-    assert(feats(2L).channels === 2)
-  }
-
-  test("binaryFile ingest round-trips payload bytes and partitions by file") {
-    val s = spark
-    import s.implicits._
-    val dir = Files.createTempDirectory("graft_media").toString
-    val p1 = encodeFake(1, 32, 32, 1, bodyLen = 10, seed = 1)
-    val p3 = encodeFake(3, 64, 64, 3, bodyLen = 20, seed = 2)
-    Files.write(Paths.get(dir, "a.img"), p1)
-    Files.write(Paths.get(dir, "b.vid"), p3)
-    Files.writeString(Paths.get(dir, "ignore.txt"), "not media")
-
-    val ds = readBinaryDir(s, dir, "*.{img,vid}")
-    val byKind = ds.collect().map(m => m.kind -> m.payload).toMap
-    assert(byKind.keySet === Set("img", "vid"))
-    assert(byKind("img").toSeq === p1.toSeq)
-    assert(byKind("vid").toSeq === p3.toSeq)
-
-    // and the native decode composes with the ingest
-    val widths = ds.toDF().select(metaColumns(col("payload"))("width").as("w"))
-      .collect().map(_.getInt(0)).toSet
-    assert(widths === Set(32, 64))
-  }
-
-  test("ImageFileDecoder decodes REAL binary-PPM bytes (header comments, exact mean)") {
-    // 2x2 P6 with a #comment in the header; pixels 0..11 → mean 5.5.
-    val header = "P6\n# a comment\n2 2\n255\n".getBytes("US-ASCII")
-    val raster = (0 until 12).map(_.toByte).toArray
-    val ppm = header ++ raster
-    val f = new ImageFileDecoder().decode(Media(7L, "image", ppm))
-    assert(f.width == 2 && f.height == 2 && f.channels == 3)
-    assert(f.n_bytes == ppm.length.toLong)
-    assert(f.mean_byte == 5.5)
-  }
 
   test("ppmBandSums: exact per-band sums, comment-tolerant header, strict rejections") {
     // 2x4 P6 (8 px, 24 raster bytes), bytes 10..33; 2 bands of 2 rows:
@@ -112,7 +22,7 @@ class MultimodalSpec extends SparkSpec {
     val (w, h, sums) = Multimodal.ppmBandSums(header ++ raster, 1L, 2)
     assert(w == 2 && h == 4)
     assert(sums.toSeq == Seq(186L, 330L))
-    // whole-image band equals the decoder's mean numerator
+    // one whole-image band is the raster total
     val (_, _, one) = Multimodal.ppmBandSums(header ++ raster, 1L, 1)
     assert(one.toSeq == Seq((10 until 34).sum.toLong))
     intercept[IllegalArgumentException] { // 4 rows don't split into 3 bands
@@ -124,6 +34,70 @@ class MultimodalSpec extends SparkSpec {
     intercept[IllegalArgumentException] { // not P6
       Multimodal.ppmBandSums("P5\n2 2\n255\n".getBytes("US-ASCII"), 1L, 1)
     }
+  }
+
+  /** Writes `texts` as the documents table q48/q128/q129 read. */
+  private def writeDocs(texts: Seq[(Long, String)], tag: String): String = {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+    texts.map { case (id, t) => (id, t, "en", "s1", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  private def hexOf(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString
+
+  test("native header decode (substring/hex/conv on BinaryType) matches the encoder") {
+    // q48 projects metadata from the text->binary payload with native
+    // binary expressions only; the reference encodes each text to its
+    // bytes in-test and slices them by hand. doc 60 is past q48's
+    // doc_id < 50 cut and must not appear.
+    val texts = Seq(1L -> "alpha beta gamma", 2L -> "zz top", 3L -> "hello",
+      7L -> ("x" * 40 + "tail"), 60L -> "filtered out")
+    val dir = writeDocs(texts, "q48")
+    val got = graft.queries.PipelineOps.q48BinaryPayload.fn(spark, dir)
+      .withColumn("head_u32", conv(substring(col("head_hex"), 1, 8), 16, 10))
+      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getString(2),
+        r.getString(3), r.getString(4)))).toSeq
+    val expected = texts.filter(_._1 < 50).map { case (id, t) =>
+      val b = t.getBytes("US-ASCII")
+      (id, (b.length.toLong, hexOf(b.take(8)), hexOf(b.takeRight(4)),
+        BigInt(1, b.take(4)).toString))
+    }
+    assert(got === expected)
+  }
+
+  test("metadata filter prunes without touching payload bodies (native, no UDF)") {
+    val dir = writeDocs(Seq(1L -> "short", 2L -> ("long document " * 4),
+      3L -> "tiny", 4L -> ("another long one " * 3)), "q48f")
+    val wide = graft.queries.PipelineOps.q48BinaryPayload.fn(spark, dir)
+      .filter(col("n_bytes") >= 20)
+    assert(wide.select("doc_id").collect().map(_.getLong(0)).toSeq === Seq(2L, 4L))
+    // plan stays UDF-free: no BatchEvalPython/ScalaUDF nodes
+    assert(!wide.queryExecution.executedPlan.toString.contains("UDF"))
+  }
+
+  test("real-format decode runs through the batched Spark featurizer seam") {
+    // real P6 bytes through extractPpmBands across two partitions: one
+    // parse per row, two row-band sums per image summed from the raster
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(21)
+    val ppms = (21L to 24L).map { id =>
+      val (w, h) = (1 + rnd.nextInt(6), 2 * (1 + rnd.nextInt(3)))
+      (id, w, h, Array.fill(w * h * 3)(rnd.nextInt(256).toByte))
+    }
+    val ds = ppms.map { case (id, w, h, raster) =>
+      Media(id, "image", s"P6 $w $h 255\n".getBytes("US-ASCII") ++ raster)
+    }.toDS().repartition(2)
+    val out = extractPpmBands(ds, 2).collect()
+      .map(b => b.media_id -> (b.width, b.height, b.bands.toSeq)).toMap
+    val expected = ppms.map { case (id, w, h, raster) =>
+      id -> (w, h, raster.grouped(raster.length / 2).map(_.map(_ & 0xff).sum.toLong).toSeq)
+    }.toMap
+    assert(out === expected)
   }
 
   test("q128 perceptual dedup: identical renders pair at cosine 1, unrelated do not pair") {
@@ -150,10 +124,10 @@ class MultimodalSpec extends SparkSpec {
       s"only the identical pair qualifies at 0.95: $rs")
   }
 
-  test("ppmBandSums totals agree with ImageFileDecoder's mean on random valid PPMs") {
-    // two independent P6 parsers in the codebase — cross-validate them:
-    // for any valid raster, sum(bands)/raster_len must equal the
-    // decoder's mean_byte exactly (same bytes, same arithmetic)
+  test("ppmBandSums equals per-band sums recomputed from each random PPM raster") {
+    // the test builds every raster itself, so it sums each band directly
+    // (rows/bandsN consecutive rows of w*3 bytes) — an independent
+    // reference for the parser's header skip and band arithmetic
     val rnd = new scala.util.Random(0x5EED)
     for (trial <- 1 to 50) {
       val w = 1 + rnd.nextInt(12)
@@ -162,12 +136,11 @@ class MultimodalSpec extends SparkSpec {
       val comment = if (rnd.nextBoolean()) "# c\n" else ""
       val header = s"P6\n$comment$w $rows\n255\n".getBytes("US-ASCII")
       val raster = Array.fill(w * rows * 3)(rnd.nextInt(256).toByte)
-      val ppm = header ++ raster
-      val (pw, ph, sums) = Multimodal.ppmBandSums(ppm, trial.toLong, bandsN)
-      val f = new ImageFileDecoder().decode(Media(trial.toLong, "image", ppm))
-      assert(pw == w && ph == rows && pw == f.width && ph == f.height)
-      assert(sums.sum.toDouble / (w * rows * 3) == f.mean_byte,
-        s"trial $trial: band totals diverge from the decoder mean")
+      val (pw, ph, sums) = Multimodal.ppmBandSums(header ++ raster, trial.toLong, bandsN)
+      val expected = raster.grouped(w * 3 * (rows / bandsN))
+        .map(_.map(_ & 0xff).sum.toLong).toSeq
+      assert(pw == w && ph == rows)
+      assert(sums.toSeq == expected, s"trial $trial: band sums diverge from the raster")
     }
   }
 
@@ -357,524 +330,6 @@ class MultimodalSpec extends SparkSpec {
       s"expected the woven q128 assert in: ${chain(e)}")
   }
 
-  test("ImageFileDecoder decodes REAL 24-bit BMP bytes, excluding row padding") {
-    // 3x2 24-bit BMP: rowBytes=9, stride=12 (3 pad bytes/row). Pixel
-    // bytes all 10, pad bytes 255 — a padding leak would raise the mean.
-    val width = 3; val height = 2; val stride = 12
-    val dataOffset = 54
-    val size = dataOffset + stride * height
-    val p = new Array[Byte](size)
-    p(0) = 'B'; p(1) = 'M'
-    def putLe32(off: Int, v: Int): Unit = {
-      p(off) = (v & 0xff).toByte; p(off + 1) = ((v >> 8) & 0xff).toByte
-      p(off + 2) = ((v >> 16) & 0xff).toByte; p(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    putLe32(2, size); putLe32(10, dataOffset)
-    putLe32(14, 40); putLe32(18, width); putLe32(22, height)
-    p(26) = 1 // planes
-    p(28) = 24 // bitCount
-    putLe32(30, 0) // BI_RGB
-    for (row <- 0 until height; j <- 0 until stride) {
-      p(dataOffset + row * stride + j) = if (j < width * 3) 10 else 0xff.toByte
-    }
-    val f = new ImageFileDecoder().decode(Media(8L, "image", p))
-    assert(f.width == 3 && f.height == 2 && f.channels == 3)
-    assert(f.mean_byte == 10.0, "row padding must not contaminate the pixel mean")
-  }
-
-  test("real-format decode runs through the batched Spark featurizer seam") {
-    val s = spark
-    import s.implicits._
-    val header = "P6 2 1 255\n".getBytes("US-ASCII")
-    val ppm = header ++ Array[Byte](1, 2, 3, 4, 5, 6)
-    val ds = Seq(Media(21L, "ppm", ppm)).toDS().repartition(2)
-    val out = extractFeatures(ds, () => new ImageFileDecoder).collect().toSeq
-    assert(out == Seq(MediaFeatures(21L, "ppm", 2, 1, 3, ppm.length.toLong, 3.5)))
-  }
-
-  test("video (MJPEG/AVI) runs through the batched Spark featurizer seam alongside images") {
-    // mixed-modality batch: the seam must route container sniffing
-    // per-row, video and image in the same partition
-    val s = spark
-    import s.implicits._
-    def le32(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def chunk(id: String, data: Array[Byte]): Array[Byte] =
-      id.getBytes("US-ASCII") ++ le32(data.length) ++ data ++
-        (if (data.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
-    val img = new java.awt.image.BufferedImage(8, 6,
-      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until 6; x <- 0 until 8) img.setRGB(x, y, 0x405060)
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "jpeg", bos))
-    val frame = bos.toByteArray
-    val avi = {
-      val movi = chunk("LIST",
-        "movi".getBytes("US-ASCII") ++ chunk("00dc", frame) ++ chunk("00dc", frame))
-      val body = "AVI ".getBytes("US-ASCII") ++ movi
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    val header = "P6 2 1 255\n".getBytes("US-ASCII")
-    val ppm = header ++ Array[Byte](1, 2, 3, 4, 5, 6)
-    val ds = Seq(Media(22L, "video", avi), Media(23L, "image", ppm))
-      .toDS().repartition(2)
-    val out = extractFeatures(ds, () => new ImageFileDecoder)
-      .collect().toSeq.sortBy(_.media_id)
-    assert(out.map(f => (f.media_id, f.kind, f.width, f.height, f.channels)) ===
-      Seq((22L, "video", 8, 6, 3), (23L, "image", 2, 1, 3)))
-    assert(out.head.n_bytes === avi.length.toLong)
-  }
-
-  test("ImageFileDecoder rejects unknown containers and truncated rasters") {
-    val d = new ImageFileDecoder
-    intercept[IllegalArgumentException] {
-      d.decode(Media(31L, "x", Array[Byte]('G', 'R', 1, 0, 0)))
-    }
-    val truncated = "P6 4 4 255\n".getBytes("US-ASCII") ++ Array[Byte](1, 2, 3)
-    intercept[IllegalArgumentException] {
-      d.decode(Media(32L, "image", truncated))
-    }
-  }
-
-  test("ImageFileDecoder decodes REAL RIFF WAV bytes (16-bit PCM, chunk walk)") {
-    // mono 16-bit PCM, 4 frames at 8000 Hz; a junk "LIST" chunk before
-    // "data" exercises the chunk walk; data bytes 1..8 -> mean 4.5
-    def le16(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def le32(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    val fmt = "fmt ".getBytes("US-ASCII") ++ le32(16) ++
-      le16(1) ++ le16(1) ++ le32(8000) ++ le32(16000) ++ le16(2) ++ le16(16)
-    val junk = "LIST".getBytes("US-ASCII") ++ le32(3) ++ Array[Byte](9, 9, 9, 0) // padded to word
-    val data = "data".getBytes("US-ASCII") ++ le32(8) ++
-      (1 to 8).map(_.toByte).toArray
-    val body = fmt ++ junk ++ data
-    val wav = "RIFF".getBytes("US-ASCII") ++ le32(4 + body.length) ++
-      "WAVE".getBytes("US-ASCII") ++ body
-    val f = new ImageFileDecoder().decode(Media(40L, "audio", wav))
-    assert(f.width == 8000, "width carries the sample rate")
-    assert(f.height == 4, "height carries the frame count")
-    assert(f.channels == 1 && f.n_bytes == wav.length.toLong)
-    assert(f.mean_byte == 4.5, "mean over the data chunk bytes only")
-    // non-PCM and truncated chunks rejected
-    val bad = wav.clone(); bad(20) = 3 // format code -> IEEE float
-    intercept[IllegalArgumentException] {
-      new ImageFileDecoder().decode(Media(41L, "audio", bad))
-    }
-    intercept[IllegalArgumentException] {
-      new ImageFileDecoder().decode(Media(42L, "audio", wav.dropRight(3)))
-    }
-  }
-
-  test("ImageFileDecoder rejects overflow-crafted geometry instead of returning bogus features") {
-    val d = new ImageFileDecoder
-    // BMP with width=0x7FFFFFFF: rowBytes/stride overflow Int negative,
-    // which would make the truncation check pass vacuously and the
-    // pixel loop run zero times — must throw, like every other
-    // malformed-input path.
-    val p = new Array[Byte](54)
-    p(0) = 'B'; p(1) = 'M'
-    def putLe32(off: Int, v: Int): Unit = {
-      p(off) = (v & 0xff).toByte; p(off + 1) = ((v >> 8) & 0xff).toByte
-      p(off + 2) = ((v >> 16) & 0xff).toByte; p(off + 3) = ((v >> 24) & 0xff).toByte
-    }
-    putLe32(10, 54); putLe32(18, Int.MaxValue); putLe32(22, 1)
-    p(28) = 24
-    val e = intercept[IllegalArgumentException] { d.decode(Media(33L, "image", p)) }
-    assert(e.getMessage.contains("implausible BMP geometry"))
-    // negative declared width (leI32 of a high-bit pattern) also rejected
-    putLe32(18, -5)
-    intercept[IllegalArgumentException] { d.decode(Media(34L, "image", p)) }
-    // PPM header field long enough to wrap Int must be rejected too
-    val ppm = "P6 99999999999 1 255\n".getBytes("US-ASCII") ++ Array[Byte](1, 2, 3)
-    val e2 = intercept[IllegalArgumentException] { d.decode(Media(35L, "image", ppm)) }
-    assert(e2.getMessage.contains("implausible PPM header"))
-  }
-
-  test("resizeAll rewrites geometry, sizes the body exactly, and resamples predictably") {
-    val out = resizeAll(mediaDs, 16, 8).collect().map(m => m.media_id -> m).toMap
-    val src = mediaDs.collect().map(m => m.media_id -> m).toMap
-    out.foreach { case (id, m) =>
-      val p = m.payload
-      val channels = p(7) & 0xff
-      val w = ((p(3) & 0xff) << 8) | (p(4) & 0xff)
-      val h = ((p(5) & 0xff) << 8) | (p(6) & 0xff)
-      assert((w, h) === (16, 8), s"media $id header not rewritten")
-      assert(p.length === HeaderLen + 16 * 8 * math.max(channels, 1),
-        s"media $id body not exactly targetW*targetH*channels")
-      // nearest-neighbor arithmetic is fully predictable
-      val sp = src(id).payload
-      val srcBody = sp.length - HeaderLen
-      val dstBody = p.length - HeaderLen
-      (0 until dstBody).foreach { i =>
-        val j = math.min((i.toLong * srcBody / dstBody).toInt, srcBody - 1)
-        assert(p(HeaderLen + i) === sp(HeaderLen + j), s"media $id byte $i")
-      }
-    }
-    // and the native metadata decode agrees with the rewritten headers
-    val meta = resizeAll(mediaDs, 16, 8).toDF()
-      .select(metaColumns(col("payload")).as("m"))
-      .selectExpr("m.width", "m.height").collect()
-      .map(r => (r.getInt(0), r.getInt(1))).toSet
-    assert(meta === Set((16, 8)))
-  }
-
-  // ------------------------------------------------------------------
-  // PNG — the compressed-format decode path
-  // ------------------------------------------------------------------
-
-  test("ImageFileDecoder decodes PNGs written by an independent encoder (ImageIO), all color types") {
-    import java.awt.image.BufferedImage
-    def png(img: BufferedImage): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(img, "png", bos))
-      bos.toByteArray
-    }
-    // RGB: deterministic per-pixel values, mean known exactly
-    val rgb = new BufferedImage(7, 5, BufferedImage.TYPE_3BYTE_BGR)
-    var sum = 0L
-    for (y <- 0 until 5; x <- 0 until 7) {
-      val (r, g, b) = ((x * 37 + y) % 256, (y * 91 + x) % 256, (x * y * 13) % 256)
-      sum += r + g + b
-      rgb.setRGB(x, y, (r << 16) | (g << 8) | b)
-    }
-    val fr = new ImageFileDecoder().decode(Media(60L, "image", png(rgb)))
-    assert((fr.width, fr.height, fr.channels) === (7, 5, 3))
-    assert(fr.mean_byte === sum.toDouble / (7 * 5 * 3))
-
-    // grayscale: ImageIO writes color type 0, 1 channel
-    val gray = new BufferedImage(4, 3, BufferedImage.TYPE_BYTE_GRAY)
-    val wr = gray.getRaster
-    var gsum = 0L
-    for (y <- 0 until 3; x <- 0 until 4) {
-      val v = (x * 50 + y * 17) % 256; gsum += v; wr.setSample(x, y, 0, v)
-    }
-    val fg = new ImageFileDecoder().decode(Media(61L, "image", png(gray)))
-    assert((fg.width, fg.height, fg.channels) === (4, 3, 1))
-    assert(fg.mean_byte === gsum.toDouble / 12)
-
-    // RGBA: color type 6, 4 channels (alpha participates in the mean)
-    val rgba = new BufferedImage(3, 3, BufferedImage.TYPE_INT_ARGB)
-    for (y <- 0 until 3; x <- 0 until 3)
-      rgba.setRGB(x, y, (200 << 24) | (10 << 16) | (20 << 8) | 30)
-    val fa = new ImageFileDecoder().decode(Media(62L, "image", png(rgba)))
-    assert((fa.width, fa.height, fa.channels) === (3, 3, 4))
-    assert(fa.mean_byte === (200.0 + 10 + 20 + 30) / 4)
-  }
-
-  /** Minimal in-test PNG encoder with CALLER-CHOSEN per-row filters —
-    * lets the test force every one of the five reconstructions
-    * (ImageIO picks its own filters, so it can't guarantee coverage).
-    */
-  private def craftPng(width: Int, height: Int, channels: Int, colorType: Int,
-      pix: Array[Byte], filters: Seq[Int]): Array[Byte] = {
-    val stride = width * channels
-    val raw = new Array[Byte]((stride + 1) * height)
-    def px(y: Int, x: Int): Int =
-      if (x < 0 || y < 0) 0 else pix(y * stride + x) & 0xff
-    for (y <- 0 until height) {
-      val f = filters(y)
-      raw((stride + 1) * y) = f.toByte
-      for (x <- 0 until stride) {
-        val v = px(y, x)
-        val a = px(y, x - channels); val b = px(y - 1, x)
-        val c = px(y - 1, x - channels)
-        val filtered = f match {
-          case 0 => v
-          case 1 => v - a
-          case 2 => v - b
-          case 3 => v - ((a + b) >> 1)
-          case 4 =>
-            val pa = math.abs(b - c); val pb = math.abs(a - c)
-            val pc = math.abs(a + b - 2 * c)
-            v - (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c)
-        }
-        raw((stride + 1) * y + 1 + x) = filtered.toByte
-      }
-    }
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(raw); defl.finish()
-    val comp = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](512)
-    while (!defl.finished()) comp.write(buf, 0, defl.deflate(buf))
-    defl.end()
-    def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(12 + data.length)
-      out.putInt(data.length).put(typ.getBytes("US-ASCII")).put(data)
-      val crc = new java.util.zip.CRC32()
-      crc.update(typ.getBytes("US-ASCII")); crc.update(data)
-      out.putInt(crc.getValue.toInt).array()
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(width).putInt(height)
-      .put(8.toByte).put(colorType.toByte).put(0.toByte).put(0.toByte)
-      .put(0.toByte).array()
-    Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
-      chunk("IHDR", ihdr) ++ chunk("IDAT", comp.toByteArray) ++
-      chunk("IEND", Array.emptyByteArray)
-  }
-
-  test("ImageFileDecoder reconstructs ALL five PNG row filters exactly") {
-    val (w, h, ch) = (6, 5, 3)
-    val pix = Array.tabulate(w * h * ch)(i => ((i * 149 + 31) % 256).toByte)
-    // one row per filter type: None, Sub, Up, Average, Paeth
-    val bytes = craftPng(w, h, ch, colorType = 2, pix, filters = Seq(0, 1, 2, 3, 4))
-    val f = new ImageFileDecoder().decode(Media(63L, "image", bytes))
-    assert((f.width, f.height, f.channels) === (w, h, ch))
-    val exp = pix.map(_ & 0xff).map(_.toLong).sum.toDouble / pix.length
-    assert(f.mean_byte === exp,
-      "filter reconstruction diverged from the source pixels")
-  }
-
-  test("ImageFileDecoder rejects corrupt, truncated and unsupported PNGs loudly") {
-    val pix = Array.tabulate(4 * 2 * 3)(i => (i * 7 % 256).toByte)
-    val good = craftPng(4, 2, 3, colorType = 2, pix, filters = Seq(0, 1))
-    val d = new ImageFileDecoder
-    // flip one IDAT payload byte -> CRC check must fire
-    val bad = good.clone()
-    bad(8 + 25 + 12) = (bad(8 + 25 + 12) ^ 0x40).toByte
-    val eCrc = intercept[IllegalArgumentException] {
-      d.decode(Media(64L, "image", bad)) }
-    assert(eCrc.getMessage.contains("CRC"), eCrc.getMessage)
-    // drop the IEND tail -> truncated chunk table
-    intercept[IllegalArgumentException] {
-      d.decode(Media(65L, "image", good.dropRight(13))) }
-    // palette color type (3) is rejected, never misdecoded
-    val pal = craftPng(4, 2, 1, colorType = 3, Array.fill(8)(1.toByte),
-      filters = Seq(0, 0))
-    val ePal = intercept[IllegalArgumentException] {
-      d.decode(Media(66L, "image", pal)) }
-    assert(ePal.getMessage.contains("color type"), ePal.getMessage)
-  }
-
-  test("ImageFileDecoder decodes GIFs written by an independent encoder (ImageIO, LZW)") {
-    import java.awt.image.BufferedImage
-    def gif(img: BufferedImage): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(img, "gif", bos))
-      bos.toByteArray
-    }
-    // few distinct colors -> the palette holds them exactly and the
-    // mean is computable from the source pixels
-    val img = new BufferedImage(23, 11, BufferedImage.TYPE_3BYTE_BGR)
-    var sum = 0L
-    for (y <- 0 until 11; x <- 0 until 23) {
-      val (r, g, b) = if ((x + y) % 3 == 0) (250, 10, 30)
-        else if ((x + y) % 3 == 1) (0, 128, 255) else (17, 17, 17)
-      sum += r + g + b
-      img.setRGB(x, y, (r << 16) | (g << 8) | b)
-    }
-    val f = new ImageFileDecoder().decode(Media(80L, "image", gif(img)))
-    assert((f.width, f.height, f.channels) === (23, 11, 3))
-    assert(f.mean_byte === sum.toDouble / (23 * 11 * 3))
-
-    // a single-color image exercises long LZW runs + dictionary growth
-    val flat = new BufferedImage(64, 64, BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until 64; x <- 0 until 64) flat.setRGB(x, y, 0x405060)
-    val ff = new ImageFileDecoder().decode(Media(81L, "image", gif(flat)))
-    assert((ff.width, ff.height) === (64, 64))
-    assert(ff.mean_byte === (0x40 + 0x50 + 0x60) / 3.0)
-
-    // truncated stream fails loudly, never returns a partial feature
-    intercept[Exception] {
-      new ImageFileDecoder().decode(Media(82L, "image", gif(img).dropRight(20)))
-    }
-  }
-
-  test("ImageFileDecoder decodes baseline JPEG within tolerance of an independent decoder") {
-    import java.awt.image.BufferedImage
-    def jpeg(img: BufferedImage, quality: Float): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val wr = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg").next()
-      val params = wr.getDefaultWriteParam
-      params.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-      params.setCompressionQuality(quality)
-      wr.setOutput(javax.imageio.ImageIO.createImageOutputStream(bos))
-      wr.write(null, new javax.imageio.IIOImage(img, null, null), params)
-      wr.dispose()
-      bos.toByteArray
-    }
-    def meanOf(img: BufferedImage): Double = {
-      var s = 0L
-      for (y <- 0 until img.getHeight; x <- 0 until img.getWidth) {
-        val rgb = img.getRGB(x, y)
-        s += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-      }
-      s.toDouble / (3L * img.getWidth * img.getHeight)
-    }
-    // smooth gradient (JPEG-friendly) at an awkward non-MCU-multiple size
-    val img = new BufferedImage(37, 29, BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until 29; x <- 0 until 37) {
-      val r = (x * 255) / 36; val g = (y * 255) / 28; val b = ((x + y) * 255) / 64
-      img.setRGB(x, y, (r << 16) | (g << 8) | b)
-    }
-    val bytes = jpeg(img, 0.9f)
-    val f = new ImageFileDecoder().decode(Media(90L, "image", bytes))
-    assert((f.width, f.height, f.channels) === (37, 29, 3))
-    // reference point: ImageIO's OWN decode of the same lossy bytes
-    val ref = meanOf(javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(bytes)))
-    assert(math.abs(f.mean_byte - ref) < 1.5,
-      s"decoded mean ${f.mean_byte} vs independent decoder $ref")
-
-    // flat image: DC-only blocks, the decoded mean must be near-exact
-    val flat = new BufferedImage(24, 16, BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until 16; x <- 0 until 24) flat.setRGB(x, y, 0x6a8a2a)
-    val fb = jpeg(flat, 0.95f)
-    val ff = new ImageFileDecoder().decode(Media(91L, "image", fb))
-    val refFlat = meanOf(javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(fb)))
-    assert(math.abs(ff.mean_byte - refFlat) < 1.0,
-      s"flat mean ${ff.mean_byte} vs $refFlat")
-
-    // grayscale: single-component frame, no color conversion
-    val gray = new BufferedImage(19, 13, BufferedImage.TYPE_BYTE_GRAY)
-    val wr2 = gray.getRaster
-    for (y <- 0 until 13; x <- 0 until 19) wr2.setSample(x, y, 0, (x * 11 + y * 5) % 256)
-    val gb = jpeg(gray, 0.9f)
-    val fg = new ImageFileDecoder().decode(Media(93L, "image", gb))
-    assert((fg.width, fg.height, fg.channels) === (19, 13, 1))
-    val refG = {
-      val d = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(gb))
-      var s = 0L
-      for (y <- 0 until 13; x <- 0 until 19) s += d.getRaster.getSample(x, y, 0)
-      s.toDouble / (19 * 13)
-    }
-    assert(math.abs(fg.mean_byte - refG) < 1.5, s"gray mean ${fg.mean_byte} vs $refG")
-
-    // truncated scan fails loudly
-    intercept[IllegalArgumentException] {
-      new ImageFileDecoder().decode(Media(92L, "image", bytes.dropRight(60)))
-    }
-  }
-
-  test("ImageFileDecoder decodes MJPEG-in-AVI video (RIFF walk + per-frame JPEG)") {
-    import java.awt.image.BufferedImage
-    def jpeg(img: BufferedImage): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(img, "jpeg", bos))
-      bos.toByteArray
-    }
-    def meanOf(bytes: Array[Byte]): Double = {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      var s = 0L
-      for (y <- 0 until img.getHeight; x <- 0 until img.getWidth) {
-        val rgb = img.getRGB(x, y)
-        s += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-      }
-      s.toDouble / (3L * img.getWidth * img.getHeight)
-    }
-    def le32(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def chunk(id: String, data: Array[Byte]): Array[Byte] =
-      id.getBytes("US-ASCII") ++ le32(data.length) ++ data ++
-        (if (data.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray)
-    def list(form: String, inner: Array[Byte]): Array[Byte] =
-      chunk("LIST", form.getBytes("US-ASCII") ++ inner)
-
-    // two same-geometry frames with different content
-    val a = new BufferedImage(32, 24, BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until 24; x <- 0 until 32)
-      a.setRGB(x, y, ((x * 8) << 16) | ((y * 10) << 8) | 0x40)
-    val b = new BufferedImage(32, 24, BufferedImage.TYPE_3BYTE_BGR)
-    for (y <- 0 until 24; x <- 0 until 32) b.setRGB(x, y, 0x2a9a5a)
-    val (fa, fb) = (jpeg(a), jpeg(b))
-    val avi = {
-      val hdrl = list("hdrl", chunk("avih", Array.fill[Byte](56)(0)))
-      val movi = list("movi", chunk("00dc", fa) ++ chunk("00dc", fb))
-      val idx1 = chunk("idx1", Array.fill[Byte](16)(0))
-      val body = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi ++ idx1
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    val f = new ImageFileDecoder().decode(Media(98L, "video", avi))
-    assert((f.width, f.height, f.channels) === (32, 24, 3))
-    assert(f.n_bytes === avi.length.toLong)
-    // pixel-weighted mean over both frames == average of per-frame means
-    // (same geometry); reference = ImageIO's decode of the same lossy bytes
-    val ref = (meanOf(fa) + meanOf(fb)) / 2
-    assert(math.abs(f.mean_byte - ref) < 1.5, s"video mean ${f.mean_byte} vs $ref")
-
-    // a movi-less AVI is rejected, not silently empty
-    val noFrames = {
-      val body = "AVI ".getBytes("US-ASCII") ++
-        list("hdrl", chunk("avih", Array.fill[Byte](56)(0)))
-      "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
-    }
-    val e = intercept[IllegalArgumentException] {
-      new ImageFileDecoder().decode(Media(99L, "video", noFrames))
-    }
-    assert(e.getMessage.contains("frame"), e.getMessage)
-
-    // truncated container fails the bounds check loudly
-    intercept[IllegalArgumentException] {
-      new ImageFileDecoder().decode(Media(100L, "video", avi.dropRight(40)))
-    }
-  }
-
-  test("PNG with an FDICT zlib stream is rejected loudly, not spun forever") {
-    // zlib header 0x78 0x20: CMF=0x78, FLG sets the FDICT bit and keeps the
-    // (CMF*256+FLG) % 31 == 0 check valid (30720+32 = 31*992). The JDK
-    // Inflater then returns 0 from inflate() with needsInput()==false and
-    // needsDictionary()==true — before the fix this looped an executor task
-    // forever on crafted crawl bytes instead of honoring the reject-loudly
-    // contract.
-    def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
-      val out = java.nio.ByteBuffer.allocate(12 + data.length)
-      out.putInt(data.length).put(typ.getBytes("US-ASCII")).put(data)
-      val crc = new java.util.zip.CRC32()
-      crc.update(typ.getBytes("US-ASCII")); crc.update(data)
-      out.putInt(crc.getValue.toInt).array()
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(2).putInt(2)
-      .put(8.toByte).put(2.toByte).put(0.toByte).put(0.toByte).put(0.toByte)
-      .array()
-    val fdictIdat = Array[Byte](0x78, 0x20, 1, 2, 3, 4, 0x5a, 0x5a, 0x5a)
-    val bytes = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
-      chunk("IHDR", ihdr) ++ chunk("IDAT", fdictIdat) ++
-      chunk("IEND", Array.emptyByteArray)
-    val e = intercept[IllegalArgumentException] {
-      new ImageFileDecoder().decode(Media(94L, "image", bytes))
-    }
-    assert(e.getMessage.toLowerCase.contains("dictionary"), e.getMessage)
-  }
-
-  test("JPEG fill bytes and grayscale sampling factors decode per ISO 10918") {
-    import java.awt.image.BufferedImage
-    def jpeg(img: BufferedImage): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      assert(javax.imageio.ImageIO.write(img, "jpeg", bos))
-      bos.toByteArray
-    }
-    val gray = new BufferedImage(21, 14, BufferedImage.TYPE_BYTE_GRAY)
-    val r = gray.getRaster
-    for (y <- 0 until 14; x <- 0 until 21) r.setSample(x, y, 0, (x * 9 + y * 3) % 256)
-    val base = jpeg(gray)
-    val d = new ImageFileDecoder
-    val ref = d.decode(Media(95L, "image", base))
-
-    // B.1.1.2: any number of 0xFF fill bytes may precede a marker. Insert
-    // one before the first DQT — the decode must be byte-identical.
-    val dqt = base.indices.drop(2).find(i =>
-      (base(i) & 0xff) == 0xff && (base(i + 1) & 0xff) == 0xdb).get
-    val filled = base.take(dqt) ++ Array(0xff.toByte) ++ base.drop(dqt)
-    val f1 = d.decode(Media(96L, "image", filled))
-    assert((f1.width, f1.height, f1.channels, f1.mean_byte) ===
-      (ref.width, ref.height, ref.channels, ref.mean_byte))
-
-    // A.2.2/A.2.3: a single-component scan is non-interleaved and ignores
-    // the frame's sampling factors, so patching H=V from 1x1 to 2x2 in the
-    // SOF must not change the decode.
-    val sof = base.indices.drop(2).find(i =>
-      (base(i) & 0xff) == 0xff && (base(i + 1) & 0xff) == 0xc0).get
-    assert((base(sof + 9) & 0xff) == 1, "expected single-component SOF")
-    assert((base(sof + 11) & 0xff) == 0x11, "expected 1x1 sampling to patch")
-    val patched = base.clone()
-    patched(sof + 11) = 0x22.toByte
-    val f2 = d.decode(Media(97L, "image", patched))
-    assert((f2.width, f2.height, f2.channels, f2.mean_byte) ===
-      (ref.width, ref.height, ref.channels, ref.mean_byte))
-  }
-
   test("raw-DIB AVI: strict walk, strf-enforced geometry, bottom-up flip, exact band energies") {
     def le32(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
       ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
@@ -926,16 +381,9 @@ class MultimodalSpec extends SparkSpec {
     // REVERSED band vector, which differs for this data
     assert(vb.bands.toSeq !== expected.reverse)
 
-    // the generic codec decoder takes the same frames through its DIB path
-    val f = new ImageFileDecoder().decode(Media(42L, "video", avi))
-    val pixBytes = for (fr <- Seq(fa, fb); r <- 0 until h; c <- 0 until w * 3)
-      yield (fr(r * stride + c) & 0xff).toLong
-    assert((f.width, f.height, f.channels) === (w, h, 3))
-    assert(math.abs(f.mean_byte - pixBytes.sum.toDouble / pixBytes.size) < 1e-9)
-
     // strictness: every declared property is enforced, loudly
-    def expectFail(bytes: Array[Byte], needle: String): Unit = {
-      val e = intercept[IllegalArgumentException](aviDibBandEnergies(bytes, 9L, h))
+    def expectFail(bytes: Array[Byte], needle: String, nBands: Int = h): Unit = {
+      val e = intercept[IllegalArgumentException](aviDibBandEnergies(bytes, 9L, nBands))
       assert(e.getMessage.contains(needle), e.getMessage)
     }
     expectFail(aviOf(hdrOk, chunk("00db", fa.dropRight(8)) ++ chunk("00db", fb)),
@@ -951,6 +399,17 @@ class MultimodalSpec extends SparkSpec {
       "top-down")
     expectFail(aviOf(list("hdrl", avihFor(frames)),
       chunk("00db", fa) ++ chunk("00db", fb)), "strf")
+    // 2^30 x 805306371 wraps stride·height to 12 in Int arithmetic: one
+    // 12-byte frame would match it and return all-zero bands for a
+    // 2^30-pixel-wide video; the geometry must exceed the payload instead
+    expectFail(aviOf(list("hdrl", avihFor(1) ++
+      list("strl", strfFor(0, 24, bw = 1 << 30, bh = 805306371))),
+      chunk("00db", new Array[Byte](12))), "exceeds the", nBands = 3)
+    // a second strf is ambiguous even when the first one's width is
+    // negative (the duplicate check must not key on a valid width)
+    expectFail(aviOf(list("hdrl", avihFor(frames) ++
+      list("strl", strfFor(0, 24, bw = -1)) ++ list("strl", strfFor(0, 24))),
+      chunk("00db", fa) ++ chunk("00db", fb)), "more than one")
     // truncated container trips the bounds check, not an array read
     intercept[IllegalArgumentException](aviDibBandEnergies(avi.dropRight(20), 9L, h))
   }
@@ -982,19 +441,5 @@ class MultimodalSpec extends SparkSpec {
       val v = (fr((h - 1 - r) * w * 3 + c) & 0xff).toLong; v * v
     }.sum)
     assert(out.head.bands.toSeq === expected)
-  }
-
-  test("PNG decode runs through the batched Spark featurizer seam") {
-    val s = spark
-    import s.implicits._
-    val img = new java.awt.image.BufferedImage(5, 4,
-      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-    (0 until 4).foreach(y => (0 until 5).foreach(x => img.setRGB(x, y, 0x102030)))
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    val ds = Seq(Media(70L, "image", bos.toByteArray)).toDS()
-    val out = extractFeatures(ds, () => new ImageFileDecoder).collect().toSeq
-    assert(out.map(f => (f.media_id, f.width, f.height, f.channels,
-      f.mean_byte)) === Seq((70L, 5, 4, 3, (0x10 + 0x20 + 0x30) / 3.0)))
   }
 }

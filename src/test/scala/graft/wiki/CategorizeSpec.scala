@@ -65,20 +65,6 @@ class CategorizeSpec extends SparkSpec {
     assert(byName("misc").get(3) === null)     // unparseable date -> null
   }
 
-  test("readPagesBinary ≡ readPages: the binaryFile ingest twin yields the identical frame") {
-    val dir = writeFixtures()
-    def snapshot(df: org.apache.spark.sql.DataFrame) =
-      df.select("value", "file_path").collect()
-        .map(r => (r.getString(0), r.getString(1))).sortBy(_._2).toSeq
-    val whole = snapshot(Categorize.readPages(spark, dir.toString))
-    val binary = snapshot(Categorize.readPagesBinary(spark, dir.toString))
-    assert(binary === whole,
-      "binaryFile twin diverged from the wholetext frame")
-    // and the glob filter really scopes the scan: a non-html file is ignored
-    Files.write(dir.resolve("notes.txt"), "not html".getBytes(StandardCharsets.UTF_8))
-    assert(Categorize.readPagesBinary(spark, dir.toString).count() === fixtures.size)
-  }
-
   /** Run `body` with a listener attached; returns its result and the
     * events the listener collected, after the bus has drained. */
   private def listening[A, E](pick: PartialFunction[AnyRef, E])(body: => A): (A, Seq[E]) = {

@@ -51,4 +51,10 @@ object Qdsl {
   /** Exact mean: decimal sum / count, evaluated as double / long. */
   def davg(c: Column): Column = dsum(c) / count(lit(1))
   def davg6(c: Column): Column = dsum6(c) / count(lit(1))
+
+  /** The corpus's naive whitespace tokenizer as Spark SQL text: tokens of
+    * lowercased `text` split on single spaces (the reference's word_count
+    * split, categorizer.py:137 `split(value," ")`), empty tokens kept.
+    * The oracle twin is DuckDB's `string_split(lower(text), ' ')`. */
+  val toksSql = "split(lower(text), ' ')"
 }

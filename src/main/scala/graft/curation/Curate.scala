@@ -69,7 +69,7 @@ import org.apache.spark.sql.functions._
   */
 object Curate {
 
-  private val toksSql = "split(lower(text), ' ')"
+  import graft.Qdsl.toksSql
 
   /** Stage 7's rate rule — the mixture-policy family the registry
     * already proves query-by-query, exposed as a pipeline parameter
@@ -413,7 +413,7 @@ object Curate {
     val aBands = P.audioBands(spark, sfDir).localCheckpoint()
     val vBands = P.videoBands(spark, sfDir).localCheckpoint()
     val nearLosers = Seq(
-      P.perceptualDupPairs(spark, sfDir),
+      P.perceptualDupPairs(spark, sfDir, nDocs),
       P.videoNearDupPairsFrom(spark, vBands, nDocs),
       P.audioNearDupPairsFrom(spark, aBands, nDocs))
       .map(_.select(col("id_b").as("doc_id")))

@@ -1,107 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
 
-/** Registration surface for graft's native Catalyst expressions:
-  * [[GraftFunctions.ensureRegistered]] registers them on a live session
-  * (idempotent), so `dot_f(a, b)` and the rest resolve in SQL text; the
-  * query builders call it, so no session needs extra config. The
-  * column-API handles below build the same expressions without SQL-text
-  * resolution.
+/** Column-API handles for graft's native Catalyst expressions: each
+  * builds its expression directly, so no session needs a function
+  * registry entry or extra config.
   */
 object GraftFunctions {
-
-  private val dotF
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("dot_f"),
-    new ExpressionInfo(classOf[DotProductF].getName, null, "dot_f"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, s"dot_f expects 2 arguments, got ${children.size}")
-      DotProductF(children.head, children(1))
-    })
-
-  private val simhashF
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("simhash_bits"),
-    new ExpressionInfo(classOf[SimhashBits].getName, null, "simhash_bits"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        s"simhash_bits expects 2 arguments, got ${children.size}")
-      SimhashBits(children.head, children(1))
-    })
-
-  private val md5LongsF
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("md5_longs"),
-    new ExpressionInfo(classOf[Md5PrefixLongsExpr].getName, null, "md5_longs"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        s"md5_longs expects 2 arguments, got ${children.size}")
-      Md5PrefixLongsExpr(children.head, children(1))
-    })
-
-  private val rollingHashF
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("rolling_hash"),
-    new ExpressionInfo(classOf[RollingHashExpr].getName, null, "rolling_hash"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1,
-        s"rolling_hash expects 1 argument, got ${children.size}")
-      RollingHashExpr(children.head)
-    })
-
-  private val minhash64F
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash64"),
-    new ExpressionInfo(classOf[MinHash64Expr].getName, null, "minhash64"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        s"minhash64 expects 2 arguments, got ${children.size}")
-      MinHash64Expr(children.head, children(1))
-    })
-
-  private val parsePageF
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("parse_page"),
-    new ExpressionInfo(classOf[ParsePageExpr].getName, null, "parse_page"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1,
-        s"parse_page expects 1 argument, got ${children.size}")
-      ParsePageExpr(children.head)
-    })
-
-  private val ngramsF
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("ngrams"),
-    new ExpressionInfo(classOf[NGramsExpr].getName, null, "ngrams"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        s"ngrams expects 2 arguments, got ${children.size}")
-      NGramsExpr(children.head, children(1))
-    })
-
-  private val zorder2F
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("zorder2"),
-    new ExpressionInfo(classOf[ZOrder2Expr].getName, null, "zorder2"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2,
-        s"zorder2 expects 2 arguments, got ${children.size}")
-      ZOrder2Expr(children.head, children(1))
-    })
-
-  /** Idempotent imperative registration on a live session. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    Seq(dotF, simhashF, md5LongsF, rollingHashF, minhash64F, parsePageF,
-      zorder2F, ngramsF).foreach {
-      case (id, info, builder) =>
-        if (!registry.functionExists(id))
-          registry.registerFunction(id, info, builder)
-    }
-  }
 
   /** Column-API handle for [[SimhashBits]]. */
   def simhash(vals: Column, nbits: Int): Column =
@@ -110,7 +15,7 @@ object GraftFunctions {
         org.apache.spark.sql.GraftColumnBridge.expression(vals),
         org.apache.spark.sql.catalyst.expressions.Literal(nbits)))
 
-  /** Column-API handle (works without SQL-text resolution). */
+  /** Column-API handle for [[DotProductF]]. */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       DotProductF(

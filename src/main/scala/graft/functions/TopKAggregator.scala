@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
@@ -27,13 +27,64 @@ final case class ScoredP(key: Long, score: Double, payload: Long)
   *    so only O(groups × k × partitions) rows move, and merge is a
   *    k-bounded list merge.
   *
-  * Ordering is total and deterministic: score DESC, key ASC (tie-break),
-  * so results are stable across partitionings and match a
+  * The buffer is a k-bounded Seq sorted by `ord` — insertion by
+  * sort-take is O(k log k) with tiny constants for the k this engine
+  * uses (k ≤ 100); swap in a bounded heap for large k, same contract.
+  * Each subclass fixes the item type and a total, deterministic
+  * ordering, so results are stable across partitionings and match a
   * `row_number`-based oracle exactly.
-  *
-  * The buffer is a k-bounded sorted Seq — insertion by sort-take is
-  * O(k log k) with tiny constants for the k this engine uses (k ≤ 100);
-  * swap in a bounded heap for large k, same contract.
+  */
+sealed abstract class BoundedTopK[T](k: Int)
+    extends Aggregator[T, Seq[T], Seq[T]] {
+
+  protected def ord: Ordering[T]
+
+  protected def encoder: Encoder[Seq[T]]
+
+  override def zero: Seq[T] = Seq.empty
+
+  override def reduce(buf: Seq[T], a: T): Seq[T] =
+    // once the buffer holds k items, anything ordering at/after the
+    // current k-th can neither enter nor displace — O(1) reject for
+    // the overwhelming share of rows (KMinDistinctAggregator's fast
+    // path: the unconditional sort-take was O(k log k) + a fresh Seq
+    // PER INPUT ROW, measured 2.99 → 8.31 s on q122's k = 50
+    // shortlist at sf1 before this guard). The kept inserts produce
+    // the identical sorted top-k.
+    if (buf.length >= k && ord.compare(a, buf.last) >= 0) buf
+    else (buf :+ a).sorted(ord).take(k)
+
+  override def merge(b1: Seq[T], b2: Seq[T]): Seq[T] =
+    // both buffers are sorted by construction (zero is empty, reduce
+    // and merge keep order), so merging is a linear two-pointer walk
+    // bounded at k; empty sides short-circuit entirely. A merge of two
+    // sorted sequences under a total order IS their sorted
+    // concatenation (TopKAggregatorSpec pins the permutation
+    // equivalence through this path).
+    if (b1.isEmpty) b2
+    else if (b2.isEmpty) b1
+    else {
+      val out = scala.collection.mutable.ArrayBuffer.empty[T]
+      val n = math.min(k, b1.length + b2.length)
+      var i = 0
+      var j = 0
+      while (out.length < n) {
+        if (i >= b1.length) { out += b2(j); j += 1 }
+        else if (j >= b2.length) { out += b1(i); i += 1 }
+        else if (ord.compare(b1(i), b2(j)) <= 0) { out += b1(i); i += 1 }
+        else { out += b2(j); j += 1 }
+      }
+      out.toSeq
+    }
+
+  override def finish(reduction: Seq[T]): Seq[T] = reduction
+
+  override def bufferEncoder: Encoder[Seq[T]] = encoder
+
+  override def outputEncoder: Encoder[Seq[T]] = encoder
+}
+
+/** Top-k of double-scored keys, ordered score DESC, key ASC.
   *
   * PRECONDITION (ADVICE r21): scores must be non-NaN. Scala's total
   * order sorts NaN greatest, so under `(-score, key)` a NaN-scored row
@@ -43,60 +94,10 @@ final case class ScoredP(key: Long, score: Double, payload: Long)
   * vectors, exact-integer dots, positive-denominator BM25 terms); a
   * site that could see NaN must map it explicitly before aggregating.
   */
-final class TopKAggregator(k: Int)
-    extends Aggregator[Scored, Seq[Scored], Seq[Scored]] {
-
-  private val ord: Ordering[Scored] =
+final class TopKAggregator(k: Int) extends BoundedTopK[Scored](k) {
+  protected val ord: Ordering[Scored] =
     Ordering.by((s: Scored) => (-s.score, s.key))
-
-  override def zero: Seq[Scored] = Seq.empty
-
-  override def reduce(buf: Seq[Scored], a: Scored): Seq[Scored] =
-    // once the buffer holds k items, anything ordering at/after the
-    // current k-th can neither enter nor displace — O(1) reject for
-    // the overwhelming share of rows (KMinDistinctAggregator's fast
-    // path, round 21: the unconditional sort-take was O(k log k) +
-    // a fresh Seq PER INPUT ROW, measured 2.99 → 8.31 s on q122's
-    // k = 50 shortlist at sf1 before this guard). The kept inserts
-    // produce the identical sorted top-k.
-    if (buf.length >= k && ord.compare(a, buf.last) >= 0) buf
-    else (buf :+ a).sorted(ord).take(k)
-
-  override def merge(b1: Seq[Scored], b2: Seq[Scored]): Seq[Scored] =
-    // both buffers are sorted by construction (zero is empty, reduce
-    // and merge keep order), so merging is a linear two-pointer walk
-    // bounded at k — the round-22 fast path replacing the
-    // O((2k) log 2k) concat-sort; empty sides short-circuit entirely.
-    // Output identical: a merge of two sorted sequences under a total
-    // order IS their sorted concatenation (TopKAggregatorSpec pins the
-    // permutation equivalence through this path).
-    if (b1.isEmpty) b2
-    else if (b2.isEmpty) b1
-    else TopKAggregator.mergeSorted(b1, b2, k, ord)
-
-  override def finish(reduction: Seq[Scored]): Seq[Scored] = reduction
-
-  override def bufferEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
-
-  override def outputEncoder: Encoder[Seq[Scored]] = ExpressionEncoder()
-}
-
-object TopKAggregator {
-  /** Linear merge of two sorted sequences, truncated at k. */
-  private[functions] def mergeSorted[A](b1: Seq[A], b2: Seq[A], k: Int,
-      ord: Ordering[A]): Seq[A] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[A]
-    val n = math.min(k, b1.length + b2.length)
-    var i = 0
-    var j = 0
-    while (out.length < n) {
-      if (i >= b1.length) { out += b2(j); j += 1 }
-      else if (j >= b2.length) { out += b1(i); i += 1 }
-      else if (ord.compare(b1(i), b2(j)) <= 0) { out += b1(i); i += 1 }
-      else { out += b2(j); j += 1 }
-    }
-    out.toSeq
-  }
+  protected def encoder: Encoder[Seq[Scored]] = ExpressionEncoder()
 }
 
 /** [[TopKAggregator]] with an EXACT INT64 score and a rider payload —
@@ -105,64 +106,27 @@ object TopKAggregator {
   * misorder. Ordering (score DESC, key ASC) is compared on the longs
   * directly (no negation — Long.MinValue-safe), so the output matches
   * `row_number() OVER (ORDER BY score DESC, key ASC) <= k` exactly at
-  * ANY int64 magnitude. Same bounded-buffer scale argument and same
-  * fast paths as [[TopKAggregator]].
+  * ANY int64 magnitude.
   */
-final class TopKLongAggregator(k: Int)
-    extends Aggregator[ScoredL, Seq[ScoredL], Seq[ScoredL]] {
-
-  private val ord: Ordering[ScoredL] = new Ordering[ScoredL] {
+final class TopKLongAggregator(k: Int) extends BoundedTopK[ScoredL](k) {
+  protected val ord: Ordering[ScoredL] = new Ordering[ScoredL] {
     override def compare(a: ScoredL, b: ScoredL): Int = {
       val c = java.lang.Long.compare(b.score, a.score) // score DESC
       if (c != 0) c else java.lang.Long.compare(a.key, b.key) // key ASC
     }
   }
-
-  override def zero: Seq[ScoredL] = Seq.empty
-
-  override def reduce(buf: Seq[ScoredL], a: ScoredL): Seq[ScoredL] =
-    if (buf.length >= k && ord.compare(a, buf.last) >= 0) buf
-    else (buf :+ a).sorted(ord).take(k)
-
-  override def merge(b1: Seq[ScoredL], b2: Seq[ScoredL]): Seq[ScoredL] =
-    if (b1.isEmpty) b2
-    else if (b2.isEmpty) b1
-    else TopKAggregator.mergeSorted(b1, b2, k, ord)
-
-  override def finish(reduction: Seq[ScoredL]): Seq[ScoredL] = reduction
-
-  override def bufferEncoder: Encoder[Seq[ScoredL]] = ExpressionEncoder()
-
-  override def outputEncoder: Encoder[Seq[ScoredL]] = ExpressionEncoder()
+  protected def encoder: Encoder[Seq[ScoredL]] = ExpressionEncoder()
 }
 
 /** [[TopKAggregator]] with a rider payload on the double score — the
   * q137 shape (score is the order-pinned BM25 fold, payload the shared-
   * gram count). Same (score DESC, key ASC) contract and the same no-NaN
-  * precondition as [[TopKAggregator]]; same fast paths.
+  * precondition as [[TopKAggregator]].
   */
-final class TopKPayloadAggregator(k: Int)
-    extends Aggregator[ScoredP, Seq[ScoredP], Seq[ScoredP]] {
-
-  private val ord: Ordering[ScoredP] =
+final class TopKPayloadAggregator(k: Int) extends BoundedTopK[ScoredP](k) {
+  protected val ord: Ordering[ScoredP] =
     Ordering.by((s: ScoredP) => (-s.score, s.key))
-
-  override def zero: Seq[ScoredP] = Seq.empty
-
-  override def reduce(buf: Seq[ScoredP], a: ScoredP): Seq[ScoredP] =
-    if (buf.length >= k && ord.compare(a, buf.last) >= 0) buf
-    else (buf :+ a).sorted(ord).take(k)
-
-  override def merge(b1: Seq[ScoredP], b2: Seq[ScoredP]): Seq[ScoredP] =
-    if (b1.isEmpty) b2
-    else if (b2.isEmpty) b1
-    else TopKAggregator.mergeSorted(b1, b2, k, ord)
-
-  override def finish(reduction: Seq[ScoredP]): Seq[ScoredP] = reduction
-
-  override def bufferEncoder: Encoder[Seq[ScoredP]] = ExpressionEncoder()
-
-  override def outputEncoder: Encoder[Seq[ScoredP]] = ExpressionEncoder()
+  protected def encoder: Encoder[Seq[ScoredP]] = ExpressionEncoder()
 }
 
 /** The k smallest DISTINCT longs per group — the KMV sketch's collection
@@ -189,9 +153,8 @@ final class KMinDistinctAggregator(k: Int)
 
   override def merge(b1: Seq[Long], b2: Seq[Long]): Seq[Long] =
     // buffers are sorted-distinct by construction; a linear two-pointer
-    // merge that skips equal heads replaces the concat-distinct-sort
-    // (round 22, same rationale as TopKAggregator.merge). Identical
-    // output: the union's k smallest, ascending.
+    // merge that skips equal heads (the BoundedTopK.merge walk).
+    // Identical output: the union's k smallest, ascending.
     if (b1.isEmpty) b2
     else if (b2.isEmpty) b1
     else {

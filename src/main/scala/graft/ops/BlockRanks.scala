@@ -11,11 +11,11 @@ import org.apache.spark.sql.functions._
   * ONE window task; linear and spillable, but parallelism collapses
   * exactly where the data is hottest).
   *
-  * This is [[DenseIds]]'s range-split numbering generalized from one
-  * global sequence to per-block sequences, and it is a PHYSICAL
-  * rewrite only: the produced rank is bit-identical to the global
-  * window form (BlockRanksSpec pins equality, planted mega-block
-  * included), so q44/q128's DuckDB oracles — which mirror the ranked
+  * A range-split numbering of per-block sequences (one constant
+  * block gives one global sequence, as Categorize's surrogate ids and
+  * q143's ranks use it), and it is a PHYSICAL rewrite only: the
+  * produced rank is bit-identical to the global window form
+  * (BlockRanksSpec pins equality, planted mega-block included), so q44/q128's DuckDB oracles — which mirror the ranked
   * sub-blocking rank-for-rank — need no change at all. That is the
   * decisive advantage over the salted-stripe alternative the q128
   * scaladoc used to gesture at: hash stripes change WHICH pairs are
@@ -42,11 +42,11 @@ import org.apache.spark.sql.functions._
   *      plus the broadcast per-(range, block) offset = the exact
   *      per-block rank.
   *
-  * The ranged frame is eagerly `localCheckpoint`ed for the same
-  * reason DenseIds' is: both q44/q128 join sides read the ranked
-  * frame, and two planner instantiations of the range exchange would
-  * re-sample boundaries independently — per-branch disagreement on
-  * which range a row fell in silently corrupts ranks. One cheap
+  * The ranged frame is eagerly `localCheckpoint`ed: both q44/q128
+  * join sides read the ranked frame, and two planner instantiations
+  * of the range exchange would re-sample boundaries independently —
+  * per-branch disagreement on which range a row fell in silently
+  * corrupts ranks. One cheap
   * materialization (the callers feed fingerprint-sized frames,
   * ~150 B/doc) pins the boundaries physically; it also stops the
   * range sampler from re-executing an expensive child twice.
@@ -79,11 +79,11 @@ object BlockRanks {
     * to `row_number().over(Window.partitionBy(blockCol).orderBy
     * (orderCols))` with p-way parallelism in every stage.
     *
-    * `knownRows`: the caller's (cached) input row count — or any
-    * UPPER BOUND on it (the value only gates the fast-path branch, so
-    * a bound that fits under [[windowFormMaxRows]] proves the true
-    * count does too; q143 passes the memoized corpus doc count for
-    * its sub-corpus rank inputs). A value in [0, windowFormMaxRows]
+    * `knownRows`: the input row count, taken by the caller for this
+    * call — or any UPPER BOUND on it (the value only gates the
+    * fast-path branch, so a bound that fits under [[windowFormMaxRows]]
+    * proves the true count does too; q143 passes the corpus doc count
+    * for its sub-corpus rank inputs). A value in [0, windowFormMaxRows]
     * selects the plain-window form. Pass -1 (default) when unknown —
     * the scale-safe split runs unconditionally.
     */

@@ -176,11 +176,6 @@ object ConnectedComponents {
       converged = isStarForest(small)
       edges = small
     }
-    // round-count diagnostic is opt-in: this is library code, and an
-    // unconditional stderr print would fire for every embedding caller
-    // (round-15 advice). GRAFT_CC_DEBUG=1 turns it on for forensics.
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] large/small-star converged in $rounds rounds")
     // Fixpoint shape (round 21 — relied on, so proved here): converged
     // now means the structural probe verified the edge set IS a
     // disjoint union of stars rooted at component minima (and any

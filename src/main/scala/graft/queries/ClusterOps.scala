@@ -15,6 +15,8 @@ import org.apache.spark.sql.functions._
   */
 object ClusterOps {
 
+  import graft.Qdsl.toksSql
+
   private val embDim = 64
   private val kClusters = 8
   private val lloydIters = 3
@@ -252,8 +254,6 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
   // -------------------------------------------------------------------
   // q120 — sparse lexical retrieval (inverted index, integer-exact)
   // -------------------------------------------------------------------
-
-  private val toksSql = "split(lower(text), ' ')"
 
   /** Sparse retrieval — the lexical complement to the dense family
     * (q34/q43/q60/q108/q119): top-k documents per query document by an

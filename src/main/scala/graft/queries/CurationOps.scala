@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object CurationOps {
 
-  /** The corpus's naive whitespace tokenizer (same as LlmOps). */
-  private val toksSql = "split(lower(text), ' ')"
+  import graft.Qdsl.toksSql
 
   // ---------------------------------------------------------------------
   // q81 — corpus-wide duplicated n-gram spans
@@ -1716,6 +1715,10 @@ object CurationOps {
     * and the mutual/CC algebra is pure integer — the oracle re-derives
     * assignment, kNN, mutuality, and transitive closure independently.
     */
+  /** The cell size above which [[withinCellPairCos]] salts a cell:
+    * far above any gate-SF cell, so only a real mega-cell engages it. */
+  private[graft] val cellPairCap = 4096
+
   /** All unordered within-cell pairs of a membership frame
     * (vec_id, cent_id, v, nrm) with their exact cosine, SKEW-GUARDED
     * (round 22, guide §2.5): the plain `cent_id`-keyed self-join puts
@@ -1738,9 +1741,8 @@ object CurationOps {
     * identical. A cross-branch pair may surface as (va, vb) with
     * va > vb; the single consumer symmetrizes every pair into both
     * directions before any ordering matters (WithinCellPairsSpec pins
-    * salted ≡ naive on a planted mega-cell). `cap` comes from
-    * `graft.cellpair.cap` (default 4096 — far above any gate-SF cell;
-    * production sets it to bound per-task flops at cap²/2). The guard
+    * salted ≡ naive on a planted mega-cell). `cap` bounds per-task
+    * flops at cap²/2; q139/q140 pass [[cellPairCap]]. The guard
     * ENGAGES ADAPTIVELY: a cells-sized size probe decides, and with no
     * hot cell the plan is round 21's plain join plus only that probe.
     */
@@ -1827,8 +1829,7 @@ object CurationOps {
       // is identical to the ≠ form's. Round 22: pair generation goes
       // through the skew-guarded [[withinCellPairCos]] (mega-cell
       // salting; identical pair set, see its proof).
-      val half = withinCellPairCos(m,
-        s.conf.getOption("graft.cellpair.cap").map(_.toInt).getOrElse(4096))
+      val half = withinCellPairCos(m, cellPairCap)
       // The kNN cut stays the row_number WINDOW deliberately (round
       // 21, rejected experiment): a TopKAggregator(3) conversion —
       // q51's bounded map-side partial — measured 9.86 → 11.68 s at
@@ -1992,9 +1993,7 @@ object CurationOps {
       .withColumn("hv",
         expr("cast(conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10) as bigint)"))
     // vector count lets the sub-32k case skip BlockRanks' three extra
-    // stages; memoized (round 21) — table cardinality is session-
-    // stable, so the parquet metadata count runs once per session, not
-    // once per invocation
+    // stages
     val nVecs = graft.queries.PipelineOps.embeddingCount(s, dir)
     graft.ops.BlockRanks.withBlockRank(
         members, "cluster_id", Seq(col("hv"), col("vec_id")), "rk",
@@ -2177,9 +2176,9 @@ object CurationOps {
     *
     * Scale shape: the global ranks run through ops.BlockRanks on a
     * constant block — the range-split path unconditionally, so the
-    * rank is p-way with no single-task global window (the q74/DenseIds
-    * discipline); the rank frames are two narrow longs per doc and
-    * the fusion is one doc-keyed left join.
+    * rank is p-way with no single-task global window (the discipline
+    * Categorize's id mints follow); the rank frames are two narrow
+    * longs per doc and the fusion is one doc-keyed left join.
     */
   val q143QualityRankFusion = Q(
     "q143_quality_rank_fusion",
@@ -2187,13 +2186,12 @@ object CurationOps {
       val q = qualityFixedPoint(s, dir).withColumn("__blk", lit(0L))
       val lm = lmScored(T.documentsSpread(s, dir))
         .select(col("doc_id"), col("lm_score")).withColumn("__blk", lit(0L))
-      // knownRows (round 21, guide §2.4): both rank inputs are
-      // sub-corpus frames — q ranks docs with n_toks ≥ 1, lm ranks
-      // docs with ≥ 2 tokens — so the cheap memoized non-empty-doc
-      // count is a valid UPPER bound on either row count, and an
-      // upper bound is exactly what the fast-path branch needs (if it
-      // fits under the 32k window threshold, the true count does
-      // too). Below the threshold each rank drops BlockRanks' split
+      // knownRows: both rank inputs are sub-corpus frames — q ranks
+      // docs with n_toks ≥ 1, lm ranks docs with ≥ 2 tokens — so one
+      // non-empty-doc count, shared by both ranks, is a valid UPPER
+      // bound on either row count, and an upper bound is exactly what
+      // the fast-path branch needs (if it fits under the 32k window
+      // threshold, the true count does too). Below the threshold each rank drops BlockRanks' split
       // path (range-sample job + eager checkpoint + offset agg +
       // broadcast join — the documented +0.8 s/call fixed cost at
       // sf0.1) for one plain window; at corpus scale the count

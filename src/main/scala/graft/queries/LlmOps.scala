@@ -33,10 +33,7 @@ import org.apache.spark.sql.functions._
   */
 object LlmOps {
 
-  /** Whitespace tokens of lowercased text — the same naive tokenizer the
-    * reference uses for word_count (categorizer.py:137 `split(value," ")`).
-    */
-  private val toksE = "split(lower(text), ' ')"
+  import graft.Qdsl.toksSql
 
   /** documents with a distinct-3-shingle-set column `sh`. Reads the
     * hash-distributed scan ([[graft.Tables.documentsSpread]]) so the
@@ -50,7 +47,7 @@ object LlmOps {
     */
   private[queries] def shingled(s: SparkSession, dir: String): DataFrame =
     T.documentsSpread(s, dir)
-      .select(col("doc_id"), expr(toksE).as("toks"))
+      .select(col("doc_id"), expr(toksSql).as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"),
         array_distinct(graft.functions.GraftFunctions.ngrams(col("toks"), 3))
@@ -73,7 +70,7 @@ object LlmOps {
     */
   private[queries] def shingledHashed(s: SparkSession, dir: String): DataFrame =
     T.documentsSpread(s, dir)
-      .select(col("doc_id"), expr(toksE).as("toks"))
+      .select(col("doc_id"), expr(toksSql).as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"),
         array_distinct(transform(
@@ -150,7 +147,7 @@ object LlmOps {
     "q30_token_freq",
     (s, dir) =>
       T.documentsSpread(s, dir)
-        .select(col("doc_id"), explode(expr(toksE)).as("token"))
+        .select(col("doc_id"), explode(expr(toksSql)).as("token"))
         .filter(col("token") =!= "")
         .groupBy(col("token"))
         .agg(count(lit(1)).as("n_total"), countDistinct(col("doc_id")).as("n_docs"))
@@ -166,7 +163,7 @@ object LlmOps {
     (s, dir) =>
       T.documents(s, dir)
         .filter(col("doc_id") < 20)
-        .select(col("doc_id"), explode(array_distinct(expr(toksE))).as("token"))
+        .select(col("doc_id"), explode(array_distinct(expr(toksSql))).as("token"))
         .orderBy(col("doc_id"), col("token")),
     Some("""
       SELECT doc_id, unnest(list_distinct(string_split(lower(text), ' '))) AS token
@@ -178,8 +175,8 @@ object LlmOps {
     (s, dir) =>
       T.documentsSpread(s, dir)
         .select(col("lang"), col("source"), col("n_chars"),
-          size(expr(toksE)).as("n_toks"),
-          size(array_distinct(expr(toksE))).as("n_utoks"))
+          size(expr(toksSql)).as("n_toks"),
+          size(array_distinct(expr(toksSql))).as("n_utoks"))
         .groupBy(col("lang"))
         .agg(
           count(lit(1)).as("n_docs"),
@@ -230,7 +227,7 @@ object LlmOps {
       val posArr = posWords.map(w => s"'$w'").mkString("array(", ",", ")")
       val negArr = negWords.map(w => s"'$w'").mkString("array(", ",", ")")
       T.documents(s, dir)
-        .select(col("doc_id"), expr(toksE).as("toks"))
+        .select(col("doc_id"), expr(toksSql).as("toks"))
         .orderBy(col("doc_id"))
         .select(col("doc_id"),
           expr(s"size(filter(toks, t -> array_contains($posArr, t)))").as("n_pos"),
@@ -277,7 +274,7 @@ object LlmOps {
       val stopArr = Seq("the", "a", "of", "and", "to", "in", "is", "it")
         .map(w => s"'$w'").mkString("array(", ",", ")")
       T.documents(s, dir)
-        .select(col("doc_id"), col("n_chars"), col("text"), expr(toksE).as("toks"))
+        .select(col("doc_id"), col("n_chars"), col("text"), expr(toksSql).as("toks"))
         .orderBy(col("doc_id"))
         .select(col("doc_id"),
           size(col("toks")).as("n_toks"),

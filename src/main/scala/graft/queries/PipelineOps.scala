@@ -17,33 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object PipelineOps {
 
-  /** The corpus's naive whitespace tokenizer (same as LlmOps). */
-  private val toksSql = "split(lower(text), ' ')"
-
-  /** q128's width-deciding doc count, memoized per (session, dir) so the
-    * count() job runs once, not once per bench pass (the q112
-    * pairCountBound convention). The outer map is keyed on the SESSION
-    * OBJECT (reference identity, weakly held) — a `identityHashCode`
-    * string key could collide across sessions and cross-contaminate
-    * entries, and a dead session's entries would never evict. CONTRACT:
-    * the cache assumes the parquet at `dir` is immutable for the
-    * session's lifetime — the bench/verify corpora are; a test that
-    * rewrites documents mid-session must use a fresh dir (every
-    * existing spec does: each writes to its own temp dir).
-    */
-  private val renderableDocCount =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]]()
-
-  /** Session-scoped memoized row count (the renderableDocCount cache,
-    * generalized to any key — `dir` for the renderable-doc count,
-    * `dir#emb` for the embeddings count q44's rank-path branch needs).
-    * Same immutable-corpus contract as the map it wraps. */
-  private def cachedCount(s: SparkSession, key: String)(f: => Long): Long =
-    renderableDocCount.synchronized {
-      renderableDocCount.computeIfAbsent(s,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]())
-    }.computeIfAbsent(key, _ => f)
+  import graft.Qdsl.toksSql
 
   // ---------------------------------------------------------------------
   // q42 — SimHash Hamming near-dup (fingerprint consumption)
@@ -175,19 +149,18 @@ object PipelineOps {
     "q43_ann_hyperplane_lsh",
     (s, dir) => {
       import graft.functions.GraftFunctions
-      GraftFunctions.ensureRegistered(s) // dot_f inside lambda SQL below
-      val w: Seq[Seq[Double]] =
-        (0 until nHyper).map(h => (0 until embDim).map(j => hyperplaneWeight(h, j)))
+      val w = typedLit(
+        (0 until nHyper).map(h => (0 until embDim).map(j => hyperplaneWeight(h, j))))
       val e = T.embeddings(s, dir)
         .select(col("vec_id"),
           expr("transform(embedding, x -> cast(x as double))").as("v"))
         .select(col("vec_id"), col("v"),
           sqrt(GraftFunctions.dot(col("v"), col("v"))).as("nrm"),
-          expr(
-            s"""aggregate(transform(sequence(0, ${nHyper - 1}), h ->
-               |  CASE WHEN dot_f(v, element_at(${wLit(w)}, h+1)) >= 0
-               |       THEN shiftleft(1, h) ELSE 0 END),
-               |  0, (a,x) -> a+x)""".stripMargin).as("sig"))
+          aggregate(
+            transform(sequence(lit(0), lit(nHyper - 1)), h =>
+              when(GraftFunctions.dot(col("v"), element_at(w, h + 1)) >= 0,
+                call_function("shiftleft", lit(1), h)).otherwise(lit(0))),
+            lit(0), (a, x) => a + x).as("sig"))
         .persist()
       val bands = e.select(col("vec_id"),
         posexplode(expr("transform(sequence(0, 3), b -> shiftright(sig, b*4) & 15)"))
@@ -261,10 +234,6 @@ object PipelineOps {
     },
     "bucketed ANN: 16 md5-derived hyperplane sign bits, 4x4-bit bands, exact cosine re-rank of bucket candidates; O(n·bands) shuffle vs q34's exact scan")
 
-  /** Spark literal for the hyperplane matrix: array(array(double...)). */
-  private def wLit(w: Seq[Seq[Double]]): String =
-    w.map(row => row.mkString("array(", "D,", "D)")).mkString("array(", ",", ")")
-
   // ---------------------------------------------------------------------
   // q44 — blocking-key near-dup over embeddings
   // ---------------------------------------------------------------------
@@ -326,7 +295,7 @@ object PipelineOps {
       // pins it), but above the population threshold the sort behind
       // it is a p-way range exchange instead of one task per label
       // block, closing the last single-task-sort valve the round-15
-      // verdict flagged; the cached corpus count picks the path
+      // verdict flagged; the embedding count picks the path
       val nEmb = embeddingCount(s, dir)
       val rk = graft.ops.BlockRanks.withBlockRank(e, "label",
           Seq(col("v").getItem(0) / col("nrm"), col("vec_id")), "rn",
@@ -641,7 +610,7 @@ object PipelineOps {
     * fingerprints, corpus-aware block, zero-norm rows dropped.
     */
   private[graft] def perceptualFp(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+      dir: String, nDocs: Long): org.apache.spark.sql.DataFrame = {
       import s.implicits._
       import graft.multimodal.Multimodal
       val side = 16
@@ -676,10 +645,10 @@ object PipelineOps {
       // 2.3 s at sf0.1, ~3x this plan) never runs per candidate.
       import graft.functions.GraftFunctions.dot
       // corpus-aware block width (the q122 ivfShortlistFor convention,
-      // one count() and a LITERAL quantum — the declarative 1-row
-      // broadcast variant was measured and rejected: it broke the
-      // fingerprint subtree's exchange reuse between the self-join
-      // sides, 0.73 → 2.32 s at sf0.1): a FIXED intensity quantum
+      // the caller's one count() `nDocs` and a LITERAL quantum — the
+      // declarative 1-row broadcast variant was measured and rejected:
+      // it broke the fingerprint subtree's exchange reuse between the
+      // self-join sides, 0.73 → 2.32 s at sf0.1): a FIXED intensity quantum
       // means block population ∝ N and the within-block candidate
       // count ∝ N²/B — the sf1 audit measured 1.23e9 candidates at
       // 50k docs with W pinned to 4096. Scaling W inversely with N
@@ -689,8 +658,6 @@ object PipelineOps {
       // unblocked ≥0.95 pairs at W=4096, 65/120 at 1024 —
       // near-IDENTICAL pairs have near-equal tot and survive any W;
       // the boundary cases are the standard blocking caveat).
-      val nDocs = cachedCount(s, dir)(
-        T.documents(s, dir).filter(length(col("text")) >= 1).count())
       val w = math.max(64L, math.min(4096L, 20480000L / math.max(1L, nDocs)))
       Multimodal.extractPpmBands(media, bands).toDF()
         .select(col("media_id").as("doc_id"),
@@ -773,33 +740,32 @@ object PipelineOps {
   }
 
   /** The kernel family's shared population figure (BlockRanks gating +
-    * block-width dial): non-empty documents, cached per (session, dir)
-    * so the count job runs once across every consumer in a session. */
+    * block-width dial): non-empty documents. Counted on every call; a
+    * caller that needs it twice counts once and passes the value down. */
   private[graft] def nonEmptyDocCount(s: org.apache.spark.sql.SparkSession,
-      dir: String): Long = cachedCount(s, dir)(
-    T.documents(s, dir).filter(length(col("text")) >= 1).count())
+      dir: String): Long =
+    T.documents(s, dir).filter(length(col("text")) >= 1).count()
 
-  /** The memoized embedding-table row count — q44's `#emb` entry made
-    * callable (round 21): input-table cardinality is session-stable, so
-    * every BlockRanks path selector can read the one cached value
-    * instead of re-running a parquet metadata count per invocation
-    * (q140 paid that count once per bench pass). */
+  /** The embedding-table row count that BlockRanks path selectors over
+    * embeddings read. Counted on every call. */
   private[graft] def embeddingCount(s: org.apache.spark.sql.SparkSession,
-      dir: String): Long = cachedCount(s, dir + "#emb")(
-    T.embeddings(s, dir).count())
+      dir: String): Long = T.embeddings(s, dir).count()
 
   /** q128's full candidate-generation + verify kernel, factored (round
     * 16) so Curate's multimodal-dedup stage consumes the IDENTICAL
     * pair graph the oracle-gated query verifies: (blk, id_a, id_b,
-    * cosine) with cosine ≥ 0.95 and id_a < id_b, unordered. */
+    * cosine) with cosine ≥ 0.95 and id_a < id_b, unordered. `nDocs`
+    * is [[nonEmptyDocCount]] of `dir`: it sets the block width and
+    * picks the rank path. */
   private[graft] def perceptualDupPairs(
-      s: org.apache.spark.sql.SparkSession, dir: String)
+      s: org.apache.spark.sql.SparkSession, dir: String, nDocs: Long)
       : org.apache.spark.sql.DataFrame =
-    bandedCosinePairs(s, perceptualFp(s, dir), nonEmptyDocCount(s, dir), 0.95)
+    bandedCosinePairs(s, perceptualFp(s, dir, nDocs), nDocs, 0.95)
 
   val q128PerceptualDedup = Q(
     "q128_perceptual_dedup",
-    (s, dir) => perceptualDupPairs(s, dir).orderBy(col("id_a"), col("id_b")),
+    (s, dir) => perceptualDupPairs(s, dir, nonEmptyDocCount(s, dir))
+      .orderBy(col("id_a"), col("id_b")),
     Some(s"""
       WITH px AS (
         SELECT doc_id,

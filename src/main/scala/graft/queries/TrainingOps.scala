@@ -21,19 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object TrainingOps {
 
-  /** The corpus's naive whitespace tokenizer (same as LlmOps). */
-  private val toksSql = "split(lower(text), ' ')"
-
-  /** q112's broadcast-decision bound, memoized per (session, dir) so the
-    * deciding count() job runs once, not once per invocation. Keyed on
-    * the session OBJECT, weakly held (PipelineOps.renderableDocCount's
-    * round-15 pattern — an identityHashCode string key could collide
-    * across sessions); assumes the corpus at `dir` is immutable for the
-    * session's lifetime, which the bench/verify corpora are.
-    */
-  private val pairCountBound =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]]()
+  import graft.Qdsl.toksSql
 
   // ---------------------------------------------------------------------
   // q66 — TF-IDF term relevance
@@ -181,7 +169,7 @@ object TrainingOps {
       val labels = minLabelClusters(pairs)
         .select(col("v").as("doc_id"), col("lbl"))
       T.documentsSpread(s, dir)
-        .join(broadcastIfBounded(s, dir, labels, pairs, bytesPerRow = 64L),
+        .join(broadcastIfBounded(s, labels, pairs, bytesPerRow = 64L),
           Seq("doc_id"), "left")
         .withColumn("rep", coalesce(col("lbl"), col("doc_id")))
         .withColumn("bucket",
@@ -894,7 +882,6 @@ object TrainingOps {
   val q74Zorder = Q(
     "q74_zorder",
     (s, dir) => {
-      graft.functions.GraftFunctions.ensureRegistered(s)
       val xd = (col("user_id") % 65536).cast("int")
       val yd = floor(col("value")).cast("int") % 65536
       T.events(s, dir)
@@ -1878,26 +1865,19 @@ object TrainingOps {
 
   /** Conditional broadcast of a pair-graph-derived frame, q112's
     * discipline factored: vertices are bounded by 2× the materialized
-    * pair count, so one memoized count on the checkpointed pair frame
-    * decides; over the threshold the degradation path is a plain
-    * shuffled join (AQE may still upgrade from runtime stats).
+    * pair count, so one count of the checkpointed pair frame, taken on
+    * every call, decides; over the threshold the degradation path is a
+    * plain shuffled join (AQE may still upgrade from runtime stats).
     * `bytesPerRow` is a deliberately fat per-row estimate so the hint
     * stays on the safe side.
     */
   private def broadcastIfBounded(s: org.apache.spark.sql.SparkSession,
-      dir: String, frame: DataFrame, pairs: DataFrame,
-      bytesPerRow: Long): DataFrame = {
+      frame: DataFrame, pairs: DataFrame, bytesPerRow: Long): DataFrame = {
     val thrStr =
       s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
     val thresholdBytes = scala.util.Try(thrStr.toLong).getOrElse(
       org.apache.spark.network.util.JavaUtils.byteStringAsBytes(thrStr))
-    val bytesUpperBound = pairCountBound.synchronized {
-      pairCountBound.computeIfAbsent(s,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]())
-    }.computeIfAbsent(dir, _ => pairs.count() * 2 * 64): Long
-    // the memoized value uses q112's 64-byte basis; rescale for wider rows
-    if (thresholdBytes > 0 &&
-        bytesUpperBound * bytesPerRow / 64 <= thresholdBytes)
+    if (thresholdBytes > 0 && pairs.count() * 2 * bytesPerRow <= thresholdBytes)
       broadcast(frame)
     else frame
   }
@@ -1928,7 +1908,7 @@ object TrainingOps {
         "lbl")
         .select(col("v").as("doc_id"), col("lbl"), col("n_members"))
       T.documentsSpread(s, dir).select(col("doc_id"))
-        .join(broadcastIfBounded(s, dir, sized, pairs, bytesPerRow = 96L),
+        .join(broadcastIfBounded(s, sized, pairs, bytesPerRow = 96L),
           Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("lbl"), col("doc_id")).as("cluster_id"),

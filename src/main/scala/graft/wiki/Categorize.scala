@@ -77,13 +77,10 @@ object Categorize {
     *    enforced by UNIQUE constraints) → LEFT-ANTI join against the
     *    existing dimension (O-16/O-18);
     *  - MySQL AUTO_INCREMENT ids → dense row numbers over the natural
-    *    key via [[graft.ops.DenseIds]] (range-split counts → broadcast
-    *    offsets → per-range row_number), offset by the existing max id,
-    *    so re-running is idempotent AND deterministic (unlike
+    *    key (see [[mintIds]]), offset by the existing max id, so
+    *    re-running is idempotent AND deterministic (unlike
     *    monotonically_increasing_id) — and a fresh load of 100 TB of
-    *    new keys never funnels through one global-sort task (the
-    *    `Window.orderBy(key)` form this replaced did; DenseIdsSpec
-    *    pins id-equality of the two forms);
+    *    new keys never funnels through one global-sort task;
     *  - the M2M wiring loop → explode (O-25) + two equi-joins on the
     *    natural keys (O-17); dims are small → broadcast-eligible.
     *
@@ -94,7 +91,8 @@ object Categorize {
     * column) is materialized first and feeds both id mints and the
     * bridge, which would otherwise each re-scan and re-parse the crawl.
     * The minted dimensions are materialized too, so the bridge joins
-    * stored ids instead of re-running DenseIds' offset and window plans.
+    * stored ids instead of re-running the id mints' offset and window
+    * plans.
     * The returned bridge is lazy but reads only these stored frames, so
     * every frame of the model is pinned to the `existing` snapshot taken
     * here, however late the caller reads it.
@@ -131,11 +129,9 @@ object Categorize {
       case _ => (0L, 0L)
     }
 
-    val pagesNew = graft.ops.DenseIds
-      .assign(freshPages, "file_name", offset = pageOffset)
+    val pagesNew = mintIds(freshPages, "file_name", pageOffset)
       .select("id", "file_name", "word_count", "last_edited_date")
-    val catsNew = graft.ops.DenseIds
-      .assign(freshCats, "name", offset = catOffset)
+    val catsNew = mintIds(freshCats, "name", catOffset)
       .select("id", "name")
 
     val pages = pageBase.fold(pagesNew)(_.unionByName(pagesNew)).localCheckpoint()
@@ -151,6 +147,26 @@ object Categorize {
 
     Model(pages, categories, bridge)
   }
+
+  /** Adds `id` = `offset` + the 1-based rank of each row under `key`:
+    * global `row_number() OVER (ORDER BY key)` ids, computed by
+    * [[graft.ops.BlockRanks]] over one constant block, so the sort
+    * behind them is a p-way range split instead of one window task.
+    * `key` must be unique (callers dedupe upstream) and non-null: the
+    * crawl comes from outside the program, so a null key fails the job
+    * through an assert woven into the key column instead of being
+    * minted an id. */
+  private[graft] def mintIds(df: DataFrame, key: String, offset: Long): DataFrame =
+    graft.ops.BlockRanks.withBlockRank(
+        df.withColumn(key,
+            when(assert_true(col(key).isNotNull,
+              lit(s"Categorize: null `$key` violates the non-null key contract"))
+              .isNull,
+              col(key)))
+          .withColumn("__blk", lit(0L)),
+        "__blk", Seq(col(key)), "id")
+      .withColumn("id", col("id") + lit(offset))
+      .drop("__blk")
 
   /** One-call flagship pipeline: scan → extract → normalize. */
   def run(spark: SparkSession, dir: String): Model =

@@ -159,7 +159,8 @@ class CurateSpec extends SparkSpec {
     val P = graft.queries.PipelineOps
     def pairLosers(pairs: org.apache.spark.sql.DataFrame): Set[Long] =
       pairs.select(col("id_b")).collect().map(_.getLong(0)).toSet
-    val nearLosers = pairLosers(P.perceptualDupPairs(spark, sf)) ++
+    val nearLosers = pairLosers(
+        P.perceptualDupPairs(spark, sf, P.nonEmptyDocCount(spark, sf))) ++
       pairLosers(P.videoNearDupPairs(spark, sf)) ++
       pairLosers(P.audioNearDupPairs(spark, sf))
     def groupLosers(fp: Array[(Long, String)]): Set[Long] =

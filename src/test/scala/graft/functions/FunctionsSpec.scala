@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The native dot_f Catalyst expression: value parity with the HOF chain
-  * it replaces, null semantics, codegen path, and both registration
-  * entry points.
+  * it replaces, null semantics and codegen path; plus value checks of
+  * the simhash_bits, zorder2 and ngrams column handles.
   */
 class FunctionsSpec extends SparkSpec {
 
@@ -55,21 +55,12 @@ class FunctionsSpec extends SparkSpec {
       e.getMessage.toLowerCase.contains("datatype_mismatch"))
   }
 
-  test("SQL registration: ensureRegistered makes dot_f resolvable in expr()") {
-    GraftFunctions.ensureRegistered(spark)
-    GraftFunctions.ensureRegistered(spark) // idempotent
-    val out = vecs.select(expr("dot_f(a, b)").as("d"))
-      .collect().map(_.getDouble(0)).toSeq
-    assert(out === Seq(32.0, -2.0, 1e-9 * 1e9 + 1e9 * 1e-9 - 1.0))
-  }
-
-  test("SQL registration: zorder2 and ngrams resolve in SQL text") {
+  test("zorder2 and ngrams column handles: bit interleave and word shingles") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     val r = Seq(1).toDF("x")
-      .select(expr("zorder2(3, 5)").as("z"),
-        expr("ngrams(array('a','b','c'), 2)").as("g"))
+      .select(GraftFunctions.zorder2(lit(3), lit(5)).as("z"),
+        GraftFunctions.ngrams(array(lit("a"), lit("b"), lit("c")), 2).as("g"))
       .collect().head
     // x=3 (bits 0,1 -> even positions 0,2), y=5 (bits 0,2 -> odd positions 1,5)
     assert(r.getLong(0) === ((1L << 0) | (1L << 2) | (1L << 1) | (1L << 5)))
@@ -79,7 +70,6 @@ class FunctionsSpec extends SparkSpec {
   test("simhash_bits equals the CASE-chain majority-vote formulation") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     val df = Seq(
       Seq(0b1011L, 0b1001L, 0b0001L),        // majorities: bit0=3/3, bit1=1/3, bit3=2/3
       Seq(5L, 5L, 2L, 5L),
@@ -99,7 +89,6 @@ class FunctionsSpec extends SparkSpec {
   test("simhash_bits null semantics match the HOF chain (nulls in denominator only)") {
     val s = spark
     import s.implicits._
-    GraftFunctions.ensureRegistered(s)
     // 2 of 3 elements have bit0 set, one element null: strict majority
     // 2*2 > 3 -> set; with a second null (2*2 > 4 fails) -> unset
     val df = Seq(

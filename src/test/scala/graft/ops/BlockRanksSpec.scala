@@ -104,6 +104,12 @@ class BlockRanksSpec extends SparkSpec {
       "small-input path should not materialize a ranged checkpoint")
     assert(large.queryExecution.optimizedPlan.toString.contains("LogicalRDD"),
       "above-threshold path must go through the checkpointed range split")
+    // and its input-sized row_number window is keyed by the range id,
+    // so every window task holds one range, never a whole block
+    val rnLines = large.queryExecution.executedPlan.toString
+      .linesIterator.filter(_.contains("row_number")).toSeq
+    assert(rnLines.nonEmpty && rnLines.forall(_.contains("__pid")),
+      s"row_number window not keyed by __pid:\n${rnLines.mkString("\n")}")
   }
 
   test("reserved temp columns are rejected") {

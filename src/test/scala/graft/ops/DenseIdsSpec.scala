@@ -1,30 +1,36 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.wiki.Categorize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Pins DenseIds.assign ≡ the global `row_number() OVER (ORDER BY key)`
-  * window it replaces (the Categorize surrogate-key contract: dense,
-  * 1-based + offset, ordered by natural key), across partition counts
+/** Pins the dense surrogate ids Categorize mints (`Categorize.mintIds`,
+  * BlockRanks over one constant block) ≡ the global
+  * `row_number() OVER (ORDER BY key)` window they replace — dense,
+  * 1-based + offset, ordered by natural key — across partition counts
   * (including p far larger than the row count, so most ranges are
   * empty), offsets, and the empty frame.
   */
 class DenseIdsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def windowForm(df: DataFrame, key: String, offset: Long): Seq[(String, Long)] =
-    df.withColumn("id", row_number().over(Window.orderBy(col(key))).cast("long") + lit(offset))
-      .select(col(key), col("id"))
+  private def ids(df: DataFrame): Seq[(String, Long)] =
+    df.select(col("file_name"), col("id"))
       .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
       .sortBy(_._1)
 
-  private def denseForm(df: DataFrame, key: String, offset: Long, p: Int): Seq[(String, Long)] =
-    DenseIds.assign(df, key, offset = offset, partitions = p)
-      .select(col(key), col("id"))
-      .collect().toSeq.map(r => (r.getString(0), r.getLong(1)))
-      .sortBy(_._1)
+  private def windowForm(df: DataFrame, offset: Long): Seq[(String, Long)] =
+    ids(df.withColumn("id",
+      row_number().over(Window.orderBy(col("file_name"))).cast("long") + lit(offset)))
+
+  /** The constant-block rank at an explicit partition count, plus the
+    * offset — `mintIds` with its p pinned. */
+  private def blockForm(df: DataFrame, offset: Long, p: Int): Seq[(String, Long)] =
+    ids(BlockRanks.withBlockRank(df.withColumn("blk", lit(0L)), "blk",
+        Seq(col("file_name")), "id", p)
+      .withColumn("id", col("id") + lit(offset)))
 
   private def fixture: DataFrame = {
     // unique string keys, unsorted arrival order, skewed prefixes
@@ -35,60 +41,43 @@ class DenseIdsSpec extends SparkSpec {
 
   test("ids ≡ global-window form across partition counts and offsets") {
     val df = fixture
-    for (p <- Seq(1, 3, 8, 1024); off <- Seq(0L, 17L)) {
-      val expected = windowForm(df, "file_name", off)
-      val got = denseForm(df, "file_name", off, p)
-      assert(got == expected, s"p=$p offset=$off diverged")
+    for (off <- Seq(0L, 17L)) {
+      val expected = windowForm(df, off)
+      for (p <- Seq(1, 3, 8, 1024))
+        assert(blockForm(df, off, p) == expected, s"p=$p offset=$off diverged")
+      assert(ids(Categorize.mintIds(df, "file_name", off)) == expected,
+        s"mintIds offset=$off diverged")
     }
   }
 
   test("ids are dense 1..n + offset") {
-    val got = denseForm(fixture, "file_name", 100L, 4).map(_._2).sorted
+    val got = ids(Categorize.mintIds(fixture, "file_name", 100L)).map(_._2).sorted
     assert(got == (101L to 100L + fixture.count()).toSeq)
   }
 
   test("empty input yields empty output with the id column present") {
     val empty = Seq.empty[String].toDF("file_name")
-    val out = DenseIds.assign(empty, "file_name", partitions = 4)
+    val out = Categorize.mintIds(empty, "file_name", 0L)
     assert(out.columns.contains("id") && out.count() == 0)
-  }
-
-  test("a null key fails the job instead of silently minting an id") {
-    val bad = (Seq("a", "b") :+ null).toDF("file_name")
-    val e = intercept[Exception] {
-      DenseIds.assign(bad, "file_name", partitions = 2).collect()
-    }
-    // assert_true surfaces as a SparkRuntimeException wrapping the message
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("non-null key contract")),
-      s"expected the DenseIds null-key assert, got: ${messages(e).mkString(" | ")}")
   }
 
   test("reserved temp-column collision is rejected") {
     val bad = fixture.withColumn("__pid", lit(1))
     val e = intercept[IllegalArgumentException] {
-      DenseIds.assign(bad, "file_name")
+      Categorize.mintIds(bad, "file_name", 0L)
     }
     assert(e.getMessage.contains("reserved"))
   }
 
   test("row-number window is range-keyed, not a global sort") {
-    // The point of the two-pass form: the corpus-sized row_number window
-    // must be partitioned by the range id (__pid) — a global window
-    // would plan with an empty partition spec over a SinglePartition
-    // exchange. (The p-row offsets window IS legitimately global; it
-    // never sees corpus-sized input.)
-    // The range exchange runs inside the eager localCheckpoint that
-    // pins the sampled boundaries (object doc), so assign's visible
-    // plan only shows the checkpoint scan — pin the range shape on the
-    // pre-checkpoint frame, and the keyed window on the full plan.
-    val rangedPlan = DenseIds.rangedFrame(fixture, "file_name", 8)
+    // With no knownRows the mint takes the range split: the corpus-sized
+    // row_number window must be partitioned by the range id (__pid) — a
+    // global window would plan with an empty partition spec over a
+    // SinglePartition exchange. The range exchange runs inside the eager
+    // checkpoint that pins the sampled boundaries, so the visible plan
+    // shows the checkpoint scan.
+    val plan = Categorize.mintIds(fixture, "file_name", 0L)
       .queryExecution.executedPlan.toString
-    assert(rangedPlan.contains("rangepartitioning(file_name"),
-      s"expected a range exchange on the key in:\n$rangedPlan")
-    val out = DenseIds.assign(fixture, "file_name", partitions = 8)
-    val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("ExistingRDD"),
       s"expected the checkpointed ranged scan in:\n$plan")
     val rnLines = plan.linesIterator.filter(_.contains("row_number")).toSeq

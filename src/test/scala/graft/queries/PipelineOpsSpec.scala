@@ -19,6 +19,28 @@ class PipelineOpsSpec extends SparkSpec {
     dir
   }
 
+  test("nonEmptyDocCount and embeddingCount re-count a table rewritten in the same session") {
+    // both counts size q128's block width W and every BlockRanks path
+    // choice, so a value kept from an earlier read of `dir` would
+    // silently steer those for the rewritten corpus
+    import spark.implicits._
+    val dir = corpus(Seq((0L, "a b"), (1L, ""), (2L, "c")))
+    def writeEmb(n: Int): Unit =
+      (0 until n).map(i => (i.toLong, Array(1.0f, i.toFloat), i % 2))
+        .toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    writeEmb(2)
+    def counts = (PipelineOps.nonEmptyDocCount(spark, dir),
+      PipelineOps.embeddingCount(spark, dir))
+    assert(counts === ((2L, 2L)))
+    Seq((0L, "a"), (1L, "b c"), (2L, ""), (3L, "d"), (4L, "e"), (5L, "f g"))
+      .map { case (id, text) => (id, text, "en", "web", text.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    writeEmb(5)
+    assert(counts === ((5L, 5L)), "a count kept the rewritten table's old value")
+  }
+
   private def fps(dir: String): Map[Long, Seq[(Long, Long)]] =
     PipelineOps.q104Winnowing.fn(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

@@ -652,11 +652,13 @@ class StreamingSpec extends SparkSpec {
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.classic.SQLContext = s.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
     // the SAME fingerprints the batch plan joins, via the factored stage
-    val fps = graft.queries.PipelineOps.perceptualFp(s, "/root/testdata/sf0.001")
+    val sf = "/root/testdata/sf0.001"
+    val fps = graft.queries.PipelineOps.perceptualFp(s, sf,
+        graft.queries.PipelineOps.nonEmptyDocCount(s, sf))
       .collect().map(r => Streams.MediaFpEvent(r.getLong(0), r.getLong(1),
         r.getSeq[Double](2).toArray)).toSeq
     val batch = graft.queries.PipelineOps.q128PerceptualDedup
-      .fn(s, "/root/testdata/sf0.001")
+      .fn(s, sf)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     assert(batch.nonEmpty, "vacuous: no >=0.95 pairs at sf0.001")
     def run(order: Seq[Streams.MediaFpEvent], name: String): Set[(Long, Long, Double)] = {

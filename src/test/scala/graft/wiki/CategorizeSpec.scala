@@ -209,4 +209,19 @@ class CategorizeSpec extends SparkSpec {
     assert(cats.map(r => (r.getLong(0), r.getString(1))) ===
       Seq((1L, "Big data"), (2L, "JVM"), (3L, "Notebooks")))
   }
+
+  test("mintIds: a null natural key fails the job instead of being minted an id") {
+    val s = spark
+    import s.implicits._
+    val bad = (Seq("a", "b") :+ null).toDF("file_name")
+    // the assert fires in the eager range-split checkpoint or at the
+    // action, and surfaces as a SparkRuntimeException wrapping it
+    val e = intercept[Exception] {
+      Categorize.mintIds(bad, "file_name", 0L).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(e).exists(_.contains("non-null key contract")),
+      s"expected the null-key assert, got: ${messages(e).mkString(" | ")}")
+  }
 }

@@ -6,10 +6,15 @@ import org.apache.spark.sql.functions._
 
 /** Distributed per-block ranking: `row_number() OVER (PARTITION BY
   * block ORDER BY key...)` semantics WITHOUT the per-block
-  * single-task sort — the round-15 verdict's last prose-only scale
-  * valve (q44/q128: a 10M-doc hot block is a ~1.5 GB sort owned by
-  * ONE window task; linear and spillable, but parallelism collapses
-  * exactly where the data is hottest).
+  * single-task sort (q44/q128: a 10M-doc hot block is a ~1.5 GB sort
+  * owned by ONE window task; linear and spillable, but parallelism
+  * collapses exactly where the data is hottest).
+  *
+  * Two physical forms, picked by the caller's `knownRows` bound: the
+  * plain window when the bound is at most [[windowFormMaxRows]], the
+  * range split otherwise or when no bound is known. Categorize passes
+  * the bounds its parse checkpoint observes, so a small crawl mints its
+  * surrogate ids on the window without a range-sample or checkpoint job.
   *
   * A range-split numbering of per-block sequences (one constant
   * block gives one global sequence, as Categorize's surrogate ids and
@@ -69,9 +74,8 @@ object BlockRanks {
     * ~32 tasks at least a [[graft.queries.PipelineOps.subBlockRanks]]-
     * sized range. The two paths produce IDENTICAL ranks
     * (BlockRanksSpec pins it), so the branch is a physical choice
-    * only — the round-15 directive's "salted rank stripes above a
-    * population threshold", with a range split (order-preserving, no
-    * recall cut) where stripes would have cut recall. */
+    * only; above the threshold the range split keeps the total order,
+    * where salted rank stripes would cut recall. */
   val windowFormMaxRows: Long = 32L * 1024L
 
   /** Adds `rnCol` = the 1-based rank of each row within its
@@ -83,9 +87,11 @@ object BlockRanks {
     * call — or any UPPER BOUND on it (the value only gates the
     * fast-path branch, so a bound that fits under [[windowFormMaxRows]]
     * proves the true count does too; q143 passes the corpus doc count
-    * for its sub-corpus rank inputs). A value in [0, windowFormMaxRows]
-    * selects the plain-window form. Pass -1 (default) when unknown —
-    * the scale-safe split runs unconditionally.
+    * for its sub-corpus rank inputs, Categorize the parsed row count and
+    * the summed category-array sizes its parse checkpoint observes). A
+    * value in [0, windowFormMaxRows] selects the plain-window form.
+    * Pass -1 (default) when unknown — the scale-safe split runs
+    * unconditionally.
     */
   def withBlockRank(df: DataFrame, blockCol: String, orderCols: Seq[Column],
       rnCol: String, partitions: Int = 0, knownRows: Long = -1L): DataFrame = {

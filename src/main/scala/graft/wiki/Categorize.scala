@@ -51,8 +51,8 @@ object Categorize {
     *
     * All three html probes come from ONE native `parse_page` evaluation
     * (the reference re-parses a fresh BeautifulSoup tree per UDF — its
-    * documented flaw; the round-3 ScalaUDF version here still paid two
-    * UDF converter round-trips plus a separate `split` pass per page).
+    * documented flaw). Native evaluation also skips the Scala UDF
+    * converter round-trips and a separate `split` pass per page.
     */
   def processHtmlFiles(spark: SparkSession, dir: String): DataFrame =
     readPages(spark, dir)
@@ -90,6 +90,14 @@ object Categorize {
     * Each html file is parsed once: the narrow parsed frame (no html
     * column) is materialized first and feeds both id mints and the
     * bridge, which would otherwise each re-scan and re-parse the crawl.
+    * The job that materializes it also observes two upper bounds, the
+    * parsed row count (≥ new pages) and the summed `categories` sizes
+    * (≥ new category names). They go to [[mintIds]] as `knownRows`, so
+    * a crawl of at most [[graft.ops.BlockRanks.windowFormMaxRows]]
+    * pages or names mints on the plain window and a larger one on the
+    * range split; the ids are the same either way. The anti-joins
+    * against `existing` only shrink the fresh frames, so the bounds
+    * hold there too.
     * The minted dimensions are materialized too, so the bridge joins
     * stored ids instead of re-running the id mints' offset and window
     * plans.
@@ -98,9 +106,7 @@ object Categorize {
     * here, however late the caller reads it.
     */
   def normalize(processed: DataFrame, existing: Option[Model] = None): Model = {
-    val parsed = processed
-      .select("file_name", "categories", "word_count", "last_edited_date")
-      .localCheckpoint()
+    val (parsed, rowBound, nameBound) = storeParsed(processed)
     val newPagesRaw = parsed
       .select(col("file_name"), col("word_count"), col("last_edited_date"))
       .dropDuplicates("file_name")
@@ -129,9 +135,9 @@ object Categorize {
       case _ => (0L, 0L)
     }
 
-    val pagesNew = mintIds(freshPages, "file_name", pageOffset)
+    val pagesNew = mintIds(freshPages, "file_name", pageOffset, rowBound)
       .select("id", "file_name", "word_count", "last_edited_date")
-    val catsNew = mintIds(freshCats, "name", catOffset)
+    val catsNew = mintIds(freshCats, "name", catOffset, nameBound)
       .select("id", "name")
 
     val pages = pageBase.fold(pagesNew)(_.unionByName(pagesNew)).localCheckpoint()
@@ -148,15 +154,38 @@ object Categorize {
     Model(pages, categories, bridge)
   }
 
+  /** The narrow parsed frame, stored by one eager `localCheckpoint`,
+    * with the two bounds its job observes: the row count, and the
+    * summed `categories` array sizes with a null array counted as 0
+    * (`size(null)` is -1 or null depending on the ANSI setting;
+    * `greatest` skips the null).
+    *
+    * The checkpoint runs `narrow`'s own QueryExecution, so the metrics
+    * are read from it as soon as the checkpoint returns. An
+    * `Observation` would deliver the same row through the listener bus,
+    * which the caller would have to wait for. */
+  private[graft] def storeParsed(processed: DataFrame): (DataFrame, Long, Long) = {
+    val narrow = processed
+      .select("file_name", "categories", "word_count", "last_edited_date")
+      .observe("categorize_bounds", count(lit(1)).as("rows"),
+        coalesce(sum(greatest(size(col("categories")), lit(0))), lit(0L)).as("names"))
+    val parsed = narrow.localCheckpoint()
+    val bounds = narrow.queryExecution.observedMetrics("categorize_bounds")
+    (parsed, bounds.getLong(0), bounds.getLong(1))
+  }
+
   /** Adds `id` = `offset` + the 1-based rank of each row under `key`:
     * global `row_number() OVER (ORDER BY key)` ids, computed by
-    * [[graft.ops.BlockRanks]] over one constant block, so the sort
-    * behind them is a p-way range split instead of one window task.
+    * [[graft.ops.BlockRanks]] over one constant block. `knownRows` is
+    * an upper bound on the rows of `df`, or -1 when unknown; a bound of
+    * at most [[graft.ops.BlockRanks.windowFormMaxRows]] ranks in one
+    * window task, anything else on the p-way range split.
     * `key` must be unique (callers dedupe upstream) and non-null: the
     * crawl comes from outside the program, so a null key fails the job
     * through an assert woven into the key column instead of being
     * minted an id. */
-  private[graft] def mintIds(df: DataFrame, key: String, offset: Long): DataFrame =
+  private[graft] def mintIds(df: DataFrame, key: String, offset: Long,
+      knownRows: Long = -1L): DataFrame =
     graft.ops.BlockRanks.withBlockRank(
         df.withColumn(key,
             when(assert_true(col(key).isNotNull,
@@ -164,7 +193,7 @@ object Categorize {
               .isNull,
               col(key)))
           .withColumn("__blk", lit(0L)),
-        "__blk", Seq(col(key)), "id")
+        "__blk", Seq(col(key)), "id", knownRows = knownRows)
       .withColumn("id", col("id") + lit(offset))
       .drop("__blk")
 

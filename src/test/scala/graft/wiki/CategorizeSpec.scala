@@ -5,8 +5,11 @@ import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
+import graft.ops.BlockRanks
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
 /** End-to-end categorizer pipeline test (categorizer.py:124-191 →
@@ -160,6 +163,101 @@ class CategorizeSpec extends SparkSpec {
     assert(!stored.flatten.exists(c => c == "value" || c == "html"), s"stored html: $stored")
   }
 
+  /** Job starts and completed stage names, in one event stream. */
+  private val jobsAndStages: PartialFunction[AnyRef, (String, String)] = {
+    case e: SparkListenerJobStart => ("job", e.jobId.toString)
+    case e: SparkListenerStageCompleted => ("stage", e.stageInfo.name)
+  }
+
+  private def stageNames(events: Seq[(String, String)]): Seq[String] =
+    events.collect { case ("stage", name) => name }
+
+  private def idsOf(df: DataFrame, key: String): Seq[(Long, String)] =
+    df.select(col("id"), col(key)).collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+
+  /** Jobs `Categorize.run` launches on [[writeLargeCrawl]]: the parse
+    * checkpoint (which also observes the mint bounds) and the two
+    * stored dimensions with their AQE stages. The range-split mints
+    * ran 19. */
+  private val maxRunJobs = 7
+
+  test("a small crawl mints on the window path: no BlockRanks checkpoint, bounded jobs") {
+    val dir = writeLargeCrawl()
+    val out = Files.createTempDirectory("graft-cat-shape-")
+    val (m, runEvents) = listening(jobsAndStages)(Categorize.run(spark, dir.toString))
+    val (_, writeEvents) = listening(jobsAndStages) {
+      m.pages.write.parquet(out.resolve("pages").toString)
+      m.categories.write.parquet(out.resolve("categories").toString)
+      m.pageCategories.write.parquet(out.resolve("page_categories").toString)
+    }
+    val runJobs = runEvents.count(_._1 == "job")
+    assert(runJobs <= maxRunJobs, s"run launched $runJobs jobs: ${stageNames(runEvents)}")
+    val split = stageNames(runEvents ++ writeEvents)
+      .filter(_.startsWith("localCheckpoint at BlockRanks.scala"))
+    assert(split.isEmpty, s"range-split stages ran: $split")
+
+    // the window-path ids are the range split's
+    val processed = Categorize.processHtmlFiles(spark, dir.toString)
+    assert(idsOf(m.pages, "file_name") === idsOf(Categorize.mintIds(
+      processed.select("file_name").distinct(), "file_name", 0L, knownRows = -1L), "file_name"))
+    assert(idsOf(m.categories, "name") === idsOf(Categorize.mintIds(
+      processed.select(explode(col("categories")).as("name")).distinct(), "name", 0L,
+      knownRows = -1L), "name"))
+  }
+
+  private def processedFrame(rows: Seq[Row]): DataFrame = spark.createDataFrame(
+    spark.sparkContext.parallelize(rows, 2), StructType(Seq(
+      StructField("file_name", StringType), StructField("categories", ArrayType(StringType)),
+      StructField("word_count", IntegerType), StructField("last_edited_date", DateType))))
+
+  test("storeParsed bounds new pages and names from above; the model is the hand-computed one") {
+    val d = java.sql.Date.valueOf("2024-05-01")
+    // a null array, an empty array, a repeated category, a repeated file_name
+    val processed = processedFrame(Seq(
+      Row("b", null, 1, null), Row("a", Seq.empty[String], 2, d),
+      Row("c", Seq("X", "Y", "X"), 3, d), Row("d", Seq("Y"), 4, null),
+      Row("d", Seq("Z"), 4, null)))
+    // size(null) is null under ANSI and -1 without it
+    for (ansi <- Seq("true", "false")) withConf("spark.sql.ansi.enabled" -> ansi) {
+      val (parsed, rows, names) = Categorize.storeParsed(processed)
+      assert((rows, names) === ((5L, 5L)), s"ansi=$ansi")
+      assert(parsed.count() === 5L)
+      val m = Categorize.normalize(processed)
+      assert(idsOf(m.pages, "file_name") ===
+        Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")), s"ansi=$ansi")
+      assert(idsOf(m.categories, "name") === Seq((1L, "X"), (2L, "Y"), (3L, "Z")), s"ansi=$ansi")
+      val bridge = m.pageCategories.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))).sorted
+      assert(bridge === Seq((3L, 1L), (3L, 2L), (4L, 2L), (4L, 3L)), s"ansi=$ansi")
+    }
+    // no rows, distributed or local: zero bounds, empty model
+    val schema = processed.schema
+    for (empty <- Seq(processedFrame(Nil),
+        spark.createDataFrame(java.util.List.of[Row](), schema))) {
+      val (_, rows, names) = Categorize.storeParsed(empty)
+      assert((rows, names) === ((0L, 0L)))
+      val m = Categorize.normalize(empty)
+      assert(Seq(m.pages, m.categories, m.pageCategories).map(_.count()) === Seq(0L, 0L, 0L))
+    }
+  }
+
+  test("over windowFormMaxRows pages the mint takes the range split, dense over 1..n") {
+    val n = BlockRanks.windowFormMaxRows + 1
+    val processed = spark.range(n).select(
+      format_string("p%06d", col("id")).as("file_name"),
+      lit(null).cast(ArrayType(StringType)).as("categories"),
+      lit(1).as("word_count"), lit(null).cast(DateType).as("last_edited_date"))
+    val (m, events) = listening(jobsAndStages)(Categorize.normalize(processed))
+    assert(stageNames(events).exists(_.startsWith("localCheckpoint at BlockRanks.scala")),
+      s"no range-split stage: ${stageNames(events)}")
+    // file_name p%06d of 0-based i sorts as i, so its id is i + 1
+    val r = m.pages.agg(min("id"), max("id"), countDistinct("id"), count(lit(1)),
+      sum(when(col("id") =!= substring(col("file_name"), 2, 6).cast("long") + 1, 1)
+        .otherwise(0)).cast("long")).head()
+    assert(r === Row(1L, n, n, n, 0L))
+    assert(m.categories.count() === 0L)
+  }
+
   test("normalize: deterministic surrogate keys, natural-key dedup, M2M bridge (categorizer.py:150-188)") {
     val dir = writeFixtures()
     val m = Categorize.run(spark, dir.toString)
@@ -214,14 +312,16 @@ class CategorizeSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val bad = (Seq("a", "b") :+ null).toDF("file_name")
-    // the assert fires in the eager range-split checkpoint or at the
-    // action, and surfaces as a SparkRuntimeException wrapping it
-    val e = intercept[Exception] {
-      Categorize.mintIds(bad, "file_name", 0L).collect()
-    }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("non-null key contract")),
-      s"expected the null-key assert, got: ${messages(e).mkString(" | ")}")
+    // on both paths: the assert fires in the eager range-split checkpoint
+    // or at the action, and surfaces as a SparkRuntimeException wrapping it
+    for (knownRows <- Seq(-1L, 3L)) {
+      val e = intercept[Exception] {
+        Categorize.mintIds(bad, "file_name", 0L, knownRows).collect()
+      }
+      assert(messages(e).exists(_.contains("non-null key contract")),
+        s"knownRows=$knownRows: expected the null-key assert, got: ${messages(e).mkString(" | ")}")
+    }
   }
 }

@@ -5,13 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Connected components by alternating large-star / small-star — the
   * O(log n)-round MapReduce formulation (Kiveris et al., "Connected
-  * Components in MapReduce and Beyond", SoCC'14; public algorithm) —
-  * as the scale twin of [[graft.queries.TrainingOps.minLabelClusters]]:
-  * min-label propagation needs O(graph diameter) rounds, which on a
-  * 100 TB near-dup graph with chain-shaped duplicate clusters (crawl
-  * mirrors of mirrors) can be thousands; star-contraction needs
-  * O(log n) rounds regardless of diameter, every round two keyed
-  * shuffles over the CURRENT edge set, which only shrinks.
+  * Components in MapReduce and Beyond", SoCC'14; public algorithm). It
+  * is the engine's one CC primitive: q72/q111 (near-dup clusters),
+  * q112 (cluster-safe split), q134 (soft-dedup weights) and q139/q140
+  * (mutual-kNN communities) all label through it. Min-label
+  * propagation needs O(graph diameter) rounds, which on a 100 TB
+  * near-dup graph with chain-shaped duplicate clusters (crawl mirrors
+  * of mirrors) can be thousands; star contraction needs O(log n)
+  * rounds regardless of diameter, every round two keyed shuffles over
+  * the CURRENT edge set, which only shrinks.
   *
   *  - large-star: per node u, link every LARGER neighbor to the
   *    minimum of u's closed neighborhood — safe at any skew because
@@ -21,19 +23,17 @@ import org.apache.spark.sql.functions._
   *    minimum — contracts the stars the large-star built.
   *
   * Both steps preserve connectivity exactly (proved in the paper; the
-  * spec pins equality with union-find on generated graphs and with
-  * minLabelClusters on the real pair graph). Convergence = the edge
-  * set is a fixpoint (every node points directly at its component
-  * minimum), detected STRUCTURALLY in the round that produces it —
-  * the output is a star forest, a per-vertex local property (see
-  * `isStarForest` below) — rather than by comparing consecutive round
-  * checksums, which pays one extra full round to re-derive the same
-  * set. One scalar per round, no edge collect. Rounds
+  * spec pins equality with driver-side union-find on the real pair
+  * graph and on generated graphs). Convergence = the edge set is a
+  * fixpoint (every node points directly at its component minimum),
+  * detected STRUCTURALLY in the round that produces it — the output is
+  * a star forest, a per-vertex local property (see `isStarForest`
+  * below). One scalar per round, no edge collect. Rounds
   * localCheckpoint: the per-round frames are edge-sized and lineage
   * must not accumulate across O(log n) iterations.
   *
   * Returns (v, lbl): every vertex of the input with its component's
-  * minimum vertex id as label — [[minLabelClusters]]'s contract.
+  * minimum vertex id as label.
   */
 object ConnectedComponents {
 
@@ -44,14 +44,15 @@ object ConnectedComponents {
     // canonical directed form: (hi -> lo) for every input edge, plus
     // self-loops dropped; the iteration maintains edges as (src, dst)
     // with no orientation invariant (stars re-orient freely).
-    // LAZY checkpoint (round 21): round 1's one checksum action
-    // materializes it — the same lazy-checkpoint-plus-action fold as
-    // `large`/`small` below, saving the eager form's dedicated
-    // materialization job. The race bound is the same argument as
-    // `large`'s: the frame ends in the distinct's shuffle, so the two
-    // union branches of round 1's neighborhood frame read one
-    // shuffleId's output — concurrent branches can at worst re-run the
-    // reduce-side projection, never the caller's edge derivation.
+    // LAZY checkpoint: round 1's one probe action materializes it —
+    // the same lazy-checkpoint-plus-action fold as `large`/`small`
+    // below, saving an eager form's dedicated materialization job. The
+    // race bound is the same argument as `large`'s: the frame ends in
+    // the distinct's shuffle, so the two union branches of round 1's
+    // neighborhood frame read one shuffleId's output — concurrent
+    // branches can at worst re-run the reduce-side projection, never
+    // the caller's edge derivation. Callers therefore pass their pair
+    // frame unmaterialized.
     var edges = pairs
       .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
       .filter(col("a") =!= col("b"))
@@ -60,31 +61,23 @@ object ConnectedComponents {
       .distinct()
       .localCheckpoint(eager = false)
 
-    /** STRUCTURAL convergence probe (round 21, optimization 1): the
-      * round output is a fixpoint of large∘small iff it is a disjoint
-      * union of stars rooted at component minima, and THAT is locally
-      * checkable — (a) no vertex appears as both a src and a dst, and
-      * (b) no src carries two out-edges. (⇐: on such a star forest the
-      * root is below every member, so large-star re-emits each (v, r)
-      * and small-star re-emits the same — both identities, shown in
-      * the fixpoint-shape note at the bottom. ⇒: a fixpoint violating
-      * (a) holds (a→b),(b→c) and the note's contradiction kills it; a
-      * fixpoint violating (b) holds (v→m1),(v→m2) with m1 < m2 and the
-      * next small-star emits the NEW edge (m2→m1) — u = v's
+    /** STRUCTURAL convergence probe: the round output is a fixpoint of
+      * large∘small iff it is a disjoint union of stars rooted at
+      * component minima, and THAT is locally checkable — (a) no vertex
+      * appears as both a src and a dst, and (b) no src carries two
+      * out-edges. (⇐: on such a star forest the root is below every
+      * member, so large-star re-emits each (v, r) and small-star
+      * re-emits the same — both identities, shown in the fixpoint-shape
+      * note at the bottom. ⇒: a fixpoint violating (a) holds
+      * (a→b),(b→c) and the note's contradiction kills it; a fixpoint
+      * violating (b) holds (v→m1),(v→m2) with m1 < m2 and the next
+      * small-star emits the NEW edge (m2→m1) — u = v's
       * closed-neighborhood min is m1 and m2 ≤ v — so it was no
-      * fixpoint.) The previous detector — two consecutive rounds with
-      * equal (xor-of-hash, count) checksums — could only see a
-      * fixpoint by RE-DERIVING it, paying one extra full round (two
-      * more groupBy/join/distinct passes over the edge set) purely to
-      * confirm; the structural probe fires in the round that PRODUCES
-      * the star forest. Measured: q111 2 → 1 rounds, q139/q140's
-      * mutual-kNN graph 6 → 5, identical labels (oracle + spec). Cost:
-      * the probe's vertex-keyed groupBy is one narrow exchange over
-      * 2|E| tagged rows where the checksum was a single scalar agg —
-      * strictly cheaper than the round it deletes. It is also exact
-      * where the checksum had a (negligible) hash-collision false-
-      * convergence risk, and it directly verifies the no-dst-is-a-src
-      * property the root extraction below RELIES on.
+      * fixpoint.) Comparing consecutive rounds' checksums instead could
+      * only see a fixpoint by RE-DERIVING it, one extra full round; the
+      * probe fires in the round that PRODUCES the star forest, is exact
+      * (no hash-collision false convergence), and directly verifies the
+      * no-dst-is-a-src property the root extraction below RELIES on.
       */
     def isStarForest(df: DataFrame): Boolean = {
       val bad = df.select(col("src").as("x"), lit(1L).as("es"), lit(0L).as("ed"))
@@ -98,9 +91,9 @@ object ConnectedComponents {
       bad == 0L
     }
 
-    // No action over the INPUT edge set (round 21): real caller graphs
-    // (raw near-dup / mutual-kNN pair frames) are never pre-contracted
-    // star forests, so probing the input would be one wasted action per
+    // No action over the INPUT edge set: real caller graphs (raw
+    // near-dup / mutual-kNN pair frames) are never pre-contracted star
+    // forests, so probing the input would be one wasted action per
     // call; an already-fixpoint input costs one (identity) round.
     var converged = false
     var rounds = 0
@@ -122,28 +115,25 @@ object ConnectedComponents {
         .union(edges.select(col("dst").as("u"), col("src").as("v")))
       val mins = nbrs.groupBy(col("u"))
         .agg(min(least(col("v"), col("u"))).as("m"))
-      // LAZY checkpoint (round 19): the round's ONE action — the
-      // small-star checksum below — materializes this too, halving
-      // the per-round job count (the q98/q107 scheduling-floor class;
-      // measured 3.46 → 3.15 s q139 solo at sf0.1, labels identical,
-      // still 6 rounds). The repo's eager-at-fan-out rule exists for
-      // frames whose COMPUTATION races when branches of one job reach
-      // an unmaterialized cache (q98's measured 7× inflation); here
-      // the race is bounded by construction: `large` is one RDD
+      // LAZY checkpoint: the round's ONE action — the star-forest probe
+      // below — materializes this too, halving the per-round job count.
+      // An eager checkpoint is the rule for frames whose COMPUTATION
+      // races when branches of one job reach an unmaterialized cache;
+      // here the race is bounded by construction: `large` is one RDD
       // object, so its shuffle map stages are deduplicated by
       // shuffleId in the DAG scheduler — concurrent branches can at
       // worst re-run the reduce-side projection over already-written
       // shuffle files, never the corpus-side work.
       //
       // INVARIANT (load-bearing, not style): `large` must stay
-      // lazy-paired with the ONE checksum action at the bottom of this
+      // lazy-paired with the ONE probe action at the bottom of this
       // round. The shuffle-dedup argument above only bounds the race
       // WITHIN a single job — adding any action between here and
-      // `checksum(small)` (a debug count, a convergence metric, an
+      // `isStarForest(small)` (a debug count, a convergence metric, an
       // eager checkpoint of a derived frame) splits the round into two
       // jobs that each reach this unmaterialized checkpoint and
-      // silently reintroduces the q98-class concurrent-first-
-      // computation race the old eager checkpoint existed to prevent.
+      // silently reintroduces the concurrent-first-computation race an
+      // eager checkpoint prevents.
       // If you need a mid-round action, flip this back to
       // localCheckpoint() (eager) first.
       val large = nbrs.join(mins, "u")
@@ -159,11 +149,10 @@ object ConnectedComponents {
         .union(large.select(col("dst").as("u"), col("src").as("v")))
       val mins2 = nbrs2.groupBy(col("u"))
         .agg(min(least(col("v"), col("u"))).as("m"))
-      // LAZY checkpoint: the checksum action below is the round's one
+      // LAZY checkpoint: the probe action below is the round's one
       // materialization pass — it computes `large`, then small,
       // writes both frames' checkpoint blocks, and aggregates the
-      // convergence scalar in a single job (the round-11
-      // lazy-checkpoint-plus-action pattern).
+      // convergence scalar in a single job.
       val small = nbrs2.join(mins2, "u")
         .filter(col("v") <= col("u"))
         .select(col("v").as("src"), col("m").as("dst"))
@@ -176,7 +165,7 @@ object ConnectedComponents {
       converged = isStarForest(small)
       edges = small
     }
-    // Fixpoint shape (round 21 — relied on, so proved here): converged
+    // Fixpoint shape (relied on, so proved here): converged
     // now means the structural probe verified the edge set IS a
     // disjoint union of stars rooted at component minima (and any
     // checksum-stable set is necessarily one). Sketch for the
@@ -189,12 +178,9 @@ object ConnectedComponents {
     // neighborhood contains that smaller node — the set changed,
     // contradiction. Hence at the detected fixpoint no dst is ever a
     // src: the dst side is EXACTLY the component minima, and the roots
-    // are `edges.dst.distinct` directly — the anti-join the first cut
-    // used to separate roots from members re-derived that set the hard
-    // way (two node-sized distincts + an anti-join, ~3 exchanges per
-    // consumer occurrence of the label frame). The spec pins equality
-    // with union-find and minLabelClusters on real + generated graphs,
-    // planted-star cases included.
+    // are `edges.dst.distinct` directly, with no anti-join separating
+    // roots from members. The spec pins equality with union-find on
+    // real + generated graphs, planted-star cases included.
     val labeled = edges.select(col("src").as("v"), col("dst").as("lbl"))
     val roots = edges.select(col("dst").as("v")).distinct()
       .select(col("v"), col("v").as("lbl"))

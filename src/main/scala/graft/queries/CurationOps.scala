@@ -1693,9 +1693,9 @@ object CurationOps {
     * generic vector near everything) without any threshold to tune —
     * the standard robustification of kNN graphs before community
     * detection. Edges feed star-contraction connected components
-    * (ops.ConnectedComponents.largeStarSmallStar — NOT q72's
-    * min-label; see the inline A/B note); output is every vector's
-    * cluster and size (singleton = own id), q134's shape.
+    * (ops.ConnectedComponents.largeStarSmallStar, the one CC
+    * primitive); output is every vector's cluster and size
+    * (singleton = own id), q134's shape.
     *
     * Scale shape: candidate generation is q87's within-cell pair join
     * through the factored [[cellMembers]] seam (O(Σ cell²), never
@@ -1708,7 +1708,7 @@ object CurationOps {
     * membership join is corpus-keyed and linear; the label side is
     * left un-hinted — it is PROVABLY ≤ N rows but can approach it on
     * a pathological corpus, so AQE's runtime stats decide broadcast
-    * (the q134 conditional-broadcast rationale, structural form).
+    * (q112's and q134's rule).
     *
     * Cross-engine exactness: cosines are the sequenced-fold doubles
     * (bit-identical), ranks break ties on (cos DESC, neighbor id),
@@ -1859,14 +1859,10 @@ object CurationOps {
           col("k2.src") === col("k1.nb") && col("k2.nb") === col("k1.src") &&
             col("k1.src") < col("k1.nb"))
         .select(col("k1.src").as("id_a"), col("k1.nb").as("id_b"))
-      // star-contraction, NOT minLabelClusters: a mutual-kNN graph on
-      // a real corpus is CHAIN-shaped (each vector keeps ≤k partners,
-      // so components are long paths, not dense cliques), and
-      // min-label propagation pays O(diameter) rounds — measured
-      // 8.35 s solo at sf0.1 vs 2.6 s with the O(log n) star rounds,
-      // identical labels (SCALING round 18). q72 keeps min-label
-      // because near-dup cliques are dense/shallow; this graph is the
-      // geometry the q111 scale twin exists for.
+      // a mutual-kNN graph on a real corpus is CHAIN-shaped (each
+      // vector keeps ≤k partners, so components are long paths, not
+      // dense cliques): star contraction's O(log n) rounds do not grow
+      // with that diameter.
       val labels = graft.ops.ConnectedComponents.largeStarSmallStar(mutual)
       val sized = labels.join(
           labels.groupBy(col("lbl")).agg(count(lit(1)).as("n_members")), "lbl")
@@ -1943,7 +1939,7 @@ object CurationOps {
       LEFT JOIN lbl l ON l.v = emb.vec_id
       LEFT JOIN cs ON cs.lbl = l.lbl
       ORDER BY emb.vec_id""".stripMargin),
-    "mutual-kNN graph clustering: q87's cell-bounded candidate join (factored cellMembers seam) -> per-vector top-3 by sequenced-fold cosine -> keep edges IN BOTH kNN lists (hub edges die without a threshold dial) -> star-contraction CC (largeStarSmallStar; min-label rejected by a measured A/B - mutual-kNN components are chain-shaped) -> every vector's cluster + size; knn list <= k*N checkpointed at its self-join fan-out, label join linear and AQE-decided")
+    "mutual-kNN graph clustering: q87's cell-bounded candidate join (factored cellMembers seam) -> per-vector top-3 by sequenced-fold cosine -> keep edges IN BOTH kNN lists (hub edges die without a threshold dial) -> star-contraction CC (largeStarSmallStar, O(log n) rounds on chain-shaped mutual-kNN components) -> every vector's cluster + size; knn list <= k*N checkpointed at its self-join fan-out, label join linear and AQE-decided")
 
   // ---------------------------------------------------------------------
   // q140 — cluster-aware diversity sampling (per-cluster √-quotas)

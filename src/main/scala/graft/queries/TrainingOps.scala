@@ -149,28 +149,25 @@ object TrainingOps {
     * rollup, same shape as q67's.
     *
     * Scale shape: the cluster labels are a pair-graph-sized frame
-    * (near-dups only) — broadcast-able on corpora where near-dups are
-    * rare, but on a real crawl with 20–30% near-dup membership it is
-    * corpus-fraction-sized and a forced broadcast OOMs the driver. The
-    * hint is therefore CONDITIONAL: vertices are bounded by 2× the
-    * already-materialized pair count, so one cheap count on the
-    * checkpointed pair frame decides; over the threshold the
-    * degradation path is a plain shuffled left join on doc_id (AQE may
-    * still upgrade it to broadcast from runtime stats). The rest is
-    * q67's map + one small hash agg. Composes q72's O(diameter) or
-    * q111's O(log n) CC — identical labels either way
-    * (ConnectedComponentsSpec).
+    * (near-dups only) — small where near-dups are rare, but on a real
+    * crawl with 20–30% near-dup membership it is corpus-fraction-sized
+    * and a forced broadcast would OOM the driver. The label join is
+    * therefore a plain left join on doc_id with no hint: AQE's runtime
+    * conversion broadcasts the label side from its measured size when
+    * it fits the threshold, and otherwise keeps the shuffled join (the
+    * corpus side is already hash-partitioned on doc_id by
+    * documentsSpread). The rest is q67's map + one small hash agg.
+    * Labels come from q72's star-contraction CC.
     */
   val q112ClusterSafeSplit = Q(
     "q112_cluster_safe_split",
     (s, dir) => {
       val pairs = LlmOps.nearDupPairs(s, dir)
-        .select(col("id_a"), col("id_b")).localCheckpoint()
-      val labels = minLabelClusters(pairs)
+        .select(col("id_a"), col("id_b"))
+      val labels = graft.ops.ConnectedComponents.largeStarSmallStar(pairs)
         .select(col("v").as("doc_id"), col("lbl"))
       T.documentsSpread(s, dir)
-        .join(broadcastIfBounded(s, labels, pairs, bytesPerRow = 64L),
-          Seq("doc_id"), "left")
+        .join(labels, Seq("doc_id"), "left")
         .withColumn("rep", coalesce(col("lbl"), col("doc_id")))
         .withColumn("bucket",
           expr("cast(conv(substring(md5(cast(rep as string)), 1, 4), 16, 10) as int) % 10"))
@@ -214,7 +211,7 @@ object TrainingOps {
                   WHEN bucket = 8 THEN 'val' ELSE 'test' END AS split,
         source, COUNT(*) AS n_docs, CAST(SUM(n_toks) AS BIGINT) AS n_tokens
       FROM b GROUP BY 1, 2 ORDER BY split, source""".stripMargin),
-    "cluster-safe reproducible split: membership hashes the q72 cluster representative (own id when unclustered) so near-dup clusters move as one unit — the leakage guard composing CC + q67's hash split; label join broadcasts only when the pair-count bound fits the threshold, else plain shuffled left join")
+    "cluster-safe reproducible split: membership hashes the q72 cluster representative (own id when unclustered) so near-dup clusters move as one unit — the leakage guard composing q72's star-contraction CC + q67's hash split; a plain left join on doc_id that AQE broadcasts from the label frame's measured size when it fits the threshold, else a shuffled join")
 
   // ---------------------------------------------------------------------
   // q68 — incremental (snapshot-delta) dedup
@@ -530,96 +527,6 @@ object TrainingOps {
     "Count-Min heavy hitters: fixed-16KiB mergeable counter matrix (typed Aggregator, map-side partial reduce — O(partitions*d*w) shuffle vs O(vocabulary)); md5-derived indices make the sketch engine-exact, overestimate >= 0 surfaced per token")
 
   // ---------------------------------------------------------------------
-  // q72 — near-dup cluster resolution (connected components)
-  // ---------------------------------------------------------------------
-
-  /** Dedup CLUSTER resolution — the step q32/q33/q42 stop short of:
-    * near-dup PAIRS are only half the dedup story; keeping one
-    * representative per duplicate GROUP needs the connected components
-    * of the pair graph (pairs (a,b),(b,c) must collapse to ONE cluster
-    * {a,b,c} even though (a,c) was never emitted). Components come from
-    * iterative min-label propagation — the Pregel formulation: every
-    * node starts as its own label, each round takes the min of its own
-    * and its neighbors' labels, convergence in O(component diameter)
-    * rounds. The driver loop tests convergence with one scalar
-    * aggregate per round (the standard iterative-Spark pattern — a
-    * scalar crosses to the driver, never data): labels only ever
-    * DECREASE, so Σlabels is strictly monotone until the fixpoint and
-    * "sum unchanged ⇔ converged" — one cheap agg instead of a
-    * join-and-compare against the previous round. Each round is one
-    * join + one hash agg on the PAIR graph, which is orders of
-    * magnitude smaller than the corpus. At 100 TB scale this is
-    * GraphX/Pregel's connected-components shape on a frame; near-dup
-    * diameters are small (dup clusters are dense), so rounds stay few.
-    *
-    * The oracle is DuckDB's RECURSIVE CTE computing min reachable
-    * label over the same pair graph — transitive closure, a genuinely
-    * independent formulation of connectivity (no iteration-count
-    * parameter to accidentally share). Output: one row per clustered
-    * doc group — representative (min doc_id), size, '|'-joined members.
-    */
-  /** The min-label propagation loop, extracted so it runs on ANY edge
-    * list (TrainingOpsSpec drives it with a long-diameter path graph;
-    * q72 feeds it the q32 pair graph). Every `checkpointEvery` rounds
-    * the label frame is `localCheckpoint`ed instead of persisted:
-    * without it the logical plan deepens by one join per round and a
-    * long-diameter component pays plan-compilation cost quadratic in
-    * rounds (and eventually overflows the optimizer). The predecessor
-    * is unpersisted only after the successor has materialized (the
-    * convergence aggregate is eager), the same discipline Crawl's BFS
-    * uses.
-    *
-    * Returns one row per vertex: (v, lbl) with lbl = component min.
-    */
-  def minLabelClusters(pairs: DataFrame, checkpointEvery: Int = 3): DataFrame = {
-    require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val edges = pairs.select(col("id_a").as("v"), col("id_b").as("u"))
-      .union(pairs.select(col("id_b").as("v"), col("id_a").as("u")))
-      .persist()
-    def lblSum(df: DataFrame): Long =
-      Option(df.agg(sum(col("lbl"))).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-    var labels = edges.select(col("v")).distinct()
-      .withColumn("lbl", col("v")).persist()
-    // No baseline sum over the INITIAL label frame (round 21): labels
-    // start at v and round 1 lowers at least one label for ANY
-    // non-empty edge set (every edge has two distinct endpoints), so
-    // the initial action could only ever match round 1 on an empty
-    // graph — one wasted action per call on every real input.
-    // Convergence is two consecutive ROUND sums agreeing.
-    var prevSum: Option[Long] = None
-    var converged = false
-    var round = 0
-    while (!converged) {
-      val nbr = edges.as("e")
-        .join(labels.as("l"), col("e.u") === col("l.v"))
-        .select(col("e.v").as("v"), col("l.lbl").as("lbl"))
-      val merged = labels.select(col("v"), col("lbl")).union(nbr)
-        .groupBy(col("v")).agg(min(col("lbl")).as("lbl"))
-      round += 1
-      val next =
-        if (round % checkpointEvery == 0) merged.localCheckpoint()
-        else merged.persist()
-      val s = lblSum(next)
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
-      labels.unpersist()
-      labels = next
-    }
-    // the doubled edge list is dead once converged — without this every
-    // call leaks it into executor storage for the session lifetime
-    edges.unpersist()
-    // Hand back a lineage-severed checkpoint rather than the final
-    // round's persist(): the cache entry would otherwise pin blocks
-    // (and the edge lineage under them) for the session; checkpoint
-    // blocks free with the frame. The extra pass copies only the tiny
-    // (v, lbl) frame.
-    val out = labels.localCheckpoint()
-    labels.unpersist()
-    out
-  }
-
-  // ---------------------------------------------------------------------
   // q110 — snapshot MERGE (CDC upsert/delete, the Delta-MERGE shape)
   // ---------------------------------------------------------------------
 
@@ -699,21 +606,37 @@ object TrainingOps {
       WHERE action <> 'deleted' ORDER BY doc_id""".stripMargin),
     "snapshot MERGE: one full-outer doc_id hash join + CASE projection applying updates/tombstones/inserts with MERGE-clause precedence — the Delta/Iceberg upsert shape, keyed and linear; layout-level file pruning is a write-time layout concern (bucketing, compaction)")
 
+  // ---------------------------------------------------------------------
+  // q72 — near-dup cluster resolution (connected components)
+  // ---------------------------------------------------------------------
+
+  /** Dedup CLUSTER resolution — the step q32/q33/q42 stop short of:
+    * near-dup PAIRS are only half the dedup story; keeping one
+    * representative per duplicate GROUP needs the connected components
+    * of the pair graph (pairs (a,b),(b,c) must collapse to ONE cluster
+    * {a,b,c} even though (a,c) was never emitted). Components come from
+    * [[graft.ops.ConnectedComponents]]'s large-star/small-star
+    * contraction: O(log n) rounds regardless of component diameter, so
+    * a crawl-scale graph with chain-shaped mirror clusters costs the
+    * same round count as a dense one. Every vertex is labeled with its
+    * component minimum.
+    *
+    * The oracle is DuckDB's RECURSIVE CTE computing min reachable
+    * label over the same pair graph — transitive closure, a genuinely
+    * independent formulation of connectivity (no iteration-count
+    * parameter to accidentally share). Output: one row per clustered
+    * doc group — representative (min doc_id), size, '|'-joined members.
+    */
   val q72DupClusters = Q(
     "q72_dup_clusters",
     (s, dir) => {
-      // EAGER localCheckpoint, not lazy persist: minLabelClusters fans
-      // the pair frame into a two-branch union whose stages launch
-      // concurrently in the first job and RACE to populate a lazy
-      // cache, re-running the whole q32 candidate DAG per branch (the
-      // q98 lesson; the sf1 decade audit measured q72's shuffle at 34x
-      // for 10x data through exactly this). Materializing once up
-      // front restores the linear row: every branch reads checkpoint
-      // blocks, never the lineage.
+      // No eager pair checkpoint: the contraction's canonical edge frame
+      // ends in a distinct, so every round-1 branch reads that one
+      // shuffle and the LSH generation runs once, inside round 1's
+      // action.
       val pairs = LlmOps.nearDupPairs(s, dir)
-        .select(col("id_a"), col("id_b")).localCheckpoint()
-      val labels = minLabelClusters(pairs)
-      labels
+        .select(col("id_a"), col("id_b"))
+      graft.ops.ConnectedComponents.largeStarSmallStar(pairs)
         .groupBy(col("lbl").as("cluster_id"))
         .agg(count(lit(1)).as("n_docs"),
           array_join(sort_array(collect_list(col("v"))), "|").as("members"))
@@ -743,42 +666,20 @@ object TrainingOps {
       SELECT lbl AS cluster_id, COUNT(*) AS n_docs,
         array_to_string(list_sort(array_agg(v)), '|') AS members
       FROM lbl GROUP BY lbl ORDER BY cluster_id""".stripMargin),
-    "near-dup cluster resolution: Pregel-style min-label propagation over the near-dup pair graph (LlmOps.nearDupPairs: q33 LSH generation, ≡ q32 exact) (O(diameter) rounds, each one join + agg on the tiny pair frame) vs a DuckDB recursive-CTE transitive closure — completes pairs -> clusters -> representative dedup")
+    "near-dup cluster resolution: large-star/small-star contraction (ops.ConnectedComponents, O(log n) rounds regardless of diameter, per-round shuffles over a shrinking edge set) over the near-dup pair graph (LlmOps.nearDupPairs: q33 LSH generation, ≡ q32 exact) vs a DuckDB recursive-CTE transitive closure — completes pairs -> clusters -> representative dedup")
 
   // ---------------------------------------------------------------------
-  // q111 — dup clusters via star contraction (the O(log n) CC twin)
+  // q111 — q72's dup clusters under the star-contraction name
   // ---------------------------------------------------------------------
 
-  /** q72's clusters computed by [[graft.ops.ConnectedComponents]]'s
-    * alternating large-star/small-star contraction instead of
-    * min-label propagation: O(log n) rounds regardless of graph
-    * DIAMETER, where q72 needs O(diameter) — on a crawl-scale near-dup
-    * graph with chain-shaped mirror clusters, the difference between
-    * ~30 rounds and thousands. Same oracle as q72 (the answer is the
-    * answer); the algorithm split mirrors q32/q33: one registration
-    * per scale regime, equality pinned in ConnectedComponentsSpec on
-    * both the real pair graph and generated graphs vs union-find.
+  /** q72 under its second registry name: one builder and one oracle,
+    * both names kept in the driver contract.
     */
   val q111StarClusters = Q(
     "q111_star_clusters",
-    (s, dir) => {
-      // NO eager pair checkpoint here (round 21), unlike q72/q134:
-      // largeStarSmallStar's canonical edge frame ends in a distinct
-      // whose shuffle is the single point every round-1 branch reads,
-      // so the LSH generation runs once inside round 1's first action
-      // — q72's two-branch-union race does not exist on this path,
-      // and the eager form paid a dedicated materialization job for a
-      // frame with exactly one consumer.
-      val pairs = LlmOps.nearDupPairs(s, dir)
-        .select(col("id_a"), col("id_b"))
-      graft.ops.ConnectedComponents.largeStarSmallStar(pairs)
-        .groupBy(col("lbl").as("cluster_id"))
-        .agg(count(lit(1)).as("n_docs"),
-          array_join(sort_array(collect_list(col("v"))), "|").as("members"))
-        .orderBy(col("cluster_id"))
-    },
-    q72DupClusters.oracle, // the same recursive-CTE transitive closure
-    "near-dup clusters via O(log n) large-star/small-star contraction (diameter-independent, per-round shuffles over a shrinking edge set) — the 100 TB twin of q72's O(diameter) min-label propagation")
+    q72DupClusters.fn,
+    q72DupClusters.oracle,
+    "near-dup clusters via O(log n) large-star/small-star contraction — q72's builder and recursive-CTE oracle under the name the star-contraction twin was registered with")
 
   // ---------------------------------------------------------------------
   // q73 — intra-document repetition filter (Gopher-style)
@@ -1863,53 +1764,34 @@ object TrainingOps {
   // q134 — soft dedup: 1/cluster-size training weights
   // ---------------------------------------------------------------------
 
-  /** Conditional broadcast of a pair-graph-derived frame, q112's
-    * discipline factored: vertices are bounded by 2× the materialized
-    * pair count, so one count of the checkpointed pair frame, taken on
-    * every call, decides; over the threshold the degradation path is a
-    * plain shuffled join (AQE may still upgrade from runtime stats).
-    * `bytesPerRow` is a deliberately fat per-row estimate so the hint
-    * stays on the safe side.
-    */
-  private def broadcastIfBounded(s: org.apache.spark.sql.SparkSession,
-      frame: DataFrame, pairs: DataFrame, bytesPerRow: Long): DataFrame = {
-    val thrStr =
-      s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-    val thresholdBytes = scala.util.Try(thrStr.toLong).getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(thrStr))
-    if (thresholdBytes > 0 && pairs.count() * 2 * bytesPerRow <= thresholdBytes)
-      broadcast(frame)
-    else frame
-  }
-
   /** Soft dedup — the modern alternative to DROPPING near-duplicates:
     * keep every document and emit a training weight 1/|cluster| so a
     * cluster of n near-copies contributes one document's worth of
     * gradient in expectation (the loss-reweighting form of dedup used
     * when provenance or coverage forbids deletion). Composes q72's
-    * machinery unchanged: q33's LSH pair graph → min-label CC →
+    * machinery unchanged: q33's LSH pair graph → star-contraction CC →
     * cluster sizes → weight; docs in no cluster weight 1.0.
     *
     * Scale shape: the pair graph and its label frame are near-dup-
     * sized, not corpus-sized; sizes is one tiny agg over labels; the
-    * only corpus-scale work is ONE left join (conditionally broadcast
-    * via the q112 bound — a real crawl's 20-30% dup membership would
-    * blow a forced broadcast) plus the projection. Weight is a single
-    * IEEE division of exact integers — identical in both engines.
+    * only corpus-scale work is ONE left join plus the projection. The
+    * join carries no hint (q112's rule: AQE broadcasts the label side
+    * from its measured size, and a real crawl's 20-30% dup membership
+    * keeps the shuffled join). Weight is a single IEEE division of
+    * exact integers — identical in both engines.
     */
   val q134SoftDedupWeights = Q(
     "q134_softdedup_weights",
     (s, dir) => {
       val pairs = LlmOps.nearDupPairs(s, dir)
-        .select(col("id_a"), col("id_b")).localCheckpoint()
-      val labels = minLabelClusters(pairs)
+        .select(col("id_a"), col("id_b"))
+      val labels = graft.ops.ConnectedComponents.largeStarSmallStar(pairs)
       val sized = labels.join(
         labels.groupBy(col("lbl")).agg(count(lit(1)).as("n_members")),
         "lbl")
         .select(col("v").as("doc_id"), col("lbl"), col("n_members"))
       T.documentsSpread(s, dir).select(col("doc_id"))
-        .join(broadcastIfBounded(s, sized, pairs, bytesPerRow = 96L),
-          Seq("doc_id"), "left")
+        .join(sized, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("lbl"), col("doc_id")).as("cluster_id"),
           coalesce(col("n_members"), lit(1L)).as("n_members"),
@@ -1946,7 +1828,7 @@ object TrainingOps {
       LEFT JOIN lbl l ON l.v = d.doc_id
       LEFT JOIN cs ON cs.lbl = l.lbl
       ORDER BY d.doc_id""".stripMargin),
-    "soft dedup: per-document training weight 1/|near-dup cluster| (1.0 unclustered) — loss reweighting instead of deletion, composing the q33 LSH pair graph + min-label CC + one conditionally-broadcast corpus left join; a cluster of n near-copies contributes one document's expected gradient")
+    "soft dedup: per-document training weight 1/|near-dup cluster| (1.0 unclustered) — loss reweighting instead of deletion, composing the q33 LSH pair graph + star-contraction CC + one corpus left join (AQE broadcasts the label side when its measured size fits); a cluster of n near-copies contributes one document's expected gradient")
 
   // ---------------------------------------------------------------------
   // q142 — length-bucketed batch assembly (dynamic batching manifest)

@@ -1,0 +1,36 @@
+package graft.queries
+
+import graft.SparkSpec
+
+/** Configuration invariance of the connected-components family: q72,
+  * q112 and q134 label through star contraction and join the labels
+  * back with no broadcast hint, so the planner (static or AQE) alone
+  * picks every join and partition count. Each query must give the same
+  * order-normalized rows under each setting below as in the default
+  * session; `withConf` restores every key in a `finally`.
+  */
+class CcInvarianceSpec extends SparkSpec {
+
+  private val sf = "/root/testdata/sf0.001"
+
+  private val settings: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.shuffle.partitions" -> "7",
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  private def normalized(q: graft.Q): Seq[String] =
+    q.fn(spark, sf).collect().map(_.toSeq.mkString("\u0001")).toSeq.sorted
+
+  Seq(TrainingOps.q72DupClusters, TrainingOps.q112ClusterSafeSplit,
+      TrainingOps.q134SoftDedupWeights).foreach { q =>
+    test(s"${q.name} rows are invariant under shuffle partitions, AQE and broadcast settings") {
+      val base = normalized(q)
+      assert(base.nonEmpty, s"${q.name}: empty result at sf0.001")
+      settings.foreach { case (k, v) =>
+        val got = withConf(k -> v)(normalized(q))
+        assert(got === base, s"${q.name} changed under $k=$v")
+      }
+    }
+  }
+}

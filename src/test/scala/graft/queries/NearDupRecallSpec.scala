@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Each test then pins SET EQUALITY against the production query, so
   * recall=1 AND precision=1 both hold at the bench SF; q72/q89 are
   * re-derived driver-side (union-find / loser rule) from the truth
-  * pairs, independent of the Pregel loop and join pipeline they pin.
+  * pairs, independent of the CC loop and join pipeline they pin.
   */
 class NearDupRecallSpec extends SparkSpec {
 
@@ -219,21 +219,13 @@ class NearDupRecallSpec extends SparkSpec {
     got.unpersist()
   }
 
-  test("q72 Pregel clusters == driver-side union-find over truth pairs at sf0.1") {
+  test("q72 star-contraction clusters == driver-side union-find over truth pairs at sf0.1") {
     // independent transitive closure: path-compressing union-find
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    truthPairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val members = truthPairs.flatMap(p => Seq(p._1, p._2))
-    val expected = members.groupBy(find).map { case (_, vs) =>
-      (vs.min, vs.size.toLong, vs.toSeq.sorted.mkString("|"))
-    }.toSet
+    val expected = graft.UnionFind.labels(truthPairs.toSeq).groupBy(_._2)
+      .map { case (root, vs) =>
+        val ms = vs.keys.toSeq.sorted
+        (root, ms.size.toLong, ms.mkString("|"))
+      }.toSet
     val got = TrainingOps.q72DupClusters.fn(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     assert(got === expected,

@@ -13,6 +13,15 @@ class PlanAuditSpec extends SparkSpec {
   private def executedPlan(q: graft.Q): String =
     q.fn(spark, sf).queryExecution.executedPlan.toString
 
+  /** The AQE-final plan: runs the frame, then reads the plan it ran.
+    * For joins whose broadcast choice is left to AQE's runtime
+    * conversion, the static plan above shows only the planned join. */
+  private def finalPlan(q: graft.Q): String = {
+    val df = q.fn(spark, sf)
+    df.collect()
+    df.queryExecution.executedPlan.toString
+  }
+
   test("q41 evaluates the native parse_page exactly once per row (parse-once struct)") {
     val plan = executedPlan(WikiOps.q41HtmlExtract)
     val n = "parse_page".r.findAllIn(plan).length
@@ -234,15 +243,18 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q112 broadcasts the label side only when the pair-count bound fits the threshold") {
-    // Regime 1 (default 10 MB threshold, tiny pair graph): the hint fires
-    // and the label join is a broadcast join.
-    val broad = executedPlan(TrainingOps.q112ClusterSafeSplit)
+    // The join carries no hint: AQE's runtime conversion decides from
+    // the label frame's measured size (its vertices are bounded by 2x
+    // the pair count). Regime 1 (default 10 MB threshold, tiny pair
+    // graph): the final plan's label join is a broadcast join.
+    val broad = finalPlan(TrainingOps.q112ClusterSafeSplit)
+    assert(broad.contains("isFinalPlan=true"), broad)
     assert(broad.contains("BroadcastHashJoin"), broad)
     // Regime 2 (threshold disabled, standing in for a corpus-fraction-
-    // sized label frame): no forced hint — the degradation path is a
-    // plain shuffled join, never a driver-side broadcast build.
+    // sized label frame): the join stays a plain shuffled join, never a
+    // driver-side broadcast build.
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val shuffled = executedPlan(TrainingOps.q112ClusterSafeSplit)
+      val shuffled = finalPlan(TrainingOps.q112ClusterSafeSplit)
       assert(!shuffled.contains("BroadcastHashJoin"), shuffled)
       assert(shuffled.contains("SortMergeJoin") || shuffled.contains("ShuffledHashJoin"),
         shuffled)
@@ -263,7 +275,9 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q134 broadcasts the label side and prunes the corpus scan to doc_id") {
-    val plan = executedPlan(TrainingOps.q134SoftDedupWeights)
+    // AQE-final, as for q112: the broadcast is AQE's runtime choice
+    val plan = finalPlan(TrainingOps.q134SoftDedupWeights)
+    assert(plan.contains("isFinalPlan=true"), plan)
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(plan.contains("ReadSchema: struct<doc_id:bigint>"),
       s"weight join needs only doc_id from the corpus scan:\n$plan")

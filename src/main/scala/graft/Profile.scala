@@ -1,12 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.LongAdder
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import scala.collection.concurrent.TrieMap
 
 /** Diagnostics main: one JSON record per target from a single
@@ -27,18 +30,19 @@ import scala.collection.concurrent.TrieMap
   * A query runs once untimed (footer reads, codegen, JIT), then once
   * measured: the measured run builds the frame, so construction-time
   * actions count, and drives the frame's OWN QueryExecution through
-  * `toRdd`, discarding rows on the executors. The written plan is
-  * therefore the AQE-final one. A noop write (or `Dataset.foreach`)
+  * `toRdd` inside a SQL execution, discarding rows on the executors.
+  * The written plan is therefore the AQE-final one. A noop write (or `Dataset.foreach`)
   * executes a separate QueryExecution and leaves the frame's plan at
   * isFinalPlan=false; `collect` would pull corpus-sized outputs onto the
   * driver.
   *
   * Record fields: `wall_s`, `jobs`, `stages`, `tasks`, `task_s` (summed
   * task durations), `input_bytes`, `shuffle_write_bytes`, `job_walls`
-  * (`[{id, ms, callsite}]`) and `top_stages` (`[{id, task_s, name}]`, the
-  * ten with the most task time). Input and shuffle bytes are properties
-  * of plan and data, free of host noise: comparing two scale factors
-  * shows which operators move data linearly, sublinearly or not at all.
+  * (`[{id, ms, callsite}]`), `top_stages` (`[{id, task_s, name}]`, the
+  * ten with the most task time) and `plan_desc_max_bytes`. Input and
+  * shuffle bytes are properties of plan and data, free of host noise:
+  * comparing two scale factors shows which operators move data
+  * linearly, sublinearly or not at all.
   */
 object Profile {
 
@@ -81,6 +85,7 @@ object Profile {
     private val stageNames = TrieMap.empty[Int, String]
     private val stageTaskMs = TrieMap.empty[Int, LongAdder]
     private val tasks, taskMs, inputBytes, shuffleBytes = new LongAdder
+    private val planDescMax = new AtomicLong
 
     // a job's callsite is its result stage's name, the stage created last
     override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -104,9 +109,20 @@ object Profile {
       }
     }
 
+    // Spark formats the physical plan on the driver at every SQL execution
+    // start and AQE plan update, and its status store keeps the text
+    override def onOtherEvent(e: SparkListenerEvent): Unit = Some(e).collect {
+      case s: SparkListenerSQLExecutionStart => s.physicalPlanDescription
+      case u: SparkListenerSQLAdaptiveExecutionUpdate => u.physicalPlanDescription
+    }.foreach(d => planDescMax.accumulateAndGet(d.getBytes(UTF_8).length, math.max))
+
+    /** UTF-8 bytes of the largest plan description posted since `reset`. */
+    def planDescMaxBytes: Long = planDescMax.get
+
     def reset(): Unit = {
       jobStarts.clear(); jobWalls.clear(); stageNames.clear(); stageTaskMs.clear()
       Seq(tasks, taskMs, inputBytes, shuffleBytes).foreach(_.reset())
+      planDescMax.set(0L)
     }
 
     /** One JSON record; `extra` is appended verbatim as further fields. */
@@ -124,6 +140,7 @@ object Profile {
         s""""jobs":${jobStarts.size},"stages":${stageNames.size},"tasks":${tasks.sum()},""" +
         s""""task_s":${Bench.d2(taskMs.sum() / 1e3)},"input_bytes":${inputBytes.sum()},""" +
         s""""shuffle_write_bytes":${shuffleBytes.sum()},""" +
+        s""""plan_desc_max_bytes":${planDescMax.get},""" +
         s""""job_walls":${jobs.mkString("[", ",", "]")},""" +
         s""""top_stages":${top.mkString("[", ",", "]")}$extra}"""
     }
@@ -143,8 +160,12 @@ object Profile {
   }
 
   /** Run `df` through its own QueryExecution, discarding rows on the
-    * executors. */
-  private def execute(df: DataFrame): Unit = df.queryExecution.toRdd.foreach(_ => ())
+    * executors, inside a SQL execution as an action runs: its jobs carry
+    * the execution id, and its plan descriptions are posted. */
+  private def execute(df: DataFrame): Unit =
+    SQLExecution.withNewExecutionId(df.queryExecution, Some("profile")) {
+      df.queryExecution.toRdd.foreach(_ => ())
+    }
 
   /** Drop persisted frames and checkpoint blocks so no run inherits
     * another's stored state (`clearCache` alone misses the latter). */
@@ -182,7 +203,6 @@ object Profile {
     val r = curation.Curate.run(spark, sfDir, outDir, verbose = true)
     val wall = (System.nanoTime() - t0) / 1e9
     GraftListenerBridge.drainListenerBus(spark.sparkContext)
-    release(spark)
     probe.record("curate", sfDir, wall,
       s""","funnel":{"input":${r.nInput},"quality":${r.nQuality},"lm":${r.nLmPass},""" +
         s""""exact":${r.nExactDedup},"near":${r.nNearDedup},"media":${r.nMediaDedup},""" +

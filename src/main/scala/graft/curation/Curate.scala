@@ -1,7 +1,9 @@
 package graft.curation
 
 import graft.{Tables => T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.Stored
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -60,9 +62,10 @@ import org.apache.spark.sql.functions._
   * assignments (CurateSpec pins this).
   *
   * Scale notes: stages communicate by doc_id (joins on the key, never
-  * row position); the only corpus-sized shuffles are the ones the
-  * underlying queries document (gram explode for decontamination,
-  * md5-keyed dedup); the eval probe set, rate table, and pair list are
+  * row position); the corpus-sized shuffles are the ones the underlying
+  * queries document (gram explode for decontamination, md5-keyed dedup)
+  * plus a doc_id shuffle of the stored frame that stages 4b, 5 and 6
+  * join on; the eval probe set, rate table, and pair list are
   * broadcast-sized. The write partitions by (source, shard_id), so
   * downstream training readers prune to their shard without listing
   * the corpus.
@@ -204,15 +207,21 @@ object Curate {
   }
 
   /** Run the full pipeline; write shards under `outDir`; return the
-    * per-stage funnel. `evalIds` marks the held-out eval docs used as
-    * the decontamination probe set (they never enter the corpus).
+    * per-stage funnel. Docs with `doc_id < evalIdBelow` are the held-out
+    * eval docs: the decontamination probe set, never in the corpus.
     *
-    * Each stage's frame is persisted before its funnel count and
-    * released once the NEXT stage has materialized: without this,
-    * every count() re-executes the whole chain from the scan — six
-    * actions = O(stages²) corpus passes, invisible at fixture scale
-    * and ruinous at 100 TB. Storage held at any moment is at most two
-    * stages (current + successor), linear like the pipeline itself.
+    * Each stage's frame is stored once (left lazy, every later action
+    * would re-run the chain from the scan: O(stages²) corpus passes).
+    * From exact dedup on, one eager `localCheckpoint` stores a stage and
+    * observes its funnel count ([[graft.ops.Stored]]): the count costs
+    * no job, and the next stage plans from a LogicalRDD instead of
+    * nesting every earlier stage's plan. `docs` and `quality` are
+    * persisted instead, for the reason beside each. Once a stage is
+    * stored, the stage before it and every checkpoint and persist made
+    * while building it (pairs, bands, probe, bitmap, the kernels' own)
+    * are released, and the run releases all it stored before it returns,
+    * also when it throws. The ledger is the context's persistent-RDD set:
+    * no other thread may persist on the same context meanwhile.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       tokenBudget: Long = 4096L, evalIdBelow: Long = 10L,
@@ -233,6 +242,26 @@ object Curate {
       "need 0 < chunkStride <= chunkWindow (stride > window would skip tokens)")
     require(chunkWindow <= tokenBudget,
       "a single chunk must fit a shard: chunkWindow <= tokenBudget")
+    val held = new Held(spark.sparkContext)
+    try pipeline(spark, sfDir, outDir, tokenBudget, evalIdBelow, chunkWindow,
+      chunkStride, lmTailFrac, semThr, mixture, qualityPolicy, samplingPolicy,
+      verbose, held)
+    finally held.release(held.ids)
+  }
+
+  /** The RDDs persisted or checkpointed since construction. */
+  private final class Held(sc: org.apache.spark.SparkContext) {
+    private val before = sc.getPersistentRDDs.keySet.toSet
+    def ids: Set[Int] = sc.getPersistentRDDs.keySet.toSet -- before
+    def release(rdds: Set[Int]): Unit =
+      rdds.flatMap(sc.getPersistentRDDs.get).foreach(_.unpersist(blocking = true))
+  }
+
+  private def pipeline(spark: SparkSession, sfDir: String, outDir: String,
+      tokenBudget: Long, evalIdBelow: Long, chunkWindow: Int, chunkStride: Int,
+      lmTailFrac: Double, semThr: Double, mixture: MixturePolicy,
+      qualityPolicy: QualityPolicy, samplingPolicy: SamplingPolicy,
+      verbose: Boolean, held: Held): Report = {
     // per-stage wall laps, printed only when the caller asks (Profile's
     // `curate` target does) — a library API stays quiet by default
     var __t = System.nanoTime()
@@ -240,6 +269,19 @@ object Curate {
       if (verbose) println(f"[curate-stage] $l ${(System.nanoTime() - __t) / 1e9}%.1f s")
       __t = System.nanoTime()
     }
+    // stores stage `name`, then releases everything the run held before
+    // (the previous stage and the scratch this one was built on)
+    def store(name: String, df: DataFrame, extra: Column*): Stored = {
+      val built = held.ids
+      val s = Stored.checkpoint(df, s"curate_$name", extra: _*)
+      held.release(built)
+      lap(name)
+      s
+    }
+
+    // persisted, not checkpointed: documentsSpread hash-partitions on
+    // doc_id, and the cache keeps that partitioning, so stage 1's doc_id
+    // join reads `docs` without a shuffle
     val docs = T.documentsSpread(spark, sfDir)
       .filter(col("doc_id") >= evalIdBelow)
       .persist()
@@ -250,11 +292,10 @@ object Curate {
     val scored = graft.queries.CurationOps.qualityScored(spark, sfDir)
       .filter(col("doc_id") >= evalIdBelow)
       .select(col("doc_id"), col("score"))
-    // persisted whichever branch built it: `quality` is evaluated at
-    // least 4 times (funnel count, lmScored's pair/unigram scans, the
-    // lmPass join) and `docs` is released right after the count below —
-    // without this every re-evaluation recomputes the parquet scan +
-    // score join (the round-19 policy refactor dropped it; ADVICE r19)
+    // persisted, not checkpointed, whichever branch built it: lmScored's
+    // pair and unigram scans and the lmPass join all read it, and the
+    // cache keeps its doc_id partitioning, so none of them shuffles it
+    // again (checkpointed, the sf0.001 run wrote 22% more shuffle bytes)
     val quality = (qualityPolicy match {
       case QualityPolicy.AbsoluteFloor =>
         docs.join(scored.filter(col("score") >= 0.05), "doc_id")
@@ -277,11 +318,11 @@ object Curate {
         val (fx, _, _, w3) = C.gdRounds(spark, sfDir, evalIdBelow)
         // count from the checkpointed design matrix, NOT from `ranked`
         // (same universe — every fx row scores), so the rank chain is
-        // never re-derived for a scalar (the q141 doubled-scan lesson).
-        // Driver-side scalar, not a crossJoin'd agg frame: it doubles
-        // as the gdStep non-emptiness guard (ADVICE r20 — an empty
-        // post-carveout matrix trains null weights that silently keep
-        // nothing) and a count on checkpoint blocks is one cheap job.
+        // never re-derived for a scalar. Driver-side scalar, not a
+        // crossJoin'd agg frame: it doubles as the gdStep non-emptiness
+        // guard (an empty post-carveout matrix trains null weights that
+        // silently keep nothing) and a count on checkpoint blocks is
+        // one cheap job.
         val nFx = fx.count()
         require(nFx > 0,
           s"TrainedDeciles: empty design matrix after carveout (evalIdBelow=$evalIdBelow) — " +
@@ -291,8 +332,7 @@ object Curate {
         // scores), so hand it to BlockRanks: below the 32k threshold
         // the plain-window form skips the split path's three extra
         // stages (range-sample job, checkpoint, offset join); above
-        // it the scale-safe split runs as before (round 21, guide
-        // §2.4 — the q141/q142 knownRows discipline applied here)
+        // it the scale-safe split runs
         val ranked = graft.ops.BlockRanks.withBlockRank(
           z, "__blk", Seq(col("z").desc, col("doc_id")), "rk",
           knownRows = nFx)
@@ -329,21 +369,17 @@ object Curate {
     // score), and an inner join would silently DROP those docs — a
     // stricter cut than the documented quantile tail. Unscoreable docs
     // pass this gate; the quality gate above already judged them.
-    val lmPass = quality.join(lmScores, Seq("doc_id"), "left")
+    val lmPass = store("lm", quality.join(lmScores, Seq("doc_id"), "left")
       .crossJoin(broadcast(lmThr))
       .filter(col("lm_score").isNull || col("lm_score") >= col("__lm_floor"))
-      .drop("lm_score", "__lm_floor")
-      .persist()
-    val nLm = lmPass.count(); lap("lm")
+      .drop("lm_score", "__lm_floor"))
     quality.unpersist()
 
     // 3. exact dedup: min doc_id survives its md5(text) group (q29)
     val wHash = Window.partitionBy(md5(col("text")))
-    val exact = lmPass.withColumn("__keep", col("doc_id") === min(col("doc_id")).over(wHash))
-      .filter(col("__keep")).drop("__keep")
-      .persist()
-    val nExact = exact.count(); lap("exact")
-    lmPass.unpersist()
+    val exact = store("exact",
+      lmPass.df.withColumn("__keep", col("doc_id") === min(col("doc_id")).over(wHash))
+        .filter(col("__keep")).drop("__keep"))
 
     // 4. near-dup prune: the shared near-dup pair graph (q33's LSH
     // generation, ≡ q32's exact output — LlmOps.nearDupPairs' doc),
@@ -351,9 +387,8 @@ object Curate {
     // EAGER checkpoint: `pairs` feeds BOTH union branches below and
     // Catalyst plans each occurrence independently — unmaterialized,
     // the whole LSH generation (shingle → minhash → band join →
-    // Jaccard verify) ran twice (the q107 round-16 lesson). The pair
-    // graph is output-sized (edges between near-dups), tiny next to
-    // the corpus scan that produces it.
+    // Jaccard verify) ran twice. The pair graph is output-sized (edges
+    // between near-dups), tiny next to the corpus scan that produces it.
     val pairs = graft.queries.LlmOps.nearDupPairs(spark, sfDir)
       .select(col("id_a"), col("id_b"))
       .localCheckpoint()
@@ -365,14 +400,11 @@ object Curate {
       .filter(col("other_score") > col("my_score") ||
         (col("other_score") === col("my_score") && col("other") < col("me")))
       .select(col("me").as("doc_id")).distinct()
-    val nearDeduped = exact.join(losers, Seq("doc_id"), "left_anti")
-      .persist()
-    val nNear = nearDeduped.count(); lap("near")
-    exact.unpersist()
+    val nearDeduped = store("near",
+      exact.df.join(losers, Seq("doc_id"), "left_anti"))
 
-    // 4b. MULTIMODAL dedup (round 16; video + the near-dup arms added
-    // round 17): the corpus's rendered media deduped through the same
-    // factored seams the oracle-gated queries verify —
+    // 4b. MULTIMODAL dedup: the corpus's rendered media deduped through
+    // the same factored seams the oracle-gated queries verify —
     //   NEAR: q128's perceptual image pairs, q131's video pairs,
     //   q132's audio pairs (each a capped blocked cosine ≥ 0.95;
     //   pairs carry id_a < id_b, so dropping every id_b is the
@@ -391,25 +423,10 @@ object Curate {
     // Each modality's render+decode pass is the stage's dominant cost
     // and feeds TWO consumers (the exact group rule and the near-dup
     // kernel) — Catalyst plans each occurrence independently, so
-    // without a checkpoint at this fan-out the WAV and AVI walks ran
-    // twice per pipeline run (the round-9 multi-branch rule; A/B'd at
-    // sf1 in SCALING round 17). The bands frames are 16 longs/doc.
-    //
-    // Checkpoint-block lifetime: this stage creates several
-    // localCheckpoint frames (the two bands frames here plus the
-    // fingerprint/rank checkpoints inside the three kernels), and
-    // checkpoint blocks are NOT released by unpersist()-style stage
-    // hygiene — they sit in BlockManager storage until the driver GC
-    // happens to run the ContextCleaner (the round-11 bench finding).
-    // So the stage (a) tracks every checkpoint RDD it creates by
-    // diffing getPersistentRDDs around the frame construction, (b)
-    // funnels all downstream lineage through ONE small checkpointed
-    // loser frame, and (c) releases the tracked blocks once the loser
-    // frame exists — safe exactly because nothing downstream can reach
-    // the released (unrecomputable) blocks through `losers` anymore.
+    // without a checkpoint at this fan-out the WAV and AVI walks run
+    // twice per pipeline run. The bands frames are 16 longs/doc.
     val P = graft.queries.PipelineOps
     val nDocs = P.nonEmptyDocCount(spark, sfDir)
-    val cpBefore = spark.sparkContext.getPersistentRDDs.keySet
     val aBands = P.audioBands(spark, sfDir).localCheckpoint()
     val vBands = P.videoBands(spark, sfDir).localCheckpoint()
     val nearLosers = Seq(
@@ -423,38 +440,24 @@ object Curate {
       fp.withColumn("__keep", col("doc_id") === min(col("doc_id")).over(wFp))
         .filter(!col("__keep")).select(col("doc_id"))
     }
-    // every eager checkpoint of the stage exists NOW; snapshot their ids
-    // BEFORE the losers frame adds its own persisted RDD
-    val mediaCpIds = spark.sparkContext.getPersistentRDDs.keySet -- cpBefore
-    // loser-id-sized; eager, so every upstream checkpoint is consumed
-    // (and releasable) the moment this returns
     val mediaLosers = nearLosers.union(fpLosers(P.bandsFp(aBands)))
       .union(fpLosers(P.bandsFp(vBands)))
       .distinct()
-      .localCheckpoint()
-    spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => mediaCpIds.contains(id) }
-      .valuesIterator.foreach(_.unpersist(blocking = true))
-    val mediaDeduped = nearDeduped
-      .join(mediaLosers, Seq("doc_id"), "left_anti")
-      .persist()
-    val nMedia = mediaDeduped.count(); lap("media")
-    nearDeduped.unpersist()
+    val mediaDeduped = store("media",
+      nearDeduped.df.join(mediaLosers, Seq("doc_id"), "left_anti"))
 
     // 5. decontamination: drop docs sharing any 5-gram with the eval
-    // set — q133's Bloom pre-screen in front of q77's exact join
-    // (round 18; the stage previously shingle-joined EVERY survivor
-    // against the broadcast probe set). The constant-size bitmap frame
-    // (≤4096 rows regardless of blocklist size) screens the whole
-    // corpus through four broadcast word-index joins; the Bloom test
-    // has ZERO false negatives, so the exact q77 pass — the only part
-    // that must see the probe shingles themselves — runs on just the
-    // flagged sliver and the final verdict is BIT-IDENTICAL to the
-    // unscreened stage (CurateSpec pins this equivalence). At 100 TB
-    // with a multi-TB blocklist the probe set stops broadcasting but
-    // the bitmap does not grow; the exact join then shuffles
-    // sliver-sized, not corpus-sized — the scale regime q133's
-    // scaladoc documents, now composed rather than promised.
+    // set — q133's Bloom pre-screen in front of q77's exact join. The
+    // constant-size bitmap frame (≤4096 rows regardless of blocklist
+    // size) screens the whole corpus through four broadcast word-index
+    // joins; the Bloom test has ZERO false negatives, so the exact q77
+    // pass — the only part that must see the probe shingles themselves
+    // — runs on just the flagged sliver and the final verdict is
+    // BIT-IDENTICAL to the unscreened stage (CurateSpec pins this
+    // equivalence). At 100 TB with a multi-TB blocklist the probe set
+    // stops broadcasting but the bitmap does not grow; the exact join
+    // then shuffles sliver-sized, not corpus-sized — the scale regime
+    // q133's scaladoc documents.
     val grams = (df: DataFrame) => df
       .select(col("doc_id"), expr(s"filter($toksSql, t -> t <> '')").as("ts"))
       .filter(size(col("ts")) >= 5)
@@ -469,16 +472,14 @@ object Curate {
     // the bitmap frame fans into FOUR broadcast builds (the q133
     // convention — Catalyst does not share identical subplans)
     val words = TO.bloomWords(probe).localCheckpoint()
-    val flagged = TO.bloomProbeFlagged(TO.bloomGrams(mediaDeduped), words)
+    val flagged = TO.bloomProbeFlagged(TO.bloomGrams(mediaDeduped.df), words)
       .select(col("doc_id"))
     val contaminated = grams(
-        mediaDeduped.join(flagged, Seq("doc_id"), "left_semi"))
+        mediaDeduped.df.join(flagged, Seq("doc_id"), "left_semi"))
       .join(broadcast(probe), "g")
       .select(col("doc_id")).distinct()
-    val clean = mediaDeduped.join(contaminated, Seq("doc_id"), "left_anti")
-      .persist()
-    val nClean = clean.count(); lap("decontam")
-    mediaDeduped.unpersist()
+    val clean = store("decontam",
+      mediaDeduped.df.join(contaminated, Seq("doc_id"), "left_anti"))
 
     // 5b. SEMANTIC decontamination (q126's kernel): drop docs whose
     // embedding is within `semThr` cosine of any eval probe — the
@@ -495,10 +496,8 @@ object Curate {
       .semanticNearest(T.embeddings(spark, sfDir), evalIdBelow)
       .filter(col("cosine") >= semThr)
       .select(col("vec_id").as("doc_id"))
-    val semClean = clean.join(semFlagged, Seq("doc_id"), "left_anti")
-      .persist()
-    val nSemClean = semClean.count(); lap("semdecontam")
-    clean.unpersist()
+    val semClean = store("semdecontam",
+      clean.df.join(semFlagged, Seq("doc_id"), "left_anti"))
 
     // 6. block-level keep-first rewrite (q123's kernel), placed AFTER
     // decontamination: the decon verdict is doc-level on pre-rewrite
@@ -508,73 +507,34 @@ object Curate {
     // REWRITTEN corpus, or the rates and budgets describe text the
     // trainer will never consume. Docs whose every block is a repeat
     // vanish here (kept text empty).
-    // localCheckpoint, not persist: the rewrite joins the corpus frame
-    // against an aggregate OF ITSELF, and stacking that join-on-self
-    // lineage under the five stages above it sent the ANALYSIS/
-    // optimization cost of every downstream plan superlinear (measured
-    // 27 s -> 90 s wall at sf0.01 with identical task counts — the
-    // time was driver-side, between jobs). The checkpoint starts
-    // downstream plans from a LogicalRDD. Blocks live until session
-    // end; a 100 TB deployment would write/drop an intermediate table
-    // here, same shape.
-    val preRewriteCp = spark.sparkContext.getPersistentRDDs.keySet
-    val rewritten = semClean.drop("text")
-      .join(graft.queries.TrainingOps.blockKeptText(semClean)
-          .filter(length(col("kept_text")) > 0)
-          .select(col("doc_id"), col("kept_text").as("text")),
-        "doc_id")
-      .localCheckpoint()
-    // tracked so the opt-in 6b policy can RELEASE this corpus frame
-    // once its own checkpoint replaces it as the fan-out root (the
-    // stage-4 tracked-release pattern)
-    val rewriteCpIds = spark.sparkContext.getPersistentRDDs.keySet -- preRewriteCp
-    val nRewritten = rewritten.count(); lap("rewrite")
-    semClean.unpersist()
+    val rewritten = store("rewrite",
+      semClean.df.drop("text")
+        .join(graft.queries.TrainingOps.blockKeptText(semClean.df)
+            .filter(length(col("kept_text")) > 0)
+            .select(col("doc_id"), col("kept_text").as("text")),
+          "doc_id"))
 
     // 6b. cluster-diversity thinning — the policy-selected sampler
     // (q140's SemDeDup-shape √-quota rule, or the identity default).
     // Placed with the other document-level filters, BEFORE stage 7:
     // mixture rates must reflect the thinned corpus or the mixture
     // over-delivers exactly the dense regions thinning just flattened.
-    val (thinned, nThinned) = samplingPolicy match {
+    val thinned = samplingPolicy match {
       case SamplingPolicy.HashRate =>
-        // identity: no action runs, so no lap is recorded — a "thin"
-        // lap on this path would time nothing and mislead audit-output
-        // timing analysis (ADVICE r20)
-        (rewritten, nRewritten)
+        // identity: nothing is stored, so no lap is recorded (a "thin"
+        // lap would time nothing)
+        rewritten
       case SamplingPolicy.ClusterQuota =>
         // the REJECTED side (rk > quota) of q140's corpus-wide ranked
         // frame; docs without an embedding never appear in it and pass
         // through (the 5b convention). The reject list is
         // membership-frame-sized — everything corpus-scale stays
         // inside q139's documented pipeline, no new corpus scans.
-        val preQuotaCp = spark.sparkContext.getPersistentRDDs.keySet
         val rejected = graft.queries.CurationOps
           .clusterQuotaRanked(spark, sfDir)
           .filter(col("rk") > col("quota"))
           .select(col("vec_id").as("doc_id"))
-        // the quota build's own eager checkpoints (cell membership,
-        // knn list, CC internals) exist NOW — snapshot before t pins
-        val quotaCpIds = spark.sparkContext.getPersistentRDDs.keySet -- preQuotaCp
-        // checkpointed like `rewritten` (it replaces it as the stage-7
-        // fan-out root: the token projection reads it twice)
-        val t = rewritten.join(rejected, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-        val n = t.count(); lap("thin")
-        // Round-22 residency fix (the former stage-6 NOTE): this arm
-        // used to stack a SECOND full corpus frame of checkpoint
-        // blocks on top of `rewritten`'s for the rest of the session.
-        // With `t` materialized, nothing downstream can reach
-        // `rewritten` or the quota build's internals — release both
-        // (the stage-4 tracked-release rationale; blocking, outside
-        // any timed region). Remaining residency is `t` alone, the
-        // same single corpus frame the HashRate arm keeps; the 100 TB
-        // shape would still write/drop an intermediate table here.
-        spark.sparkContext.getPersistentRDDs
-          .filter { case (id, _) =>
-            quotaCpIds.contains(id) || rewriteCpIds.contains(id) }
-          .valuesIterator.foreach(_.unpersist(blocking = true))
-        (t, n)
+        store("thin", rewritten.df.join(rejected, Seq("doc_id"), "left_anti"))
     }
 
     // 7. mixture rebalance on the CLEAN, REWRITTEN corpus: the
@@ -583,18 +543,16 @@ object Curate {
     // the same plan shape — one sources-sized token agg, one
     // broadcast totals row, one broadcast rate join — so swapping
     // policy never adds a corpus scan.
-    val withTok = thinned.withColumn("n_tok",
+    val withTok = thinned.df.withColumn("n_tok",
       expr(s"size(filter($toksSql, t -> t <> ''))"))
     val per = withTok.groupBy(col("source")).agg(sum(col("n_tok")).cast("bigint").as("n_tokens"))
     val rates = mixtureCuts(per, mixture)
-    val sampled = withTok
+    val sampled = store("sample", withTok
       .withColumn("__bucket",
         expr("cast(conv(substring(md5(cast(doc_id as string)), 1, 4), 16, 10) as int)"))
       .join(broadcast(rates), "source")
       .filter(col("__bucket") < col("cut"))
-      .drop("__bucket", "cut")
-      .persist()
-    val nSampled = sampled.count(); lap("sample")
+      .drop("__bucket", "cut"))
 
     // 8. chunking (q100's stride grid) — the sampled docs become
     // fixed-context training examples. chunk_text slices the SAME
@@ -602,7 +560,10 @@ object Curate {
     // no second tokenize pass and nothing array-typed crosses a
     // shuffle. The ord key is q101's (doc_id << 20 | chunk_start)
     // encoding with BOTH halves of its contract enforced in-plan.
-    val chunked = sampled
+    // The storing job also sums `nc`: every chunk is written to exactly
+    // one shard, so the sum is the tokens as written (with stride <
+    // window the overlap is counted twice: the trainer consumes it twice).
+    val chunked = store("chunk", sampled.df
       .filter(col("n_tok") > 0)
       .withColumn("toks", expr(s"filter($toksSql, t -> t <> '')"))
       .select(col("source"), col("doc_id"), col("lang"), col("toks"), col("n_tok"),
@@ -618,21 +579,16 @@ object Curate {
             col("chunk_start") < (1L << 20) && col("doc_id") < (1L << 43),
             lit("Curate: doc exceeds the 2^20-token ord-encoding cap " +
               "or doc_id exceeds the 2^43 id cap")).isNull,
-            col("chunk_start"))).as("ord"))
-      .persist()
-    val nChunks = chunked.count(); lap("chunk")
-    sampled.unpersist()
+            col("chunk_start"))).as("ord")),
+      coalesce(sum(col("nc")), lit(0L)).as("tokens"))
 
     // 9. chunk -> shard packing (q101's composition over q78's
     // two-pass block-decomposed prefix sum — no single-task-per-source
     // window; see ops.ShardPacking)
     val packed = graft.ops.ShardPacking
-      .assignShards(chunked, "source", "ord", "nc", tokenBudget)
+      .assignShards(chunked.df, "source", "ord", "nc", tokenBudget)
 
     // 10. immutable shard artifacts, prunable by (source, shard_id).
-    // nTokens counts chunk tokens as written — with stride < window
-    // the overlap region is intentionally double-counted, because
-    // that IS what the trainer will consume.
     packed
       .select(col("source"), col("shard_id"), col("doc_id"),
         col("chunk_start"), col("nc"), col("lang"), col("chunk_text"))
@@ -640,12 +596,12 @@ object Curate {
       .parquet(s"$outDir/shards")
     lap("pack+write")
 
-    chunked.unpersist()
-    val written = spark.read.parquet(s"$outDir/shards")
-    val nShards = written.select(col("source"), col("shard_id")).distinct().count(); lap("nShards")
-    val nTokens = Option(written.agg(sum(col("nc"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L); lap("nTokens")
-    Report(nInput, nQuality, nLm, nExact, nNear, nMedia, nClean, nSemClean,
-      nRewritten, nThinned, nSampled, nChunks, nShards, nTokens)
+    // one directory per written (source, shard_id), listed on the driver
+    val shards = new Path(s"$outDir/shards")
+    val nShards = shards.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(new Path(shards, "source=*/shard_id=*")).count(_.isDirectory).toLong
+    Report(nInput, nQuality, lmPass.rows, exact.rows, nearDeduped.rows, mediaDeduped.rows,
+      clean.rows, semClean.rows, rewritten.rows, thinned.rows, sampled.rows,
+      chunked.rows, nShards, chunked.metrics.getLong(1))
   }
 }

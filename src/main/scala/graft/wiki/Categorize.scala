@@ -154,24 +154,17 @@ object Categorize {
     Model(pages, categories, bridge)
   }
 
-  /** The narrow parsed frame, stored by one eager `localCheckpoint`,
-    * with the two bounds its job observes: the row count, and the
-    * summed `categories` array sizes with a null array counted as 0
-    * (`size(null)` is -1 or null depending on the ANSI setting;
-    * `greatest` skips the null).
-    *
-    * The checkpoint runs `narrow`'s own QueryExecution, so the metrics
-    * are read from it as soon as the checkpoint returns. An
-    * `Observation` would deliver the same row through the listener bus,
-    * which the caller would have to wait for. */
+  /** The narrow parsed frame, stored by one eager `localCheckpoint`
+    * ([[graft.ops.Stored]]), with the two bounds its job observes: the
+    * row count, and the summed `categories` array sizes with a null
+    * array counted as 0 (`size(null)` is -1 or null depending on the
+    * ANSI setting; `greatest` skips the null). */
   private[graft] def storeParsed(processed: DataFrame): (DataFrame, Long, Long) = {
-    val narrow = processed
-      .select("file_name", "categories", "word_count", "last_edited_date")
-      .observe("categorize_bounds", count(lit(1)).as("rows"),
-        coalesce(sum(greatest(size(col("categories")), lit(0))), lit(0L)).as("names"))
-    val parsed = narrow.localCheckpoint()
-    val bounds = narrow.queryExecution.observedMetrics("categorize_bounds")
-    (parsed, bounds.getLong(0), bounds.getLong(1))
+    val parsed = graft.ops.Stored.checkpoint(
+      processed.select("file_name", "categories", "word_count", "last_edited_date"),
+      "categorize_bounds",
+      coalesce(sum(greatest(size(col("categories")), lit(0))), lit(0L)).as("names"))
+    (parsed.df, parsed.rows, parsed.metrics.getLong(1))
   }
 
   /** Adds `id` = `offset` + the 1-based rank of each row under `key`:

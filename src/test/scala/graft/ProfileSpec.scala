@@ -34,6 +34,14 @@ class ProfileSpec extends SparkSpec {
     }
   }
 
+  test("per-query record: plan_desc_max_bytes holds the largest plan description posted") {
+    val j = new ObjectMapper().readTree(record)
+    val n = j.get("plan_desc_max_bytes").asLong
+    // the measured run posts at least its execution start, whose text
+    // is q01's whole formatted plan
+    assert(n > 1000 && n < (1L << 20), record)
+  }
+
   test("the written plan is AQE-final: the measured run drives the frame's own execution") {
     assert(plan.contains("isFinalPlan=true"), plan)
     assert(!plan.contains("isFinalPlan=false"), plan)

@@ -1,6 +1,7 @@
 package graft.curation
 
 import graft.SparkSpec
+import org.apache.spark.GraftListenerBridge
 import org.apache.spark.sql.functions._
 
 /** End-to-end contracts for the composed curation pipeline: funnel
@@ -59,10 +60,26 @@ class CurateSpec extends SparkSpec {
     }.toSet
   }
 
-  private lazy val outA = {
+  /** The default run, observed: its shard dir and report, the largest
+    * physical-plan description Spark posted while it ran (the SQL
+    * execution starts and AQE plan updates `Profile.Probe` reads), and
+    * the persistent RDDs it registered that are still registered after
+    * it returns. */
+  private lazy val observedA = {
     val dir = java.nio.file.Files.createTempDirectory("graft_curate_a").toString
-    (dir, Curate.run(spark, sf, dir))
+    val sc = spark.sparkContext
+    val probe = new graft.Profile.Probe
+    GraftListenerBridge.drainListenerBus(sc)
+    sc.addSparkListener(probe)
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val r = try Curate.run(spark, sf, dir)
+      finally {
+        GraftListenerBridge.drainListenerBus(sc)
+        sc.removeSparkListener(probe)
+      }
+    (dir, r, probe.planDescMaxBytes, sc.getPersistentRDDs.keySet.toSet -- before)
   }
+  private lazy val outA = (observedA._1, observedA._2)
 
   test("the funnel only ever shrinks, and every stage count is populated") {
     val (_, r) = outA
@@ -73,6 +90,29 @@ class CurateSpec extends SparkSpec {
     assert(r.nInput > 0 && r.nSampled > 0 && r.nShards > 0 && r.nTokens > 0, r.toString)
     // chunking fans out, never filters: >= one chunk per non-empty doc
     assert(r.nChunks >= r.nSampled, s"chunking lost documents: $r")
+  }
+
+  test("the default funnel, chunk, shard and token counts are pinned at sf0.001") {
+    val (_, r) = outA
+    assert(Seq(r.nInput, r.nQuality, r.nLmPass, r.nExactDedup, r.nNearDedup,
+        r.nMediaDedup, r.nDecontaminated, r.nSemClean, r.nRewritten, r.nThinned,
+        r.nSampled) === Seq(490L, 375L, 368L, 368L, 353L, 348L, 345L, 321L, 321L, 321L, 220L),
+      r.toString)
+    assert((r.nChunks, r.nShards, r.nTokens) === ((366L, 20L, 14895L)), r.toString)
+  }
+
+  test("no plan description posted during a default run reaches 1 MB") {
+    // a stage frame persisted on top of earlier persisted stages prints
+    // every earlier cached plan inside its own; stored stages plan from
+    // a LogicalRDD and print none of them
+    val (_, _, planDescMax, _) = observedA
+    assert(planDescMax > 0, "no SQL execution was observed")
+    assert(planDescMax < (1L << 20), s"largest plan description: $planDescMax bytes")
+  }
+
+  test("the run leaves none of the RDDs it persisted or checkpointed registered") {
+    val (_, _, _, left) = observedA
+    assert(left.isEmpty, s"still registered: ${left.toSeq.sorted}")
   }
 
   test("every written doc passes the quality floor and is uncontaminated") {

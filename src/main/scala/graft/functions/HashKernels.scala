@@ -1,19 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared per-thread/static kernels behind the fingerprinting
-  * expressions. Top-level object so Scala emits STATIC FORWARDERS —
-  * generated whole-stage-codegen Java calls these directly
-  * (`graft.functions.HashKernels.md5PrefixLongs(arr, 7)`).
+/** Static kernels behind the fingerprinting handles of
+  * [[GraftFunctions]]. Top-level object so Scala emits STATIC
+  * FORWARDERS: each handle's `StaticInvoke` generates a direct call
+  * (`graft.functions.HashKernels.md5PrefixLongs(arr, 7)`), and
+  * interpreted eval runs the same method. A null array argument gives a
+  * null result before the kernel runs.
   *
-  * Why these exist (round-3 bench): the HOF formulations —
+  * Why native: the HOF formulations —
   * `transform(toks, t -> conv(substring(md5(t),1,n),16,10))` and the
   * minhash `transform(sequence(0,31), k -> array_min(transform(sh, t ->
   * xxhash64(t,k))))` — pay an interpreted lambda dispatch plus hex-string
@@ -51,8 +49,14 @@ object HashKernels {
     v
   }
 
-  /** Element-wise [[md5Prefix]] over an array<string>; null elements map
-    * to null elements (the `transform` chain's md5(null) = null).
+  /** `md5_longs(arr: array<string>, nHex): array<bigint>` — element-wise
+    * [[md5Prefix]], the native form of `transform(arr, t ->
+    * cast(conv(substring(md5(t),1,nHex),16,10) as bigint))` with
+    * bit-identical output (same md5, same big-endian nibble value), so
+    * every oracle built on the chain still matches. Null elements map to
+    * null elements (the chain's md5(null) = null), so the result
+    * `containsNull` follows the input's. Used by q36 (nHex=4), q42
+    * (nHex=15) and q47 (nHex=7).
     */
   def md5PrefixLongs(arr: ArrayData, nHex: Int): ArrayData = {
     val n = arr.numElements()
@@ -78,9 +82,10 @@ object HashKernels {
     }
   }
 
-  /** Polynomial rolling hash fold: (acc*131 + x) mod 1e9+7, left-to-right
-    * from 0 — exactly the `aggregate(vals, 0L, (acc,x) ->
-    * (acc*131 + x) % 1000000007)` HOF it replaces, including Java long
+  /** `rolling_hash(arr: array<bigint>): bigint` — Rabin-Karp polynomial
+    * fold (acc*131 + x) mod 1e9+7, left-to-right from 0 — exactly the
+    * `aggregate(vals, 0L, (acc,x) -> (acc*131 + x) % 1000000007)` HOF it
+    * replaces (q47), including Java long
     * arithmetic and null poisoning (any null element -> null total, like
     * the lambda's null-propagating `+`). Boxed return so null is
     * representable.
@@ -107,7 +112,8 @@ object HashKernels {
     z ^ (z >>> 31)
   }
 
-  /** k minhash values over an array<string>: ONE xxhash64 string hash per
+  /** `minhash64(arr: array<string>, k): array<bigint>` — k minhash
+    * values in one pass: ONE xxhash64 string hash per
     * element, then k cheap splitmix64 derivations h_j = mix64(h + j·φ),
     * minima tracked per j. Replaces k FULL string hashes per element
     * (the `transform(sequence(0,k-1), j -> array_min(transform(sh, t ->
@@ -115,7 +121,8 @@ object HashKernels {
     * independent-ish family works; correctness comes from the exact-
     * Jaccard verify, see LlmOps q33), ~k× less hashing and zero lambda
     * dispatch. Null elements are skipped; an array with no non-null
-    * elements yields Long.MaxValue minima (deterministic).
+    * elements yields Long.MaxValue minima (deterministic). Internals are
+    * not cross-engine-pinned by design: sketches only generate candidates.
     */
   def minhash64(arr: ArrayData, k: Int): ArrayData = {
     val minima = new Array[Long](k)
@@ -125,8 +132,7 @@ object HashKernels {
     while (i < n) {
       if (!arr.isNullAt(i)) {
         val s = arr.getUTF8String(i)
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
+        val h = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
         var j = 0
         while (j < k) {
           val hj = mix64(h + j * SplitmixGolden)
@@ -163,131 +169,36 @@ object HashKernels {
     }
     UnsafeArrayData.fromPrimitiveArray(minima)
   }
-}
 
-/** `md5_longs(arr, nHex)`: element-wise md5-prefix integers — the native
-  * form of `transform(arr, t -> cast(conv(substring(md5(t),1,nHex),16,10)
-  * as bigint))`, bit-identical output (same md5, same big-endian nibble
-  * value), so every oracle built on the HOF chain still matches. Used by
-  * q36 (nHex=4 token hashes), q42 (nHex=15 shingle hashes), q47 (nHex=7).
-  */
-case class Md5PrefixLongsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = left.dataType match {
-    case ArrayType(StringType, _) => right match {
-      case Literal(n: Int, IntegerType) if n >= 1 && n <= 15 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "md5_longs nHex must be an INT literal in [1, 15]")
+  /** `simhash(vals: array<bigint>, nbits): bigint` — SimHash majority
+    * vote: bit b (b < nbits ≤ 63) of the fingerprint is set iff a STRICT
+    * majority of the feature hashes have bit b set. Exactly the
+    * `sum over b of CASE WHEN 2*size(filter(vals, v -> (v div 2^b)%2=1))
+    * > size(vals) ...` chain it replaces (q36/q42), including the
+    * denominator counting null elements while the numerator skips them.
+    * The chain makes nbits interpreted `filter` passes per row, each
+    * allocating an array; this is one two-level primitive loop. */
+  def simhash(vals: ArrayData, nbits: Int): Long = {
+    val n = vals.numElements()
+    val counts = new Array[Int](nbits)
+    var i = 0
+    while (i < n) {
+      if (!vals.isNullAt(i)) {
+        val v = vals.getLong(i)
+        var bit = 0
+        while (bit < nbits) {
+          counts(bit) += ((v >>> bit) & 1L).toInt
+          bit += 1
+        }
+      }
+      i += 1
     }
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"md5_longs expects array<string>, got ${t.catalogString}")
-  }
-
-  private lazy val nHex: Int = right.eval().asInstanceOf[Int]
-
-  override def dataType: DataType = left.dataType match {
-    case ArrayType(_, containsNull) => ArrayType(LongType, containsNull)
-    case _ => ArrayType(LongType)
-  }
-
-  override def prettyName: String = "md5_longs"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.md5PrefixLongs(a.asInstanceOf[ArrayData], nHex)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (arr, _) =>
-      s"${ev.value} = graft.functions.HashKernels.md5PrefixLongs($arr, $nHex);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Md5PrefixLongsExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `rolling_hash(arr)`: Rabin-Karp polynomial fold over array<bigint> —
-  * the native form of `aggregate(arr, 0L, (acc,x) ->
-  * (acc*131 + x) % 1000000007)`, identical output including null
-  * poisoning. Consumed by q47.
-  */
-case class RollingHashExpr(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"rolling_hash expects array<bigint>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = LongType
-
-  // a null ELEMENT nulls the fold even when the array itself is non-null
-  override def nullable: Boolean = true
-
-  override def prettyName: String = "rolling_hash"
-
-  override protected def nullSafeEval(a: Any): Any =
-    HashKernels.rollingHash(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |java.lang.Long $boxed = graft.functions.HashKernels.rollingHash($arr);
-         |if ($boxed == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $boxed.longValue();
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHashExpr =
-    copy(child = newChild)
-}
-
-/** `minhash64(arr, k)`: k-permutation minhash sketch of an array<string>
-  * shingle set in one pass (one string hash + k mixes per element).
-  * Internals are NOT cross-engine-pinned by design — LSH sketches only
-  * generate candidates; the exact-Jaccard verify supplies correctness
-  * (LlmOps q33 scaladoc).
-  */
-case class MinHash64Expr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = left.dataType match {
-    case ArrayType(StringType, _) | ArrayType(LongType, _) => right match {
-      case Literal(k: Int, IntegerType) if k >= 1 && k <= 1024 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "minhash64 k must be an INT literal in [1, 1024]")
+    var fp = 0L
+    var bit = 0
+    while (bit < nbits) {
+      if (2 * counts(bit) > n) fp |= (1L << bit)
+      bit += 1
     }
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash64 expects array<string> or array<bigint> (pre-hashed), got ${t.catalogString}")
+    fp
   }
-
-  private lazy val k: Int = right.eval().asInstanceOf[Int]
-
-  // array<bigint> input = pre-hashed shingles (same xxhash64 seed-42
-  // base the string path computes) — same minima, no string traffic
-  private lazy val hashedInput: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == LongType
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = "minhash64"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    if (hashedInput) HashKernels.minhash64Hashed(a.asInstanceOf[ArrayData], k)
-    else HashKernels.minhash64(a.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (hashedInput) "minhash64Hashed" else "minhash64"
-    nullSafeCodeGen(ctx, ev, (arr, _) =>
-      s"${ev.value} = graft.functions.HashKernels.$fn($arr, $k);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MinHash64Expr =
-    copy(left = newLeft, right = newRight)
 }

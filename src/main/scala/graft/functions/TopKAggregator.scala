@@ -86,7 +86,7 @@ sealed abstract class BoundedTopK[T](k: Int)
 
 /** Top-k of double-scored keys, ordered score DESC, key ASC.
   *
-  * PRECONDITION (ADVICE r21): scores must be non-NaN. Scala's total
+  * PRECONDITION: scores must be non-NaN. Scala's total
   * order sorts NaN greatest, so under `(-score, key)` a NaN-scored row
   * ranks LAST, whereas the Spark windows these conversions replace
   * (`ORDER BY score DESC`, NaN largest) rank NaN FIRST. Every

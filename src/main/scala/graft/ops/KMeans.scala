@@ -58,7 +58,7 @@ object KMeans {
     * `cents` is collapsed to a single sorted array-of-structs row and
     * broadcast, so the assignment is a pure map-side fold — no window,
     * no groupBy, no shuffle of the corpus. The fold itself is the
-    * native [[graft.functions.L2ArgminExpr]] codegen kernel (identical
+    * native [[graft.functions.VecDistKernels.l2argmin]] kernel (identical
     * semantics to the `aggregate(transform(...))` HOF chain it
     * replaces — VecDistKernels' scaladoc carries the bit-equality
     * argument; KMeansSpec pins parity): the interpreted chain cost

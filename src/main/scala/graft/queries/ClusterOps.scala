@@ -277,7 +277,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
     * standard posting-truncation move), bounding per-gram fanout at
     * N/4 so a corpus-universal phrase cannot become a hot key.
     *
-    * Scale shape: gram derivation rides the codegen NGramsExpr kernel
+    * Scale shape: gram derivation rides the codegen NGramKernel
     * (q115's lesson — interpreted HOF chains cost ~10 s/scan); tf and
     * df are single hash-aggs over the exploded (doc, gram-hash)
     * frame; the match join hashes the 10-query posting side

@@ -105,7 +105,7 @@ object CurationOps {
     * Scale shape: identical to q34's exact top-k — the QUERY side is
     * the small one and is broadcast; the labeled corpus streams
     * through ONE scan with a sequenced-fold dot product (native
-    * `dot_f`, codegen). The vote layer adds only per-query-sized
+    * `dot` kernel, codegen). The vote layer adds only per-query-sized
     * aggregation above the rank filter. For a huge query side, q43's
     * hyperplane-LSH bucketing is the recall-trading fallback; the
     * arithmetic here stays exact so the oracle can replay it.
@@ -548,7 +548,7 @@ object CurationOps {
     // exchange pair). The cid-sorted codebook now rides a 1-row
     // broadcast into a `cos_argmax` projection over the scan — same 16
     // dot-product flops per row, ZERO corpus exchanges. Equivalence:
-    // the kernel's fold is DotProductF's (bit-identical cosines) and
+    // the kernel's fold is the dot handle's (bit-identical cosines) and
     // its NaN-safe strict-max over the cid-ASC array reproduces the
     // window's (cos DESC, cent_id ASC) rn = 1 row exactly
     // (VecDistKernels.cosArgmax scaladoc); the size(cs) > 0 guard
@@ -1366,7 +1366,7 @@ object CurationOps {
     * any such threshold.
     *
     * Exactness: q34's contract — pinned-order dot fold (the cos_argmax
-    * kernel shares DotProductF's fold), argmax with the window's
+    * kernel shares the dot handle's fold), argmax with the window's
     * (cos DESC, probe ASC) tie rule — bit-identical to the DuckDB
     * list_reduce oracle.
     *

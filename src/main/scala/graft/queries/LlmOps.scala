@@ -40,7 +40,7 @@ object LlmOps {
     * shingling + downstream sketching parallelize — the single-row-group
     * testdata would otherwise pin the whole shingle/minhash stage to one
     * task. Shingles come from the native codegen
-    * [[graft.functions.NGramsExpr]] (byte-identical to the interpreted
+    * [[graft.functions.NGramKernel.ngrams]] (byte-identical to the interpreted
     * `transform(sequence)+concat` HOF chain it replaced — parity pinned
     * in FunctionPropertySpec; the DuckDB oracles keep their independent
     * `list_transform(generate_series)` formulation).
@@ -451,8 +451,8 @@ object LlmOps {
     * The 10-vector query set is broadcast; the corpus streams through one
     * scan with no shuffle until the final k·|queries| window.
     *
-    * Dot products use the native [[graft.functions.DotProductF]]
-    * codegen expression (`dot_f`) — same left-to-right fold as the HOF
+    * Dot products use the native [[graft.functions.VecDistKernels.dotDD]]
+    * kernel (the `dot` handle) — same left-to-right fold as the HOF
     * chain it replaced and as the DuckDB oracle's list_reduce, so the
     * doubles stay bit-identical while the per-row cost drops from
     * interpreted HigherOrderFunction eval to a fused primitive loop.
@@ -514,7 +514,7 @@ object LlmOps {
   /** 16-bit SimHash over distinct tokens: bit b of the fingerprint is set
     * iff a strict majority of token-hash bits at position b are 1. Token
     * hash = first 4 hex chars of md5 (engine-identical). The majority
-    * vote runs in the native [[graft.functions.SimhashBits]] codegen
+    * vote runs in the native [[graft.functions.HashKernels.simhash]] codegen
     * kernel (one fused loop) rather than 16 interpreted filter passes;
     * the DuckDB oracle keeps the independent CASE-chain formulation.
     */

@@ -65,7 +65,7 @@ object PipelineOps {
         .select(col("doc_id"),
           graft.functions.GraftFunctions.md5Longs(col("sh"), 15).as("vals"))
         .select(col("doc_id"),
-          // native majority-vote kernel (SimhashBits codegen) — the HOF
+          // native majority-vote kernel (HashKernels.simhash) — the HOF
           // CASE-chain equivalent lives on in the oracle SQL below
           graft.functions.GraftFunctions.simhash(col("vals"), simhashBits).as("fp"))
         .persist()
@@ -1822,7 +1822,7 @@ object PipelineOps {
     * float vectors cannot), and the float tier is read for 20 rows
     * per query.
     *
-    * Exactness note: the integer dot rides the codegen `dot_f` kernel
+    * Exactness note: the integer dot rides the codegen `dot` kernel
     * on double-cast codes — every product and the 64-term sum stay
     * below 2⁵³, so the double arithmetic IS exact integer arithmetic,
     * bit-identical to DuckDB's list_reduce over BIGINTs.
@@ -1842,7 +1842,7 @@ object PipelineOps {
       // scan) fold into ONE compiled quantize_vec projection over the
       // raw float column. Bit-identity of all four fields (v, scale,
       // q, nrm — same IEEE sequences, same NaN-greatest max, nrm's
-      // dot_f fold) is argued at VecDistKernels.quantizeVec and pinned
+      // dot fold) is argued at VecDistKernels.quantizeVec and pinned
       // by QuantizeVecSpec on the real parquet-backed column.
       val e = T.embeddings(s, dir)
         .select(col("vec_id"),

@@ -773,7 +773,7 @@ object TrainingOps {
     * sorted on z gets balanced per-file bounding boxes, so min/max stats
     * prune selective predicates on either dimension).
     * This query pins the BIT MATH: the native
-    * [[graft.functions.ZOrder2Expr]] computes the Morton code with
+    * [[graft.functions.ZOrderKernel.interleave16]] computes the Morton code with
     * magic-mask parallel spreads in whole-stage codegen, while the
     * DuckDB oracle interleaves all 32 bits the naive way — an unrolled
     * Σᵢ ((x≫i)&1)≪2i + ((y≫i)&1)≪(2i+1) — so the two engines agree
@@ -834,7 +834,7 @@ object TrainingOps {
     (s, dir) => {
       // native codegen shingling — the interpreted HOF formulation
       // (transform(sequence)+concat_ws lambdas) measured ~10 s of this
-      // query's sf0.1 scan; byte-identical output (NGramsExpr doc)
+      // query's sf0.1 scan; byte-identical output (NGramKernel doc)
       val g = T.documentsSpread(s, dir)
         .select(col("doc_id"), expr(s"filter($toksSql, t -> t <> '')").as("ts"))
         .filter(size(col("ts")) >= 5)
@@ -1237,7 +1237,7 @@ object TrainingOps {
       // persist would outlive the query across a bench run (the q106/
       // q72/q89 leak class). The doc spine needs no second scan: a
       // doc's total gram positions is the sum of its per-gram counts.
-      // gram derivation through the codegen NGramsExpr kernel — the
+      // gram derivation through the codegen NGramKernel — the
       // interpreted transform(sequence)+concat_ws HOF chain is the
       // exact formulation q73's comment measured at ~10 s/scan
       val perDocGram = T.documentsSpread(s, dir)

@@ -21,8 +21,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * store, partitioned by key hash — state ops shuffle once on the key,
   * the same shuffle shape as the batch twin. Watermarks bound state: the
   * unbounded variants mirror the reference exactly (its Redis set also
-  * never expires), the `...WithinWatermark` / watermarked variants are
-  * the production configuration.
+  * never expires), the watermarked variants are the production
+  * configuration.
   */
 object Streams {
 
@@ -38,14 +38,6 @@ object Streams {
     */
   def dedupUrls(urls: DataFrame): DataFrame =
     urls.dropDuplicates("url")
-
-  /** Production variant with bounded state: sightings of the same URL
-    * further apart than the watermark delay can re-emit, in exchange for
-    * state expiry — the standard crawl-freshness trade (re-crawl after
-    * quiet periods is usually a feature).
-    */
-  def dedupUrlsWithinWatermark(urls: DataFrame, delay: String): DataFrame =
-    urls.withWatermark("ts", delay).dropDuplicatesWithinWatermark("url")
 
   /** First-seen tracking with CUSTOM state (flatMapGroupsWithState):
     * emits each URL once on first sighting — like [[dedupUrls]] — but

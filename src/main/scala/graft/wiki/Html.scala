@@ -166,19 +166,26 @@ object Html {
   val extractLastmodTextUdf = udf(extractLastmodText)
   val extractTextUdf = udf(extractText)
   val extractLinksUdf = udf(extractLinks)
-  // (the struct-returning page parse is no longer exposed as a ScalaUDF —
-  // the native ParsePageExpr expression via parsePageRow replaced it; the
-  // three per-field UDFs above remain as the parity reference the
-  // FunctionPropertySpec checks the native kernel against)
+  // (the struct-returning page parse is not a ScalaUDF: the
+  // parsePageRow kernel below serves it; the three per-field UDFs above
+  // remain as the parity reference FunctionPropertySpec checks it against)
 
-  /** [[parsePage]] as a Catalyst-internal row — the kernel behind the
-    * native `parse_page` expression ([[graft.functions.ParsePageExpr]]).
-    * Top-level-object method ⇒ Scala emits a static forwarder, so
-    * whole-stage-generated Java calls `graft.wiki.Html.parsePageRow(s)`
-    * directly: no ScalaUDF converter layer (Seq[String] ⇄ ArrayData and
-    * case-class ⇄ Row round-trips were ~4× the parse cost itself at
-    * sf0.1), and the html string is scanned once for the word count
-    * instead of a separate `split(html, ' ')` array materialization.
+  /** [[parsePage]] as a Catalyst-internal row — the kernel behind
+    * [[graft.functions.GraftFunctions.parsePage]], the `parse_page`
+    * struct (categories, lastmodText, text, word_count). Semantics are
+    * IDENTICAL to projecting the four ops separately: categories =
+    * extractCategories, lastmodText = extractLastmodText (null when
+    * absent), text = extractText, word_count = size(split(html, ' ')).
+    * A null html gives a null struct.
+    *
+    * Why native: a ScalaUDF pays CatalystTypeConverters both ways on
+    * every call, and the RESULT's Seq[String]/case-class → Row →
+    * InternalRow round-trip profiled at ~4× the parse cost itself at
+    * sf0.1. Top-level-object method ⇒ Scala emits a static forwarder,
+    * so the handle's `StaticInvoke` generates a direct
+    * `graft.wiki.Html.parsePageRow(s)` call: no converter layer, and the
+    * html string is scanned once for the word count instead of a
+    * separate `split(html, ' ')` array materialization.
     *
     * word_count parity: `size(split(value, ' '))` with Spark's default
     * limit -1 keeps every empty segment, so the count is exactly

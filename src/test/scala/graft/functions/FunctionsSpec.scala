@@ -3,7 +3,7 @@ package graft.functions
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** The native dot_f Catalyst expression: value parity with the HOF chain
+/** The native `dot` kernel handle: value parity with the HOF chain
   * it replaces, null semantics and codegen path; plus value checks of
   * the simhash_bits, zorder2 and ngrams column handles.
   */
@@ -108,10 +108,41 @@ class FunctionsSpec extends SparkSpec {
       .select(GraftFunctions.dot(col("v"), col("v")).as("d"))
     val plan = e.queryExecution.executedPlan.toString
     // the "*(n)" prefix is the whole-stage-codegen marker: the Project
-    // evaluating dot_f is inside a codegen stage, not interpreted
-    assert(plan.linesIterator.exists(l =>
-      l.trim.matches("""\*\(\d+\) Project \[dot_f.*""")), plan)
+    // calling the dot kernel is inside a codegen stage, not interpreted
+    assert(plan.linesIterator.exists(l => l.trim.matches(
+      """\*\(\d+\) Project \[static_invoke\(graft\.functions\.VecDistKernels\.dotDD\(.*""")),
+      plan)
     // and the generated Java actually compiles + runs
     assert(e.filter(col("d") > 0).count() > 0)
+  }
+
+  test("pq_encode throws on a vector, codeword or codebook of the wrong length") {
+    import spark.implicits._
+    // sub = 2, dsub = 2, k = 1: a vector holds 4 values, a codeword 2, a codebook 2
+    val cbl = Seq((0, 0, Seq(1.0, 2.0)), (1, 0, Seq(3.0, 4.0)))
+    val shortCw = Seq((0, 0, Seq(1.0, 2.0)), (1, 0, Seq(3.0)))
+    def encode(vec: Seq[Double], cb: Seq[(Int, Int, Seq[Double])]): Seq[String] = {
+      // parquet-backed so the kernel runs in a task, not at plan time
+      val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+      Seq((vec, cb)).toDF("v", "c")
+        .select(col("v"), expr(
+          "transform(c, t -> named_struct('jj', t._1, 'cid', t._2, 'mu', t._3))").as("cbl"))
+        .write.mode("overwrite").parquet(dir)
+      val e = intercept[Exception] {
+        spark.read.parquet(dir)
+          .select(GraftFunctions.pqEncode(col("v"), col("cbl"), 2, 2, 1)).collect()
+      }
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+    }
+    val short = encode(Seq(1.0, 2.0, 3.0), cbl)
+    assert(short.exists(_.contains("pq_encode: vector length 3 != sub*dsub = 4")),
+      short.mkString("\n"))
+    val cw = encode(Seq(1.0, 2.0, 3.0, 4.0), shortCw)
+    assert(cw.exists(_.contains("pq_encode: codeword (jj=1, cid=0) length 1 != dsub = 2")),
+      cw.mkString("\n"))
+    val cb = encode(Seq(1.0, 2.0, 3.0, 4.0), cbl.take(1))
+    assert(cb.exists(_.contains("pq_encode: codebook holds 1 codewords != sub*k = 2")),
+      cb.mkString("\n"))
   }
 }

@@ -61,4 +61,19 @@ class QuantizeAuditSpec extends SparkSpec {
     assert(got(1).isNullAt(1)) // empty → null
     assert(got(2).isNullAt(1)) // null → null
   }
+
+  test("a null element throws, naming the kernel") {
+    import spark.implicits._
+    // the chain this replaced null-propagates a null element; the kernel
+    // cannot reproduce that with one scale, so it refuses the row
+    val dir = java.nio.file.Files.createTempDirectory("graft_qa_null").toString
+    Seq((1L, Seq[java.lang.Double](3.0, null, -4.0)))
+      .toDF("id", "v").write.mode("overwrite").parquet(dir)
+    val e = intercept[Exception] {
+      spark.read.parquet(dir).select(GraftFunctions.quantizeAudit(col("v"))).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("quantize_audit: null element at index 1")), msgs.mkString("\n"))
+  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** The round-22 quantize_vec kernel (q108): one compiled projection
   * replacing the cast-transform / abs-max / floor-quantize chains plus
-  * the dot_f norm column. Pins BIT-identity of all four outputs against
+  * the dot norm column. Pins BIT-identity of all four outputs against
   * the interpreted HOF form on the real parquet-backed embedding column
   * (parquet-backed so the kernel runs through codegen, not constant
   * folding), plus the null/empty contract.
@@ -73,5 +73,20 @@ class QuantizeVecSpec extends SparkSpec {
     assert(r.getDouble(3) === 5.0) // nrm = sqrt(9 + 16)
     assert(got(1).isNullAt(1)) // empty → null
     assert(got(2).isNullAt(1)) // null → null
+  }
+
+  test("a null element throws, naming the kernel") {
+    import spark.implicits._
+    // the chain this replaced null-propagates a null element; the kernel
+    // cannot reproduce that with one scale, so it refuses the row
+    val dir = java.nio.file.Files.createTempDirectory("graft_qv_null").toString
+    Seq((1L, Seq[java.lang.Double](3.0, null, -4.0)))
+      .toDF("id", "v").write.mode("overwrite").parquet(dir)
+    val e = intercept[Exception] {
+      spark.read.parquet(dir).select(GraftFunctions.quantizeVec(col("v"))).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("quantize_vec: null element at index 1")), msgs.mkString("\n"))
   }
 }

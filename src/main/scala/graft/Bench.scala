@@ -343,25 +343,13 @@ object Bench {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    /** Post-query isolation, OUTSIDE the timed window: drop persisted
-      * subtrees (q32/q33 shingles) so no timing inherits another
-      * query's cached state, and — the round-11 find — explicitly
-      * unpersist checkpoint RDDs: `clearCache()` only covers catalog-
-      * cached datasets, while `localCheckpoint` blocks sit in
-      * BlockManager storage until the driver GC happens to run the
-      * ContextCleaner. Across a 125-query × 3-pass run that creep
-      * inflated late queries ~25% and tripled GC time (8.5 s vs 2.4 s
-      * in the round-10 artifact).
-      */
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      // blocking: release() runs outside the timed window, so the
-      // synchronous wait is free — and an async eviction would overlap
-      // the NEXT query's timed region, the very interference this
-      // hook exists to prevent (round-11 advice)
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = true))
-    }
+    /** Post-query isolation, OUTSIDE the timed window, so no timing
+      * inherits another query's stored state: across a 125-query ×
+      * 3-pass run, checkpoint blocks left to the ContextCleaner inflated
+      * late queries ~25% and tripled GC time (8.5 s vs 2.4 s). The wait
+      * for the eviction is free here, and an async eviction would
+      * overlap the NEXT query's timed region. */
+    def release(): Unit = graft.ops.Stored.releaseAll(spark)
 
     // Untimed warmup: one full pass over EVERY query. First-touch costs
     // (parquet footer reads, whole-stage codegen compilation, C2 JIT of

@@ -62,7 +62,7 @@ object Profile {
     "q91_range_binned" -> "non-equi range predicate executed as a hash equi-join on the bin id (no nested loop)",
     "q94_containment_dedup" -> "asymmetric prefix filter: contained side pruned, index side full, shingle-keyed candidates",
     "q104_winnowing" -> "winnowing: one doc-keyed window exchange computing both count and frame-min; packed 8-byte values",
-    "q107_graph_pagerank" -> "five PageRank iterations: dst-partitioned persisted edge frame (cache seam keeps the partitioning; checkpoint would not), rank BROADCAST each round — no edge shuffle and no contribution exchange in the loop",
+    "q107_graph_pagerank" -> "five PageRank iterations: dst-partitioned stored edge frame (the Stored seam keeps the partitioning), rank BROADCAST each round — no edge shuffle and no contribution exchange in the loop",
     "q108_quantized_ann" -> "two-stage ANN: broadcast query codes, integer-dot candidate window, float re-rank window over 20/query",
     "q122_ivfpq_search" -> "IVF-PQ serving path: map-side l2argmin routing (no corpus window), broadcast distance tables ON cell_id, WindowGroupLimit-pruned shortlist, broadcast-shortlist refine — constant shuffle across three decades",
     "q124_bpe_merges" -> "BPE training: one corpus histogram agg, then vocabulary-sized merge rounds — the overlap rule as a single chained window pass per round (one exchange, fused WindowExecs)",
@@ -167,20 +167,13 @@ object Profile {
       df.queryExecution.toRdd.foreach(_ => ())
     }
 
-  /** Drop persisted frames and checkpoint blocks so no run inherits
-    * another's stored state (`clearCache` alone misses the latter). */
-  private def release(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.valuesIterator.foreach(_.unpersist(blocking = true))
-  }
-
   /** Warm-up, then the measured run of registry query `name`; writes
     * `<planDir>/<name>.txt` and returns the record. */
   def query(spark: SparkSession, probe: Probe, sfDir: String, name: String,
       planDir: Path): String = {
     val fn = SparkEntry.queries(name)
     execute(fn(spark, sfDir))
-    release(spark)
+    graft.ops.Stored.releaseAll(spark)
     GraftListenerBridge.drainListenerBus(spark.sparkContext)
     probe.reset()
     val t0 = System.nanoTime()
@@ -191,7 +184,7 @@ object Profile {
     Files.createDirectories(planDir)
     Files.writeString(planDir.resolve(s"$name.txt"),
       df.queryExecution.explainString(FormattedMode))
-    release(spark)
+    graft.ops.Stored.releaseAll(spark)
     probe.record(name, sfDir, wall)
   }
 

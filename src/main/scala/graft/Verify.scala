@@ -23,12 +23,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Queries may persist() shared subtrees (q32/q33); keep runs
-      // isolated. getPersistentRDDs also covers localCheckpoint blocks,
-      // which clearCache does NOT release (Bench.release's rationale).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
+      graft.ops.Stored.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -212,16 +212,17 @@ object Curate {
     *
     * Each stage's frame is stored once (left lazy, every later action
     * would re-run the chain from the scan: O(stages²) corpus passes).
-    * From exact dedup on, one eager `localCheckpoint` stores a stage and
-    * observes its funnel count ([[graft.ops.Stored]]): the count costs
-    * no job, and the next stage plans from a LogicalRDD instead of
-    * nesting every earlier stage's plan. `docs` and `quality` are
-    * persisted instead, for the reason beside each. Once a stage is
-    * stored, the stage before it and every checkpoint and persist made
-    * while building it (pairs, bands, probe, bitmap, the kernels' own)
-    * are released, and the run releases all it stored before it returns,
-    * also when it throws. The ledger is the context's persistent-RDD set:
-    * no other thread may persist on the same context meanwhile.
+    * Every stage, the input included, is one [[graft.ops.Stored]]
+    * checkpoint whose own job observes its funnel count: the count
+    * costs no job, the next stage plans from a LogicalRDD instead of
+    * nesting every earlier stage's plan, and a stage that ends
+    * hash-partitioned on doc_id (the input, the quality gate) is joined
+    * on doc_id without a second shuffle. Once a stage is stored, the
+    * stage before it and every checkpoint made while building it
+    * (pairs, bands, probe, bitmap, the kernels' own) are released, and
+    * the run releases all it stored before it returns, also when it
+    * throws. The ledger is the context's persistent-RDD set: no other
+    * thread may store on the same context meanwhile.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       tokenBudget: Long = 4096L, evalIdBelow: Long = 10L,
@@ -279,26 +280,19 @@ object Curate {
       s
     }
 
-    // persisted, not checkpointed: documentsSpread hash-partitions on
-    // doc_id, and the cache keeps that partitioning, so stage 1's doc_id
-    // join reads `docs` without a shuffle
-    val docs = T.documentsSpread(spark, sfDir)
-      .filter(col("doc_id") >= evalIdBelow)
-      .persist()
-    val nInput = docs.count(); lap("input")
+    val docs = store("input", T.documentsSpread(spark, sfDir)
+      .filter(col("doc_id") >= evalIdBelow))
 
     // 1. quality gate — the policy-selected rule over ONE q83 score
     // frame (the same frame stage 4's survivor rule reads)
     val scored = graft.queries.CurationOps.qualityScored(spark, sfDir)
       .filter(col("doc_id") >= evalIdBelow)
       .select(col("doc_id"), col("score"))
-    // persisted, not checkpointed, whichever branch built it: lmScored's
-    // pair and unigram scans and the lmPass join all read it, and the
-    // cache keeps its doc_id partitioning, so none of them shuffles it
-    // again (checkpointed, the sf0.001 run wrote 22% more shuffle bytes)
-    val quality = (qualityPolicy match {
+    // lmScored's pair and unigram scans and the lmPass join all read
+    // it on doc_id, the key it stays partitioned by
+    val quality = store("quality", qualityPolicy match {
       case QualityPolicy.AbsoluteFloor =>
-        docs.join(scored.filter(col("score") >= 0.05), "doc_id")
+        docs.df.join(scored.filter(col("score") >= 0.05), "doc_id")
       case QualityPolicy.SourceDeciles(k) =>
         // q141's kernel on the post-carveout corpus: the decile frame
         // is corpus-narrow and left-semi keeps the frame shape
@@ -307,7 +301,7 @@ object Curate {
         val dec = graft.queries.CurationOps
           .sourceDeciles(spark, sfDir, evalIdBelow)
           .filter(col("decile") < k).select(col("doc_id"))
-        docs.join(scored, "doc_id").join(dec, Seq("doc_id"), "left_semi")
+        docs.df.join(scored, "doc_id").join(dec, Seq("doc_id"), "left_semi")
       case QualityPolicy.TrainedDeciles(k) =>
         // train on the post-carveout corpus, score through the
         // factored seam, global decile on the LEARNED z (q141's rank
@@ -339,10 +333,8 @@ object Curate {
         val dec = ranked
           .filter(expr(s"(rk - 1) * 10 div $nFx") < k)
           .select(col("doc_id"))
-        docs.join(scored, "doc_id").join(dec, Seq("doc_id"), "left_semi")
-    }).persist()
-    val nQuality = quality.count(); lap("quality")
-    docs.unpersist()
+        docs.df.join(scored, "doc_id").join(dec, Seq("doc_id"), "left_semi")
+    })
 
     // 2. LM typicality gate (q125's kernel): the bigram LM is trained
     // on the quality-passed corpus itself and drops the low-typicality
@@ -354,9 +346,11 @@ object Curate {
     // statistic of a 256-doc deterministic sample (q113's KMV idea:
     // smallest xxhash64(doc_id) values — no corpus sort, bounded rows,
     // bit-reproducible). The train frame is the seam where a curated
-    // reference corpus would plug in.
-    val lmScores = graft.queries.CurationOps.lmScored(quality)
-      .select(col("doc_id"), col("lm_score"))
+    // reference corpus would plug in. The scores are stored: they feed
+    // both the threshold and the join, and left as one lazy plan, AQE's
+    // join choices there followed the order its stages happened to end.
+    val lmScores = Stored.checkpoint(graft.queries.CurationOps.lmScored(quality.df)
+      .select(col("doc_id"), col("lm_score")), "curate_lm_scores").df
     val kSample = 256
     val cutIdx = math.max(1, (kSample * lmTailFrac).toInt)
     val lmThr = lmScores
@@ -369,17 +363,17 @@ object Curate {
     // score), and an inner join would silently DROP those docs — a
     // stricter cut than the documented quantile tail. Unscoreable docs
     // pass this gate; the quality gate above already judged them.
-    val lmPass = store("lm", quality.join(lmScores, Seq("doc_id"), "left")
+    val lmPass = store("lm", quality.df.join(lmScores, Seq("doc_id"), "left")
       .crossJoin(broadcast(lmThr))
       .filter(col("lm_score").isNull || col("lm_score") >= col("__lm_floor"))
       .drop("lm_score", "__lm_floor"))
-    quality.unpersist()
 
-    // 3. exact dedup: min doc_id survives its md5(text) group (q29)
-    val wHash = Window.partitionBy(md5(col("text")))
-    val exact = store("exact",
-      lmPass.df.withColumn("__keep", col("doc_id") === min(col("doc_id")).over(wHash))
-        .filter(col("__keep")).drop("__keep"))
+    // 3. exact dedup: min doc_id survives its md5(text) group (q29).
+    // Only the (md5, doc_id) pairs shuffle, and the semi join keeps the
+    // stage partitioned on doc_id for stage 4's anti join.
+    val survivors = lmPass.df.groupBy(md5(col("text")))
+      .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
+    val exact = store("exact", lmPass.df.join(survivors, Seq("doc_id"), "left_semi"))
 
     // 4. near-dup prune: the shared near-dup pair graph (q33's LSH
     // generation, ≡ q32's exact output — LlmOps.nearDupPairs' doc),
@@ -600,8 +594,8 @@ object Curate {
     val shards = new Path(s"$outDir/shards")
     val nShards = shards.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .globStatus(new Path(shards, "source=*/shard_id=*")).count(_.isDirectory).toLong
-    Report(nInput, nQuality, lmPass.rows, exact.rows, nearDeduped.rows, mediaDeduped.rows,
-      clean.rows, semClean.rows, rewritten.rows, thinned.rows, sampled.rows,
+    Report(docs.rows, quality.rows, lmPass.rows, exact.rows, nearDeduped.rows,
+      mediaDeduped.rows, clean.rows, semClean.rows, rewritten.rows, thinned.rows, sampled.rows,
       chunked.rows, nShards, chunked.metrics.getLong(1))
   }
 }

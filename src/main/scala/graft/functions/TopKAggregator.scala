@@ -11,10 +11,6 @@ final case class Scored(key: Long, score: Double)
   * (q120's n_shared shape). */
 final case class ScoredL(key: Long, score: Long, payload: Long)
 
-/** A double-scored item with a rider payload column (q137's n_shared
-  * shape). */
-final case class ScoredP(key: Long, score: Double, payload: Long)
-
 /** Bounded-memory per-group top-k as a typed `Aggregator[IN, BUF, OUT]`
   * (the custom-UDAF surface SURVEY.md §2.6 kept in reserve) — the
   * scale-correct alternative to `row_number() OVER (PARTITION BY g ORDER
@@ -116,17 +112,6 @@ final class TopKLongAggregator(k: Int) extends BoundedTopK[ScoredL](k) {
     }
   }
   protected def encoder: Encoder[Seq[ScoredL]] = ExpressionEncoder()
-}
-
-/** [[TopKAggregator]] with a rider payload on the double score — the
-  * q137 shape (score is the order-pinned BM25 fold, payload the shared-
-  * gram count). Same (score DESC, key ASC) contract and the same no-NaN
-  * precondition as [[TopKAggregator]].
-  */
-final class TopKPayloadAggregator(k: Int) extends BoundedTopK[ScoredP](k) {
-  protected val ord: Ordering[ScoredP] =
-    Ordering.by((s: ScoredP) => (-s.score, s.key))
-  protected def encoder: Encoder[Seq[ScoredP]] = ExpressionEncoder()
 }
 
 /** The k smallest DISTINCT longs per group — the KMV sketch's collection

@@ -94,7 +94,7 @@ object BlockRanks {
     * unconditionally.
     */
   def withBlockRank(df: DataFrame, blockCol: String, orderCols: Seq[Column],
-      rnCol: String, partitions: Int = 0, knownRows: Long = -1L): DataFrame = {
+      rnCol: String, knownRows: Long = -1L): DataFrame = {
     val reserved = Seq("__pid", "__cnt", "__off")
     require(!df.columns.exists(reserved.contains),
       s"input must not contain reserved temp columns ${reserved.mkString(", ")}")
@@ -102,9 +102,7 @@ object BlockRanks {
     if (knownRows >= 0 && knownRows <= windowFormMaxRows)
       return df.withColumn(rnCol, row_number().over(
         Window.partitionBy(col(blockCol)).orderBy(orderCols: _*)).cast("long"))
-    val p =
-      if (partitions > 0) partitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
 
     val ranged = df
       .repartitionByRange(p, (col(blockCol) +: orderCols): _*)

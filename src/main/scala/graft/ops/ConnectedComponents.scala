@@ -38,9 +38,6 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   def largeStarSmallStar(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-
     // canonical directed form: (hi -> lo) for every input edge, plus
     // self-loops dropped; the iteration maintains edges as (src, dst)
     // with no orientation invariant (stars re-orient freely).
@@ -78,17 +75,20 @@ object ConnectedComponents {
       * probe fires in the round that PRODUCES the star forest, is exact
       * (no hash-collision false convergence), and directly verifies the
       * no-dst-is-a-src property the root extraction below RELIES on.
+      * The same aggregate sums the out-degrees, which is `df`'s edge
+      * count: returned with the verdict, it sizes the final frame.
       */
-    def isStarForest(df: DataFrame): Boolean = {
-      val bad = df.select(col("src").as("x"), lit(1L).as("es"), lit(0L).as("ed"))
+    def isStarForest(df: DataFrame): (Boolean, Long) = {
+      val probe = df.select(col("src").as("x"), lit(1L).as("es"), lit(0L).as("ed"))
         .union(df.select(col("dst").as("x"), lit(0L).as("es"), lit(1L).as("ed")))
         .groupBy(col("x"))
         // edge set is distinct, so the src-tag sum counts out-edges
         .agg(sum(col("es")).as("outdeg"), max(col("ed")).as("isDst"))
         .agg(count_if(col("outdeg") > 1L ||
-          (col("outdeg") > 0L && col("isDst") === 1L)))
-        .head().getLong(0)
-      bad == 0L
+          (col("outdeg") > 0L && col("isDst") === 1L)),
+          coalesce(sum(col("outdeg")), lit(0L)))
+        .head()
+      (probe.getLong(0) == 0L, probe.getLong(1))
     }
 
     // No action over the INPUT edge set: real caller graphs (raw
@@ -162,8 +162,13 @@ object ConnectedComponents {
         .localCheckpoint(eager = false)
       // the round's ONE action — see the invariant note on `large`
       // above: do not add actions between `large` and this call
-      converged = isStarForest(small)
-      edges = small
+      val (starForest, nEdges) = isStarForest(small)
+      converged = starForest
+      // the converged frame carries its measured size, so the callers'
+      // label joins plan a broadcast up front instead of shuffling the
+      // labels first (a checkpoint's own estimate is the product of the
+      // join inputs above it)
+      edges = if (converged) Stored.measured(small, nEdges) else small
     }
     // Fixpoint shape (relied on, so proved here): converged
     // now means the structural probe verified the edge set IS a

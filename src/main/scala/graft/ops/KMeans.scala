@@ -41,15 +41,15 @@ object KMeans {
 
   /** Quantize an `array<float|double>` column to `array<bigint>`.
     *
-    * MEASURED REJECTION (round 22): compiling this lambda into a
-    * quantize_fixed kernel (the q105/q108 pattern) measured consistently
-    * SLOWER in paired sf1 A/Bs, both orders — q117+q122 kernel
-    * 5.37/5.30 s vs this lambda 5.01/5.01 s. Every caller persists the
-    * quantized frame immediately, so the chain runs once per query
-    * (~1.3M floor ops at sf1 — sub-millisecond interpreted) and the
-    * kernel only buys an extra GenericArrayData→Unsafe copy on the
-    * cache build. The interpreted form stays; revisit only if a caller
-    * ever stops persisting this projection. */
+    * MEASURED REJECTION: compiling this lambda into a quantize_fixed
+    * kernel (the q105/q108 pattern) measured consistently SLOWER in
+    * paired sf1 A/Bs, both orders — q117+q122 kernel 5.37/5.30 s vs
+    * this lambda 5.01/5.01 s. Every caller stores the quantized frame
+    * immediately, so the chain runs once per query (~1.3M floor ops at
+    * sf1 — sub-millisecond interpreted) and the kernel only buys an
+    * extra GenericArrayData→Unsafe copy on the store. The interpreted
+    * form stays; revisit only if a caller ever stops storing this
+    * projection. */
   def quantize(v: Column): Column =
     transform(v, x => floor(x.cast("double") * lit(Quant)))
 

@@ -29,20 +29,18 @@ object AnalyticsOps {
     */
   val q49Sessionize = Q(
     "q49_sessionize",
+    // the (small) session frame is stored before the global sort, so
+    // the range partitioner's sampling pass reads it instead of running
+    // the session-merge aggregation a second time: the agg-above-sort
+    // analogue of the q41 narrow-sort lesson, for plans where the
+    // expensive subtree can't move above the sort
     (s, dir) =>
-      T.events(s, dir)
+      graft.ops.Stored.checkpoint(T.events(s, dir)
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"),
           date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n_events"))
-        // persist the (small) session frame before the global sort: the
-        // range partitioner's sampling job materializes the cache, so
-        // the session-merge aggregation runs ONCE instead of twice
-        // (sampling pass + sort pass) — the agg-above-sort analogue of
-        // the q41 narrow-sort lesson, for plans where the expensive
-        // subtree can't move above the sort
-        .persist()
+          col("n_events")), "q49_sessions").df
         .orderBy(col("user_id"), col("session_start")),
     Some("""
       WITH m AS (
@@ -891,52 +889,39 @@ object AnalyticsOps {
       // that never changes. Likewise |V| is folded to a LITERAL by one
       // upfront count (the q122 dial convention): the per-round
       // crossJoin(broadcast(nAgg)) was a third exchange job per round
-      // for one scalar. Round 12 measured the three-exchanges-per-round
-      // shape at 3.4 s wall on 0.3 s of parallel CPU — the loop was all
-      // job latency, not work.
-      // The seam stays LAZY (the q111 rule): nodes.count() two lines
-      // down is the first action and materializes it — sequential, so
-      // the q72/q89 concurrent-first-use race cannot happen here, and
-      // an eager form's separate materialization job is saved.
-      // HASH-PARTITION BY dst + persist() BEFORE the loop (round 22,
-      // guide §2.4 "two operations keyed the same way can share one
-      // exchange"): the per-round plan is broadcast(r)-join (streamed
-      // side = edges, partitioning kept) → groupBy(dst), so a
-      // dst-partitioned edge frame satisfies the aggregation's
-      // ClusteredDistribution in EVERY round — five per-round
-      // contribution exchanges collapse into this ONE setup exchange.
-      // The seam MUST be persist(), not localCheckpoint: under AQE the
-      // checkpoint's LogicalRDD captures executedPlan.outputPartitioning
-      // from the un-finalized AdaptiveSparkPlanExec = UnknownPartitioning
-      // (verified on the final plan dump: the checkpointed form kept
-      // `Exchange hashpartitioning(dst)` in every round; the cached
-      // form plans HashAggregate(final)←HashAggregate(partial) with no
-      // exchange — PlanAuditSpec pins both shapes). InMemoryTableScan
-      // re-exposes the cached plan's partitioning, which checkpoint
-      // discards. deg is hinted broadcast (node-sized, the same
-      // degradation note as the in-loop broadcast(r) below) so the
-      // cached subtree itself stays single-exchange. The honest byte
-      // ledger at sf0.1: the audit total RISES (~17.9 → ~30 MB),
-      // because map-side partial aggregation squeezed each round's
-      // exchange to ~|V| rows per map partition while the setup
-      // shuffle is |E| rows. That compression is an sf0.1 artifact —
-      // at corpus scale per-partition distinct-dst approaches
-      // rows-per-partition (|V| ≫ rows/partition), partial agg stops
-      // compressing, and the old shape degenerates to FIVE ~|E|-row
-      // exchanges against this one. Integer sums are partitioning-
-      // indifferent, so ranks are bit-identical. Cache-vs-checkpoint
-      // residency is equivalent (both MEMORY_AND_DISK); Bench/Verify
-      // release both seams between queries.
+      // for one scalar. The three-exchanges-per-round shape ran 3.4 s
+      // wall on 0.3 s of parallel CPU — the loop was all job latency,
+      // not work.
+      // HASH-PARTITION BY dst and store BEFORE the loop (guide §2.4
+      // "two operations keyed the same way can share one exchange"):
+      // the per-round plan is broadcast(r)-join (streamed side = edges,
+      // partitioning kept) → groupBy(dst), and the stored frame keeps
+      // its final plan's hashpartitioning(dst), so it satisfies the
+      // aggregation's ClusteredDistribution in EVERY round — five
+      // per-round contribution exchanges collapse into this ONE setup
+      // exchange (PlanAuditSpec pins the shape). deg is hinted
+      // broadcast (node-sized, the same degradation note as the
+      // in-loop broadcast(r) below) so the stored frame's own plan
+      // stays single-exchange. The byte ledger at sf0.1: the total
+      // RISES (~17.9 → ~30 MB), because map-side partial aggregation
+      // squeezed each round's exchange to ~|V| rows per map partition
+      // while the setup shuffle is |E| rows. That compression is an
+      // sf0.1 artifact — at corpus scale per-partition distinct-dst
+      // approaches rows-per-partition, partial agg stops compressing,
+      // and the per-round shape degenerates to FIVE ~|E|-row exchanges
+      // against this one. Integer sums are partitioning-indifferent,
+      // so ranks are bit-identical.
       // explicit count (the q44/q131 convention): a bare
       // repartition(col) is REPARTITION_BY_COL, which AQE may coalesce
       // to ONE partition at small byte sizes — serializing all five
-      // rounds' aggregation through a single task. The session's
+      // rounds' aggregation through a single task, and a coalesced
+      // frame is stored with no partitioning. The session's
       // shuffle-partition setting keeps it scale-adaptive.
       val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val edges = edges0.join(broadcast(deg), col("src") === col("dv"))
-        .select(col("src"), col("dst"), col("d"))
-        .repartition(nPart, col("dst"))
-        .persist()
+      val edges = graft.ops.Stored.checkpoint(
+        edges0.join(broadcast(deg), col("src") === col("dv"))
+          .select(col("src"), col("dst"), col("d"))
+          .repartition(nPart, col("dst")), "q107_edges").df
       val nodes = edges.select(col("src").as("v")).distinct()
       val n = nodes.count()
       val rInit = if (n > 0) mass / n else 0L
@@ -958,7 +943,7 @@ object AnalyticsOps {
         // without it round t's broadcast exchange carries rounds 1..t−1
         // as a nested subplan — planning cost grows quadratically in
         // rounds and each broadcast job replans the whole prefix.
-        // LAZY (round-16): the plan is truncated at declaration either
+        // LAZY: the plan is truncated at declaration either
         // way; round t+1's broadcast exchange is the first action and
         // folds the materialization into its own job, saving the eager
         // form's five separate round-boundary jobs. Uses are strictly

@@ -21,6 +21,12 @@ object ClusterOps {
   private val kClusters = 8
   private val lloydIters = 3
 
+  /** The embeddings as 2^24-quantized coordinates (vec_id, xq), stored:
+    * the k-means and PQ queries read them in every round and branch. */
+  private def quantizedVectors(s: org.apache.spark.sql.SparkSession, dir: String,
+      name: String): graft.ops.Stored = graft.ops.Stored.checkpoint(T.embeddings(s, dir)
+    .select(col("vec_id"), graft.ops.KMeans.quantize(col("embedding")).as("xq")), name)
+
   // The DuckDB twin of ops/KMeans.distExpr: same subtraction, same
   // square, same fold order over dims 1..64. Spark's fold seeds with 0D;
   // 0.0 + d == d exactly for the non-negative squares, so the two folds
@@ -73,9 +79,7 @@ object ClusterOps {
     "q117_kmeans_lloyd",
     (s, dir) => {
       import graft.ops.KMeans
-      val e = T.embeddings(s, dir)
-        .select(col("vec_id"), KMeans.quantize(col("embedding")).as("xq"))
-        .persist()
+      val e = quantizedVectors(s, dir, "q117_vectors").df
       val (assigned, _) = KMeans.run(e, kClusters, embDim, lloydIters)
       val vsum = udaf(new graft.functions.VecSumLong(embDim))
       assigned.groupBy(col("cid"))
@@ -150,11 +154,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
   val q119PqAdc = Q(
     "q119_pq_adc",
     (s, dir) => {
-      import graft.ops.KMeans
-      import org.apache.spark.sql.expressions.Window
-      val e = T.embeddings(s, dir)
-        .select(col("vec_id"), KMeans.quantize(col("embedding")).as("xq"))
-        .persist()
+      val e = quantizedVectors(s, dir, "q119_vectors").df
       // flat codebook, sorted by (subspace, codeword id): 64 rows → 1
       val cbl = e.filter(col("vec_id") < pqK)
         .select(col("vec_id").cast("int").as("cid"),
@@ -169,7 +169,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
            |  (a, b) -> (cast(a as double) - b) * (cast(a as double) - b)),
            |  0D, (s, x) -> s + x)""".stripMargin
       // encode: 8 codeword ids per corpus vector, map-side only — the
-      // compiled pq_encode kernel (round 21, guide §4): the interpreted
+      // compiled pq_encode kernel (guide §4): the interpreted
       // transform/aggregate HOF chain dispatched sub×k×dsub lambdas per
       // corpus row; the kernel is the identical fold/tie rule (see
       // VecDistKernels.pqEncode) fused into the scan's codegen stage
@@ -184,7 +184,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
           transform(sequence(0, ${pqSub - 1}), jj ->
             transform(slice(cbl, jj * $pqK + 1, $pqK), ct ->
               ${subDist("xq", "ct")}))""").as("qdt"))
-      // ADC via the compiled pq_adc lookup-sum (round 21, guide §4 —
+      // ADC via the compiled pq_adc lookup-sum (guide §4 —
       // same ascending-jj fold as the aggregate(sequence(...)) chain,
       // minus 8 interpreted element_at dispatches per corpus×query row)
       val scored = coded.join(broadcast(queries),
@@ -192,8 +192,8 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           graft.functions.GraftFunctions
             .pqAdc(col("codes"), col("qdt")).as("adist"))
-      // top-5 per query via the bounded TopKAggregator (round 21,
-      // guide §2.2 — the q34/q108 pattern): map-side partial cuts to
+      // top-5 per query via the bounded TopKAggregator (guide §2.2 —
+      // the q34/q108 pattern): map-side partial cuts to
       // ≤ 5 rows per query before the exchange, vs the window
       // shuffling the whole corpus×queries ADC frame. Ascending adist
       // rides as score = −adist (exact IEEE sign flip, negated back on
@@ -576,7 +576,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
     * not the binding constraint on this corpus, shortlist depth is.
     * At production scale cells grows ~√N, so N/cells (and with it this
     * shortlist) stays bounded; the rule is the same either way. The
-    * N lookup is one count() on the already-persisted vector frame —
+    * N is the row count the stored vector frame's own job observed —
     * keeping the limit a LITERAL preserves the WindowGroupLimit
     * rank-pushdown a column-valued limit would forfeit.
     */
@@ -623,10 +623,9 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
     (s, dir) => {
       import graft.ops.KMeans
       import org.apache.spark.sql.expressions.Window
-      val e = T.embeddings(s, dir)
-        .select(col("vec_id"), KMeans.quantize(col("embedding")).as("xq"))
-        .persist()
-      val slN = ivfShortlistFor(e.count())
+      val stored = quantizedVectors(s, dir, "q122_vectors")
+      val e = stored.df
+      val slN = ivfShortlistFor(stored.rows)
       val (_, cents) = KMeans.run(e, ivfCells, embDim, lloydIters)
       val coarse = cents.select(col("cid").as("cell_id"), col("mu").as("cv"))
       // corpus routing: KMeans.assign's map-side l2argmin fold — same
@@ -660,8 +659,8 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
       val subDist = (vec: String, ct: String) =>
         s"""aggregate(zip_with(slice($vec, jj * $pqDsub + 1, $pqDsub), $ct.mu,
            |  (a, b) -> (a - b) * (a - b)), 0D, (s, x) -> s + x)""".stripMargin
-      // compiled pq_encode kernel over the residuals (round 21, guide
-      // §4 — identical fold/tie rule to the HOF chain it replaces; the
+      // compiled pq_encode kernel over the residuals (guide §4 —
+      // identical fold/tie rule to the HOF chain it replaces; the
       // double-input variant of q119's long-input encode)
       val coded = res.join(broadcast(cbl))
         .select(col("vec_id"), col("cell_id"),
@@ -896,14 +895,9 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")},
           expr("aggregate(sort_array(cs), cast(0 as double), (a, x) -> a + x.c)")
             .as("score"),
           col("n_shared"))
-      // Rejected experiment (round 22): converting this window to
-      // TopKPayloadAggregator (q120's adopted move) measured FLAT in
-      // paired sf1 A/Bs (window 6.11/4.57 s vs agg 6.49/4.58 s across
-      // two alternating-order pairs) with IDENTICAL shuffle bytes —
-      // the Partial WindowGroupLimit below the exchange already bounds
-      // this post-agg frame to k rows/group/partition, and q137's wall
-      // is dominated by the sorted-fold agg above, so the window stays
-      // (simpler plan, no typed-encoder overhead).
+      // a row_number window, not a typed top-k aggregator: the Partial
+      // WindowGroupLimit below the exchange already bounds this
+      // post-agg frame to k rows/group/partition
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("score").desc, col("doc_id"))
       scored.withColumn("rank", row_number().over(w))

@@ -356,7 +356,7 @@ object CurationOps {
     * q103 epochs): one source-keyed agg with map-side partial combine,
     * sources-sized output. Factored so the three queries run the
     * IDENTICAL arithmetic (their oracles already assume it) and so a
-    * composed pipeline can `.persist()` this one frame and derive all
+    * composed pipeline can store this one frame and derive all
     * three mixture tables from a single corpus scan.
     */
   private[graft] def sourceTokenStats(s: org.apache.spark.sql.SparkSession,
@@ -522,16 +522,6 @@ object CurationOps {
     * sub-clustered — the join stays keyed either way. Cross-cell
     * near-dups are the recall trade documented by the paper.
     */
-  /** q87's cell-membership frame (vec_id, cent_id, v, nrm): broadcast
-    * K=16 codebook argmax assignment as one `cos_argmax` projection
-    * over the normalized vectors — factored so q139's mutual-kNN graph
-    * runs on the SAME cells (one implementation, one oracle-checked
-    * assignment rule). The normalized frame fans into the centroid
-    * slice and the assignment scan, so it is persisted for the build
-    * and unpersisted once the RESULT is checkpointed — the cache is
-    * managed entirely inside this seam, so multi-query runs (q87 +
-    * q139 both call it) accumulate nothing.
-    */
   /** The LAZY membership plan over a given normalized-vectors frame
     * — split from [[cellMembers]] so the plan-pin specs can assert
     * the broadcast-codebook assignment shape that the checkpointed
@@ -582,15 +572,19 @@ object CurationOps {
       .select(col("vec_id"), col("v"), sqrt(dot(col("v"), col("v"))).as("nrm"))
   }
 
+  /** q87's cell-membership frame (vec_id, cent_id, v, nrm): broadcast
+    * K=16 codebook argmax assignment as one `cos_argmax` projection
+    * over the normalized vectors — factored so q139's mutual-kNN graph
+    * runs on the SAME cells (one implementation, one oracle-checked
+    * assignment rule). The eager checkpoint materializes the membership
+    * frame, which every caller fans into a self-join. The normalized
+    * vectors are not stored: they feed only that checkpoint's job, and
+    * the centroid slice's vec_id filter runs below the projection, so
+    * its second read of them is a bare scan.
+    */
   private[graft] def cellMembers(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val n = normalizedVectors(s, dir).persist()
-    // eager localCheckpoint materializes the membership frame (every
-    // caller fans it into a self-join), then the build cache is freed
-    val out = cellMembersPlan(n).localCheckpoint()
-    n.unpersist()
-    out
-  }
+      dir: String): org.apache.spark.sql.DataFrame =
+    cellMembersPlan(normalizedVectors(s, dir)).localCheckpoint()
 
   val q87EmbedCellDedup = Q(
     "q87_embed_cell_dedup",

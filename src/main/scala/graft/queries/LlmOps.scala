@@ -57,13 +57,13 @@ object LlmOps {
     * (seed 42 — the exact hash Spark's `xxhash64()` and the minhash
     * kernel's base both compute, so downstream keys and sketches are
     * bit-identical to hashing the strings later). This is the frame
-    * the q32 family actually persists and joins on: 8 bytes per
+    * the q32 family actually stores and joins on: 8 bytes per
     * shingle instead of a ~20-char string, which is the difference
     * between a cache that always fits and one that thrashes under
     * session memory pressure — measured on the sf1 decade corpus,
     * the string-array cache missed in any warm session and re-ran
     * the whole shingle DAG through fresh AQE stages (267 MB of
-    * shuffle for 80 MB of work; BENCH_NOTES round 8). Set semantics
+    * shuffle for 80 MB of work; BENCH_NOTES). Set semantics
     * (distinct, Jaccard, containment) are exact up to within-doc
     * 64-bit collisions (~n²/2⁶⁴ per doc) — the same documented bound
     * the prefix index already carries.
@@ -329,7 +329,7 @@ object LlmOps {
     * all keyed shuffles that scale linearly. A size-compatibility
     * filter (J >= t ⇒ min(|A|,|B|) >= t·max(|A|,|B|)) prunes
     * cross-size candidates before the distinct. Candidates then get
-    * exact Jaccard on the persisted shingle frame.
+    * exact Jaccard on the stored shingle frame.
     *
     * The inverted index carries `xxhash64(shingle)` (8 bytes), never
     * the shingle string — the index exists only to generate candidate
@@ -346,7 +346,7 @@ object LlmOps {
   val q32NearDupPairs = Q(
     "q32_near_dup_pairs",
     (s, dir) => {
-      // hashed shingle sets: the persisted frame carries int64s only
+      // hashed shingle sets: the stored frame carries int64s only
       // (see shingledHashed — the string-array cache thrashed at the
       // sf1 decade), and the index key IS the element value
       val sh = shingledHashed(s, dir).localCheckpoint()
@@ -357,11 +357,10 @@ object LlmOps {
       // join-back pair (same df values, one fewer stage)
       val wDf = Window.partitionBy(col("shk"))
       val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shk"))
-      val prefix = inv0.withColumn("df", count(lit(1)).over(wDf))
+      val prefix = graft.ops.Stored.checkpoint(inv0.withColumn("df", count(lit(1)).over(wDf))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= col("n") - ceil(col("n") * 0.8).cast("int") + 1)
-        .select(col("doc_id"), col("n"), col("shk"))
-        .persist()
+        .select(col("doc_id"), col("n"), col("shk")), "q32_prefix").df
       val cands = prefix.as("x").join(prefix.as("y"),
           col("x.shk") === col("y.shk") &&
           col("x.doc_id") < col("y.doc_id") &&
@@ -391,11 +390,11 @@ object LlmOps {
     * minhashes -> 16 bands x 2 rows -> group by (band, bucket) ->
     * candidate pairs within buckets only -> exact Jaccard verify.
     *
-    * Cost discipline (round-2 verdict): minhashes are xxhash64 LONGS
-    * (codegen'd 8-byte min-reduce), not md5 hex strings — ~10× less CPU
-    * and no string churn; the shingle frame and the (band,bucket) frame
-    * are persisted so the self-join + verify DAG computes each exactly
-    * once instead of 2-4×. Correctness needs no cross-engine hash parity:
+    * Cost discipline: minhashes are xxhash64 LONGS (codegen'd 8-byte
+    * min-reduce), not md5 hex strings — ~10× less CPU and no string
+    * churn; the shingle frame and the (band,bucket) frame are stored so
+    * the self-join + verify DAG computes each exactly once instead of
+    * 2-4×. Correctness needs no cross-engine hash parity:
     * the registered oracle is the EXACT-Jaccard answer (q32's SQL), and
     * LSH internals only shape the candidate set.
     *
@@ -420,14 +419,14 @@ object LlmOps {
     // derivations per pre-hashed shingle, vs the interpreted
     // `transform(sequence(0,31), k -> array_min(transform(sh, t ->
     // xxhash64(t,k))))` chain that re-hashed every shingle 32× through
-    // per-element lambda dispatch (44 s of the round-3 bench)
+    // per-element lambda dispatch (44 s of one early bench run)
     val bandsE = "transform(sequence(0, 15), j -> " +
       "xxhash64(element_at(mhs, 2*j+1), element_at(mhs, 2*j+2)))"
-    val buckets = sh
+    val buckets = graft.ops.Stored.checkpoint(sh
       .select(col("doc_id"),
         graft.functions.GraftFunctions.minhash64(col("sh"), 32).as("mhs"))
-      .select(col("doc_id"), posexplode(expr(bandsE)).as(Seq("band", "bucket")))
-      .persist()
+      .select(col("doc_id"), posexplode(expr(bandsE)).as(Seq("band", "bucket"))),
+      "lsh_buckets").df
     val cands = buckets.as("x").join(buckets.as("y"),
         col("x.band") === col("y.band") &&
         col("x.bucket") === col("y.bucket") &&
@@ -441,7 +440,7 @@ object LlmOps {
     "q33_minhash_lsh_dup",
     (s, dir) => lshPairs(s, dir).orderBy(col("id_a"), col("id_b")),
     q32NearDupPairs.oracle,
-    "near-dup via banded minhash-LSH: xxhash64-long sketches, persisted frames, candidates only within (band, bucket); shuffle O(n·bands), never all-pairs")
+    "near-dup via banded minhash-LSH: xxhash64-long sketches, stored frames, candidates only within (band, bucket); shuffle O(n·bands), never all-pairs")
 
   // ---------------------------------------------------------------------
   // Similarity search

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables => T}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -61,14 +61,14 @@ object PipelineOps {
   val q42SimhashHammingDup = Q(
     "q42_simhash_hamming_dup",
     (s, dir) => {
-      val fps = LlmOps.shingled(s, dir)
+      val fps = graft.ops.Stored.checkpoint(LlmOps.shingled(s, dir)
         .select(col("doc_id"),
           graft.functions.GraftFunctions.md5Longs(col("sh"), 15).as("vals"))
         .select(col("doc_id"),
           // native majority-vote kernel (HashKernels.simhash) — the HOF
           // CASE-chain equivalent lives on in the oracle SQL below
-          graft.functions.GraftFunctions.simhash(col("vals"), simhashBits).as("fp"))
-        .persist()
+          graft.functions.GraftFunctions.simhash(col("vals"), simhashBits).as("fp")),
+        "q42_fingerprints").df
       val bands = fps.select(
         col("doc_id"), col("fp"),
         posexplode(expr("transform(sequence(0, 3), j -> shiftright(fp, j*15) & 32767L)"))
@@ -151,7 +151,7 @@ object PipelineOps {
       import graft.functions.GraftFunctions
       val w = typedLit(
         (0 until nHyper).map(h => (0 until embDim).map(j => hyperplaneWeight(h, j))))
-      val e = T.embeddings(s, dir)
+      val e = graft.ops.Stored.checkpoint(T.embeddings(s, dir)
         .select(col("vec_id"),
           expr("transform(embedding, x -> cast(x as double))").as("v"))
         .select(col("vec_id"), col("v"),
@@ -160,8 +160,7 @@ object PipelineOps {
             transform(sequence(lit(0), lit(nHyper - 1)), h =>
               when(GraftFunctions.dot(col("v"), element_at(w, h + 1)) >= 0,
                 call_function("shiftleft", lit(1), h)).otherwise(lit(0))),
-            lit(0), (a, x) => a + x).as("sig"))
-        .persist()
+            lit(0), (a, x) => a + x).as("sig")), "q43_signatures").df
       val bands = e.select(col("vec_id"),
         posexplode(expr("transform(sequence(0, 3), b -> shiftright(sig, b*4) & 15)"))
           .as(Seq("band", "bucket")))
@@ -180,8 +179,8 @@ object PipelineOps {
         .select(col("query_id"), col("neighbor_id"),
           (GraftFunctions.dot(col("qv"), col("v"))
             / (col("qn") * col("nrm"))).as("cosine"))
-      // top-5 per query via the bounded TopKAggregator (round 21 —
-      // the q34 pattern): (score DESC, key ASC) ≡ the window's
+      // top-5 per query via the bounded TopKAggregator (the q34
+      // pattern): (score DESC, key ASC) ≡ the window's
       // (cosine DESC, neighbor_id ASC), posexplode pos + 1 ≡
       // row_number; map-side partial cuts the LSH candidate frame to
       // ≤ 5 rows per query before any exchange
@@ -1251,13 +1250,13 @@ object PipelineOps {
     "q60_ann_ivf",
     (s, dir) => {
       import graft.functions.GraftFunctions.{dot, cosArgmax}
-      val n = T.embeddings(s, dir)
+      val n = graft.ops.Stored.checkpoint(T.embeddings(s, dir)
         .select(col("vec_id"),
           expr("transform(embedding, x -> cast(x as double))").as("v"))
-        .select(col("vec_id"), col("v"), sqrt(dot(col("v"), col("v"))).as("nrm"))
-        .persist()
+        .select(col("vec_id"), col("v"), sqrt(dot(col("v"), col("v"))).as("nrm")),
+        "q60_vectors").df
       // Corpus-side assignment as the map-side cos_argmax kernel
-      // (round 21, the cellMembersPlan rewrite): same dot-fold doubles,
+      // (the cellMembersPlan form): same dot-fold doubles,
       // same (cos DESC, cent_id ASC) tie rule as the previous exploded
       // row_number window, minus the corpus×16 exchange+sort. The
       // top-4 PROBE ranking still wants 4 cells per query, so it keeps

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{Q, Qdsl, Tables => T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Qdsl._

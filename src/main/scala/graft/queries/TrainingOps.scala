@@ -702,16 +702,15 @@ object TrainingOps {
     * O(len·distinct) per row in INTERPRETED lambda eval and measured
     * 25× slower at sf0.1 (150 s vs 6 s) — per-row HOF chains don't
     * codegen, so linear-work exploded hash aggs win despite the
-    * shuffles. Both grams ride one persisted tokenized scan.
+    * shuffles. Both grams ride one stored tokenized scan.
     */
   val q73RepetitionFilter = Q(
     "q73_repetition_filter",
     (s, dir) => {
-      val base = T.documentsSpread(s, dir)
+      val base = graft.ops.Stored.checkpoint(T.documentsSpread(s, dir)
         .select(col("doc_id"),
           expr(s"filter($toksSql, t -> t <> '')").as("ts"))
-        .filter(size(col("ts")) >= 3)
-        .persist()
+        .filter(size(col("ts")) >= 3), "q73_base").df
       val tokStats = base.select(col("doc_id"), explode(col("ts")).as("t"))
         .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("c"))
         .groupBy(col("doc_id"))

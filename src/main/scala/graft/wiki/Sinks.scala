@@ -24,14 +24,6 @@ import org.apache.spark.sql.types._
   */
 object Sinks {
 
-  /** Ledger row schema (§1.3): the reference's Mongo document
-    * `{url, htmlPath, last_modified}` (db_api.py:35).
-    */
-  val LedgerSchema: StructType = StructType(Seq(
-    StructField("url", StringType, nullable = false),
-    StructField("html_path", StringType, nullable = false),
-    StructField("last_modified", TimestampType, nullable = true)))
-
   /** O-28: write each row of (file_name, value) as `<dir>/<file_name>`.
     * Executor-parallel: every partition's task writes its own rows, no
     * driver collect — the Spark rendering of the fetcher's per-message

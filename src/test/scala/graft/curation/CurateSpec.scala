@@ -292,6 +292,26 @@ class CurateSpec extends SparkSpec {
     assert(snapshot(dirA) === snapshot(dirB))
   }
 
+  test("the funnel and the written shards are invariant under shuffle partitions and AQE") {
+    // stored stages declare the hash partitioning their job ran with;
+    // a declaration that did not match where the rows are would join
+    // wrong rows, so the run must not depend on the partition count or
+    // on AQE's final plans
+    val (dirA, rA) = outA
+    def written(d: String) = spark.read.parquet(s"$d/shards")
+      .select(col("source"), col("shard_id").cast("long"), col("doc_id"),
+        col("chunk_start"), col("nc"), col("lang"), col("chunk_text"))
+      .collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+    val base = written(dirA)
+    Seq("spark.sql.shuffle.partitions" -> "7", "spark.sql.adaptive.enabled" -> "false")
+      .foreach { case (k, v) =>
+        val dir = java.nio.file.Files.createTempDirectory("graft_curate_conf").toString
+        val r = withConf(k -> v)(Curate.run(spark, sf, dir))
+        assert(r === rA, s"funnel changed under $k=$v")
+        assert(written(dir) === base, s"written shards changed under $k=$v")
+      }
+  }
+
   test("shard partitioning prunes: a (source, shard_id) read lists one directory") {
     val (dir, _) = outA
     val one = spark.read.parquet(s"$dir/shards")

@@ -105,22 +105,6 @@ class TopKAggregatorSpec extends AnyFunSuite {
     assert(refL(xs).take(2) === Seq(ScoredL(1L, big + 1L, 10L), ScoredL(4L, big + 1L, 40L)))
   }
 
-  test("TopKPayloadAggregator: payload rides, (score DESC, key ASC) order kept") {
-    val k = 2
-    val agg = new TopKPayloadAggregator(k)
-    val xs = Seq(
-      ScoredP(3L, 0.5, 33L), ScoredP(1L, 0.9, 11L),
-      ScoredP(2L, 0.9, 22L), ScoredP(4L, 0.1, 44L))
-    val want = Seq(ScoredP(1L, 0.9, 11L), ScoredP(2L, 0.9, 22L))
-    xs.permutations.foreach { p =>
-      (0 to p.length).foreach { cut =>
-        val (a, b) = p.splitAt(cut)
-        assert(agg.merge(a.foldLeft(agg.zero)(agg.reduce),
-          b.foldLeft(agg.zero)(agg.reduce)) === want, s"order $p cut $cut")
-      }
-    }
-  }
-
   test("KMinDistinctAggregator merge: sorted-distinct union under every split") {
     val k = 4
     val agg = new KMinDistinctAggregator(k)

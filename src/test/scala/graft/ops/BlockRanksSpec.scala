@@ -24,8 +24,16 @@ class BlockRanksSpec extends SparkSpec {
       .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2))
 
+  /** The split takes its range count from the session's shuffle
+    * partitions when it is built (its ranged frame is checkpointed
+    * there), so `p` is set for the build only. */
+  private def ranked(df: DataFrame, p: Int): DataFrame =
+    withConf("spark.sql.shuffle.partitions" -> p.toString) {
+      BlockRanks.withBlockRank(df, "blk", Seq(col("k"), col("id")), "rn")
+    }
+
   private def blockForm(df: DataFrame, p: Int): Seq[(Long, Long, Long)] =
-    BlockRanks.withBlockRank(df, "blk", Seq(col("k"), col("id")), "rn", p)
+    ranked(df, p)
       .select(col("blk"), col("id"), col("rn"))
       .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2))
@@ -55,10 +63,10 @@ class BlockRanksSpec extends SparkSpec {
         // many ties plus full-range values: rank order is data-like
         (col("id") * 7919 % 1024).as("k"), col("id"))
     val p = 32
-    val got = BlockRanks.withBlockRank(mega, "blk", Seq(col("k"), col("id")), "rn", p)
     // equality with the single-task window form on the whole frame
     val expected = mega.withColumn("rn", row_number().over(
         Window.partitionBy(col("blk")).orderBy(col("k"), col("id"))).cast("long"))
+    val got = ranked(mega, p)
     assert(got.select("blk", "id", "rn")
       .except(expected.select("blk", "id", "rn")).isEmpty &&
       expected.select("blk", "id", "rn")
@@ -75,7 +83,7 @@ class BlockRanksSpec extends SparkSpec {
   }
 
   test("ranks are dense 1..pop within every block") {
-    val got = BlockRanks.withBlockRank(fixture, "blk", Seq(col("k"), col("id")), "rn", 8)
+    val got = ranked(fixture, 8)
     val bad = got.groupBy(col("blk"))
       .agg(count(lit(1)).as("pop"), min(col("rn")).as("lo"),
         max(col("rn")).as("hi"), countDistinct(col("rn")).as("d"))
@@ -87,9 +95,9 @@ class BlockRanksSpec extends SparkSpec {
     val df = fixture
     val expected = windowForm(df)
     val small = BlockRanks.withBlockRank(df, "blk", Seq(col("k"), col("id")),
-      "rn", 8, knownRows = df.count())
+      "rn", knownRows = df.count())
     val large = BlockRanks.withBlockRank(df, "blk", Seq(col("k"), col("id")),
-      "rn", 8, knownRows = BlockRanks.windowFormMaxRows + 1)
+      "rn", knownRows = BlockRanks.windowFormMaxRows + 1)
     def tuples(g: DataFrame) = g.select(col("blk"), col("id"), col("rn"))
       .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2))
@@ -115,7 +123,7 @@ class BlockRanksSpec extends SparkSpec {
   test("reserved temp columns are rejected") {
     val df = fixture.withColumn("__pid", lit(1))
     intercept[IllegalArgumentException] {
-      BlockRanks.withBlockRank(df, "blk", Seq(col("id")), "rn", 4)
+      BlockRanks.withBlockRank(df, "blk", Seq(col("id")), "rn")
     }
   }
 }

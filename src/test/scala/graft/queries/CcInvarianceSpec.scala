@@ -2,12 +2,19 @@ package graft.queries
 
 import graft.SparkSpec
 
-/** Configuration invariance of the connected-components family: q72,
-  * q112 and q134 label through star contraction and join the labels
-  * back with no broadcast hint, so the planner (static or AQE) alone
-  * picks every join and partition count. Each query must give the same
-  * order-normalized rows under each setting below as in the default
-  * session; `withConf` restores every key in a `finally`.
+/** Configuration invariance of the queries whose plans depend on what
+  * the planner is told rather than on what they compute:
+  *  - the connected-components family (q72, q112, q134, q139) labels
+  *    through star contraction and joins the labels back with no
+  *    broadcast hint, so the planner (static or AQE) alone picks every
+  *    join and partition count;
+  *  - every query that reads a `graft.ops.Stored` frame, which declares
+  *    the hash partitioning and row count its storing job measured: a
+  *    declaration that did not match where the rows are would join
+  *    wrong rows without an error.
+  * Each query must give the same order-normalized rows under each
+  * setting below as in the default session; `withConf` restores every
+  * key in a `finally`.
   */
 class CcInvarianceSpec extends SparkSpec {
 
@@ -23,7 +30,14 @@ class CcInvarianceSpec extends SparkSpec {
     q.fn(spark, sf).collect().map(_.toSeq.mkString("\u0001")).toSeq.sorted
 
   Seq(TrainingOps.q72DupClusters, TrainingOps.q112ClusterSafeSplit,
-      TrainingOps.q134SoftDedupWeights).foreach { q =>
+      TrainingOps.q134SoftDedupWeights,
+      LlmOps.q32NearDupPairs, LlmOps.q33MinhashLshDup,
+      PipelineOps.q42SimhashHammingDup, PipelineOps.q43AnnHyperplaneLsh,
+      AnalyticsOps.q49Sessionize, PipelineOps.q60AnnIvf,
+      TrainingOps.q73RepetitionFilter, CurationOps.q87EmbedCellDedup,
+      CurationOps.q89NeardupPrune, AnalyticsOps.q107GraphPagerank,
+      ClusterOps.q117KmeansLloyd, ClusterOps.q119PqAdc, ClusterOps.q122IvfPq,
+      CurationOps.q139MutualKnnClusters).foreach { q =>
     test(s"${q.name} rows are invariant under shuffle partitions, AQE and broadcast settings") {
       val base = normalized(q)
       assert(base.nonEmpty, s"${q.name}: empty result at sf0.001")

@@ -123,18 +123,17 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("Exchange hashpartitioning"), plan)
   }
 
-  test("q107 per-round shape: dst-partitioned PERSISTED edges make the rank agg exchange-free") {
-    // Round-22 pin for the PageRank loop rewrite: the edge frame is
-    // hash-partitioned by dst ONCE and persist()ed, and the
-    // InMemoryTableScan re-exposes that partitioning — so each round's
+  test("q107 per-round shape: dst-partitioned STORED edges make the rank agg exchange-free") {
+    // Pin for the PageRank loop: the edge frame is hash-partitioned by
+    // dst ONCE (an explicit count, as q107 passes) and stored, and the
+    // stored frame keeps that partitioning — so each round's
     // broadcast(rank)-join → groupBy(dst) plans with ZERO shuffle
-    // exchanges. The seam matters: a localCheckpoint here captures
+    // exchanges. The seam matters: a raw localCheckpoint captures
     // UnknownPartitioning under AQE (executedPlan is the un-finalized
     // AdaptiveSparkPlanExec, a LeafExecNode) and every round re-pays
-    // the dst exchange — pinned as the counter-example below so a seam
-    // "simplification" back to checkpoint fails this suite, not the
-    // 100 TB run. q107's own explain is seam-truncated, so the
-    // invariant lives here on the replicated shape.
+    // the dst exchange — pinned as the counter-example below. q107's
+    // own explain is seam-truncated, so the invariant lives here on
+    // the replicated shape.
     import org.apache.spark.sql.functions._
     import spark.implicits._
     def mkEdges = (1L to 200L).map(i => (i % 17, i % 13, 1L + i % 3))
@@ -144,29 +143,27 @@ class PlanAuditSpec extends SparkSpec {
       edges.join(broadcast(r), col("src") === col("v"))
         .select(col("dst"), expr("r div d").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("cs"))
-    val cached = mkEdges.repartition(col("dst")).persist()
-    try {
-      cached.count() // materialize, as q107's nodes.count() does
-      val good = round(cached)
-      // only the plan ABOVE the cache seam matters (the repartition
-      // exchange legitimately lives INSIDE the InMemoryRelation dump)
-      val plan = good.queryExecution.executedPlan.toString
-        .linesIterator.takeWhile(!_.contains("InMemoryTableScan")).mkString("\n")
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"per-round agg must inherit the cache's dst partitioning, not re-shuffle:\n$plan")
-      assert(plan.contains("BroadcastHashJoin"), plan)
-      // the counter-example: the checkpoint seam loses the partitioning
-      val ckpt = mkEdges.repartition(col("dst")).localCheckpoint(eager = false)
-      val bad = round(ckpt).queryExecution.executedPlan.toString
-        .linesIterator.takeWhile(!_.contains("Scan ExistingRDD")).mkString("\n")
-      assert(bad.contains("Exchange hashpartitioning"),
-        s"checkpoint seam unexpectedly started preserving partitioning — " +
-          s"re-evaluate the q107 persist tradeoff:\n$bad")
-      // and the shape is semantics-preserving: integer sums are
-      // partitioning-indifferent
-      assert(good.orderBy("dst").collect().toSeq ===
-        round(mkEdges).orderBy("dst").collect().toSeq)
-    } finally cached.unpersist(blocking = true)
+    val stored = graft.ops.Stored.checkpoint(
+      mkEdges.repartition(4, col("dst")), "plan_audit_q107").df
+    val good = round(stored)
+    // only the plan ABOVE the stored seam matters (the repartition
+    // exchange ran in the storing job)
+    val plan = good.queryExecution.executedPlan.toString
+      .linesIterator.takeWhile(!_.contains("Scan ExistingRDD")).mkString("\n")
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"per-round agg must inherit the stored dst partitioning, not re-shuffle:\n$plan")
+    assert(plan.contains("BroadcastHashJoin"), plan)
+    // the counter-example: a raw checkpoint seam loses the partitioning
+    val ckpt = mkEdges.repartition(4, col("dst")).localCheckpoint(eager = false)
+    val bad = round(ckpt).queryExecution.executedPlan.toString
+      .linesIterator.takeWhile(!_.contains("Scan ExistingRDD")).mkString("\n")
+    assert(bad.contains("Exchange hashpartitioning"),
+      s"raw checkpoint seam unexpectedly started preserving partitioning — " +
+        s"re-evaluate whether Stored still needs to rebuild its plan:\n$bad")
+    // and the shape is semantics-preserving: integer sums are
+    // partitioning-indifferent
+    assert(good.orderBy("dst").collect().toSeq ===
+      round(mkEdges).orderBy("dst").collect().toSeq)
   }
 
   test("q01 scan prunes columns and pushes the date filter") {
@@ -187,9 +184,7 @@ class PlanAuditSpec extends SparkSpec {
       s"expected the checkpointed shingle frame (Scan ExistingRDD):\n$plan")
     // every document access must come from the checkpoint: a parquet
     // scan in this plan means the shingle DAG re-derives from source
-    // (the prefix frame's own InMemoryRelation is fine — its child is
-    // the checkpoint scan, so a miss re-windows 8-byte rows, it never
-    // re-reads the corpus)
+    // (the stored prefix frame is a second Scan ExistingRDD)
     assert(!plan.contains("Scan parquet"),
       s"q32 must not re-scan parquet below the checkpointed shingles:\n$plan")
   }

@@ -55,6 +55,9 @@ object Qdsl {
   /** The corpus's naive whitespace tokenizer as Spark SQL text: tokens of
     * lowercased `text` split on single spaces (the reference's word_count
     * split, categorizer.py:137 `split(value," ")`), empty tokens kept.
-    * The oracle twin is DuckDB's `string_split(lower(text), ' ')`. */
+    * The oracle twin is [[oracleToksSql]]. */
   val toksSql = "split(lower(text), ' ')"
+
+  /** [[toksSql]] as DuckDB SQL, for the oracle queries. */
+  val oracleToksSql = "string_split(lower(text), ' ')"
 }

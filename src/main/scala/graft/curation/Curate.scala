@@ -274,7 +274,7 @@ object Curate {
     // (the previous stage and the scratch this one was built on)
     def store(name: String, df: DataFrame, extra: Column*): Stored = {
       val built = held.ids
-      val s = Stored.checkpoint(df, s"curate_$name", extra: _*)
+      val s = Stored.checkpoint(df, extra: _*)
       held.release(built)
       lap(name)
       s
@@ -305,23 +305,19 @@ object Curate {
       case QualityPolicy.TrainedDeciles(k) =>
         // train on the post-carveout corpus, score through the
         // factored seam, global decile on the LEARNED z (q141's rank
-        // shape on one block; the score frame is corpus-narrow and
-        // its count is one cheap agg on the checkpointed design
-        // matrix)
+        // shape on one block; the score frame is corpus-narrow)
         val C = graft.queries.CurationOps
         val (fx, _, _, w3) = C.gdRounds(spark, sfDir, evalIdBelow)
-        // count from the checkpointed design matrix, NOT from `ranked`
-        // (same universe — every fx row scores), so the rank chain is
-        // never re-derived for a scalar. Driver-side scalar, not a
-        // crossJoin'd agg frame: it doubles as the gdStep non-emptiness
-        // guard (an empty post-carveout matrix trains null weights that
-        // silently keep nothing) and a count on checkpoint blocks is
-        // one cheap job.
-        val nFx = fx.count()
+        // the design matrix's row count, observed by the job that
+        // stored it (same universe as `ranked`: every fx row scores).
+        // It doubles as the gdStep non-emptiness guard: an empty
+        // post-carveout matrix trains null weights that silently keep
+        // nothing.
+        val nFx = fx.rows
         require(nFx > 0,
           s"TrainedDeciles: empty design matrix after carveout (evalIdBelow=$evalIdBelow) — " +
             "gdRounds would train null weights; lower the carveout or use another QualityPolicy")
-        val z = C.gdScores(fx, w3).withColumn("__blk", lit(0L))
+        val z = C.gdScores(fx.df, w3).withColumn("__blk", lit(0L))
         // nFx is exactly the rank input's row count (every fx row
         // scores), so hand it to BlockRanks: below the 32k threshold
         // the plain-window form skips the split path's three extra
@@ -350,7 +346,7 @@ object Curate {
     // both the threshold and the join, and left as one lazy plan, AQE's
     // join choices there followed the order its stages happened to end.
     val lmScores = Stored.checkpoint(graft.queries.CurationOps.lmScored(quality.df)
-      .select(col("doc_id"), col("lm_score")), "curate_lm_scores").df
+      .select(col("doc_id"), col("lm_score"))).df
     val kSample = 256
     val cutIdx = math.max(1, (kSample * lmTailFrac).toInt)
     val lmThr = lmScores
@@ -378,14 +374,13 @@ object Curate {
     // 4. near-dup prune: the shared near-dup pair graph (q33's LSH
     // generation, ≡ q32's exact output — LlmOps.nearDupPairs' doc),
     // q89's survivor rule
-    // EAGER checkpoint: `pairs` feeds BOTH union branches below and
+    // stored: `pairs` feeds BOTH union branches below and
     // Catalyst plans each occurrence independently — unmaterialized,
     // the whole LSH generation (shingle → minhash → band join →
     // Jaccard verify) ran twice. The pair graph is output-sized (edges
     // between near-dups), tiny next to the corpus scan that produces it.
-    val pairs = graft.queries.LlmOps.nearDupPairs(spark, sfDir)
-      .select(col("id_a"), col("id_b"))
-      .localCheckpoint()
+    val pairs = Stored.checkpoint(graft.queries.LlmOps.nearDupPairs(spark, sfDir)
+      .select(col("id_a"), col("id_b"))).df
     val e = pairs.select(col("id_a").as("me"), col("id_b").as("other"))
       .union(pairs.select(col("id_b").as("me"), col("id_a").as("other")))
     val losers = e
@@ -421,8 +416,8 @@ object Curate {
     // twice per pipeline run. The bands frames are 16 longs/doc.
     val P = graft.queries.PipelineOps
     val nDocs = P.nonEmptyDocCount(spark, sfDir)
-    val aBands = P.audioBands(spark, sfDir).localCheckpoint()
-    val vBands = P.videoBands(spark, sfDir).localCheckpoint()
+    val aBands = Stored.checkpoint(P.audioBands(spark, sfDir)).df
+    val vBands = Stored.checkpoint(P.videoBands(spark, sfDir)).df
     val nearLosers = Seq(
       P.perceptualDupPairs(spark, sfDir, nDocs),
       P.videoNearDupPairsFrom(spark, vBands, nDocs),
@@ -459,13 +454,13 @@ object Curate {
         explode(array_distinct(graft.functions.GraftFunctions.ngrams(col("ts"), 5))).as("g"))
     val TO = graft.queries.TrainingOps
     // tiny (distinct grams of the eval docs) but it fans into the
-    // bitmap build AND the exact join — checkpoint the fan-out
-    val probe = grams(T.documents(spark, sfDir).filter(col("doc_id") < evalIdBelow))
-      .select(col("g")).distinct()
-      .localCheckpoint()
+    // bitmap build AND the exact join — store the fan-out
+    val probe = Stored.checkpoint(
+      grams(T.documents(spark, sfDir).filter(col("doc_id") < evalIdBelow))
+        .select(col("g")).distinct()).df
     // the bitmap frame fans into FOUR broadcast builds (the q133
     // convention — Catalyst does not share identical subplans)
-    val words = TO.bloomWords(probe).localCheckpoint()
+    val words = Stored.checkpoint(TO.bloomWords(probe)).df
     val flagged = TO.bloomProbeFlagged(TO.bloomGrams(mediaDeduped.df), words)
       .select(col("doc_id"))
     val contaminated = grams(

@@ -47,7 +47,7 @@ import org.apache.spark.sql.functions._
   *      plus the broadcast per-(range, block) offset = the exact
   *      per-block rank.
   *
-  * The ranged frame is eagerly `localCheckpoint`ed: both q44/q128
+  * The ranged frame is stored ([[Stored]]): both q44/q128
   * join sides read the ranked frame, and two planner instantiations
   * of the range exchange would re-sample boundaries independently —
   * per-branch disagreement on which range a row fell in silently
@@ -104,10 +104,10 @@ object BlockRanks {
         Window.partitionBy(col(blockCol)).orderBy(orderCols: _*)).cast("long"))
     val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
 
-    val ranged = df
+    // stored: pins the sampled boundaries for multi-branch readers
+    val ranged = Stored.checkpoint(df
       .repartitionByRange(p, (col(blockCol) +: orderCols): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint() // pin sampled boundaries for multi-branch readers
+      .withColumn("__pid", spark_partition_id())).df
 
     // exclusive prefix sum of range populations within each block —
     // the offset every range adds to its local row numbers

@@ -99,7 +99,7 @@ object KMeans {
     * round-(iters−1) centroids, the ones that produced it) and the final
     * updated centroid table (cid, mu).
     *
-    * The k-row centroid state is `localCheckpoint`ed after every update:
+    * The k-row centroid state is stored ([[Stored]]) after every update:
     * without it, iteration t's assign INLINES iterations 1..t−1's whole
     * subplans into every consumer (plan size grows geometrically, and a
     * consumer that uses the centroids twice pays the corpus scans
@@ -116,7 +116,7 @@ object KMeans {
     var assigned: DataFrame = null
     for (_ <- 1 to iters) {
       assigned = assign(corpus, cents)
-      cents = update(assigned, cents, dim).localCheckpoint()
+      cents = Stored.checkpoint(update(assigned, cents, dim)).df
     }
     (assigned, cents)
   }

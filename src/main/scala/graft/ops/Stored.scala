@@ -1,5 +1,8 @@
 package graft.ops
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
@@ -21,19 +24,24 @@ import org.apache.spark.sql.functions.{count, lit}
   * lineage above it, and it carries what the job measured: the observed
   * row count as its statistics, and the final plan's hash partitioning,
   * so a consumer joining on that key reads it without a shuffle. It is
-  * the engine's one way to store a frame; its blocks live until the
-  * caller releases the context's persistent RDDs.
+  * the engine's one way to store a frame eagerly (a spec scans
+  * `src/main` for any other); its blocks live until the caller releases
+  * the context's persistent RDDs.
   */
 final case class Stored(df: DataFrame, metrics: Row) {
   def rows: Long = metrics.getLong(0)
 }
 
 object Stored {
-  /** Stores `df` and observes `count(*)` plus `extra` under `name`,
-    * which must be unique among the observations in `df`'s plan. */
-  def checkpoint(df: DataFrame, name: String, extra: Column*): Stored = {
+  private val observations = new AtomicLong
+
+  /** Stores `df` and observes `count(*)` plus `extra`. The storing job,
+    * and every stage it creates, is named `localCheckpoint at <file>:<line>`
+    * of the line that called this, as a `localCheckpoint` there would be. */
+  def checkpoint(df: DataFrame, extra: Column*): Stored = {
+    val name = s"stored_${observations.incrementAndGet()}"
     val observed = df.observe(name, count(lit(1)).as("rows"), extra: _*)
-    val stored = observed.localCheckpoint()
+    val stored = atCaller(df.sparkSession.sparkContext)(observed.localCheckpoint())
     val metrics = observed.queryExecution.observedMetrics(name)
     // after the job AQE's plan is final: its partitioning is where the
     // stored rows are
@@ -42,6 +50,18 @@ object Stored {
       case p => p
     }
     Stored(measured(stored, metrics.getLong(0), ran.outputPartitioning), metrics)
+  }
+
+  /** Runs `body` with the context's call site set to the first stack
+    * frame outside this object, then restores the previous one. */
+  private def atCaller[T](sc: SparkContext)(body: => T): T = {
+    val caller = Thread.currentThread.getStackTrace.iterator.drop(1)
+      .find(!_.getClassName.startsWith(getClass.getName)).get
+    val site = s"localCheckpoint at ${caller.getFileName}:${caller.getLineNumber}"
+    val keys = Seq("callSite.short", "callSite.long")
+    val saved = keys.map(sc.getLocalProperty)
+    keys.foreach(sc.setLocalProperty(_, site))
+    try body finally keys.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** `df`, whose plan must be a checkpoint's LogicalRDD, re-planned with

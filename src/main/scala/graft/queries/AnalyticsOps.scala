@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables => T}
+import graft.ops.Stored
 import graft.functions.{Scored, TopKAggregator}
 import org.apache.spark.sql.functions._
 
@@ -35,12 +36,12 @@ object AnalyticsOps {
     // analogue of the q41 narrow-sort lesson, for plans where the
     // expensive subtree can't move above the sort
     (s, dir) =>
-      graft.ops.Stored.checkpoint(T.events(s, dir)
+      Stored.checkpoint(T.events(s, dir)
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"),
           date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n_events")), "q49_sessions").df
+          col("n_events"))).df
         .orderBy(col("user_id"), col("session_start")),
     Some("""
       WITH m AS (
@@ -540,11 +541,11 @@ object AnalyticsOps {
     * the ESTIMATE bit-for-bit — the gate pins the sketch, not a
     * tolerance.
     */
-  /** q97's unpivot derivation WITHOUT the checkpoint, factored (round-16
-    * advice) so PlanAuditSpec can assert the no-Expand property on the
-    * derivation itself — the eager localCheckpoint below hides this
-    * subtree behind a LogicalRDD, so a final-plan audit alone could not
-    * see an Expand regression here. */
+  /** q97's unpivot derivation WITHOUT the store, factored so
+    * PlanAuditSpec can assert the no-Expand property on the derivation
+    * itself — storing it below hides this subtree behind a LogicalRDD,
+    * so a final-plan audit alone could not see an Expand regression
+    * here. */
   private[graft] def q97Unpivot(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     T.ordersSpread(s, dir)
@@ -566,12 +567,12 @@ object AnalyticsOps {
     (s, dir) => {
       import graft.functions.KMinDistinctAggregator
       val k = 64
-      // EAGER checkpoint: the unpivoted frame feeds BOTH the min/max
-      // stats agg and the KMV hash stream below, and Catalyst plans
-      // each occurrence independently — unmaterialized, the string
-      // formatting + 4x stack ran twice (the two dominant stages in
-      // the round-16 profile). The frame is 4·|orders| short strings.
-      val unp = q97Unpivot(s, dir).localCheckpoint()
+      // stored: the unpivoted frame feeds BOTH the min/max stats agg
+      // and the KMV hash stream below, and Catalyst plans each
+      // occurrence independently — unstored, the string formatting +
+      // 4x stack ran twice (the two dominant stages in its profile).
+      // The frame is 4·|orders| short strings.
+      val unp = Stored.checkpoint(q97Unpivot(s, dir)).df
       // REJECTED EXPERIMENT (r22, paired sf1 A/B 2.67 -> 2.92 s):
       // splitting the counts into their own HashAggregate pass (q75's
       // string-min/max fix) LOSES here — unlike q75 there is no Expand
@@ -865,20 +866,19 @@ object AnalyticsOps {
     "q107_graph_pagerank",
     (s, dir) => {
       val mass = 1000000000000L
-      // EAGER checkpoint on the corpus-scale edge derivation: `raw`
-      // fans out FOUR ways below (both union branches of edges0, and
-      // edges0 again inside deg) and Catalyst does not share identical
-      // subplans across union branches — unmaterialized, the
+      // the corpus-scale edge derivation is stored: `raw` fans out
+      // FOUR ways below (both union branches of edges0, and edges0
+      // again inside deg) and Catalyst does not share identical
+      // subplans across union branches — unstored, the
       // orders⋈lineitem join + distinct ran 4× inside the edges build
       // (a stage profile: 35 s of the query's 50 s task time sat in
-      // those duplicate scans). One materialization, four cache reads.
-      val raw = T.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
+      // those duplicate scans). One materialization, four block reads.
+      val raw = Stored.checkpoint(T.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
         .join(T.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("cust"),
           (col("l_suppkey") + 2000000L).as("supp"))
-        .distinct()
-        .localCheckpoint()
+        .distinct()).df
       val edges0 = raw.select(col("cust").as("src"), col("supp").as("dst"))
         .union(raw.select(col("supp").as("src"), col("cust").as("dst")))
       val deg = edges0.groupBy(col("src")).agg(count(lit(1)).as("d"))
@@ -918,10 +918,10 @@ object AnalyticsOps {
       // frame is stored with no partitioning. The session's
       // shuffle-partition setting keeps it scale-adaptive.
       val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val edges = graft.ops.Stored.checkpoint(
+      val edges = Stored.checkpoint(
         edges0.join(broadcast(deg), col("src") === col("dv"))
           .select(col("src"), col("dst"), col("d"))
-          .repartition(nPart, col("dst")), "q107_edges").df
+          .repartition(nPart, col("dst"))).df
       val nodes = edges.select(col("src").as("v")).distinct()
       val n = nodes.count()
       val rInit = if (n > 0) mass / n else 0L

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables => T}
+import graft.ops.Stored
 import org.apache.spark.sql.functions._
 
 /** Sixth capability wave — retrieval infrastructure: embedding-space
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object ClusterOps {
 
-  import graft.Qdsl.toksSql
+  import graft.Qdsl.{oracleToksSql, toksSql}
 
   private val embDim = 64
   private val kClusters = 8
@@ -23,9 +24,9 @@ object ClusterOps {
 
   /** The embeddings as 2^24-quantized coordinates (vec_id, xq), stored:
     * the k-means and PQ queries read them in every round and branch. */
-  private def quantizedVectors(s: org.apache.spark.sql.SparkSession, dir: String,
-      name: String): graft.ops.Stored = graft.ops.Stored.checkpoint(T.embeddings(s, dir)
-    .select(col("vec_id"), graft.ops.KMeans.quantize(col("embedding")).as("xq")), name)
+  private def quantizedVectors(s: org.apache.spark.sql.SparkSession, dir: String)
+      : Stored = Stored.checkpoint(T.embeddings(s, dir)
+    .select(col("vec_id"), graft.ops.KMeans.quantize(col("embedding")).as("xq")))
 
   // The DuckDB twin of ops/KMeans.distExpr: same subtraction, same
   // square, same fold order over dims 1..64. Spark's fold seeds with 0D;
@@ -79,7 +80,7 @@ object ClusterOps {
     "q117_kmeans_lloyd",
     (s, dir) => {
       import graft.ops.KMeans
-      val e = quantizedVectors(s, dir, "q117_vectors").df
+      val e = quantizedVectors(s, dir).df
       val (assigned, _) = KMeans.run(e, kClusters, embDim, lloydIters)
       val vsum = udaf(new graft.functions.VecSumLong(embDim))
       assigned.groupBy(col("cid"))
@@ -154,7 +155,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
   val q119PqAdc = Q(
     "q119_pq_adc",
     (s, dir) => {
-      val e = quantizedVectors(s, dir, "q119_vectors").df
+      val e = quantizedVectors(s, dir).df
       // flat codebook, sorted by (subspace, codeword id): 64 rows → 1
       val cbl = e.filter(col("vec_id") < pqK)
         .select(col("vec_id").cast("int").as("cid"),
@@ -293,18 +294,18 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
     * risk on the checkpoint placements): tf → df-filtered weights →
     * joined postings (doc_id, h, tf, wt).
     *
-    * Both checkpoints are load-bearing. `tf` is the corpus-scale pass
+    * Both stores are load-bearing. `tf` is the corpus-scale pass
     * (explode → hash → count) and occurs FOUR times downstream —
     * `postings` appears on both the query side (filter) and the scan
     * side of the match join, and each `postings` contains tf twice
     * (directly and inside wt's document-frequency agg). Catalyst does
     * not share identical subplans; unmaterialized, the corpus exploded
-    * 4× (the q107 round-16 lesson; solo walls 1.73→1.40 / 2.30→1.52 s).
+    * 4× (the q107 lesson; solo walls 1.73→1.40 / 2.30→1.52 s).
     * `wt` occurs twice for the same reason; its frame is df-filtered
     * vocabulary — tiny at any scale. */
   private def gramPostings(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    val tf = T.documentsSpread(s, dir)
+    val tf = Stored.checkpoint(T.documentsSpread(s, dir)
       .select(col("doc_id"),
         expr(s"filter($toksSql, t -> t <> '')").as("ts"))
       .filter(size(col("ts")) >= 3)
@@ -312,14 +313,12 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
         explode(graft.functions.GraftFunctions.ngrams(col("ts"), 3)).as("g"))
       .select(col("doc_id"), xxhash64(col("g")).as("h"))
       .groupBy(col("doc_id"), col("h"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("tf"))).df
     val ndocs = T.documents(s, dir).agg(count(lit(1)).as("n"))
-    val wt = tf.groupBy(col("h")).agg(count(lit(1)).as("df"))
+    val wt = Stored.checkpoint(tf.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .join(broadcast(ndocs))
       .filter(col("df") * 4 <= col("n"))
-      .select(col("h"), expr("(n * 256) div df").as("wt"))
-      .localCheckpoint()
+      .select(col("h"), expr("(n * 256) div df").as("wt"))).df
     tf.join(wt, "h")
   }
 
@@ -360,10 +359,10 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
           col("col.payload").as("n_shared"))
         .orderBy(col("query_id"), col("rank"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       g AS (
         SELECT doc_id, array_to_string(ts[i:i+2], ' ') AS gram
@@ -506,7 +505,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
           FROM pd) WHERE rd <= 20),
       d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       g AS (
         SELECT doc_id, array_to_string(ts[i:i+2], ' ') AS gram
@@ -623,7 +622,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
     (s, dir) => {
       import graft.ops.KMeans
       import org.apache.spark.sql.expressions.Window
-      val stored = quantizedVectors(s, dir, "q122_vectors")
+      val stored = quantizedVectors(s, dir)
       val e = stored.df
       val slN = ivfShortlistFor(stored.rows)
       val (_, cents) = KMeans.run(e, ivfCells, embDim, lloydIters)
@@ -636,11 +635,10 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
       // audit caught it); the centroid re-join for the residual is an
       // 8-row broadcast.
       val assigned = KMeans.assign(e, cents)
-      val res = assigned
+      val res = Stored.checkpoint(assigned
         .join(broadcast(coarse), col("cid") === col("cell_id"))
         .select(col("vec_id"), col("cell_id"),
-          expr("zip_with(xq, cv, (a, b) -> cast(a as double) - b)").as("r"))
-        .localCheckpoint()
+          expr("zip_with(xq, cv, (a, b) -> cast(a as double) - b)").as("r"))).df
       // the QUERY side keeps the explicit distance frame — 10 rows × 8
       // cells, needed for nprobe > 1 ranking, cost-free at any scale
       val cd = e.filter(col("vec_id") < 10).join(broadcast(coarse))
@@ -864,15 +862,14 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")},
       // runs in ONE task on the single-row-group harness parquet (the
       // standing Tables.documentsSpread account)
       // dl fans into BOTH the stats agg and the candidate-sized join:
-      // without the checkpoint the corpus tokenize scan runs twice
-      // (the standing fan-out-checkpoint convention; frame is the
-      // corpus-narrow (doc_id, dl) pair, cheap to pin)
-      val dl = T.documentsSpread(s, dir)
+      // unstored, the corpus tokenize scan runs twice (the standing
+      // fan-out convention; frame is the corpus-narrow (doc_id, dl)
+      // pair, cheap to pin)
+      val dl = Stored.checkpoint(T.documentsSpread(s, dir)
         .select(col("doc_id"),
           expr(s"size(filter($toksSql, t -> t <> ''))").as("nts"))
         .filter(col("nts") >= 3)
-        .select(col("doc_id"), (col("nts") - 2).cast("long").as("dl"))
-        .localCheckpoint()
+        .select(col("doc_id"), (col("nts") - 2).cast("long").as("dl"))).df
       val st = dl.agg(sum(col("dl")).as("s"), count(lit(1)).as("m"))
       val qside = postings.filter(col("doc_id") < 10)
         .select(col("doc_id").as("query_id"), col("h"), col("tf").as("tfq"))
@@ -906,10 +903,10 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")},
           col("doc_id").as("neighbor_id"), col("score"), col("n_shared"))
         .orderBy(col("query_id"), col("rank"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       dlen AS (
         SELECT doc_id, CAST(len(ts) - 2 AS BIGINT) AS dl

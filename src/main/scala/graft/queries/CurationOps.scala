@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables => T}
+import graft.ops.Stored
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object CurationOps {
 
-  import graft.Qdsl.toksSql
+  import graft.Qdsl.{oracleToksSql, toksSql}
 
   // ---------------------------------------------------------------------
   // q81 — corpus-wide duplicated n-gram spans
@@ -69,10 +70,10 @@ object CurationOps {
           (col("n_dup").cast("double") / col("n_grams")).as("dup_frac"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       g AS (
         SELECT doc_id,
@@ -230,12 +231,12 @@ object CurationOps {
       qualityScored(s, dir)
         .withColumn("keep", when(col("score") >= 0.05, 1).otherwise(0))
         .orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH f AS (
         SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-          CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+          CAST(len(list_filter($oracleToksSql, t -> t <> ''))
                AS INTEGER) AS n_toks,
-          CAST(len(list_filter(string_split(lower(text), ' '),
+          CAST(len(list_filter($oracleToksSql,
             t -> list_contains(['the','a','of','and','to','in','is','was'], t)))
                AS INTEGER) AS n_stop,
           length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))
@@ -303,12 +304,12 @@ object CurationOps {
           col("kept_docs"), col("kept_tokens"), col("kept_token_share"))
         .orderBy(col("bucket").desc)
     },
-    Some("""
+    Some(s"""
       WITH f AS (
         SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-          CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+          CAST(len(list_filter($oracleToksSql, t -> t <> ''))
                AS INTEGER) AS n_toks,
-          CAST(len(list_filter(string_split(lower(text), ' '),
+          CAST(len(list_filter($oracleToksSql,
             t -> list_contains(['the','a','of','and','to','in','is','was'], t)))
                AS INTEGER) AS n_stop,
           length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))
@@ -379,10 +380,10 @@ object CurationOps {
             .cast("bigint").as("sampled_tokens"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source,
-          len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n
+          len(list_filter($oracleToksSql, t -> t <> '')) AS n
         FROM documents),
       p AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -429,11 +430,11 @@ object CurationOps {
           (col("n_oov").cast("double") / col("n_toks")).as("oov_rate"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH tk AS (
         SELECT source, t
         FROM (SELECT source,
-                unnest(string_split(lower(text), ' ')) AS t
+                unnest($oracleToksSql) AS t
               FROM documents)
         WHERE t <> ''),
       v AS (
@@ -576,15 +577,15 @@ object CurationOps {
     * K=16 codebook argmax assignment as one `cos_argmax` projection
     * over the normalized vectors — factored so q139's mutual-kNN graph
     * runs on the SAME cells (one implementation, one oracle-checked
-    * assignment rule). The eager checkpoint materializes the membership
-    * frame, which every caller fans into a self-join. The normalized
+    * assignment rule). The membership frame is stored ([[Stored]]):
+    * every caller fans it into a self-join. The normalized
     * vectors are not stored: they feed only that checkpoint's job, and
     * the centroid slice's vec_id filter runs below the projection, so
     * its second read of them is a bare scan.
     */
   private[graft] def cellMembers(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    cellMembersPlan(normalizedVectors(s, dir)).localCheckpoint()
+    Stored.checkpoint(cellMembersPlan(normalizedVectors(s, dir))).df
 
   val q87EmbedCellDedup = Q(
     "q87_embed_cell_dedup",
@@ -678,18 +679,17 @@ object CurationOps {
   val q89NeardupPrune = Q(
     "q89_neardup_prune",
     (s, dir) => {
-      // eager localCheckpoint before the two-branch union below — the
-      // branches' stages otherwise race to compute the q32 subtree
-      // twice (sf1 decade audit: 53x shuffle for 10x data; see q72)
-      val pairs = LlmOps.nearDupPairs(s, dir)
-        .select(col("id_a"), col("id_b")).localCheckpoint()
+      // stored before the two-branch union below — the branches'
+      // stages otherwise race to compute the q32 subtree twice (sf1
+      // decade audit: 53x shuffle for 10x data; see q72)
+      val pairs = Stored.checkpoint(LlmOps.nearDupPairs(s, dir)
+        .select(col("id_a"), col("id_b"))).df
       val e = pairs.select(col("id_a").as("me"), col("id_b").as("other"))
         .union(pairs.select(col("id_b").as("me"), col("id_a").as("other")))
       // same treatment for the scorer: it is joined on BOTH edge
       // directions, and each join side would re-run the corpus scan +
-      // spread shuffle; the checkpointed frame is 16 bytes/doc
-      val sc = qualityScored(s, dir).select(col("doc_id"), col("score"))
-        .localCheckpoint()
+      // spread shuffle; the stored frame is 16 bytes/doc
+      val sc = Stored.checkpoint(qualityScored(s, dir).select(col("doc_id"), col("score"))).df
       e.join(sc.select(col("doc_id").as("me"), col("score").as("my_score")), "me")
         .join(sc.select(col("doc_id").as("other"), col("score").as("other_score")), "other")
         .filter(col("other_score") > col("my_score") ||
@@ -698,12 +698,12 @@ object CurationOps {
         .agg(min(col("my_score")).as("score"), count(lit(1)).as("n_lost"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT doc_id,
           list_distinct(list_transform(generate_series(1, len(toks)-2),
             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        FROM (SELECT doc_id, string_split(lower(text), ' ') toks FROM documents)
+        FROM (SELECT doc_id, $oracleToksSql toks FROM documents)
         WHERE len(toks) >= 3),
       pairs AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -712,9 +712,9 @@ object CurationOps {
             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
       f AS (
         SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-          CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+          CAST(len(list_filter($oracleToksSql, t -> t <> ''))
                AS INTEGER) AS n_toks,
-          CAST(len(list_filter(string_split(lower(text), ' '),
+          CAST(len(list_filter($oracleToksSql,
             t -> list_contains(['the','a','of','and','to','in','is','was'], t)))
                AS INTEGER) AS n_stop,
           length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))
@@ -779,10 +779,10 @@ object CurationOps {
         .agg(count(lit(1)).as("n_shared"))
         .orderBy(col("src_a"), col("src_b"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       g AS (
         SELECT DISTINCT source,
@@ -842,10 +842,10 @@ object CurationOps {
           min(col("rate")).as("rate"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source, doc_id,
-          len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n,
+          len(list_filter($oracleToksSql, t -> t <> '')) AS n,
           ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT AS bucket
         FROM documents),
       p AS (
@@ -962,10 +962,10 @@ object CurationOps {
           (col("n_new").cast("double") / col("n_grams")).as("novelty_rate"))
         .orderBy(col("batch"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id % 10 AS batch,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       g AS (
         SELECT DISTINCT batch,
@@ -1026,7 +1026,12 @@ object CurationOps {
     "q98_incremental_novelty",
     (s, dir) => {
       import s.implicits._
-      val grams = T.documentsSpread(s, dir)
+      // stored up front: the ten per-batch probe stages' scan sides are
+      // independent of the state chain, so in the one final job they
+      // all launch at once, and each would otherwise derive the
+      // explode+distinct itself. Every batch reads the same stored
+      // partitions.
+      val grams = Stored.checkpoint(T.documentsSpread(s, dir)
         .select((col("doc_id") % 10).as("batch"),
           expr(s"filter($toksSql, t -> t <> '')").as("ts"))
         .filter(size(col("ts")) >= 8)
@@ -1034,15 +1039,8 @@ object CurationOps {
           explode(array_distinct(graft.functions.GraftFunctions.ngrams(col("ts"), 8)))
             .as("g"))
         .distinct()
-        // EAGER checkpoint, not lazy persist: the ten per-batch probe
-        // stages' scan sides are independent of the state chain, so in
-        // the one final job they all launch at once and would RACE to
-        // compute the explode+distinct before the cache populates
-        // (its input bytes showed ~7× re-read). Materializing once up
-        // front makes every batch read the same stored partitions.
         .withColumn("gh", xxhash64(col("g")))
-        .drop("g")
-        .localCheckpoint()
+        .drop("g")).df
       var state = Seq.empty[(Long, Long)].toDF("gh", "first_batch")
       // Round-12 note: this loop sits at its contract floor. Profiled
       // alternatives both measured SLOWER — shuffle_hash-hinted state
@@ -1137,10 +1135,10 @@ object CurationOps {
           (col("effective_tokens").cast("double") / col("tot")).as("share"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source,
-          len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n
+          len(list_filter($oracleToksSql, t -> t <> '')) AS n
         FROM documents),
       p AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1265,7 +1263,9 @@ object CurationOps {
     * state-store-accumulated count tables. */
   def lmPairs(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    docs
+    // hash BEFORE the store: the stored frame and every shuffle above
+    // it carry 8-byte keys, never pair text
+    Stored.checkpoint(docs
       .select(col("doc_id"),
         expr(s"filter($toksSql, t -> t <> '')").as("ts"))
       .filter(size(col("ts")) >= 2)
@@ -1275,10 +1275,7 @@ object CurationOps {
           .as("pr"))
       .select(col("doc_id"),
         xxhash64(col("pr").getField("0"), col("pr").getField("1")).as("bh"),
-        xxhash64(col("pr").getField("0")).as("uh"))
-      // hash BEFORE the checkpoint: the materialized frame and every
-      // shuffle above it carry 8-byte keys, never pair text
-      .localCheckpoint()
+        xxhash64(col("pr").getField("0")).as("uh"))).df
 
   /** q125's scoring arithmetic over PRE-BUILT count tables — shared by
     * [[lmScored]] (tables aggregated from the same corpus) and the
@@ -1317,10 +1314,10 @@ object CurationOps {
   val q125BigramLmScore = Q(
     "q125_bigram_lm_score",
     (s, dir) => lmScored(T.documentsSpread(s, dir)).orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       p AS (
         SELECT doc_id, ts[i] AS a, ts[i + 1] AS b
@@ -1483,7 +1480,7 @@ object CurationOps {
   private[graft] def lmPairsTagged(docs: org.apache.spark.sql.DataFrame,
       isTarget: org.apache.spark.sql.Column)
       : org.apache.spark.sql.DataFrame =
-    docs
+    Stored.checkpoint(docs
       .select(col("doc_id"), isTarget.as("tgt"),
         expr(s"filter($toksSql, t -> t <> '')").as("ts"))
       .filter(size(col("ts")) >= 2)
@@ -1493,8 +1490,7 @@ object CurationOps {
           .as("pr"))
       .select(col("doc_id"), col("tgt"),
         xxhash64(col("pr").getField("0"), col("pr").getField("1")).as("bh"),
-        xxhash64(col("pr").getField("0")).as("uh"))
-      .localCheckpoint()
+        xxhash64(col("pr").getField("0")).as("uh"))).df
 
   /** The q135 kernel over an arbitrary target predicate — factored so
     * the spec can pin the identity target ⇒ contrast ≡ 0 property and
@@ -1538,10 +1534,10 @@ object CurationOps {
   val q135DsirContrast = Q(
     "q135_dsir_contrast",
     (s, dir) => dsirContrast(T.documentsSpread(s, dir), col("lang") === "en"),
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id, lang,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       p AS (
         SELECT doc_id, (lang = 'en') AS tgt, ts[i] AS a, ts[i + 1] AS b
@@ -1626,15 +1622,13 @@ object CurationOps {
       // (PlanAuditSpec) bans unpartitioned windows without a
       // structural bound — the broadcast join states the bound in the
       // plan itself.
-      // per fans into BOTH the totals agg and the crossJoin: the
-      // checkpoint (a sources-sized frame — trivially cheap) is what
-      // makes the "corpus touched once" claim structural rather than
-      // a bet on Catalyst exchange reuse (the standing duplicate-
-      // subplan account)
-      val per = sourceTokenStats(s, dir)
+      // per fans into BOTH the totals agg and the crossJoin: storing it
+      // (a sources-sized frame — trivially cheap) is what makes the
+      // "corpus touched once" claim structural rather than a bet on
+      // Catalyst exchange reuse (the standing duplicate-subplan account)
+      val per = Stored.checkpoint(sourceTokenStats(s, dir)
         .select(col("source"), col("n_docs"), col("n_tokens"),
-          isqrt(col("n_tokens")).as("w_sqrt"))
-        .localCheckpoint()
+          isqrt(col("n_tokens")).as("w_sqrt"))).df
       val tot = per.agg(sum(col("w_sqrt")).as("tot_w"),
         sum(col("n_tokens")).as("tot_n"))
       per.crossJoin(broadcast(tot))
@@ -1647,10 +1641,10 @@ object CurationOps {
           col("share_alpha"), col("share_natural"), col("boost"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source,
-          len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n
+          len(list_filter($oracleToksSql, t -> t <> '')) AS n
         FROM documents),
       p AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1839,7 +1833,7 @@ object CurationOps {
       // knn fans into both sides of the mutuality join.
       val wK = Window.partitionBy(col("src"))
         .orderBy(col("cos").desc, col("nb"))
-      val knn = half
+      val knn = Stored.checkpoint(half
         .select(explode(array(
             struct(col("va").as("src"), col("vb").as("nb"), col("cos")),
             struct(col("vb").as("src"), col("va").as("nb"), col("cos"))))
@@ -1847,8 +1841,7 @@ object CurationOps {
         .select(col("e.src").as("src"), col("e.nb").as("nb"),
           col("e.cos").as("cos"))
         .withColumn("rk", row_number().over(wK)).filter(col("rk") <= 3)
-        .select(col("src"), col("nb"))
-        .localCheckpoint()
+        .select(col("src"), col("nb"))).df
       val mutual = knn.as("k1").join(knn.as("k2"),
           col("k2.src") === col("k1.nb") && col("k2.nb") === col("k1.src") &&
             col("k1.src") < col("k1.nb"))
@@ -2073,14 +2066,13 @@ object CurationOps {
       val j = sfp.join(
         T.documents(s, dir).select(col("doc_id"), col("source")), "doc_id")
       // the ranked frame fans into the count agg AND the final join —
-      // checkpoint the fan-out (the corpus-narrow 4-column frame) so
-      // the feature scan runs once on EITHER BlockRanks path (caught
-      // in the round-19 PLANS sweep: the scan subtree appeared twice
-      // when the count branch re-derived from the pre-rank frame)
-      val ranked = graft.ops.BlockRanks.withBlockRank(
+      // store the fan-out (the corpus-narrow 4-column frame) so the
+      // feature scan runs once on EITHER BlockRanks path (without it
+      // the scan subtree appeared twice, the count branch re-deriving
+      // from the pre-rank frame)
+      val ranked = Stored.checkpoint(graft.ops.BlockRanks.withBlockRank(
         j, "source", Seq(col("s_fp").desc, col("doc_id")), "rk",
-        knownRows = graft.queries.PipelineOps.nonEmptyDocCount(s, dir))
-        .localCheckpoint()
+        knownRows = graft.queries.PipelineOps.nonEmptyDocCount(s, dir))).df
       val perSrc = ranked.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
       ranked.join(broadcast(perSrc), "source")
         .select(col("doc_id"), col("source"), col("s_fp"), col("rk"),
@@ -2090,12 +2082,12 @@ object CurationOps {
   val q141QualityCalibrate = Q(
     "q141_quality_calibrate",
     (s, dir) => sourceDeciles(s, dir).orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH f AS (
         SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars,
-          CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+          CAST(len(list_filter($oracleToksSql, t -> t <> ''))
                AS BIGINT) AS n_toks,
-          CAST(len(list_filter(string_split(lower(text), ' '),
+          CAST(len(list_filter($oracleToksSql,
             t -> list_contains(['the','a','of','and','to','in','is','was'], t)))
                AS BIGINT) AS n_stop,
           CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))
@@ -2209,12 +2201,12 @@ object CurationOps {
               .otherwise(lit(1.0) / (lit(60.0) + col("r_lm").cast("double"))))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH f AS (
         SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-          CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+          CAST(len(list_filter($oracleToksSql, t -> t <> ''))
                AS BIGINT) AS n_toks,
-          CAST(len(list_filter(string_split(lower(text), ' '),
+          CAST(len(list_filter($oracleToksSql,
             t -> list_contains(['the','a','of','and','to','in','is','was'], t)))
                AS BIGINT) AS n_stop,
           CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))
@@ -2235,7 +2227,7 @@ object CurationOps {
         FROM f WHERE n_toks >= 1),
       d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       p AS (
         SELECT doc_id, ts[i] AS a, ts[i + 1] AS b
@@ -2307,11 +2299,11 @@ object CurationOps {
   val q144SourceDatacard = Q(
     "q144_source_datacard",
     (s, dir) => {
-      val base = T.documentsSpread(s, dir)
+      // stored: fans into volume, dup, and vocab branches
+      val base = Stored.checkpoint(T.documentsSpread(s, dir)
         .select(col("source"), col("doc_id"), col("n_chars"),
           expr(s"size(filter($toksSql, t -> t <> ''))").cast("long").as("n_tok"),
-          md5(col("text")).as("h"))
-        .localCheckpoint() // fans into volume, dup, and vocab branches
+          md5(col("text")).as("h"))).df
       val vol = base.groupBy(col("source")).agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_tok")).cast("long").as("n_tokens"),
@@ -2347,10 +2339,10 @@ object CurationOps {
             .as("mean_quality_fp"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH b AS (
         SELECT source, doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-          CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+          CAST(len(list_filter($oracleToksSql, t -> t <> ''))
                AS BIGINT) AS n_tok,
           md5(text) AS h
         FROM documents),
@@ -2369,15 +2361,15 @@ object CurationOps {
       vocab AS (
         SELECT source, CAST(COUNT(DISTINCT w) AS BIGINT) AS vocab
         FROM (SELECT source,
-                unnest(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+                unnest(list_filter($oracleToksSql, t -> t <> ''))
                   AS w
               FROM documents)
         GROUP BY source),
       f AS (
         SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars,
-          CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+          CAST(len(list_filter($oracleToksSql, t -> t <> ''))
                AS BIGINT) AS n_toks,
-          CAST(len(list_filter(string_split(lower(text), ' '),
+          CAST(len(list_filter($oracleToksSql,
             t -> list_contains(['the','a','of','and','to','in','is','was'], t)))
                AS BIGINT) AS n_stop,
           CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))
@@ -2528,26 +2520,26 @@ object CurationOps {
   }
 
   /** The three unrolled GD rounds from w = 0. The design matrix is
-    * corpus-narrow (7 longs/doc) and localCheckpoint'ed ONCE — each
-    * round then reads blocks, not the parquet+regex feature scan (at
-    * 100 TB this is the cached-design-matrix trade every iterative
-    * trainer makes; recomputing the scan per round is the alternative
-    * when executor storage is the binding constraint). Each weight row
-    * is eagerly checkpointed so a round runs exactly once even though
-    * it feeds both the next round and the query output — the q117/q124
-    * iterative-trainer discipline. Returns (fx, w1, w2, w3). */
+    * corpus-narrow (7 longs/doc) and stored ONCE, as a [[Stored]] whose
+    * `rows` is its observed row count — each round then reads blocks,
+    * not the parquet+regex feature scan (at 100 TB this is the
+    * cached-design-matrix trade every iterative trainer makes;
+    * recomputing the scan per round is the alternative when executor
+    * storage is the binding constraint). Each weight row is stored so
+    * a round runs exactly once even though it feeds both the next round
+    * and the query output — the q117/q124 iterative-trainer discipline.
+    * Returns (fx, w1, w2, w3). */
   private[graft] def gdRounds(s: org.apache.spark.sql.SparkSession,
       dir: String, minDocId: Long = Long.MinValue)
-      : (org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+      : (Stored, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame) = {
-    val fx = gdTrainFrame(s, dir, minDocId).localCheckpoint()
+    val fx = Stored.checkpoint(gdTrainFrame(s, dir, minDocId))
     val w0 = s.range(1).select(
       lit(0L).as("w0"), lit(0L).as("w1"), lit(0L).as("w2"),
       lit(0L).as("w3"), lit(0L).as("w4"))
-    val w1 = gdStep(fx, w0).localCheckpoint()
-    val w2 = gdStep(fx, w1).localCheckpoint()
-    val w3 = gdStep(fx, w2).localCheckpoint()
+    val w1 = Stored.checkpoint(gdStep(fx.df, w0)).df
+    val w2 = Stored.checkpoint(gdStep(fx.df, w1)).df
+    val w3 = Stored.checkpoint(gdStep(fx.df, w2)).df
     (fx, w1, w2, w3)
   }
 
@@ -2596,15 +2588,15 @@ object CurationOps {
       gdTag(w1, 1).unionByName(gdTag(w2, 2)).unionByName(gdTag(w3, 3))
         .orderBy(col("round"))
     },
-    Some("""
+    Some(s"""
       WITH f AS (
         SELECT doc_id,
           CASE WHEN lang = 'en' THEN CAST(1 AS BIGINT)
                ELSE CAST(0 AS BIGINT) END AS y,
           CAST(n_chars AS BIGINT) AS n_chars,
-          CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+          CAST(len(list_filter($oracleToksSql, t -> t <> ''))
                AS BIGINT) AS n_toks,
-          CAST(len(list_filter(string_split(lower(text), ' '),
+          CAST(len(list_filter($oracleToksSql,
             t -> list_contains(['the','a','of','and','to','in','is','was'], t)))
                AS BIGINT) AS n_stop,
           CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))
@@ -2711,22 +2703,22 @@ object CurationOps {
     "q146_quality_apply",
     (s, dir) => {
       val (fx, _, _, w3) = gdRounds(s, dir)
-      gdDot(fx.crossJoin(broadcast(w3)))
+      gdDot(fx.df.crossJoin(broadcast(w3)))
         .select(col("doc_id"), col("y"), col("z"),
           expr(gdLink("z")).as("p_fp"))
         .withColumn("keep",
           when(col("p_fp") >= lit(gdQ / 2), 1).otherwise(0))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH f AS (
         SELECT doc_id,
           CASE WHEN lang = 'en' THEN CAST(1 AS BIGINT)
                ELSE CAST(0 AS BIGINT) END AS y,
           CAST(n_chars AS BIGINT) AS n_chars,
-          CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+          CAST(len(list_filter($oracleToksSql, t -> t <> ''))
                AS BIGINT) AS n_toks,
-          CAST(len(list_filter(string_split(lower(text), ' '),
+          CAST(len(list_filter($oracleToksSql,
             t -> list_contains(['the','a','of','and','to','in','is','was'], t)))
                AS BIGINT) AS n_stop,
           CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))

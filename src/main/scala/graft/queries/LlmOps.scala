@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables => T}
+import graft.ops.Stored
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,7 +34,7 @@ import org.apache.spark.sql.functions._
   */
 object LlmOps {
 
-  import graft.Qdsl.toksSql
+  import graft.Qdsl.{oracleToksSql, toksSql}
 
   /** documents with a distinct-3-shingle-set column `sh`. Reads the
     * hash-distributed scan ([[graft.Tables.documentsSpread]]) so the
@@ -56,8 +57,10 @@ object LlmOps {
   /** [[shingled]] with every shingle pre-hashed to an xxhash64 LONG
     * (seed 42 — the exact hash Spark's `xxhash64()` and the minhash
     * kernel's base both compute, so downstream keys and sketches are
-    * bit-identical to hashing the strings later). This is the frame
-    * the q32 family actually stores and joins on: 8 bytes per
+    * bit-identical to hashing the strings later), stored ([[Stored]]):
+    * each consumer (q32, [[lshPairs]], q94, q106) reads it in more than
+    * one branch, and Catalyst plans each occurrence independently.
+    * This is the frame the q32 family stores and joins on: 8 bytes per
     * shingle instead of a ~20-char string, which is the difference
     * between a cache that always fits and one that thrashes under
     * session memory pressure — measured on the sf1 decade corpus,
@@ -69,13 +72,13 @@ object LlmOps {
     * the prefix index already carries.
     */
   private[queries] def shingledHashed(s: SparkSession, dir: String): DataFrame =
-    T.documentsSpread(s, dir)
+    Stored.checkpoint(T.documentsSpread(s, dir)
       .select(col("doc_id"), expr(toksSql).as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"),
         array_distinct(transform(
           graft.functions.GraftFunctions.ngrams(col("toks"), 3),
-          g => xxhash64(g))).as("sh"))
+          g => xxhash64(g))).as("sh"))).df
 
   private def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
@@ -152,9 +155,9 @@ object LlmOps {
         .groupBy(col("token"))
         .agg(count(lit(1)).as("n_total"), countDistinct(col("doc_id")).as("n_docs"))
         .orderBy(col("n_total").desc, col("token")),
-    Some("""
+    Some(s"""
       SELECT t AS token, COUNT(*) AS n_total, COUNT(DISTINCT doc_id) AS n_docs
-      FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM documents)
+      FROM (SELECT doc_id, unnest($oracleToksSql) AS t FROM documents)
       WHERE t <> '' GROUP BY t ORDER BY n_total DESC, token""".stripMargin),
     "corpus term + document frequency: generator explode (O-24) feeding a hash agg with count-distinct")
 
@@ -165,8 +168,8 @@ object LlmOps {
         .filter(col("doc_id") < 20)
         .select(col("doc_id"), explode(array_distinct(expr(toksSql))).as("token"))
         .orderBy(col("doc_id"), col("token")),
-    Some("""
-      SELECT doc_id, unnest(list_distinct(string_split(lower(text), ' '))) AS token
+    Some(s"""
+      SELECT doc_id, unnest(list_distinct($oracleToksSql)) AS token
       FROM documents WHERE doc_id < 20 ORDER BY doc_id, token""".stripMargin),
     "per-row array dedup then fan-out: array_distinct + explode (O-23/O-25, fetcher main.py:122 set-comprehension semantics)")
 
@@ -186,11 +189,11 @@ object LlmOps {
           (sum(col("n_utoks")).cast("double") / sum(col("n_toks"))).as("type_token_ratio"),
           countDistinct(col("source")).as("n_sources"))
         .orderBy(col("lang")),
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT lang, source, n_chars,
-          string_split(lower(text), ' ') toks,
-          list_distinct(string_split(lower(text), ' ')) utoks
+          $oracleToksSql toks,
+          list_distinct($oracleToksSql) utoks
         FROM documents)
       SELECT lang, COUNT(*) AS n_docs,
         CAST(SUM(len(toks)) AS BIGINT) AS total_tokens,
@@ -244,7 +247,7 @@ object LlmOps {
       val negArr = negWords.map(w => s"'$w'").mkString("[", ",", "]")
       s"""
       WITH d AS (
-        SELECT doc_id, string_split(lower(text), ' ') toks FROM documents),
+        SELECT doc_id, $oracleToksSql toks FROM documents),
       c AS (
         SELECT doc_id,
           CAST(len(list_filter(toks, t -> list_contains($posArr, t))) AS INTEGER) n_pos,
@@ -288,9 +291,9 @@ object LlmOps {
           col("n_toks").between(10, 5000) &&
             col("punct_ratio") < 0.1 && col("stop_ratio") >= 0.01)
     },
-    Some("""
+    Some(s"""
       WITH d AS (
-        SELECT doc_id, text, string_split(lower(text), ' ') toks FROM documents),
+        SELECT doc_id, text, $oracleToksSql toks FROM documents),
       m AS (
         SELECT doc_id,
           CAST(len(toks) AS INTEGER) n_toks,
@@ -349,7 +352,7 @@ object LlmOps {
       // hashed shingle sets: the stored frame carries int64s only
       // (see shingledHashed — the string-array cache thrashed at the
       // sf1 decade), and the index key IS the element value
-      val sh = shingledHashed(s, dir).localCheckpoint()
+      val sh = shingledHashed(s, dir)
       val inv0 = sh.select(col("doc_id"), size(col("sh")).as("n"),
         explode(col("sh")).as("shk"))
       // document frequency as a COUNT window over the inverted index —
@@ -357,10 +360,10 @@ object LlmOps {
       // join-back pair (same df values, one fewer stage)
       val wDf = Window.partitionBy(col("shk"))
       val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("shk"))
-      val prefix = graft.ops.Stored.checkpoint(inv0.withColumn("df", count(lit(1)).over(wDf))
+      val prefix = Stored.checkpoint(inv0.withColumn("df", count(lit(1)).over(wDf))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= col("n") - ceil(col("n") * 0.8).cast("int") + 1)
-        .select(col("doc_id"), col("n"), col("shk")), "q32_prefix").df
+        .select(col("doc_id"), col("n"), col("shk"))).df
       val cands = prefix.as("x").join(prefix.as("y"),
           col("x.shk") === col("y.shk") &&
           col("x.doc_id") < col("y.doc_id") &&
@@ -370,12 +373,12 @@ object LlmOps {
         .distinct()
       verifiedPairs(sh, cands).orderBy(col("id_a"), col("id_b"))
     },
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT doc_id,
           list_distinct(list_transform(generate_series(1, len(toks)-2),
             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        FROM (SELECT doc_id, string_split(lower(text), ' ') toks FROM documents)
+        FROM (SELECT doc_id, $oracleToksSql toks FROM documents)
         WHERE len(toks) >= 3)
       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
@@ -414,7 +417,7 @@ object LlmOps {
     // hashed shingles (8-byte cache, see shingledHashed); the minhash
     // kernel's Long-input path starts from the same xxhash64 base, so
     // the sketch is bit-identical to the string form
-    val sh = shingledHashed(s, dir).localCheckpoint()
+    val sh = shingledHashed(s, dir)
     // native one-pass sketch (HashKernels.minhash64): 32 splitmix
     // derivations per pre-hashed shingle, vs the interpreted
     // `transform(sequence(0,31), k -> array_min(transform(sh, t ->
@@ -422,11 +425,10 @@ object LlmOps {
     // per-element lambda dispatch (44 s of one early bench run)
     val bandsE = "transform(sequence(0, 15), j -> " +
       "xxhash64(element_at(mhs, 2*j+1), element_at(mhs, 2*j+2)))"
-    val buckets = graft.ops.Stored.checkpoint(sh
+    val buckets = Stored.checkpoint(sh
       .select(col("doc_id"),
         graft.functions.GraftFunctions.minhash64(col("sh"), 32).as("mhs"))
-      .select(col("doc_id"), posexplode(expr(bandsE)).as(Seq("band", "bucket"))),
-      "lsh_buckets").df
+      .select(col("doc_id"), posexplode(expr(bandsE)).as(Seq("band", "bucket")))).df
     val cands = buckets.as("x").join(buckets.as("y"),
         col("x.band") === col("y.band") &&
         col("x.bucket") === col("y.bucket") &&
@@ -539,7 +541,7 @@ object LlmOps {
       s"""
       WITH d AS (
         SELECT doc_id,
-          list_transform(list_distinct(string_split(lower(text), ' ')),
+          list_transform(list_distinct($oracleToksSql),
             t -> ('0x' || substr(md5(t), 1, 4))::INT) AS vals
         FROM documents)
       SELECT doc_id, CAST($fp AS INTEGER) AS simhash16
@@ -577,7 +579,7 @@ object LlmOps {
   val q94ContainmentDedup = Q(
     "q94_containment_dedup",
     (s, dir) => {
-      val sh = shingledHashed(s, dir).localCheckpoint()
+      val sh = shingledHashed(s, dir)
       val inv = sh.select(col("doc_id"), size(col("sh")).as("n"),
         explode(col("sh")).as("shk"))
       val wDf = Window.partitionBy(col("shk"))
@@ -599,12 +601,12 @@ object LlmOps {
         .filter(col("containment") >= 0.9)
         .orderBy(col("id_a"), col("id_b"))
     },
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT doc_id,
           list_distinct(list_transform(generate_series(1, len(toks)-2),
             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        FROM (SELECT doc_id, string_split(lower(text), ' ') toks FROM documents)
+        FROM (SELECT doc_id, $oracleToksSql toks FROM documents)
         WHERE len(toks) >= 3)
       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / len(a.sh)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables => T}
+import graft.ops.Stored
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object PipelineOps {
 
-  import graft.Qdsl.toksSql
+  import graft.Qdsl.{oracleToksSql, toksSql}
 
   // ---------------------------------------------------------------------
   // q42 — SimHash Hamming near-dup (fingerprint consumption)
@@ -61,14 +62,13 @@ object PipelineOps {
   val q42SimhashHammingDup = Q(
     "q42_simhash_hamming_dup",
     (s, dir) => {
-      val fps = graft.ops.Stored.checkpoint(LlmOps.shingled(s, dir)
+      val fps = Stored.checkpoint(LlmOps.shingled(s, dir)
         .select(col("doc_id"),
           graft.functions.GraftFunctions.md5Longs(col("sh"), 15).as("vals"))
         .select(col("doc_id"),
           // native majority-vote kernel (HashKernels.simhash) — the HOF
           // CASE-chain equivalent lives on in the oracle SQL below
-          graft.functions.GraftFunctions.simhash(col("vals"), simhashBits).as("fp")),
-        "q42_fingerprints").df
+          graft.functions.GraftFunctions.simhash(col("vals"), simhashBits).as("fp"))).df
       val bands = fps.select(
         col("doc_id"), col("fp"),
         posexplode(expr("transform(sequence(0, 3), j -> shiftright(fp, j*15) & 32767L)"))
@@ -89,7 +89,7 @@ object PipelineOps {
         SELECT doc_id,
           list_distinct(list_transform(generate_series(1, len(toks)-2),
             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sh
-        FROM (SELECT doc_id, string_split(lower(text), ' ') toks FROM documents)
+        FROM (SELECT doc_id, $oracleToksSql toks FROM documents)
         WHERE len(toks) >= 3),
       d AS (
         SELECT doc_id,
@@ -151,7 +151,7 @@ object PipelineOps {
       import graft.functions.GraftFunctions
       val w = typedLit(
         (0 until nHyper).map(h => (0 until embDim).map(j => hyperplaneWeight(h, j))))
-      val e = graft.ops.Stored.checkpoint(T.embeddings(s, dir)
+      val e = Stored.checkpoint(T.embeddings(s, dir)
         .select(col("vec_id"),
           expr("transform(embedding, x -> cast(x as double))").as("v"))
         .select(col("vec_id"), col("v"),
@@ -160,7 +160,7 @@ object PipelineOps {
             transform(sequence(lit(0), lit(nHyper - 1)), h =>
               when(GraftFunctions.dot(col("v"), element_at(w, h + 1)) >= 0,
                 call_function("shiftleft", lit(1), h)).otherwise(lit(0))),
-            lit(0), (a, x) => a + x).as("sig")), "q43_signatures").df
+            lit(0), (a, x) => a + x).as("sig"))).df
       val bands = e.select(col("vec_id"),
         posexplode(expr("transform(sequence(0, 3), b -> shiftright(sig, b*4) & 15)"))
           .as(Seq("band", "bucket")))
@@ -398,7 +398,7 @@ object PipelineOps {
       }.mkString("[", ", ", "]")
       s"""
       WITH d AS (
-        SELECT doc_id, lang, string_split(lower(text), ' ') toks FROM documents),
+        SELECT doc_id, lang, $oracleToksSql toks FROM documents),
       b AS (
         SELECT doc_id, lang, list_sort($structs)[1] AS best FROM d)
       SELECT lang, best.lang AS pred_lang, COUNT(*) AS n_docs,
@@ -435,11 +435,11 @@ object PipelineOps {
           (sum(col("n_bpe")).cast("double") / sum(col("n_words"))).as("fertility"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source,
           len(regexp_extract_all(lower(text), '[a-z]{1,4}|[0-9]+|[^a-z0-9 ]')) n_bpe,
-          len(list_filter(string_split(lower(text), ' '), t -> t <> '')) n_words
+          len(list_filter($oracleToksSql, t -> t <> '')) n_words
         FROM documents)
       SELECT source, COUNT(*) AS n_docs,
         CAST(SUM(n_bpe) AS BIGINT) AS total_bpe,
@@ -482,14 +482,14 @@ object PipelineOps {
           graft.functions.GraftFunctions.rollingHash(
             graft.functions.GraftFunctions.md5Longs(col("toks"), 7))
             .as("rolling_hash")),
-    Some("""
+    Some(s"""
       SELECT doc_id,
         list_reduce(
-          list_transform(string_split(lower(text), ' '),
+          list_transform($oracleToksSql,
             t -> ('0x' || substr(md5(t), 1, 7))::BIGINT),
           (acc, x) -> (acc*131 + x) % 1000000007) AS rolling_hash
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= 1
+      WHERE len($oracleToksSql) >= 1
       ORDER BY doc_id""".stripMargin),
     "Rabin-Karp rolling fingerprint over the token SEQUENCE (order-sensitive, unlike set-based prints); modular fold, engine-identical integers")
 
@@ -658,7 +658,13 @@ object PipelineOps {
       // near-IDENTICAL pairs have near-equal tot and survive any W;
       // the boundary cases are the standard blocking caveat).
       val w = math.max(64L, math.min(4096L, 20480000L / math.max(1L, nDocs)))
-      Multimodal.extractPpmBands(media, bands).toDF()
+      // stored: both self-join sides consume this corpus-derived frame
+      // (the multi-branch rule of q32/q33/q94's shingle frame), and
+      // unstored the decode mapPartitions + centering ran TWICE
+      // (plan-audited at sf0.01 — only the repartition exchange below
+      // it was reused). The frame is fingerprint-sized (~150 B/doc), so
+      // storing it is cheap and the decode runs exactly once.
+      Stored.checkpoint(Multimodal.extractPpmBands(media, bands).toDF()
         .select(col("media_id").as("doc_id"),
           expr("aggregate(bands, 0L, (s, x) -> s + x)").as("tot"),
           col("bands"))
@@ -667,15 +673,7 @@ object PipelineOps {
             .as("c"))
         .select(col("doc_id"), col("blk"), col("c"),
           sqrt(dot(col("c"), col("c"))).as("nrm"))
-        .filter(col("nrm") > 0)
-        // the round-9 multi-branch rule (q32/q33/q94's shingle frame):
-        // both self-join sides consume this corpus-derived frame, and
-        // without the checkpoint the decode mapPartitions + centering
-        // ran TWICE (plan-audited at sf0.01 — only the repartition
-        // exchange below it was reused). The frame is fingerprint-sized
-        // (~150 B/doc), so the materialization is cheap and the decode
-        // runs exactly once.
-        .localCheckpoint()
+        .filter(col("nrm") > 0)).df
   }
 
   /** The banded-cosine near-dup KERNEL, factored from q128 (round 17)
@@ -1059,16 +1057,16 @@ object PipelineOps {
     * centered value, square, and 16-term dot product back under 2^53.
     * The returned frame is (doc_id, blk, c array<double>, nrm), blk
     * from the q128 corpus-aware width dial (block population ∝ N
-    * bounded), zero-norm rows dropped, checkpointed at the fan-out
-    * point (both self-join sides of the kernel consume it; the
-    * round-9 multi-branch rule).
+    * bounded), zero-norm rows dropped, stored at the fan-out point
+    * (both self-join sides of the kernel consume it; the multi-branch
+    * rule).
     */
   private[graft] def scaledCenteredFp(
       bandsDf: org.apache.spark.sql.DataFrame, scaleDiv: Long,
       nDocs: Long): org.apache.spark.sql.DataFrame = {
       import graft.functions.GraftFunctions.dot
       val w = math.max(64L, math.min(4096L, 20480000L / math.max(1L, nDocs)))
-      bandsDf
+      Stored.checkpoint(bandsDf
         .select(col("doc_id"),
           expr(s"transform(bands, x -> x div ${scaleDiv}L)").as("b"))
         .select(col("doc_id"),
@@ -1080,8 +1078,7 @@ object PipelineOps {
           expr("transform(b, x -> cast(cast(size(b) as bigint) * x - tot as double))").as("c"))
         .select(col("doc_id"), col("blk"), col("c"),
           sqrt(dot(col("c"), col("c"))).as("nrm"))
-        .filter(col("nrm") > 0)
-        .localCheckpoint()
+        .filter(col("nrm") > 0)).df
   }
 
   private def nearDupOracle(bandsSql: String, scaleDiv: Long,
@@ -1250,11 +1247,10 @@ object PipelineOps {
     "q60_ann_ivf",
     (s, dir) => {
       import graft.functions.GraftFunctions.{dot, cosArgmax}
-      val n = graft.ops.Stored.checkpoint(T.embeddings(s, dir)
+      val n = Stored.checkpoint(T.embeddings(s, dir)
         .select(col("vec_id"),
           expr("transform(embedding, x -> cast(x as double))").as("v"))
-        .select(col("vec_id"), col("v"), sqrt(dot(col("v"), col("v"))).as("nrm")),
-        "q60_vectors").df
+        .select(col("vec_id"), col("v"), sqrt(dot(col("v"), col("v"))).as("nrm"))).df
       // Corpus-side assignment as the map-side cos_argmax kernel
       // (the cellMembersPlan form): same dot-fold doubles,
       // same (cos DESC, cent_id ASC) tie rule as the previous exploded
@@ -1405,10 +1401,10 @@ object PipelineOps {
             .as("kmv_estimate"))
         .orderBy(col("source"))
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
         SELECT DISTINCT source, t
-        FROM (SELECT source, unnest(string_split(lower(text), ' ')) AS t
+        FROM (SELECT source, unnest($oracleToksSql) AS t
               FROM documents)
         WHERE t <> ''),
       hashed AS (
@@ -1478,10 +1474,10 @@ object PipelineOps {
         .select(col("n_sources"), col("n_exact"),
           col("est_merged"), col("est_direct"))
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
         SELECT DISTINCT source, t
-        FROM (SELECT source, unnest(string_split(lower(text), ' ')) AS t
+        FROM (SELECT source, unnest($oracleToksSql) AS t
               FROM documents)
         WHERE t <> ''),
       hashed AS (
@@ -1623,8 +1619,8 @@ object PipelineOps {
     (s, dir) => winnowed(s, dir).orderBy(col("doc_id"), col("pos")),
     Some(s"""
       WITH t AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS toks
-        FROM documents WHERE len(string_split(lower(text), ' ')) >= 3),
+        SELECT doc_id, $oracleToksSql AS toks
+        FROM documents WHERE len($oracleToksSql) >= 3),
       g AS (
         SELECT doc_id, len(toks) - 2 AS n,
           unnest(generate_series(1, len(toks) - 2)) AS pos, toks
@@ -1671,22 +1667,17 @@ object PipelineOps {
   val q106WinnowDup = Q(
     "q106_winnow_dup",
     (s, dir) => {
-      // localCheckpoint, not persist: the self-joined index frame must be
-      // materialized once (two branches below), but a persist here would
-      // outlive the query across a bench run — same leak class q72/q89
-      // already converted away from.
-      val fp = winnowed(s, dir).select(col("doc_id"), col("fp")).distinct()
-        .localCheckpoint()
+      // stored: the self-joined index frame is read by both branches
+      // below, each of which would otherwise derive it
+      val fp = Stored.checkpoint(
+        winnowed(s, dir).select(col("doc_id"), col("fp")).distinct()).df
       val cands = fp.as("x").join(fp.as("y"),
           col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
         .groupBy(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
         .agg(count(lit(1)).as("n_shared_fp"))
         .filter(col("n_shared_fp") >= 2)
-      // EAGER checkpoint like every other shingledHashed consumer
-      // (q32/q33/q94): the corpus shingle derivation feeds BOTH verify
-      // branches below, and Catalyst plans each occurrence
-      // independently — unmaterialized it ran twice (round-16 sweep).
-      val sh = LlmOps.shingledHashed(s, dir).localCheckpoint()
+      // the stored shingle frame feeds BOTH verify branches below
+      val sh = LlmOps.shingledHashed(s, dir)
       val a = sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
       val b = sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
       cands.join(a, "id_a").join(b, "id_b")
@@ -1698,8 +1689,8 @@ object PipelineOps {
     },
     Some(s"""
       WITH t AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS toks
-        FROM documents WHERE len(string_split(lower(text), ' ')) >= 3),
+        SELECT doc_id, $oracleToksSql AS toks
+        FROM documents WHERE len($oracleToksSql) >= 3),
       g AS (
         SELECT doc_id, len(toks) - 2 AS n,
           unnest(generate_series(1, len(toks) - 2)) AS pos, toks
@@ -1967,9 +1958,9 @@ object PipelineOps {
         .select(col("doc_id"), col("n"), col("simpson"),
           (lit(1.0) / col("simpson")).as("eff_vocab"))
         .orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH tok AS (
-        SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '),
+        SELECT doc_id, unnest(list_filter($oracleToksSql,
           t -> t <> '')) AS t
         FROM documents),
       cnt AS (
@@ -2029,15 +2020,13 @@ object PipelineOps {
       dir: String, rounds: Int = 3)
       : (Seq[org.apache.spark.sql.DataFrame], org.apache.spark.sql.DataFrame) = {
       import org.apache.spark.sql.expressions.Window
-      val hist = T.documentsSpread(s, dir)
+      val hist = Stored.checkpoint(T.documentsSpread(s, dir)
         .select(explode(expr(s"filter($toksSql, t -> t <> '')")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
-      var toks = hist.select(col("w"), col("c"),
+        .groupBy(col("w")).agg(count(lit(1)).as("c"))).df
+      var toks = Stored.checkpoint(hist.select(col("w"), col("c"),
         posexplode(expr(
           "concat(transform(sequence(1, length(w)), i -> substring(w, i, 1)), array('</w>'))"))
-          .as(Seq("pos", "sym")))
-        .localCheckpoint()
+          .as(Seq("pos", "sym")))).df
       val wWin = Window.partitionBy(col("w")).orderBy(col("pos"))
       val runA = wWin.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val runB = wWin.rowsBetween(Window.unboundedPreceding, -1)
@@ -2059,7 +2048,7 @@ object PipelineOps {
         //   sel(p)  = m(p) ∧ (p − ls(p)) even  — 1st, 3rd, … of island
         //   drop(p) = sel(p−1), rewritten via lsPrev (frame B) so the
         //             whole predicate stays in this one pass
-        toks = toks.crossJoin(broadcast(best))
+        toks = Stored.checkpoint(toks.crossJoin(broadcast(best))
           .withColumn("m",
             col("sym") === col("a") && lead(col("sym"), 1).over(wWin) === col("b"))
           .withColumn("mprev",
@@ -2079,8 +2068,7 @@ object PipelineOps {
               .otherwise(col("sym")).as("sym"))
           .withColumn("pos", row_number().over(
             Window.partitionBy(col("w")).orderBy(col("opos"))) - 1)
-          .select(col("w"), col("c"), col("pos"), col("sym"))
-          .localCheckpoint()
+          .select(col("w"), col("c"), col("pos"), col("sym"))).df
         val after = toks.agg(sum(col("c")).as("corpus_tokens_after"))
         summaries = summaries :+ best.crossJoin(after)
           .select(lit(r).as("merge_round"), col("a").as("sym_a"),
@@ -2137,7 +2125,7 @@ object PipelineOps {
       s"""
       WITH hist AS (
         SELECT t AS w, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT unnest(string_split(lower(text), ' ')) AS t FROM documents)
+        FROM (SELECT unnest($oracleToksSql) AS t FROM documents)
         WHERE t <> '' GROUP BY t),
       t0 AS (
         SELECT w, c, i - 1 AS pos,
@@ -2207,13 +2195,13 @@ ${(1 to rounds).map(round).mkString(",\n")}""".stripMargin
           col("n_subwords").cast("double") / col("n_words").cast("double"))
         .orderBy(col("source"))
     },
-    Some(bpeOracleCtes(3) + """,
+    Some(bpeOracleCtes(3) + s""",
       ns AS (
         SELECT w, CAST(COUNT(*) AS BIGINT) AS n_sub FROM t3
         WHERE sym <> '</w>' GROUP BY w),
       dw AS (
         SELECT source, t AS w
-        FROM (SELECT source, unnest(string_split(lower(text), ' ')) AS t
+        FROM (SELECT source, unnest($oracleToksSql) AS t
               FROM documents)
         WHERE t <> '')
       SELECT dw.source,

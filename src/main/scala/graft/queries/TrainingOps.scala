@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables => T}
+import graft.ops.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object TrainingOps {
 
-  import graft.Qdsl.toksSql
+  import graft.Qdsl.{oracleToksSql, toksSql}
 
   // ---------------------------------------------------------------------
   // q66 — TF-IDF term relevance
@@ -66,10 +67,10 @@ object TrainingOps {
           col("tf"), col("df"), col("score"))
         .orderBy(col("doc_id"), col("rank"))
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
         SELECT doc_id, t
-        FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t
+        FROM (SELECT doc_id, unnest($oracleToksSql) AS t
               FROM documents)
         WHERE t <> ''),
       df AS (
@@ -122,11 +123,11 @@ object TrainingOps {
         .agg(count(lit(1)).as("n_docs"),
           sum(expr(s"size(filter($toksSql, t -> t <> ''))")).as("n_tokens"))
         .orderBy(col("split"), col("lang")),
-    Some("""
+    Some(s"""
       WITH b AS (
         SELECT lang,
           ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT % 10 AS bucket,
-          len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n_toks
+          len(list_filter($oracleToksSql, t -> t <> '')) AS n_toks
         FROM documents)
       SELECT CASE WHEN bucket < 8 THEN 'train'
                   WHEN bucket = 8 THEN 'val' ELSE 'test' END AS split,
@@ -179,12 +180,12 @@ object TrainingOps {
           sum(expr(s"size(filter($toksSql, t -> t <> ''))")).as("n_tokens"))
         .orderBy(col("split"), col("source"))
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE sh AS (
         SELECT doc_id,
           list_distinct(list_transform(generate_series(1, len(toks)-2),
             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
-        FROM (SELECT doc_id, string_split(lower(text), ' ') toks FROM documents)
+        FROM (SELECT doc_id, $oracleToksSql toks FROM documents)
         WHERE len(toks) >= 3),
       pairs AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -260,10 +261,10 @@ object TrainingOps {
           sum(when(col("in_corpus").isNull, 1L).otherwise(0L)).as("n_new"))
         .orderBy(col("lang"))
     },
-    Some("""
+    Some(s"""
       WITH fp AS (
         SELECT doc_id, lang,
-          md5(array_to_string(list_slice(string_split(lower(text), ' '), 1, 8), ' ')) AS h
+          md5(array_to_string(list_slice($oracleToksSql, 1, 8), ' ')) AS h
         FROM documents),
       corpus AS (SELECT DISTINCT h FROM fp WHERE doc_id % 10 <> 0),
       inc AS (SELECT lang, h FROM fp WHERE doc_id % 10 = 0)
@@ -311,17 +312,16 @@ object TrainingOps {
       val toks = T.documentsSpread(s, dir)
         .select(expr(s"filter($toksSql, t -> t <> '')").as("toks"))
       val uni = toks.select(explode(col("toks")).as("t"))
-      // The count tables are CHECKPOINTED and the totals derived from
+      // The count tables are STORED and the totals derived from
       // them (u_total = Σc, b_total = Σc_ab — identities, not
       // approximations): the first cut aggregated the exploded corpus
       // once per count table AND once per total, and the unigram table
       // was additionally replanned for each side of the survivor join
-      // (Catalyst does not share identical subplans — the round-16
-      // sweep). Two corpus passes total now, and both count frames are
-      // vocabulary/bigram-table-sized — the compact artifacts a
-      // 100 TB LM-stats job materializes anyway.
-      val uniCounts = uni.groupBy(col("t")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+      // (Catalyst does not share identical subplans). Two corpus passes
+      // total now, and both count frames are vocabulary/bigram-table-
+      // sized — the compact artifacts a 100 TB LM-stats job
+      // materializes anyway.
+      val uniCounts = Stored.checkpoint(uni.groupBy(col("t")).agg(count(lit(1)).as("c"))).df
       val uniTotal = uniCounts.agg(sum(col("c")).as("u_total"))
       val bi = toks
         .filter(size(col("toks")) >= 2)
@@ -329,8 +329,8 @@ object TrainingOps {
           "arrays_zip(slice(toks, 1, size(toks)-1), slice(toks, 2, size(toks)-1))"))
           .as("p"))
         .select(col("p")("0").as("a"), col("p")("1").as("b"))
-      val biCounts = bi.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
-        .localCheckpoint()
+      val biCounts = Stored.checkpoint(bi.groupBy(col("a"), col("b"))
+        .agg(count(lit(1)).as("c_ab"))).df
       val biTotal = biCounts.agg(sum(col("c_ab")).as("b_total"))
       val survivors = biCounts.filter(col("c_ab") >= 5)
       // broadcast the SURVIVOR frame (bounded by the min-support
@@ -352,9 +352,9 @@ object TrainingOps {
         .orderBy(col("lift").desc, col("a"), col("b"))
         .limit(15)
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
-        SELECT doc_id, list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+        SELECT doc_id, list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       uni AS (SELECT unnest(ts) AS t FROM toks),
       uc AS (SELECT t, COUNT(*) AS c FROM uni GROUP BY t),
@@ -500,10 +500,10 @@ object TrainingOps {
           (col("cms_estimate") - col("exact")).as("overestimate"))
         .orderBy(col("exact").desc, col("token"))
     },
-    Some("""
+    Some(s"""
       WITH toks AS (
         SELECT t
-        FROM (SELECT unnest(string_split(lower(text), ' ')) AS t FROM documents)
+        FROM (SELECT unnest($oracleToksSql) AS t FROM documents)
         WHERE t <> ''),
       occ AS (
         SELECT (('0x' || substr(md5(CAST(g.i AS VARCHAR) || ':' || t), 1, 4))::INT % 512)
@@ -642,12 +642,12 @@ object TrainingOps {
           array_join(sort_array(collect_list(col("v"))), "|").as("members"))
         .orderBy(col("cluster_id"))
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE sh AS (
         SELECT doc_id,
           list_distinct(list_transform(generate_series(1, len(toks)-2),
             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
-        FROM (SELECT doc_id, string_split(lower(text), ' ') toks FROM documents)
+        FROM (SELECT doc_id, $oracleToksSql toks FROM documents)
         WHERE len(toks) >= 3),
       pairs AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -707,10 +707,10 @@ object TrainingOps {
   val q73RepetitionFilter = Q(
     "q73_repetition_filter",
     (s, dir) => {
-      val base = graft.ops.Stored.checkpoint(T.documentsSpread(s, dir)
+      val base = Stored.checkpoint(T.documentsSpread(s, dir)
         .select(col("doc_id"),
           expr(s"filter($toksSql, t -> t <> '')").as("ts"))
-        .filter(size(col("ts")) >= 3), "q73_base").df
+        .filter(size(col("ts")) >= 3)).df
       val tokStats = base.select(col("doc_id"), explode(col("ts")).as("t"))
         .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("c"))
         .groupBy(col("doc_id"))
@@ -733,10 +733,10 @@ object TrainingOps {
             col("dup_token_frac") < 0.6)
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       m AS (
         SELECT doc_id, ts,
@@ -852,10 +852,10 @@ object TrainingOps {
           (col("n_shared").cast("double") / col("n_grams")).as("share_frac"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       g AS (
         SELECT doc_id,
@@ -914,10 +914,10 @@ object TrainingOps {
           max(col("doc_id")).as("last_doc"))
         .orderBy(col("source"), col("shard_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source, doc_id,
-          len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n
+          len(list_filter($oracleToksSql, t -> t <> '')) AS n
         FROM documents),
       a AS (
         SELECT source, doc_id, n,
@@ -1020,10 +1020,10 @@ object TrainingOps {
           array_join(expr("slice(toks, chunk_start + 1, 64)"), " ").as("chunk_text"))
         .orderBy(col("doc_id"), col("chunk_start"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS toks
+          list_filter($oracleToksSql, t -> t <> '') AS toks
         FROM documents),
       s AS (SELECT doc_id, toks, len(toks) AS n FROM d WHERE len(toks) > 0),
       c AS (SELECT doc_id, toks,
@@ -1092,10 +1092,10 @@ object TrainingOps {
           min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
         .orderBy(col("source"), col("shard_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source, doc_id,
-          len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n
+          len(list_filter($oracleToksSql, t -> t <> '')) AS n
         FROM documents),
       s AS (SELECT source, doc_id, n FROM d WHERE n > 0),
       c AS (SELECT source, doc_id, n,
@@ -1166,10 +1166,10 @@ object TrainingOps {
           countDistinct(col("doc_id")).as("n_docs"))
         .orderBy(col("shard_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT source, doc_id,
-          len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n
+          len(list_filter($oracleToksSql, t -> t <> '')) AS n
         FROM documents),
       s AS (SELECT source, doc_id, n FROM d WHERE n > 0),
       c AS (SELECT source, doc_id, n,
@@ -1231,23 +1231,21 @@ object TrainingOps {
     "q115_substring_dup",
     (s, dir) => {
       val k = 6
-      // localCheckpoint, not persist — the (gram, doc) frame feeds two
-      // branches (the distinct-doc filter and the coverage sum) and a
-      // persist would outlive the query across a bench run (the q106/
-      // q72/q89 leak class). The doc spine needs no second scan: a
+      // stored: the (gram, doc) frame feeds two branches (the
+      // distinct-doc filter and the coverage sum), each of which would
+      // otherwise derive it. The doc spine needs no second scan: a
       // doc's total gram positions is the sum of its per-gram counts.
       // gram derivation through the codegen NGramKernel — the
       // interpreted transform(sequence)+concat_ws HOF chain is the
       // exact formulation q73's comment measured at ~10 s/scan
-      val perDocGram = T.documentsSpread(s, dir)
+      val perDocGram = Stored.checkpoint(T.documentsSpread(s, dir)
         .select(col("doc_id"),
           expr(s"filter($toksSql, t -> t <> '')").as("ts"))
         .filter(size(col("ts")) >= k)
         .select(col("doc_id"),
           explode(graft.functions.GraftFunctions.ngrams(col("ts"), k)).as("g"))
         .select(col("doc_id"), xxhash64(col("g")).as("gh"))
-        .groupBy(col("gh"), col("doc_id")).agg(count(lit(1)).as("pos"))
-        .localCheckpoint()
+        .groupBy(col("gh"), col("doc_id")).agg(count(lit(1)).as("pos"))).df
       val spine = perDocGram.groupBy(col("doc_id"))
         .agg(sum(col("pos")).as("n_grams"))
       val dupKeys = perDocGram.groupBy(col("gh"))
@@ -1264,10 +1262,10 @@ object TrainingOps {
         .withColumn("trim_doc", col("dup_grams") * 2 >= col("n_grams"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       g AS (
         SELECT doc_id, array_to_string(ts[i:i+5], ' ') AS gram
@@ -1319,15 +1317,14 @@ object TrainingOps {
     import org.apache.spark.sql.expressions.Window
     // same codegen-kernel gram derivation as q115 (see the comment
     // there), positions retained via posexplode
-    val grams = T.documentsSpread(s, dir)
+    val grams = Stored.checkpoint(T.documentsSpread(s, dir)
       .select(col("doc_id"),
         expr(s"filter($toksSql, t -> t <> '')").as("ts"))
       .filter(size(col("ts")) >= k)
       .select(col("doc_id"),
         posexplode(graft.functions.GraftFunctions.ngrams(col("ts"), k)))
       .select(col("doc_id"), (col("pos") + 1).as("i"),
-        xxhash64(col("col")).as("gh"))
-      .localCheckpoint()
+        xxhash64(col("col")).as("gh"))).df
     val dupKeys = grams.groupBy(col("gh"))
       .agg(count_distinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2).select("gh")
@@ -1363,10 +1360,10 @@ object TrainingOps {
   val q116DupSpanLocalize = Q(
     "q116_dup_span_localize",
     (s, dir) => dupSpans(s, dir, 6).orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       g AS (
         SELECT doc_id, i, array_to_string(ts[i:i+5], ' ') AS gram
@@ -1444,10 +1441,10 @@ object TrainingOps {
             " ")).as("kept_md5"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          COALESCE(list_filter(string_split(lower(text), ' '),
+          COALESCE(list_filter($oracleToksSql,
                                t -> t <> ''), []) AS ts
         FROM documents),
       g AS (
@@ -1559,10 +1556,10 @@ object TrainingOps {
         .select(col("doc_id"), col("n_blocks"), col("n_dropped"),
           md5(col("kept_text")).as("kept_md5"))
         .orderBy(col("doc_id")),
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       b AS (
         SELECT doc_id, i AS bi,
@@ -1702,18 +1699,17 @@ object TrainingOps {
       // the words frame fans into FOUR broadcast builds; Catalyst does
       // not share identical subplans, so without this the eval scan →
       // shingle → distinct → bit_or subtree runs 4× (the q107/q120
-      // lesson). ≤4096 rows — the checkpoint is one tiny job.
-      val words = bloomWords(
+      // lesson). ≤4096 rows — storing it is one tiny job.
+      val words = Stored.checkpoint(bloomWords(
         g.filter(col("doc_id") < 10)
-          .select(explode(col("grams")).as("g")).distinct())
-        .localCheckpoint()
+          .select(explode(col("grams")).as("g")).distinct())).df
       bloomProbeFlagged(g.filter(col("doc_id") >= 10), words)
         .orderBy(col("doc_id"))
     },
     Some(s"""
       WITH d AS (
         SELECT doc_id,
-          list_filter(string_split(lower(text), ' '), t -> t <> '') AS ts
+          list_filter($oracleToksSql, t -> t <> '') AS ts
         FROM documents),
       g AS (
         SELECT doc_id,
@@ -1797,12 +1793,12 @@ object TrainingOps {
           (lit(1.0) / coalesce(col("n_members"), lit(1L))).as("weight"))
         .orderBy(col("doc_id"))
     },
-    Some("""
+    Some(s"""
       WITH RECURSIVE sh AS (
         SELECT doc_id,
           list_distinct(list_transform(generate_series(1, len(toks)-2),
             i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s
-        FROM (SELECT doc_id, string_split(lower(text), ' ') toks FROM documents)
+        FROM (SELECT doc_id, $oracleToksSql toks FROM documents)
         WHERE len(toks) >= 3),
       pairs AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -1876,10 +1872,10 @@ object TrainingOps {
           col("n_docs") * col("max_tok") - col("sum_tok"))
         .orderBy(col("band"), col("batch_id"))
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id,
-          CAST(len(list_filter(string_split(lower(text), ' '), t -> t <> ''))
+          CAST(len(list_filter($oracleToksSql, t -> t <> ''))
                AS BIGINT) AS n_tok
         FROM documents),
       nz AS (

@@ -1,5 +1,6 @@
 package graft.wiki
 
+import graft.ops.Stored
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -140,8 +141,8 @@ object Categorize {
     val catsNew = mintIds(freshCats, "name", catOffset, nameBound)
       .select("id", "name")
 
-    val pages = pageBase.fold(pagesNew)(_.unionByName(pagesNew)).localCheckpoint()
-    val categories = catBase.fold(catsNew)(_.unionByName(catsNew)).localCheckpoint()
+    val pages = Stored.checkpoint(pageBase.fold(pagesNew)(_.unionByName(pagesNew))).df
+    val categories = Stored.checkpoint(catBase.fold(catsNew)(_.unionByName(catsNew))).df
 
     val pairs = parsed
       .select(col("file_name"), explode(col("categories")).as("name"))
@@ -154,15 +155,13 @@ object Categorize {
     Model(pages, categories, bridge)
   }
 
-  /** The narrow parsed frame, stored by one eager `localCheckpoint`
-    * ([[graft.ops.Stored]]), with the two bounds its job observes: the
-    * row count, and the summed `categories` array sizes with a null
-    * array counted as 0 (`size(null)` is -1 or null depending on the
-    * ANSI setting; `greatest` skips the null). */
+  /** The narrow parsed frame, stored ([[Stored]]), with the two bounds
+    * its job observes: the row count, and the summed `categories` array
+    * sizes with a null array counted as 0 (`size(null)` is -1 or null
+    * depending on the ANSI setting; `greatest` skips the null). */
   private[graft] def storeParsed(processed: DataFrame): (DataFrame, Long, Long) = {
-    val parsed = graft.ops.Stored.checkpoint(
+    val parsed = Stored.checkpoint(
       processed.select("file_name", "categories", "word_count", "last_edited_date"),
-      "categorize_bounds",
       coalesce(sum(greatest(size(col("categories")), lit(0))), lit(0L)).as("names"))
     (parsed.df, parsed.rows, parsed.metrics.getLong(1))
   }
@@ -305,17 +304,14 @@ object Categorize {
     val delta = existing match {
       case None => m
       case Some(ex) => Model(
-        m.pages.join(ex.pages.select(col("file_name")),
+        Stored.checkpoint(m.pages.join(ex.pages.select(col("file_name")),
           Seq("file_name"), "left_anti")
-          .select("id", "file_name", "word_count", "last_edited_date")
-          .localCheckpoint(),
-        m.categories.join(ex.categories.select(col("name")),
+          .select("id", "file_name", "word_count", "last_edited_date")).df,
+        Stored.checkpoint(m.categories.join(ex.categories.select(col("name")),
           Seq("name"), "left_anti")
-          .select("id", "name")
-          .localCheckpoint(),
-        m.pageCategories.join(ex.pageCategories,
-          Seq("page_id", "category_id"), "left_anti")
-          .localCheckpoint())
+          .select("id", "name")).df,
+        Stored.checkpoint(m.pageCategories.join(ex.pageCategories,
+          Seq("page_id", "category_id"), "left_anti")).df)
     }
     saveToJdbc(delta, url, props)
     m

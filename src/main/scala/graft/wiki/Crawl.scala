@@ -1,5 +1,6 @@
 package graft.wiki
 
+import graft.ops.Stored
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,11 +21,12 @@ import org.apache.spark.sql.functions._
   *    batch rendering of stateful stream dedup (§1.4);
   *  - queue cycle valid→check→dups→valid (.env.example:9-11): the loop.
   *
-  * Each iteration is one narrow plan; `localCheckpoint` truncates the
-  * lineage so depth-k BFS doesn't build a k-deep recursive DAG (at
-  * cluster scale use reliable checkpoint dirs instead). The per-level
-  * `isEmpty` driver check is inherent to BFS termination — it inspects
-  * emptiness only, never ships row data to the driver.
+  * Each iteration is one narrow plan; storing each level's frontier and
+  * seen set ([[graft.ops.Stored]]) truncates the lineage so depth-k BFS
+  * doesn't build a k-deep recursive DAG (at cluster scale use reliable
+  * checkpoint dirs instead). The loop stops on the row count the
+  * frontier's own storing job observed, so termination costs no job of
+  * its own and ships no row data to the driver.
   */
 object Crawl {
 
@@ -40,22 +42,21 @@ object Crawl {
     import spark.implicits._
     val seed = Seq(seedUrl).toDF("raw")
       .select(Urls.normalize(col("raw")).as("url"), lit(0).as("depth"))
-    var seen = seed.localCheckpoint()
-    var frontier = seen
+    var frontier = Stored.checkpoint(seed)
+    var seen = frontier.df
     var depth = 0
-    while (depth < maxDepth && !frontier.isEmpty) {
-      val fetched = frontier.join(web, "url")
+    while (depth < maxDepth && frontier.rows > 0) {
+      val fetched = frontier.df.join(web, "url")
       val links = fetched
         .select(explode(Html.extractLinksUdf(col("html"), col("url"))).as("link"))
         .filter(Urls.isWikipedia(col("link")))
         .select(Urls.normalize(col("link")).as("url"))
         .distinct()
       depth += 1
-      frontier = links
+      frontier = Stored.checkpoint(links
         .join(seen.select("url"), Seq("url"), "left_anti")
-        .withColumn("depth", lit(depth))
-        .localCheckpoint()
-      seen = seen.unionByName(frontier).localCheckpoint()
+        .withColumn("depth", lit(depth)))
+      seen = Stored.checkpoint(seen.unionByName(frontier.df)).df
     }
     seen
   }

@@ -37,7 +37,19 @@ class CcInvarianceSpec extends SparkSpec {
       TrainingOps.q73RepetitionFilter, CurationOps.q87EmbedCellDedup,
       CurationOps.q89NeardupPrune, AnalyticsOps.q107GraphPagerank,
       ClusterOps.q117KmeansLloyd, ClusterOps.q119PqAdc, ClusterOps.q122IvfPq,
-      CurationOps.q139MutualKnnClusters).foreach { q =>
+      CurationOps.q139MutualKnnClusters,
+      TrainingOps.q69BigramLift, LlmOps.q94ContainmentDedup, AnalyticsOps.q97SketchProfile,
+      CurationOps.q98IncrementalNovelty, PipelineOps.q106WinnowDup,
+      TrainingOps.q115SubstringDup, TrainingOps.q116DupSpanLocalize,
+      ClusterOps.q120SparseRetrieval, ClusterOps.q121HybridRrf, PipelineOps.q124BpeMerges,
+      CurationOps.q125BigramLmScore, TrainingOps.q127SpanCutRewrite,
+      PipelineOps.q128PerceptualDedup, PipelineOps.q132AudioNearDup,
+      TrainingOps.q133BloomDecontam,
+      CurationOps.q135DsirContrast, CurationOps.q136TemperatureMix, ClusterOps.q137Bm25TopK,
+      PipelineOps.q138BpeApply, CurationOps.q140ClusterQuotaSample,
+      CurationOps.q141QualityCalibrate, CurationOps.q143QualityRankFusion,
+      CurationOps.q144SourceDatacard, CurationOps.q145QualityTrain,
+      CurationOps.q146QualityApply).foreach { q =>
     test(s"${q.name} rows are invariant under shuffle partitions, AQE and broadcast settings") {
       val base = normalized(q)
       assert(base.nonEmpty, s"${q.name}: empty result at sf0.001")

@@ -143,8 +143,7 @@ class PlanAuditSpec extends SparkSpec {
       edges.join(broadcast(r), col("src") === col("v"))
         .select(col("dst"), expr("r div d").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("cs"))
-    val stored = graft.ops.Stored.checkpoint(
-      mkEdges.repartition(4, col("dst")), "plan_audit_q107").df
+    val stored = graft.ops.Stored.checkpoint(mkEdges.repartition(4, col("dst"))).df
     val good = round(stored)
     // only the plan ABOVE the stored seam matters (the repartition
     // exchange ran in the storing job)

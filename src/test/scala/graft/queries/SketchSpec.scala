@@ -38,6 +38,29 @@ class SketchSpec extends SparkSpec {
     }
   }
 
+  test("q99 HLL++ estimate lands within 5·rsd of an exact count taken outside q99") {
+    // the rel_err q99 reports is its own arithmetic over its own exact
+    // column; here the exact per-source vocabulary is counted on the
+    // driver from the raw rows, with Java's split (the corpus is ASCII,
+    // so lower-casing and single-space splitting agree with Spark's)
+    val sf = "/root/testdata/sf0.01"
+    val exact = graft.Tables.documents(spark, sf).select("source", "text").collect()
+      .groupBy(_.getString(0))
+      .map { case (src, rows) =>
+        src -> rows.iterator.flatMap(r => Option(r.getString(1)))
+          .flatMap(_.toLowerCase.split(" ", -1))
+          .filter(_.nonEmpty).toSet.size.toLong
+      }
+    val est = PipelineOps.q99HllDistinct.fn(spark, sf).collect()
+      .map(r => r.getString(0) -> r.getLong(r.fieldIndex("hll_estimate"))).toMap
+    assert(est.keySet === exact.keySet)
+    exact.foreach { case (src, n) =>
+      assert(n > 0, src)
+      val relErr = math.abs(est(src) - n).toDouble / n
+      assert(relErr <= 0.10, s"source=$src exact=$n estimate=${est(src)} rel_err=$relErr")
+    }
+  }
+
   test("minhash64 sketch similarity tracks true Jaccard (the q33 LSH premise)") {
     val s = spark
     import s.implicits._

@@ -49,20 +49,20 @@ object Profile {
   /** name → why this plan is worth reading. */
   private val picks: Seq[(String, String)] = Seq(
     "q01_pricing_summary" -> "scan: pushed date filter + pruned columns; partial hash agg below the shuffle",
-    "q05_region_revenue" -> "star join: two broadcast dims, fact-side shuffles only on join keys",
+    "q05_region_revenue" -> "star join: each dimension broadcasts by its size, so the lineitem side streams unshuffled",
     "q14_topk_orders" -> "TakeOrderedAndProject — top-k without a global sort",
     "q33_minhash_lsh_dup" -> "LSH: native minhash64 inside codegen, candidate join keyed on (band, bucket)",
     "q41_html_extract" -> "native parse_page evaluated once, above the range-sort (sampler must not re-parse)",
     "q60_ann_ivf" -> "IVF: codebook + query sides broadcast, corpus cells shuffle once",
     "q71_cms_heavy_hitters" -> "typed Aggregator with map-side partial reduce (ObjectHashAggregate)",
     "q75_column_profile" -> "hash-planned Expand multi-column count-distinct + a pruned 1-column string min/max pass (string buffers would force SortAggregate), stack unpivot",
-    "q77_decontaminate" -> "broadcast probe shingles; native ngrams in the codegen stage",
+    "q77_decontaminate" -> "probe shingles broadcast by AQE from their measured exchange; native ngrams in the codegen stage",
     "q85_vocab_oov" -> "top-100 vocab via TakeOrderedAndProject, broadcast back over the token stream",
     "q87_embed_cell_dedup" -> "SemDeDup: broadcast codebook assignment, within-cell pair join keyed on cent_id",
     "q91_range_binned" -> "non-equi range predicate executed as a hash equi-join on the bin id (no nested loop)",
     "q94_containment_dedup" -> "asymmetric prefix filter: contained side pruned, index side full, shingle-keyed candidates",
     "q104_winnowing" -> "winnowing: one doc-keyed window exchange computing both count and frame-min; packed 8-byte values",
-    "q107_graph_pagerank" -> "five PageRank iterations: dst-partitioned stored edge frame (the Stored seam keeps the partitioning), rank BROADCAST each round — no edge shuffle and no contribution exchange in the loop",
+    "q107_graph_pagerank" -> "five PageRank iterations: dst-partitioned stored edge frame (the Stored seam keeps the partitioning), rank BROADCAST each round (hinted: the lazy round state has no statistics) — no edge shuffle and no contribution exchange in the loop",
     "q108_quantized_ann" -> "two-stage ANN: broadcast query codes, integer-dot candidate window, float re-rank window over 20/query",
     "q122_ivfpq_search" -> "IVF-PQ serving path: map-side l2argmin routing (no corpus window), broadcast distance tables ON cell_id, WindowGroupLimit-pruned shortlist, broadcast-shortlist refine — constant shuffle across three decades",
     "q124_bpe_merges" -> "BPE training: one corpus histogram agg, then vocabulary-sized merge rounds — the overlap rule as a single chained window pass per round (one exchange, fused WindowExecs)",

@@ -180,7 +180,7 @@ object Curate {
     val mn = per.agg(min(col("n_tokens")).as("min_tok"))
     mixture match {
       case MixturePolicy.Equalize =>
-        per.crossJoin(broadcast(mn))
+        per.crossJoin(mn)
           .select(col("source"),
             floor((col("min_tok").cast("double") / col("n_tokens")) * 65536)
               .cast("long").as("cut"))
@@ -193,7 +193,7 @@ object Curate {
         // cut_4 = 98304) — clamp to keep the documented cut ∈
         // [0, 65536] invariant; `bucket < cut` semantics are unchanged
         // (both mean keep-everything).
-        per.crossJoin(broadcast(mn))
+        per.crossJoin(mn)
           .withColumn("__num",
             lit(65536L).cast("decimal(38,0)")
               * graft.queries.CurationOps.isqrt(col("n_tokens")).cast("decimal(38,0)")
@@ -270,11 +270,18 @@ object Curate {
       if (verbose) println(f"[curate-stage] $l ${(System.nanoTime() - __t) / 1e9}%.1f s")
       __t = System.nanoTime()
     }
+    // runs `body` with its jobs described as stage `name`'s
+    def described[A](name: String)(body: => A): A = {
+      val sc = spark.sparkContext
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(s"curate $name")
+      try body finally sc.setJobDescription(prev)
+    }
     // stores stage `name`, then releases everything the run held before
     // (the previous stage and the scratch this one was built on)
     def store(name: String, df: DataFrame, extra: Column*): Stored = {
       val built = held.ids
-      val s = Stored.checkpoint(df, extra: _*)
+      val s = described(name)(Stored.checkpoint(df, extra: _*))
       held.release(built)
       lap(name)
       s
@@ -345,8 +352,9 @@ object Curate {
     // reference corpus would plug in. The scores are stored: they feed
     // both the threshold and the join, and left as one lazy plan, AQE's
     // join choices there followed the order its stages happened to end.
-    val lmScores = Stored.checkpoint(graft.queries.CurationOps.lmScored(quality.df)
-      .select(col("doc_id"), col("lm_score"))).df
+    val lmScores = described("lm")(Stored.checkpoint(
+      graft.queries.CurationOps.lmScored(quality.df)
+        .select(col("doc_id"), col("lm_score")))).df
     val kSample = 256
     val cutIdx = math.max(1, (kSample * lmTailFrac).toInt)
     val lmThr = lmScores
@@ -360,7 +368,7 @@ object Curate {
     // stricter cut than the documented quantile tail. Unscoreable docs
     // pass this gate; the quality gate above already judged them.
     val lmPass = store("lm", quality.df.join(lmScores, Seq("doc_id"), "left")
-      .crossJoin(broadcast(lmThr))
+      .crossJoin(lmThr)
       .filter(col("lm_score").isNull || col("lm_score") >= col("__lm_floor"))
       .drop("lm_score", "__lm_floor"))
 
@@ -379,8 +387,8 @@ object Curate {
     // the whole LSH generation (shingle → minhash → band join →
     // Jaccard verify) ran twice. The pair graph is output-sized (edges
     // between near-dups), tiny next to the corpus scan that produces it.
-    val pairs = Stored.checkpoint(graft.queries.LlmOps.nearDupPairs(spark, sfDir)
-      .select(col("id_a"), col("id_b"))).df
+    val pairs = described("near")(Stored.checkpoint(
+      graft.queries.LlmOps.nearDupPairs(spark, sfDir).select(col("id_a"), col("id_b")))).df
     val e = pairs.select(col("id_a").as("me"), col("id_b").as("other"))
       .union(pairs.select(col("id_b").as("me"), col("id_a").as("other")))
     val losers = e
@@ -416,8 +424,8 @@ object Curate {
     // twice per pipeline run. The bands frames are 16 longs/doc.
     val P = graft.queries.PipelineOps
     val nDocs = P.nonEmptyDocCount(spark, sfDir)
-    val aBands = Stored.checkpoint(P.audioBands(spark, sfDir)).df
-    val vBands = Stored.checkpoint(P.videoBands(spark, sfDir)).df
+    val aBands = described("media")(Stored.checkpoint(P.audioBands(spark, sfDir))).df
+    val vBands = described("media")(Stored.checkpoint(P.videoBands(spark, sfDir))).df
     val nearLosers = Seq(
       P.perceptualDupPairs(spark, sfDir, nDocs),
       P.videoNearDupPairsFrom(spark, vBands, nDocs),
@@ -455,16 +463,17 @@ object Curate {
     val TO = graft.queries.TrainingOps
     // tiny (distinct grams of the eval docs) but it fans into the
     // bitmap build AND the exact join — store the fan-out
-    val probe = Stored.checkpoint(
+    val probe = described("decontam")(Stored.checkpoint(
       grams(T.documents(spark, sfDir).filter(col("doc_id") < evalIdBelow))
-        .select(col("g")).distinct()).df
+        .select(col("g")).distinct())).df
     // the bitmap frame fans into FOUR broadcast builds (the q133
     // convention — Catalyst does not share identical subplans)
-    val words = Stored.checkpoint(TO.bloomWords(probe)).df
+    val words = described("decontam")(Stored.checkpoint(TO.bloomWords(probe))).df
     val flagged = TO.bloomProbeFlagged(TO.bloomGrams(mediaDeduped.df), words)
       .select(col("doc_id"))
     val contaminated = grams(
         mediaDeduped.df.join(flagged, Seq("doc_id"), "left_semi"))
+      // broadcast: unhinted, this stage runs 2 more jobs (Curate 88 → 90 at sf0.01)
       .join(broadcast(probe), "g")
       .select(col("doc_id")).distinct()
     val clean = store("decontam",
@@ -539,7 +548,7 @@ object Curate {
     val sampled = store("sample", withTok
       .withColumn("__bucket",
         expr("cast(conv(substring(md5(cast(doc_id as string)), 1, 4), 16, 10) as int)"))
-      .join(broadcast(rates), "source")
+      .join(rates, "source")
       .filter(col("__bucket") < col("cut"))
       .drop("__bucket", "cut"))
 

@@ -44,8 +44,8 @@ import org.apache.spark.sql.functions._
   *      with an exclusive prefix sum over ranges WITHIN each block: a
   *      window over the tiny count frame, never the corpus.
   *   3. `row_number()` within (range, block) ordered by the same key,
-  *      plus the broadcast per-(range, block) offset = the exact
-  *      per-block rank.
+  *      plus the per-(range, block) offset joined back from the count
+  *      frame = the exact per-block rank.
   *
   * The ranged frame is stored ([[Stored]]): both q44/q128
   * join sides read the ranked frame, and two planner instantiations
@@ -120,7 +120,7 @@ object BlockRanks {
 
     val wIn = Window.partitionBy(col("__pid"), col(blockCol))
       .orderBy(orderCols: _*)
-    ranged.join(broadcast(offsets), Seq("__pid", blockCol))
+    ranged.join(offsets, Seq("__pid", blockCol))
       .withColumn(rnCol, row_number().over(wIn).cast("long") + col("__off"))
       .drop("__pid", "__off")
   }

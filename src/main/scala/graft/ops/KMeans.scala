@@ -55,9 +55,10 @@ object KMeans {
 
   /** One Lloyd assignment: for each row of `corpus` (vec_id, xq), the
     * argmin centroid over `cents` (cid, mu) plus its squared distance.
-    * `cents` is collapsed to a single sorted array-of-structs row and
-    * broadcast, so the assignment is a pure map-side fold — no window,
-    * no groupBy, no shuffle of the corpus. The fold itself is the
+    * `cents` is collapsed to a single sorted array-of-structs row, which
+    * the planner broadcasts (an ungrouped aggregate is one row), so the
+    * assignment is a pure map-side fold — no window, no groupBy, no
+    * shuffle of the corpus. The fold itself is the
     * native [[graft.functions.VecDistKernels.l2argmin]] kernel (identical
     * semantics to the `aggregate(transform(...))` HOF chain it
     * replaces — VecDistKernels' scaladoc carries the bit-equality
@@ -68,7 +69,7 @@ object KMeans {
     val packed = cents.agg(
       sort_array(collect_list(struct(col("cid"), col("mu")))).as("cs"))
     corpus
-      .join(broadcast(packed))
+      .join(packed)
       .withColumn("best",
         graft.functions.GraftFunctions.l2argmin(col("xq"), col("cs")))
       .select(col("vec_id"), col("best.c").as("cid"),

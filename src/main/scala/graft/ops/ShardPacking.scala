@@ -43,11 +43,11 @@ import org.apache.spark.sql.functions._
   * cumulative tokens, which is why q78 and Curate stage 6 route
   * through this object rather than keeping their own `/` windows.
   *
-  * The offsets table is broadcast: its size is #distinct (source,
-  * block), one row per blockSpan of key space — at 100 TB pick
-  * blockSpan so this stays in the 10⁵–10⁷ row range (e.g. 10⁶ ids per
-  * block); if a deployment cannot broadcast it, the same join works
-  * as a shuffle hash join on (source, block) unchanged.
+  * The offsets table has #distinct (source, block) rows, one per
+  * blockSpan of key space — at 100 TB pick blockSpan so this stays in
+  * the 10⁵–10⁷ row range (e.g. 10⁶ ids per block). The join carries no
+  * hint: the planner broadcasts whichever side measures smaller, or
+  * joins as a shuffle join on (source, block), same result.
   *
   * `order` must be numeric and unique per row within a source (doc_id
   * here); `n` is the per-row token count. Null contract: `source`,
@@ -109,7 +109,7 @@ object ShardPacking {
     // block offset. Parallelism = #blocks, not #sources.
     val wIn = Window.partitionBy(col(source), col("__blk")).orderBy(col(order))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    base.join(broadcast(offsets), Seq(source, "__blk"))
+    base.join(offsets, Seq(source, "__blk"))
       .withColumn("__run", sum(col(n).cast("long")).over(wIn))
       .withColumn(outCol,
         (col("__off") + col("__run") - col(n).cast("bigint")).cast("bigint"))

@@ -192,8 +192,7 @@ object AnalyticsOps {
         ("large", 200.0, 350.0), ("jumbo", 350.0, 1000.0))
         .toDF("band", "lo", "hi")
       T.events(s, dir)
-        .join(broadcast(bands),
-          col("value") >= col("lo") && col("value") < col("hi"))
+        .join(bands, col("value") >= col("lo") && col("value") < col("hi"))
         .groupBy(col("band"))
         .agg(count(lit(1)).as("n"),
           graft.Qdsl.dsum(col("value")).as("sum_value"))
@@ -483,7 +482,7 @@ object AnalyticsOps {
         countDistinct(col("o_orderdate")).as("nd_date"),
         date_format(min(col("o_orderdate")), "yyyy-MM-dd HH:mm:ss").as("mn_date"),
         date_format(max(col("o_orderdate")), "yyyy-MM-dd HH:mm:ss").as("mx_date"))
-        .crossJoin(broadcast(statusMm))
+        .crossJoin(statusMm)
       profiled.select(expr(
         """stack(4,
           |  'o_orderkey',   n_rows, n_rows - nn_key,    nd_key,    mn_key,    mx_key,
@@ -919,6 +918,7 @@ object AnalyticsOps {
       // shuffle-partition setting keeps it scale-adaptive.
       val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
       val edges = Stored.checkpoint(
+        // broadcast: unhinted, q107 ran 19 → 20 jobs and shuffled 21.3 → 31.2 MB at sf0.1
         edges0.join(broadcast(deg), col("src") === col("dv"))
           .select(col("src"), col("dst"), col("d"))
           .repartition(nPart, col("dst"))).df
@@ -937,6 +937,7 @@ object AnalyticsOps {
         // hint: the same plan degrades to src-keyed shuffle joins,
         // semantics unchanged.
         val contrib = edges
+          // broadcast: lazy round state has no statistics; unhinted, q107 ran 19 → 34 jobs at sf0.1
           .join(broadcast(r), col("src") === col("v"))
           .select(col("dst"), expr("r div d").as("c"))
         // node-sized state checkpoint per round (the KMeans.run rule):

@@ -174,13 +174,12 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
       // transform/aggregate HOF chain dispatched sub×k×dsub lambdas per
       // corpus row; the kernel is the identical fold/tie rule (see
       // VecDistKernels.pqEncode) fused into the scan's codegen stage
-      val coded = e.join(broadcast(cbl))
+      val coded = e.join(cbl)
         .select(col("vec_id"),
           graft.functions.GraftFunctions
             .pqEncode(col("xq"), col("cbl"), pqSub, pqDsub, pqK).as("codes"))
       // per-query distance tables: qdt[jj][c] = dist(sub_jj(q), cb[jj][c])
-      val queries = e.filter(col("vec_id") < 10)
-        .join(broadcast(cbl))
+      val queries = e.filter(col("vec_id") < 10).join(cbl)
         .select(col("vec_id").as("query_id"), expr(s"""
           transform(sequence(0, ${pqSub - 1}), jj ->
             transform(slice(cbl, jj * $pqK + 1, $pqK), ct ->
@@ -188,6 +187,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
       // ADC via the compiled pq_adc lookup-sum (guide §4 —
       // same ascending-jj fold as the aggregate(sequence(...)) chain,
       // minus 8 interpreted element_at dispatches per corpus×query row)
+      // broadcast: no equi-key; 10 rows estimated at 5.1 MB at sf1, linear — past 10 MB a CartesianProduct
       val scored = coded.join(broadcast(queries),
           col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -316,7 +316,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
       .agg(count(lit(1)).as("tf"))).df
     val ndocs = T.documents(s, dir).agg(count(lit(1)).as("n"))
     val wt = Stored.checkpoint(tf.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .join(broadcast(ndocs))
+      .join(ndocs)
       .filter(col("df") * 4 <= col("n"))
       .select(col("h"), expr("(n * 256) div df").as("wt"))).df
     tf.join(wt, "h")
@@ -330,6 +330,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
       val qside = postings.filter(col("doc_id") < 10)
         .select(col("doc_id").as("query_id"), col("h"),
           col("tf").as("tfq"))
+      // broadcast: unhinted, q120 ran 15 → 18 jobs and shuffled 2.0 → 5.9 MB at sf0.1
       val scored = postings.join(broadcast(qside), "h")
         .filter(col("doc_id") =!= col("query_id"))
         .groupBy(col("query_id"), col("doc_id"))
@@ -441,6 +442,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
       // ties past 2^53 at scale) and its input is already the
       // aggregated candidate frame.
       val topD = udaf(new graft.functions.TopKAggregator(20))
+      // broadcast: no equi-key; 10 rows estimated at 4.5 MB at sf1, linear — past 10 MB a CartesianProduct
       val dense = e.join(broadcast(qv), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cosine"))
@@ -461,6 +463,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
         .select(col("doc_id").as("query_id"), col("h"), col("tf").as("tfq"))
       val wS = Window.partitionBy(col("query_id"))
         .orderBy(col("score").desc, col("neighbor_id"))
+      // broadcast: unhinted, q121 ran 21 → 24 jobs and shuffled 2.0 → 5.9 MB at sf0.1
       val sparse = postings.join(broadcast(qsideS), "h")
         .filter(col("doc_id") =!= col("query_id"))
         .groupBy(col("query_id"), col("doc_id").as("neighbor_id"))
@@ -636,12 +639,12 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
       // 8-row broadcast.
       val assigned = KMeans.assign(e, cents)
       val res = Stored.checkpoint(assigned
-        .join(broadcast(coarse), col("cid") === col("cell_id"))
+        .join(coarse, col("cid") === col("cell_id"))
         .select(col("vec_id"), col("cell_id"),
           expr("zip_with(xq, cv, (a, b) -> cast(a as double) - b)").as("r"))).df
       // the QUERY side keeps the explicit distance frame — 10 rows × 8
       // cells, needed for nprobe > 1 ranking, cost-free at any scale
-      val cd = e.filter(col("vec_id") < 10).join(broadcast(coarse))
+      val cd = e.filter(col("vec_id") < 10).join(coarse)
         .select(col("vec_id"), col("cell_id"), col("cv"), col("xq"),
           graft.functions.GraftFunctions.l2sq(col("xq"), col("cv")).as("cdist"))
       val wAssign = Window.partitionBy(col("vec_id"))
@@ -660,7 +663,7 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
       // compiled pq_encode kernel over the residuals (guide §4 —
       // identical fold/tie rule to the HOF chain it replaces; the
       // double-input variant of q119's long-input encode)
-      val coded = res.join(broadcast(cbl))
+      val coded = res.join(cbl)
         .select(col("vec_id"), col("cell_id"),
           graft.functions.GraftFunctions
             .pqEncode(col("r"), col("cbl"), pqSub, pqDsub, pqK).as("codes"))
@@ -671,18 +674,18 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
         .filter(col("rn") <= ivfNprobe)
         .select(col("vec_id").as("query_id"), col("cell_id"),
           expr("zip_with(xq, cv, (a, b) -> cast(a as double) - b)").as("qr"))
-        .join(broadcast(cbl))
+        .join(cbl)
         .select(col("query_id"), col("cell_id"), expr(s"""
           transform(sequence(0, ${pqSub - 1}), jj ->
             transform(slice(cbl, jj * $pqK + 1, $pqK),
               ct -> ${subDist("qr", "ct")}))""").as("qdt"))
-      val scored = coded.join(broadcast(qdt), Seq("cell_id"))
+      val scored = coded.join(qdt, Seq("cell_id"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           graft.functions.GraftFunctions
             .pqAdc(col("codes"), col("qdt")).as("adist"))
-      // Shortlist cut stays the row_number WINDOW deliberately (round
-      // 21, measured): a TopKAggregator(50) conversion here ran 2.99 →
+      // Shortlist cut stays the row_number WINDOW deliberately
+      // (measured): a TopKAggregator(50) conversion here ran 2.99 →
       // 8.31 s at sf1 even with the O(1) fast-reject — the typed
       // udaf's per-row object path (InternalRow → case class + Seq
       // buffer) costs far more than the unsafe-sort window on this
@@ -697,16 +700,14 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")}
         .filter(col("srn") <= slN)
         .select(col("query_id"), col("neighbor_id"), col("adist"))
       // refine: fetch the shortlist's full vectors, exact pinned fold.
-      // The shortlist side is BOUNDED (queries × ivfShortlist rows), so
-      // it broadcasts and the vector store never shuffles — at sf1 the
-      // unhinted join shuffled the whole 10 MB store through an SMJ
-      // once it outgrew AQE's auto-broadcast (the audit's 98× decade
-      // step); with the hint the store is scan-side at every scale.
+      // The shortlist side is BOUNDED (queries × ivfShortlist rows) and
+      // broadcasts; the vector store is stored with its measured size,
+      // so it stays scan-side unhinted (q122 shuffles 45 KB at sf1).
       val qv = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("xq").as("qx"))
       val refined = e.select(col("vec_id").as("neighbor_id"), col("xq").as("nx"))
-        .join(broadcast(shortlist), "neighbor_id")
-        .join(broadcast(qv), "query_id")
+        .join(shortlist, "neighbor_id")
+        .join(qv, "query_id")
         .select(col("query_id"), col("neighbor_id"), col("adist"),
           expr("""aggregate(zip_with(qx, nx,
                     (a, b) -> (cast(a as double) - cast(b as double))
@@ -873,10 +874,11 @@ ${(1 to lloydIters).map(duckIter).mkString(",\n")},
       val st = dl.agg(sum(col("dl")).as("s"), count(lit(1)).as("m"))
       val qside = postings.filter(col("doc_id") < 10)
         .select(col("doc_id").as("query_id"), col("h"), col("tf").as("tfq"))
+      // broadcast: unhinted, q137 ran 21 → 24 jobs and shuffled 2.9 → 6.8 MB at sf0.1
       val contrib = postings.join(broadcast(qside), "h")
         .filter(col("doc_id") =!= col("query_id"))
         .join(dl, "doc_id")
-        .crossJoin(broadcast(st))
+        .crossJoin(st)
         .select(col("query_id"), col("doc_id"),
           col("tf"), col("tfq"), col("wt"),
           expr("""(cast(tfq * wt as double) * cast(22 * tf as double)

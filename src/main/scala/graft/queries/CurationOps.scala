@@ -123,6 +123,7 @@ object CurationOps {
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("label").as("true_label"),
           col("v").as("qv"), col("nrm").as("qn"))
+      // broadcast: no equi-key; 10 rows estimated at 4.5 MB at sf1, linear — past 10 MB a CartesianProduct
       val scored = e.filter(col("vec_id") >= 10).join(broadcast(q))
         .select(col("query_id"), col("true_label"),
           col("vec_id").as("neighbor_id"), col("label").as("nlabel"),
@@ -373,7 +374,7 @@ object CurationOps {
     (s, dir) => {
       val per = sourceTokenStats(s, dir)
       val mn = per.agg(min(col("n_tokens")).as("min_tok"))
-      per.crossJoin(broadcast(mn))
+      per.crossJoin(mn)
         .select(col("source"), col("n_docs"), col("n_tokens"),
           (col("min_tok").cast("double") / col("n_tokens")).as("rate"),
           floor((col("min_tok").cast("double") / col("n_tokens")) * col("n_tokens"))
@@ -422,7 +423,7 @@ object CurationOps {
       val vocab = toks.groupBy(col("t")).agg(count(lit(1)).as("c"))
         .orderBy(col("c").desc, col("t")).limit(100)
         .select(col("t"), lit(1).as("inv"))
-      toks.join(broadcast(vocab), Seq("t"), "left")
+      toks.join(vocab, Seq("t"), "left")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_toks"),
           sum(when(col("inv").isNull, 1).otherwise(0)).cast("bigint").as("n_oov"))
@@ -465,7 +466,7 @@ object CurationOps {
     * DECIMAL(38,0) unchanged.)
     *
     * Scale shape: two passes — a per-source moment agg (source-count
-    * sized, broadcast back) and one scan with the integer predicate;
+    * sized, joined back) and one scan with the integer predicate;
     * classic map-side-combine friendly aggs, no corpus shuffle.
     */
   val q86LengthOutliers = Q(
@@ -476,7 +477,7 @@ object CurationOps {
       val st = d.groupBy(col("source"))
         .agg(count(lit(1)).as("n"), sum(col("x")).as("s1"),
           sum(col("x") * col("x")).as("s2"))
-      d.join(broadcast(st), "source")
+      d.join(st, "source")
         .withColumn("isout",
           when((col("n") * col("x") - col("s1")) * (col("n") * col("x") - col("s1"))
             > lit(4L) * (col("n") * col("s2") - col("s1") * col("s1")), 1).otherwise(0))
@@ -545,7 +546,7 @@ object CurationOps {
     // (VecDistKernels.cosArgmax scaladoc); the size(cs) > 0 guard
     // reproduces the old inner join's empty-codebook ⇒ empty-output
     // semantics. Oracle (q87/q139/q140) re-proved at sf0.001/0.01/0.1.
-    // PRECONDITION (ADVICE r21): vectors are NON-NULL — cos_argmax is
+    // PRECONDITION: vectors are NON-NULL — cos_argmax is
     // nullSafeEval, so a null v/nrm row would emit a null cent_id
     // where the old exploded window (null cos sorts last under DESC)
     // still assigned the smallest-cid candidate. The embedding column
@@ -555,7 +556,7 @@ object CurationOps {
       .agg(sort_array(collect_list(struct(
         col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))))
         .as("cs"))
-    n.crossJoin(broadcast(cents))
+    n.crossJoin(cents)
       .filter(size(col("cs")) > 0)
       .select(col("vec_id"),
         cosArgmax(col("v"), col("nrm"), col("cs")).getField("cid")
@@ -814,7 +815,7 @@ object CurationOps {
     * docs/tokens so the achieved mixture can be audited against the
     * q84 targets.
     *
-    * Scale shape: the rate table is sources-sized and broadcast; the
+    * Scale shape: the rate table is sources-sized; the
     * filter is one codegen projection per corpus row; the audit agg is
     * map-side combinable. Nothing shuffles except the final
     * sources-sized agg.
@@ -829,12 +830,12 @@ object CurationOps {
             .as("bucket"))
       val per = sourceTokenStats(s, dir).select(col("source"), col("n_tokens"))
       val mn = per.agg(min(col("n_tokens")).as("min_tok"))
-      val rates = per.crossJoin(broadcast(mn))
+      val rates = per.crossJoin(mn)
         .select(col("source"),
           (col("min_tok").cast("double") / col("n_tokens")).as("rate"),
           floor((col("min_tok").cast("double") / col("n_tokens")) * 65536)
             .cast("long").as("cut"))
-      d.join(broadcast(rates), "source")
+      d.join(rates, "source")
         .filter(col("bucket") < col("cut"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_kept"),
@@ -1122,14 +1123,14 @@ object CurationOps {
       // before the factor math so the degenerate case is engine-exact
       val per = sourceTokenStats(s, dir).filter(col("n_tokens") > 0)
       val mx = per.agg(max(col("n_tokens")).as("max_tok"))
-      val withFactor = per.crossJoin(broadcast(mx))
+      val withFactor = per.crossJoin(mx)
         .select(col("source"), col("n_docs"), col("n_tokens"),
           least(lit(4L),
             expr("(max_tok + n_tokens - 1) div n_tokens"))
             .cast("bigint").as("epochs"))
         .withColumn("effective_tokens", col("n_tokens") * col("epochs"))
       val tot = withFactor.agg(sum(col("effective_tokens")).as("tot"))
-      withFactor.crossJoin(broadcast(tot))
+      withFactor.crossJoin(tot)
         .select(col("source"), col("n_docs"), col("n_tokens"), col("epochs"),
           col("effective_tokens"),
           (col("effective_tokens").cast("double") / col("tot")).as("share"))
@@ -1194,7 +1195,7 @@ object CurationOps {
         .withPrefixSum(d, "__src", "doc_id", "n_chars", "cum_before")
       val step = d.agg(
         expr("sum(n_chars) div (count(1) div 10)").as("step"))
-      cum.join(broadcast(step))
+      cum.join(step)
         .withColumn("n_hits",
           expr("""((cum_before + n_chars - 1 - (step div 2) + step) div step)
                  | - ((cum_before - 1 - (step div 2) + step) div step)""".stripMargin))
@@ -1393,7 +1394,7 @@ object CurationOps {
         col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))))
         .as("ps"))
     n.filter(col("vec_id") >= probeIdBelow)
-      .crossJoin(broadcast(probes))
+      .crossJoin(probes)
       .filter(size(col("ps")) > 0)
       .select(col("vec_id"),
         cosArgmax(col("v"), col("nrm"), col("ps")).as("am"))
@@ -1617,11 +1618,9 @@ object CurationOps {
   val q136TemperatureMix = Q(
     "q136_temperature_mix",
     (s, dir) => {
-      // q84's broadcast-totals idiom, not a global window: the per
-      // frame is sources-sized, but the registry-wide plan sweep
-      // (PlanAuditSpec) bans unpartitioned windows without a
-      // structural bound — the broadcast join states the bound in the
-      // plan itself.
+      // q84's totals-row idiom, not a global window: the registry-wide
+      // plan sweep (PlanAuditSpec) bans unpartitioned windows without a
+      // structural bound.
       // per fans into BOTH the totals agg and the crossJoin: storing it
       // (a sources-sized frame — trivially cheap) is what makes the
       // "corpus touched once" claim structural rather than a bet on
@@ -1631,7 +1630,7 @@ object CurationOps {
           isqrt(col("n_tokens")).as("w_sqrt"))).df
       val tot = per.agg(sum(col("w_sqrt")).as("tot_w"),
         sum(col("n_tokens")).as("tot_n"))
-      per.crossJoin(broadcast(tot))
+      per.crossJoin(tot)
         .withColumn("share_alpha",
           col("w_sqrt").cast("double") / col("tot_w").cast("double"))
         .withColumn("share_natural",
@@ -1709,7 +1708,7 @@ object CurationOps {
 
   /** All unordered within-cell pairs of a membership frame
     * (vec_id, cent_id, v, nrm) with their exact cosine, SKEW-GUARDED
-    * (round 22, guide §2.5): the plain `cent_id`-keyed self-join puts
+    * (guide §2.5): the plain `cent_id`-keyed self-join puts
     * an entire cell's O(cell²) pair space in ONE task — fine while
     * K ~ √n keeps cells bounded, but one mega-cell (a boilerplate
     * embedding cluster) turns that task quadratic at 100 TB. Cells
@@ -1732,7 +1731,7 @@ object CurationOps {
     * salted ≡ naive on a planted mega-cell). `cap` bounds per-task
     * flops at cap²/2; q139/q140 pass [[cellPairCap]]. The guard
     * ENGAGES ADAPTIVELY: a cells-sized size probe decides, and with no
-    * hot cell the plan is round 21's plain join plus only that probe.
+    * hot cell the plan is the plain join plus only that probe.
     */
   private[graft] def withinCellPairCos(m: org.apache.spark.sql.DataFrame,
       cap: Int): org.apache.spark.sql.DataFrame = {
@@ -1745,8 +1744,8 @@ object CurationOps {
     // overhead when every cell is cold — one sizes broadcast plus two
     // empty-branch AQE stage rounds, measured +0.35–0.45 s EACH on
     // q139/q140 at sf0.1 where no mega-cell exists — so probe the
-    // (checkpointed, cells-sized) size frame first and keep round 21's
-    // plain join when nothing is hot. Same pair set either way
+    // (checkpointed, cells-sized) size frame first and keep the plain
+    // join when nothing is hot. Same pair set either way
     // (WithinCellPairsSpec pins both arms against the naive join).
     val hotExists = !sizes.filter(col("cn") > cap).isEmpty
     if (!hotExists) {
@@ -1755,7 +1754,7 @@ object CurationOps {
             col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"), cosOf)
     }
-    val mm = m.join(broadcast(sizes), "cent_id")
+    val mm = m.join(sizes, "cent_id")
     val cold = mm.filter(col("cn") <= cap)
     val coldPairs = cold.as("a").join(cold.as("b"),
         col("a.cent_id") === col("b.cent_id") &&
@@ -1780,7 +1779,7 @@ object CurationOps {
           |    j -> named_struct('bi', i, 'bj', j))))""".stripMargin)).as("p"))
       .select(col("cent_id"), col("p.bi").as("bi"), col("p.bj").as("bj"))
     def taggedSide(bucketCol: String) = hot.as("h")
-      .join(broadcast(bp).as("p"),
+      .join(bp.as("p"),
         col("h.cent_id") === col("p.cent_id") &&
           col("h.bk") === col(s"p.$bucketCol"))
       .select(col("h.vec_id").as("vec_id"), col("h.v").as("v"),
@@ -2074,7 +2073,7 @@ object CurationOps {
         j, "source", Seq(col("s_fp").desc, col("doc_id")), "rk",
         knownRows = graft.queries.PipelineOps.nonEmptyDocCount(s, dir))).df
       val perSrc = ranked.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-      ranked.join(broadcast(perSrc), "source")
+      ranked.join(perSrc, "source")
         .select(col("doc_id"), col("source"), col("s_fp"), col("rk"),
           expr("(rk - 1) * 10 div n_docs").as("decile"))
   }
@@ -2324,11 +2323,9 @@ object CurationOps {
           count(lit(1)).as("n_scored"),
           sum(col("s_fp")).cast("long").as("sum_s_fp"))
       // every panel is a post-aggregation frame with ≤ |sources| rows
-      // — a structural bound, so the broadcast is stated in the plan
-      // rather than left to AQE's runtime stats (the q136 rationale)
-      vol.join(broadcast(vocab), "source")
-        .join(broadcast(losers), Seq("source"), "left")
-        .join(broadcast(qual), Seq("source"), "left")
+      vol.join(vocab, "source")
+        .join(losers, Seq("source"), "left")
+        .join(qual, Seq("source"), "left")
         .select(col("source"), col("n_docs"), col("n_tokens"), col("n_chars"),
           col("vocab"),
           coalesce(col("n_dup_losers"), lit(0L)).as("n_dup_losers"),
@@ -2504,7 +2501,7 @@ object CurationOps {
     */
   private[graft] def gdStep(fx: org.apache.spark.sql.DataFrame,
       w: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val g = gdDot(fx.crossJoin(broadcast(w)))
+    val g = gdDot(fx.crossJoin(w))
       .withColumn("e", expr(gdLink("z")) - lit(gdQ) * col("y"))
       .agg(
         sum((col("e") * col("x0")).cast("decimal(38,0)")).as("g0"),
@@ -2515,7 +2512,7 @@ object CurationOps {
         count(lit(1)).cast("decimal(38,0)").as("n"))
     def upd(j: Int) = expr(
       s"w$j - ((g$j + $gdF * (n * $gdQ)) div (n * $gdQ) - $gdF)").as(s"w$j")
-    w.crossJoin(broadcast(g))
+    w.crossJoin(g)
       .select(upd(0), upd(1), upd(2), upd(3), upd(4))
   }
 
@@ -2551,7 +2548,7 @@ object CurationOps {
     * degenerate on a weakly-separable corpus. */
   private[graft] def gdScores(fx: org.apache.spark.sql.DataFrame,
       w: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    gdDot(fx.crossJoin(broadcast(w)))
+    gdDot(fx.crossJoin(w))
       .select(col("doc_id"), col("z"))
 
   private def gdTag(w: org.apache.spark.sql.DataFrame, r: Int) =
@@ -2703,7 +2700,7 @@ object CurationOps {
     "q146_quality_apply",
     (s, dir) => {
       val (fx, _, _, w3) = gdRounds(s, dir)
-      gdDot(fx.df.crossJoin(broadcast(w3)))
+      gdDot(fx.df.crossJoin(w3))
         .select(col("doc_id"), col("y"), col("z"),
           expr(gdLink("z")).as("p_fp"))
         .withColumn("keep",

@@ -467,6 +467,7 @@ object LlmOps {
         .select(col("vec_id"), col("v"), sqrt(dot(col("v"), col("v"))).as("nrm"))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
+      // broadcast: no equi-key; 10 rows estimated at 4.5 MB at sf1, linear — past 10 MB a CartesianProduct
       val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cosine"))

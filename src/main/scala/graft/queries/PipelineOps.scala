@@ -166,15 +166,14 @@ object PipelineOps {
           .as(Seq("band", "bucket")))
       val qBands = bands.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("band"), col("bucket"))
-      val cands = bands.join(broadcast(qBands),
-          Seq("band", "bucket"))
+      val cands = bands.join(qBands, Seq("band", "bucket"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"))
         .distinct()
       val qv = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
       val scored = cands
-        .join(broadcast(qv), "query_id")
+        .join(qv, "query_id")
         .join(e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")), "neighbor_id")
         .select(col("query_id"), col("neighbor_id"),
           (GraftFunctions.dot(col("qv"), col("v"))
@@ -1262,7 +1261,7 @@ object PipelineOps {
         .agg(sort_array(collect_list(struct(
           col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))))
           .as("cs"))
-      val assign = n.crossJoin(broadcast(centsArr))
+      val assign = n.crossJoin(centsArr)
         .filter(size(col("cs")) > 0)
         .select(col("vec_id"),
           cosArgmax(col("v"), col("nrm"), col("cs")).getField("cid")
@@ -1271,6 +1270,7 @@ object PipelineOps {
         .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
       val wAssign = Window.partitionBy(col("vec_id"))
         .orderBy(col("cos").desc, col("cent_id"))
+      // broadcast: no equi-key; 16 rows estimated at 640 KB at sf1, linear — past 10 MB a CartesianProduct
       val probes = n.filter(col("vec_id") < 10).join(broadcast(cents))
         .select(col("vec_id"),
           col("cent_id"),
@@ -1284,7 +1284,7 @@ object PipelineOps {
       val qv = n.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
       val scored = cands
-        .join(broadcast(qv), "query_id")
+        .join(qv, "query_id")
         .join(n.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")), "neighbor_id")
         .select(col("query_id"), col("neighbor_id"),
           (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cosine"))
@@ -1855,6 +1855,7 @@ object PipelineOps {
       // is the window's (qdot DESC, neighbor_id ASC) — identical
       // candidate set, so the exact-cosine refine and final ranks are
       // unchanged.
+      // broadcast: no equi-key; 10 rows estimated at 5.6 MB at sf1, linear — past 10 MB a CartesianProduct
       val scored = e.join(broadcast(qs), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           dot(col("qq"), col("q")).cast("long").as("qdot"))
@@ -1864,8 +1865,7 @@ object PipelineOps {
         .select(col("query_id"), explode(col("tops.key")).as("neighbor_id"))
         .join(e.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")),
           "neighbor_id")
-        .join(broadcast(qs.select(col("query_id"), col("qv"), col("qn"))),
-          "query_id")
+        .join(qs.select(col("query_id"), col("qv"), col("qn")), "query_id")
         .select(col("query_id"), col("neighbor_id"),
           (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cosine"))
       val w2 = Window.partitionBy(col("query_id"))
@@ -2048,7 +2048,7 @@ object PipelineOps {
         //   sel(p)  = m(p) ∧ (p − ls(p)) even  — 1st, 3rd, … of island
         //   drop(p) = sel(p−1), rewritten via lsPrev (frame B) so the
         //             whole predicate stays in this one pass
-        toks = Stored.checkpoint(toks.crossJoin(broadcast(best))
+        toks = Stored.checkpoint(toks.crossJoin(best)
           .withColumn("m",
             col("sym") === col("a") && lead(col("sym"), 1).over(wWin) === col("b"))
           .withColumn("mprev",
@@ -2187,7 +2187,7 @@ ${(1 to rounds).map(round).mkString(",\n")}""".stripMargin
       val words = T.documentsSpread(s, dir)
         .select(col("source"),
           explode(expr(s"filter($toksSql, t -> t <> '')")).as("w"))
-      words.join(broadcast(nsub), "w")
+      words.join(nsub, "w")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_words"),
           sum(col("n_sub")).cast("long").as("n_subwords"))

@@ -19,7 +19,8 @@ import Qdsl._
   *
   * Scale notes (100 TB design intent, verified on local[32]):
   *  - dimension tables (region/nation/part at these cardinalities) are
-  *    always broadcast — no shuffle of the fact side for those joins;
+  *    broadcast by the planner from their file sizes — no shuffle of the
+  *    fact side for those joins; no join carries a hint;
   *  - every aggregate is a hash aggregate with map-side partial
   *    aggregation (Catalyst does this for all exprs used here);
   *  - filters/projections are plain column expressions on parquet scans,
@@ -67,9 +68,8 @@ object Relational {
     "q02_category_distribution",
     (s, dir) => {
       val li = T.lineitem(s, dir)
-      // No broadcast hint on `part`: unlike region/nation it grows linearly
-      // with SF (multi-GB at 100 TB scale → driver OOM if force-broadcast).
-      // AQE's size threshold picks broadcast when it actually fits.
+      // `part` grows linearly with SF (multi-GB at 100 TB scale), so the
+      // size threshold, not a hint, decides whether it broadcasts.
       val p  = T.part(s, dir)
       li.join(p, col("l_partkey") === col("p_partkey"))
         .groupBy(col("p_type"))
@@ -139,8 +139,8 @@ object Relational {
       val r = T.region(s, dir)
       li.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
+        .join(n, col("c_nationkey") === col("n_nationkey"))
+        .join(r, col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name"))
         .agg(
           sum(d2(col("l_extendedprice")) * (lit(1) - d2(col("l_discount"))))
@@ -190,7 +190,7 @@ object Relational {
       val o = T.orders(s, dir).filter(col("o_orderstatus") === "F")
       val n = T.nation(s, dir)
       c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+        .join(n, col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_customers"))
         .orderBy(col("n_name"))
@@ -319,7 +319,7 @@ object Relational {
       val n = T.nation(s, dir)
       val w = Window.partitionBy(col("n_name"))
         .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+      c.join(n, col("c_nationkey") === col("n_nationkey"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select(col("n_name"), col("c_name"), col("c_acctbal"), col("rn"))

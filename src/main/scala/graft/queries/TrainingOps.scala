@@ -40,9 +40,9 @@ object TrainingOps {
     * scoped to doc_id < 30 and that filter sits BELOW the tf agg (only
     * the df side reads every doc, and it reads only the token column).
     * The df frame is vocabulary-sized — orders of magnitude smaller
-    * than the corpus (Heaps' law) — and is broadcast; a truly huge
-    * vocabulary would fall back to a shuffled hash join on `t`, same
-    * semantics.
+    * than the corpus (Heaps' law) — and AQE broadcasts it from its
+    * measured size; a truly huge vocabulary stays a shuffled join on
+    * `t`, same semantics.
     */
   val q66Tfidf = Q(
     "q66_tfidf",
@@ -57,8 +57,7 @@ object TrainingOps {
         .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
       val w = Window.partitionBy(col("doc_id"))
         .orderBy(col("score").desc, col("t"))
-      tf.join(broadcast(df), "t")
-        .crossJoin(broadcast(n))
+      tf.join(df, "t").crossJoin(n)
         .withColumn("score",
           (col("tf") * col("n_docs")).cast("double") / col("df"))
         .withColumn("rank", row_number().over(w))
@@ -333,18 +332,15 @@ object TrainingOps {
         .agg(count(lit(1)).as("c_ab"))).df
       val biTotal = biCounts.agg(sum(col("c_ab")).as("b_total"))
       val survivors = biCounts.filter(col("c_ab") >= 5)
-      // broadcast the SURVIVOR frame (bounded by the min-support
-      // threshold), never a vocabulary-sized count frame: the unigram
-      // counts stream past it twice (a-side, then b-side with c_a
-      // attached — still survivor-sized), and AQE reuses the unigram
-      // aggregation exchange between the two passes
-      val withCa = uniCounts
-        .join(broadcast(survivors), col("t") === col("a"))
+      // the SURVIVOR frame (bounded by the min-support threshold) meets
+      // the unigram counts twice (a-side, then b-side with c_a attached
+      // — still survivor-sized); both count frames are stored, so the
+      // planner sizes each join from their measured rows
+      val withCa = uniCounts.join(survivors, col("t") === col("a"))
         .select(col("a"), col("b"), col("c_ab"), col("c").as("c_a"))
-      uniCounts
-        .join(broadcast(withCa), col("t") === col("b"))
+      uniCounts.join(withCa, col("t") === col("b"))
         .select(col("a"), col("b"), col("c_ab"), col("c_a"), col("c").as("c_b"))
-        .crossJoin(broadcast(uniTotal)).crossJoin(broadcast(biTotal))
+        .crossJoin(uniTotal).crossJoin(biTotal)
         .withColumn("lift",
           (col("c_ab") * col("u_total") * col("u_total")).cast("double")
             / (col("b_total") * col("c_a") * col("c_b")))
@@ -493,7 +489,7 @@ object TrainingOps {
       }
       val exact = toks.groupBy(col("t")).agg(count(lit(1)).as("exact"))
         .orderBy(col("exact").desc, col("t")).limit(10)
-      exact.crossJoin(broadcast(sketch))
+      exact.crossJoin(sketch)
         .withColumn("cms_estimate",
           expr(s"array_min(transform($idxSql, j -> element_at(cms, j + 1)))"))
         .select(col("t").as("token"), col("exact"), col("cms_estimate"),
@@ -845,7 +841,7 @@ object TrainingOps {
       val train = g.filter(col("doc_id") >= 10)
         .select(col("doc_id"), size(col("grams")).as("n_grams"),
           explode(col("grams")).as("g"))
-      train.join(broadcast(evalGrams), "g")
+      train.join(evalGrams, "g")
         .groupBy(col("doc_id"), col("n_grams"))
         .agg(count(lit(1)).as("n_shared"))
         .select(col("doc_id"), col("n_shared"), col("n_grams"),
@@ -1655,9 +1651,10 @@ object TrainingOps {
           .as("grams"))
 
   /** q133's probe side over a prepared (doc_id, grams) frame: positions
-    * from md5 slices (hex materialized ONCE per gram), four broadcast
-    * word-index joins, null-tolerant AND bit test, per-doc flagged
-    * count. Factored so the STREAMING twin (Streams.bloomScreen) runs
+    * from md5 slices (hex materialized ONCE per gram), four word-index
+    * joins, null-tolerant AND bit test, per-doc flagged count. `words`
+    * is ≤4096 rows: pass it stored, so its measured size plans the four
+    * joins as broadcasts. Factored so the STREAMING twin (Streams.bloomScreen) runs
     * the identical plan on a streaming grams frame — the probe is
     * STATELESS (stream-static broadcast joins) until the final per-doc
     * agg, which is exactly why the Bloom shape screens an unbounded
@@ -1673,8 +1670,7 @@ object TrainingOps {
         (0 until 4).map(i => expr(bloomPosSql(i)).as(s"p$i")): _*)
     val joined = (0 until 4).foldLeft(probe) { (df, i) =>
       df.join(
-        broadcast(words.select(
-          col("widx").as(s"widx$i"), col("word").as(s"word$i"))),
+        words.select(col("widx").as(s"widx$i"), col("word").as(s"word$i")),
         expr(s"p$i div 32") === col(s"widx$i"), "left")
     }
     joined

@@ -454,18 +454,19 @@ object Streams {
     * streaming shape (the reference's analogue: each fetched page is
     * looked up against MySQL dimension rows before insert,
     * categorizer.py:150-188, done row-by-row on the driver there).
-    * The static side is a plain DataFrame; Catalyst plans a BROADCAST
-    * hash join per micro-batch, so the stream side never shuffles and
-    * the state store is not involved at all — enrichment is stateless.
+    * The static side is a plain DataFrame; a dimension under the
+    * broadcast threshold plans as a BROADCAST hash join per
+    * micro-batch, so the stream side never shuffles and the state
+    * store is not involved at all — enrichment is stateless.
     * The static frame is re-resolved each batch (a reloaded dimension
     * table picks up changes at batch granularity); a LARGE static side
-    * would instead be a shuffled stream-static join, same semantics.
+    * is a shuffled stream-static join instead, same semantics.
     * Unmatched stream rows are kept with null dimension columns
     * (left_outer): an enrichment miss must never DROP a fact at scale —
     * it quarantines like q65's corrupt rows.
     */
   def enrich(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
-    stream.join(broadcast(dim), Seq(key), "left_outer")
+    stream.join(dim, Seq(key), "left_outer")
 
   /** Streaming twin of q133's Bloom-filter decontamination — the
     * screen a training-data INGEST pipeline runs on every arriving

@@ -2,7 +2,10 @@ package graft.curation
 
 import graft.SparkSpec
 import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 /** End-to-end contracts for the composed curation pipeline: funnel
   * monotonicity, stage post-conditions on the actual written shards
@@ -62,22 +65,32 @@ class CurateSpec extends SparkSpec {
 
   /** The default run, observed: its shard dir and report, the largest
     * physical-plan description Spark posted while it ran (the SQL
-    * execution starts and AQE plan updates `Profile.Probe` reads), and
-    * the persistent RDDs it registered that are still registered after
-    * it returns. */
+    * execution starts and AQE plan updates `Profile.Probe` reads), the
+    * persistent RDDs it registered that are still registered after it
+    * returns, and each job's (call site, description). A job's call site
+    * is its result stage's name, as `Profile.Probe` reads it. */
   private lazy val observedA = {
     val dir = java.nio.file.Files.createTempDirectory("graft_curate_a").toString
     val sc = spark.sparkContext
     val probe = new graft.Profile.Probe
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val named = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.stageInfos.nonEmpty) jobs.add((j.stageInfos.maxBy(_.stageId).name,
+          Option(j.properties).map(_.getProperty("spark.job.description")).orNull))
+    }
     GraftListenerBridge.drainListenerBus(sc)
     sc.addSparkListener(probe)
+    sc.addSparkListener(named)
     val before = sc.getPersistentRDDs.keySet.toSet
     val r = try Curate.run(spark, sf, dir)
       finally {
         GraftListenerBridge.drainListenerBus(sc)
         sc.removeSparkListener(probe)
+        sc.removeSparkListener(named)
       }
-    (dir, r, probe.planDescMaxBytes, sc.getPersistentRDDs.keySet.toSet -- before)
+    (dir, r, probe.planDescMaxBytes, sc.getPersistentRDDs.keySet.toSet -- before,
+      jobs.asScala.toSeq)
   }
   private lazy val outA = (observedA._1, observedA._2)
 
@@ -105,14 +118,28 @@ class CurateSpec extends SparkSpec {
     // a stage frame persisted on top of earlier persisted stages prints
     // every earlier cached plan inside its own; stored stages plan from
     // a LogicalRDD and print none of them
-    val (_, _, planDescMax, _) = observedA
+    val (_, _, planDescMax, _, _) = observedA
     assert(planDescMax > 0, "no SQL execution was observed")
     assert(planDescMax < (1L << 20), s"largest plan description: $planDescMax bytes")
   }
 
   test("the run leaves none of the RDDs it persisted or checkpointed registered") {
-    val (_, _, _, left) = observedA
+    val (_, _, _, left, _) = observedA
     assert(left.isEmpty, s"still registered: ${left.toSeq.sorted}")
+  }
+
+  test("every job that stores a Curate frame is described by its stage's name") {
+    val (_, _, _, _, jobs) = observedA
+    val stages = Seq("input", "quality", "lm", "exact", "near", "media", "decontam",
+      "semdecontam", "rewrite", "thin", "sample", "chunk").map("curate " + _)
+    val stores = jobs.filter(_._1.startsWith("localCheckpoint at Curate.scala"))
+    assert(stores.nonEmpty, jobs.mkString("\n"))
+    val unnamed = stores.filterNot { case (_, d) => stages.contains(d) }
+    assert(unnamed.isEmpty, unnamed.mkString("stores without a stage name:\n", "\n", ""))
+    // the default policies store every stage but the cluster-quota thinning
+    assert(stores.map(_._2).toSet === stages.filter(_ != "curate thin").toSet)
+    // and the run restores the caller's description
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") === null)
   }
 
   test("every written doc passes the quality floor and is uncontaminated") {

@@ -11,7 +11,9 @@ import graft.SparkSpec
   *  - every query that reads a `graft.ops.Stored` frame, which declares
   *    the hash partitioning and row count its storing job measured: a
   *    declaration that did not match where the rows are would join
-  *    wrong rows without an error.
+  *    wrong rows without an error;
+  *  - every query whose joins the planner now picks from sizes alone,
+  *    with no broadcast hint: each setting below changes that choice.
   * Each query must give the same order-normalized rows under each
   * setting below as in the default session; `withConf` restores every
   * key in a `finally`.
@@ -49,7 +51,16 @@ class CcInvarianceSpec extends SparkSpec {
       PipelineOps.q138BpeApply, CurationOps.q140ClusterQuotaSample,
       CurationOps.q141QualityCalibrate, CurationOps.q143QualityRankFusion,
       CurationOps.q144SourceDatacard, CurationOps.q145QualityTrain,
-      CurationOps.q146QualityApply).foreach { q =>
+      CurationOps.q146QualityApply,
+      Relational.q05RegionRevenue, Relational.q07SemiJoin, Relational.q15WindowRank,
+      AnalyticsOps.q54RangeJoin, AnalyticsOps.q75ColumnProfile,
+      TrainingOps.q66Tfidf, TrainingOps.q71CmsHeavyHitters, TrainingOps.q77Decontaminate,
+      TrainingOps.q78TokenPacking, TrainingOps.q101ChunkPacking,
+      TrainingOps.q102ShuffledPacking,
+      CurationOps.q84MixtureRebalance, CurationOps.q85VocabOov,
+      CurationOps.q86LengthOutliers, CurationOps.q93MixtureApply,
+      CurationOps.q103EpochUpsample, CurationOps.q118PpsSample,
+      CurationOps.q126SemanticDecontam, PipelineOps.q108QuantizedAnn).foreach { q =>
     test(s"${q.name} rows are invariant under shuffle partitions, AQE and broadcast settings") {
       val base = normalized(q)
       assert(base.nonEmpty, s"${q.name}: empty result at sf0.001")

@@ -67,6 +67,11 @@ class StreamingSpec extends SparkSpec {
         .collect().toMap
       // matches enriched, the miss KEPT with a null kind (never dropped)
       assert(rows === Map("u1" -> "wiki", "u2" -> null, "u3" -> "other"))
+      // the small dimension broadcasts from its size alone: no hint, and
+      // the stream side never shuffles
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString
+      assert("BroadcastHashJoin .*LeftOuter, BuildRight".r.findFirstIn(plan).isDefined, plan)
     } finally q.stop()
   }
 
@@ -196,15 +201,14 @@ class StreamingSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     val docs = graft.Tables.documents(spark, sf)
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
-    // the bitmap frame, built exactly as q133 builds it (eval = doc_id
-    // < 10), checkpointed so the static side is not re-derived per
-    // micro-batch
+    // the bitmap frame, built and stored exactly as q133 builds it (eval
+    // = doc_id < 10): not re-derived per micro-batch, and its measured
+    // size plans the word joins
     val g = graft.queries.TrainingOps.bloomGrams(
       graft.Tables.documents(spark, sf))
-    val words = graft.queries.TrainingOps.bloomWords(
+    val words = graft.ops.Stored.checkpoint(graft.queries.TrainingOps.bloomWords(
       g.filter(col("doc_id") < 10)
-        .select(explode(col("grams")).as("g")).distinct())
-      .localCheckpoint()
+        .select(explode(col("grams")).as("g")).distinct())).df
     val want = graft.queries.TrainingOps.q133BloomDecontam.fn(spark, sf)
       .as[(Long, Long, Int)].collect().toSet
     assert(want.nonEmpty, "fixture must flag at least one doc")
